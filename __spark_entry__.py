@@ -498,17 +498,19 @@ def x_sq8_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def x_ivfsq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-SQ8 composed serving (operators/sq.ivfsq_search): coarse
-    probe pruning × byte codes inside the probed clusters × broadcast
-    exact rescore — per-query scan bytes (nprobe/C)·N·D, completing
-    the ladder's composition matrix (IVF×full = q1, IVF×PQ =
-    x_ivfpq_topk, IVF×BQ = x_ivfbq_topk; this is the middle rung
-    composed). The cluster-assigned code table is a persisted artifact
-    (once per process); quantizer params shared with the SQ8 gates."""
-    from leann_rs_spark.operators.ann import ivf_assign, take_centroids
+    """IVF-SQ8 composed serving (sq.sq8_search over the
+    ann.ivf_probe-filtered codes): coarse probe pruning × byte codes
+    inside the probed clusters × broadcast exact rescore — per-query
+    scan bytes (nprobe/C)·N·D, the middle rung under the same probe as
+    q1 (full), x_ivfpq_topk (PQ) and x_ivfbq_topk (BQ). The
+    cluster-assigned code table is a persisted artifact (once per
+    process); quantizer params shared with the SQ8 gates."""
+    from leann_rs_spark.operators.ann import (
+        ivf_assign, ivf_probe, take_centroids,
+    )
     from leann_rs_spark.operators.sq import (
-        ivfsq_search,
         sq8_encode_col,
+        sq8_search,
         sq8_train,
     )
 
@@ -529,10 +531,8 @@ def x_ivfsq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "leann-fx-ivfsqcodes-",
     )
     qv = _query_vec(spark, sf_dir, 4)
-    return ivfsq_search(
-        assigned_codes, cents, mins, rngs, qv, k=10, nprobe=_IVF_NPROBE,
-        refine=3, vectors=emb,
-    )
+    probed = assigned_codes.filter(ivf_probe(cents, qv, _IVF_NPROBE))
+    return sq8_search(probed, mins, rngs, qv, k=10, refine=3, vectors=emb)
 
 
 def x_html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2510,18 +2510,21 @@ def x_concat_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def x_ivfbq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-BQ composed serving (operators/bq.ivfbq_search): coarse
-    probe pruning × Hamming codes inside the probed clusters ×
-    broadcast exact rescore — per-query scan bytes (nprobe/C)·N·D/8,
+    """IVF-BQ composed serving (bq.bq_search over the
+    ann.ivf_probe-filtered codes): coarse probe pruning × Hamming
+    codes inside the probed clusters × broadcast exact rescore —
+    per-query scan bytes (nprobe/C)·N·D/8,
     the multiplicative IVF×BQ cut (the BQ-rung sibling of
     x_ivfpq_topk). The cluster-assigned code table is a persisted
     artifact (once per process); thresholds shared with the other BQ
     gates."""
-    from leann_rs_spark.operators.ann import ivf_assign, take_centroids
+    from leann_rs_spark.operators.ann import (
+        ivf_assign, ivf_probe, take_centroids,
+    )
     from leann_rs_spark.operators.bq import (
         bq_encode_col,
+        bq_search,
         bq_train,
-        ivfbq_search,
     )
 
     emb = _emb(spark, sf_dir)
@@ -2539,10 +2542,8 @@ def x_ivfbq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "leann-fx-ivfbqcodes-",
     )
     qv = _query_vec(spark, sf_dir, 4)
-    return ivfbq_search(
-        assigned_codes, cents, thr, qv, k=10, nprobe=_IVF_NPROBE,
-        refine=4, vectors=emb,
-    )
+    probed = assigned_codes.filter(ivf_probe(cents, qv, _IVF_NPROBE))
+    return bq_search(probed, thr, qv, k=10, refine=4, vectors=emb)
 
 
 def x_bq_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3456,7 +3457,7 @@ def x_late_interaction_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     late_interaction_topk_batch_refined): ADC MaxSim over the PQ code
     table shortlists refine·k docs per query, exact MaxSim rescores
     ONLY the shortlisted (query, doc) pairs via a broadcast join into
-    the token index — the pq_search_refined ruling applied to
+    the token index — the pq_search(refine=) ruling applied to
     multi-vector retrieval. Per-query scan bytes: M ints/token for
     the corpus pass + refine·k docs' full token vectors."""
     from leann_rs_spark.catalog import load_token_index
@@ -6817,23 +6818,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Regenerate with tools/rotate_gates.py after each round's artifact lands.
     return {
         "x_ccnet_buckets": x_ccnet_buckets,
-        "x_rollup_stats": x_rollup_stats,
         "x_curriculum_blocks": x_curriculum_blocks,
-        "x_curation_pipeline_sigs": x_curation_pipeline_sigs,
-        "x_dedup_minhash_capped": x_dedup_minhash_capped,
-        "x_minhash_triage_topk": x_minhash_triage_topk,
         "x_ivf_append": x_ivf_append,
         "x_bm25_append": x_bm25_append,
         "x_stream_ivf_ingest": x_stream_ivf_ingest,
         "x_ivf_compact": x_ivf_compact,
-        "x_leakage_safe_split": x_leakage_safe_split,
         "x_append_consistency": x_append_consistency,
-        "x_crawl_pipeline": x_crawl_pipeline,
-        "x_curation_pipeline": x_curation_pipeline,
-        "x_minhash_index_dedup": x_minhash_index_dedup,
-        "x_stream_sigs_ingest": x_stream_sigs_ingest,
-        "x_minhash_sig_estimate": x_minhash_sig_estimate,
-        "x_dedup_triage_pipeline": x_dedup_triage_pipeline,
         "x_late_interaction": x_late_interaction,
         "x_stream_token_ingest": x_stream_token_ingest,
         "x_li_bm25_hybrid": x_li_bm25_hybrid,
@@ -6844,9 +6834,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_token_index_append": x_token_index_append,
         "x_late_interaction_pq": x_late_interaction_pq,
         "x_late_interaction_refined": x_late_interaction_refined,
-        "x_dedup_pr_bands": x_dedup_pr_bands,
         "x_li_kmeans_pruned": x_li_kmeans_pruned,
-        "x_analyze_report": x_analyze_report,
         "x_dsir_select": x_dsir_select,
         "x_select_pack": x_select_pack,
         "x_rrf_hybrid": x_rrf_hybrid,
@@ -6874,16 +6862,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_ivf_drift_recall": x_ivf_drift_recall,
         "q2_ivf_batch_topk": q2_ivf_batch_topk,
         "r1_rag_batch": r1_rag_batch,
-        "x_length_percentiles": x_length_percentiles,
         "x_stratified_sample": x_stratified_sample,
         "x_upsample": x_upsample,
         "x_weighted_mix": x_weighted_mix,
         "x_sample_det": x_sample_det,
         "x_split_assign": x_split_assign,
         "x_shuffle_det": x_shuffle_det,
-        "x_asof_join_salted": x_asof_join_salted,
-        "x_asof_nearest": x_asof_nearest,
-        "x_paragraph_dedup": x_paragraph_dedup,
         "x_top_ngrams": x_top_ngrams,
         "x_concat_chunk": x_concat_chunk,
         "x_hard_negatives": x_hard_negatives,
@@ -6896,6 +6880,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q8_bm25_scored": q8_bm25_scored,
         "q11_bm25_topk": q11_bm25_topk,
         "q14_expansion_terms": q14_expansion_terms,
+        "x_pack_sequences": x_pack_sequences,
+        "x_media_audio_features": x_media_audio_features,
+        "x_token_kl": x_token_kl,
+        "x_table_diff": x_table_diff,
+        "x_salted_join": x_salted_join,
+        "x_table_stats": x_table_stats,
+        "x_zorder_layout": x_zorder_layout,
+        "x_video_near_dups": x_video_near_dups,
+        "x_media_phash_dups": x_media_phash_dups,
+        "x_retrieval_eval": x_retrieval_eval,
+        "x_bq_batch_topk": x_bq_batch_topk,
+        "q3_batch_topk": q3_batch_topk,
+        "x_ivf_refresh": x_ivf_refresh,
+        "x_quality_ensemble": x_quality_ensemble,
+        "q1_ivf_topk": q1_ivf_topk,
+        "x_lm_score": x_lm_score,
+        "q15_expanded_search": q15_expanded_search,
+        "x_length_percentiles": x_length_percentiles,
+        "x_asof_join_salted": x_asof_join_salted,
+        "x_asof_nearest": x_asof_nearest,
+        "x_paragraph_dedup": x_paragraph_dedup,
         "x_c4_clean": x_c4_clean,
         "q5_filter_dsl_json": q5_filter_dsl_json,
         "q5_filter_dsl_columns": q5_filter_dsl_columns,
@@ -6913,34 +6918,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_window_stats": x_window_stats,
         "x_asof_join": x_asof_join,
         "x_interval_join": x_interval_join,
-        "x_pack_sequences": x_pack_sequences,
         "x_quality_expectations": x_quality_expectations,
         "x_text_redact": x_text_redact,
         "x_decontaminate": x_decontaminate,
         "x_stream_sessionize": x_stream_sessionize,
-        "x_media_audio_features": x_media_audio_features,
-        "x_token_kl": x_token_kl,
-        "x_table_diff": x_table_diff,
-        "x_salted_join": x_salted_join,
-        "x_table_stats": x_table_stats,
-        "x_zorder_layout": x_zorder_layout,
-        "x_video_near_dups": x_video_near_dups,
-        "x_media_phash_dups": x_media_phash_dups,
         "x_domain_budget": x_domain_budget,
         "x_stream_rolling": x_stream_rolling,
         "x_lm_ref_score": x_lm_ref_score,
         "x_decontaminate_spans": x_decontaminate_spans,
         "x_budget_select": x_budget_select,
-        "x_retrieval_eval": x_retrieval_eval,
-        "x_bq_batch_topk": x_bq_batch_topk,
-        "q3_batch_topk": q3_batch_topk,
         "x_tfidf_keywords": x_tfidf_keywords,
         "x_ann_lsh_incremental": x_ann_lsh_incremental,
         "x_dedup_simhash_capped": x_dedup_simhash_capped,
         "x_ann_lsh_capped": x_ann_lsh_capped,
         "x_dedup_simhash_incremental": x_dedup_simhash_incremental,
-        "x_ivf_refresh": x_ivf_refresh,
-        "x_quality_ensemble": x_quality_ensemble,
         "x_rolling_anomaly": x_rolling_anomaly,
         "x_pmi_phrases": x_pmi_phrases,
         "x_json_props": x_json_props,
@@ -6971,20 +6962,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_dedup_editdist": x_dedup_editdist,
         "x_upsert": x_upsert,
         "x_dup_source_matrix": x_dup_source_matrix,
-        "q1_ivf_topk": q1_ivf_topk,
         "t2_code_chunks": t2_code_chunks,
         "t1_chunk_passages": t1_chunk_passages,
         "x_ann_lsh_near_dups": x_ann_lsh_near_dups,
         "x_corpus_stats": x_corpus_stats,
         "x_stream_window_stats": x_stream_window_stats,
         "x_stream_dedup": x_stream_dedup,
-        "x_lm_score": x_lm_score,
         "x_tfidf_embed": x_tfidf_embed,
         "x_tfidf_topk": x_tfidf_topk,
         "x_bucketed_join": x_bucketed_join,
         "x_stream_enrich": x_stream_enrich,
         "x_stream_stream_join": x_stream_stream_join,
-        "q15_expanded_search": q15_expanded_search,
+        "x_rollup_stats": x_rollup_stats,
+        "x_curation_pipeline_sigs": x_curation_pipeline_sigs,
+        "x_dedup_minhash_capped": x_dedup_minhash_capped,
+        "x_minhash_triage_topk": x_minhash_triage_topk,
+        "x_leakage_safe_split": x_leakage_safe_split,
+        "x_crawl_pipeline": x_crawl_pipeline,
+        "x_curation_pipeline": x_curation_pipeline,
+        "x_minhash_index_dedup": x_minhash_index_dedup,
+        "x_stream_sigs_ingest": x_stream_sigs_ingest,
+        "x_minhash_sig_estimate": x_minhash_sig_estimate,
+        "x_dedup_triage_pipeline": x_dedup_triage_pipeline,
+        "x_dedup_pr_bands": x_dedup_pr_bands,
+        "x_analyze_report": x_analyze_report,
     }
 
 

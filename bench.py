@@ -54,7 +54,7 @@ def main() -> None:
     only = set(sys.argv[1:])
 
     import __spark_entry__ as entry_mod
-    from leann_rs_spark.session import get_spark
+    from leann_rs_spark.session import effective_cpus, get_spark
 
     spark = get_spark(app_name="leann-rs-spark-bench")
 
@@ -158,7 +158,7 @@ def main() -> None:
         # (local[SPARK_GRAFT_CPUS]), not os.cpu_count() — the driver's
         # low-core scaling run was previously mislabeled as 32 cores
         # (round-10 verdict item 5).
-        "ncpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)),
+        "ncpus": effective_cpus(),
         # Measurement conditions, so results are comparable across
         # rounds: each query is min-of-`reps` full cold executions
         # (cache cleared + explicit GC between reps), after one

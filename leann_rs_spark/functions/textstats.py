@@ -763,7 +763,11 @@ def _lm_per_doc(
     directly: thresholds ignore NULL-xent rows anyway, so the duplicate
     plan branch feeding the (non-CSE'd) percentile aggregate skips the
     corpus-keys scan and restore join entirely (r11; ~0.3 s/gate at
-    sf0.1, one corpus scan fewer at scale)."""
+    sf0.1, one corpus scan fewer at scale).
+
+    Precondition: `id_col` is unique in `docs`. Rows sharing an id
+    collapse into one per-doc row here, so thresholds computed over
+    this frame differ from ones computed per input row."""
     toks = docs.select(F.col(id_col).alias("__id"), tokenize(text_col).alias("__t"))
     # in-row bigram construction: zip the array against itself shifted
     # by one (slice lengths clamp at 0 for short docs)
@@ -970,16 +974,6 @@ def c4_signals(
     return F.transform(F.array(F.filter(_doc_lines(text), line_ok)), body)[0]
 
 
-def c4_keep(text: Column | str, **kw) -> Column:
-    """The C4 page keep/drop boolean alone."""
-    return c4_signals(text, **kw)["keep"]
-
-
-def c4_clean_text(text: Column | str, **kw) -> Column:
-    """The cleaned page text alone (surviving lines, newline-joined)."""
-    return c4_signals(text, **kw)["clean_text"]
-
-
 def duckdb_c4_signals(
     text: str,
     min_line_words: int = 3,
@@ -1038,7 +1032,12 @@ def lm_buckets(
 
     Scale shape: lm_score's two count shuffles + ONE tiny percentile
     aggregate (2 doubles) broadcast into a projection — no extra
-    corpus shuffle."""
+    corpus shuffle.
+
+    Precondition: `id_col` is unique in `docs`. The thresholds are
+    percentiles over one row per distinct id (_lm_per_doc), while the
+    DuckDB twin takes them over one row per input row; the two agree
+    only when ids are unique."""
     f1, f2 = fractions
     if not (0.0 < f1 < f2 < 1.0):
         raise ValueError(f"need 0 < f1 < f2 < 1, got {fractions!r}")

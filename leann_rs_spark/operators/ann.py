@@ -39,6 +39,9 @@ from pyspark.sql import Column, DataFrame, functions as F
 from leann_rs_spark.functions.vector import (
     duckdb_dot, dot, lit_vec, lit_vec_sql,
 )
+from leann_rs_spark.operators.search import (
+    _duckdb_q, _duckdb_topk, _duckdb_topk_batch, exact_search, topk_batch,
+)
 
 
 def take_centroids(
@@ -311,6 +314,27 @@ def lloyd_refine_centroids(
     return centroids
 
 
+def ivf_probe(
+    centroids: DataFrame, query_vector: list[float], nprobe: int
+) -> Column:
+    """`cluster_id IN (<the nprobe centroids nearest the query>)` — the
+    one probe every IVF composition filters its rows with. Centroids
+    rank by inner product, ties centroid_id ASC; the C-row ranking is
+    collected on the driver so the filter is a literal IN list: on a
+    table written partitionBy("cluster_id") that is static partition
+    pruning at the file level."""
+    probe_rows = (
+        centroids.select(
+            "centroid_id",
+            dot(F.col("centroid_vec"), lit_vec(query_vector)).alias("__qs"),
+        )
+        .orderBy(F.col("__qs").desc(), F.col("centroid_id").asc())
+        .limit(nprobe)
+        .collect()
+    )
+    return F.col("cluster_id").isin([r["centroid_id"] for r in probe_rows])
+
+
 def ivf_search(
     assigned: DataFrame,
     centroids: DataFrame,
@@ -321,30 +345,14 @@ def ivf_search(
     vec_col: str = "embedding",
     predicate: Column | None = None,
 ) -> DataFrame:
-    """Probe the `nprobe` centroids nearest the query; exact top-k inside.
+    """Probe the `nprobe` centroids nearest the query; exact top-k inside
+    (exact_search over the ivf_probe-filtered rows).
 
     `nprobe == n_centroids` degrades to exact search (tests pin this).
-    The cluster filter is `cluster_id IN (<nprobe literals>)` — when
-    `assigned` is written partitionBy("cluster_id"), that's static
-    partition pruning at the file level.
     """
-    q = lit_vec(query_vector)
-    probe_rows = (
-        centroids.select(
-            "centroid_id", dot(F.col("centroid_vec"), q).alias("__qs")
-        )
-        .orderBy(F.col("__qs").desc(), F.col("centroid_id").asc())
-        .limit(nprobe)
-        .collect()
-    )
-    probe_ids = [r["centroid_id"] for r in probe_rows]
-    df = assigned.filter(F.col("cluster_id").isin(probe_ids))
-    if predicate is not None:
-        df = df.filter(predicate)
-    return (
-        df.select(id_col, dot(F.col(vec_col), q).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
+    probed = assigned.filter(ivf_probe(centroids, query_vector, nprobe))
+    return exact_search(
+        probed, query_vector, k, id_col, vec_col, predicate=predicate
     )
 
 
@@ -666,6 +674,80 @@ def lsh_near_dups(
 # DuckDB oracle — same math end-to-end (assign, probe, score).
 # ---------------------------------------------------------------------------
 
+def _duckdb_cent(
+    n_centroids: int, table: str, id_col: str, vec_col: str
+) -> str:
+    """take_centroids: the n smallest ids."""
+    return f"""
+            SELECT {id_col} AS centroid_id, {vec_col} AS centroid_vec
+            FROM {table} WHERE {id_col} < {n_centroids}"""
+
+
+def _duckdb_assign(table: str, cent: str, id_col: str, vec_col: str) -> str:
+    """ivf_assign: each row's max-dot centroid, ties centroid_id ASC."""
+    d_ec = duckdb_dot(f"e.{vec_col}", "c.centroid_vec")
+    return f"""
+            SELECT {id_col}, {vec_col}, centroid_id AS cluster_id FROM (
+                SELECT e.{id_col}, e.{vec_col}, c.centroid_id,
+                       row_number() OVER (
+                           PARTITION BY e.{id_col}
+                           ORDER BY {d_ec} DESC, c.centroid_id ASC
+                       ) AS rn
+                FROM {table} e, {cent} c
+            ) WHERE rn = 1"""
+
+
+def _duckdb_probe_ranks(cent: str, batch: bool) -> str:
+    """Centroids ranked per query (q) by dot, ties centroid_id ASC —
+    the probe_ranks twin."""
+    d_cq = duckdb_dot("c.centroid_vec", "q.qv")
+    qid = "q.query_id, " if batch else ""
+    part = "PARTITION BY q.query_id " if batch else ""
+    return f"""
+            SELECT {qid}c.centroid_id,
+                   row_number() OVER (
+                       {part}ORDER BY {d_cq} DESC, c.centroid_id ASC
+                   ) AS probe_rank
+            FROM {cent} c, q"""
+
+
+def _duckdb_ivf_ctes(
+    n_centroids: int,
+    table: str = "embeddings",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    nprobe: int | None = None,
+    query_vec_id: int | None = None,
+    n_queries: int | None = None,
+) -> list[str]:
+    """The IVF twins' shared CTEs: cent (take_centroids), assigned (id,
+    vec, cluster_id), q (search._duckdb_q: one query or a batch)
+    and probes (query_id for a batch, centroid_id, probe_rank), cut to
+    probe_rank <= nprobe when nprobe is given."""
+    probes = _duckdb_probe_ranks("cent", n_queries is not None)
+    if nprobe is not None:
+        probes = f"SELECT * FROM ({probes}) WHERE probe_rank <= {nprobe}"
+    return [
+        f"cent AS ({_duckdb_cent(n_centroids, table, id_col, vec_col)})",
+        f"assigned AS ({_duckdb_assign(table, 'cent', id_col, vec_col)})",
+        _duckdb_q(table, id_col, vec_col, query_vec_id, n_queries),
+        f"probes AS ({probes})",
+    ]
+
+
+def _duckdb_ivf_probed(
+    alias: str, id_col: str = "vec_id", batch: bool = False
+) -> str:
+    """Joins restricting the FROM item `alias` to its probed rows — the
+    twin of filtering by ivf_probe (or joining _ivf_probe_join, which
+    also joins q so each row carries its probing query)."""
+    sql = (
+        f" JOIN assigned a ON a.{id_col} = {alias}.{id_col}"
+        " JOIN probes p ON p.centroid_id = a.cluster_id"
+    )
+    return sql + (" JOIN q ON q.query_id = p.query_id" if batch else "")
+
+
 def duckdb_ivf_search(
     query_vec_id: int,
     k: int,
@@ -675,37 +757,15 @@ def duckdb_ivf_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
-    d_ec = duckdb_dot(f"e.{vec_col}", "c.centroid_vec")
-    d_cq = duckdb_dot("c.centroid_vec", "q.qv")
-    d_aq = duckdb_dot(f"a.{vec_col}", "q.qv")
-    return f"""
-        WITH cent AS (
-            SELECT {id_col} AS centroid_id, {vec_col} AS centroid_vec
-            FROM {table} WHERE {id_col} < {n_centroids}
+    return _duckdb_topk(
+        _duckdb_ivf_ctes(
+            n_centroids, table, id_col, vec_col, nprobe,
+            query_vec_id=query_vec_id,
         ),
-        assigned AS (
-            SELECT {id_col}, {vec_col}, centroid_id AS cluster_id FROM (
-                SELECT e.{id_col}, e.{vec_col}, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY e.{id_col}
-                           ORDER BY {d_ec} DESC, c.centroid_id ASC
-                       ) AS rn
-                FROM {table} e, cent c
-            ) WHERE rn = 1
-        ),
-        q AS (SELECT {vec_col} AS qv FROM {table} WHERE {id_col} = {query_vec_id}),
-        probes AS (
-            SELECT centroid_id FROM (
-                SELECT c.centroid_id,
-                       row_number() OVER (ORDER BY {d_cq} DESC, c.centroid_id ASC) AS rn
-                FROM cent c, q
-            ) WHERE rn <= {nprobe}
-        )
-        SELECT a.{id_col}, {d_aq} AS score
-        FROM assigned a JOIN probes p ON a.cluster_id = p.centroid_id, q
-        ORDER BY score DESC, a.{id_col} ASC
-        LIMIT {k}
-    """
+        f"{table} r" + _duckdb_ivf_probed("r", id_col),
+        duckdb_dot(f"r.{vec_col}", "q.qv"),
+        k, table=table, id_col=id_col, vec_col=vec_col,
+    )
 
 
 def duckdb_lsh_near_dups(
@@ -1081,6 +1141,27 @@ def probe_ranks(
     )
 
 
+def _ivf_probe_join(
+    rows: DataFrame,
+    centroids: DataFrame,
+    queries: DataFrame,
+    nprobe: int,
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+) -> DataFrame:
+    """The batch probe: each query's top-nprobe centroids (probe_ranks)
+    broadcast into a join with `rows` on cluster_id — rows × their
+    probing queries, carrying query_id and query_vec. On a
+    cluster-partitioned table the broadcast keys drive dynamic
+    partition pruning; the corpus is never shuffled."""
+    probes = (
+        probe_ranks(queries, centroids, query_id_col, query_vec_col)
+        .filter(F.col("probe_rank") <= nprobe)
+        .drop("probe_rank")
+    )
+    return rows.join(F.broadcast(probes), "cluster_id")
+
+
 def ivf_search_batch(
     assigned: DataFrame,
     centroids: DataFrame,
@@ -1106,27 +1187,14 @@ def ivf_search_batch(
     window over candidates (Σ probed-cluster sizes per query, the IVF
     cost model: nprobe/C of the corpus per query).
     """
-    from pyspark.sql import Window
-
-    qv = F.col(query_vec_col)
-    probes = (
-        probe_ranks(queries, centroids, query_id_col, query_vec_col)
-        .filter(F.col("probe_rank") <= nprobe)
-        .drop("probe_rank")
-    )
-    scored = assigned.join(F.broadcast(probes), "cluster_id").select(
+    scored = _ivf_probe_join(
+        assigned, centroids, queries, nprobe, query_id_col, query_vec_col
+    ).select(
         query_id_col,
         id_col,
-        dot(F.col(vec_col), qv).alias("score"),
+        dot(F.col(vec_col), F.col(query_vec_col)).alias("score"),
     )
-    w_rank = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "score", "rank")
-    )
+    return topk_batch(scored, k, id_col=id_col, query_id_col=query_id_col)
 
 
 def duckdb_ivf_search_batch(
@@ -1140,51 +1208,16 @@ def duckdb_ivf_search_batch(
 ) -> str:
     """Oracle twin of `ivf_search_batch` with the take_centroids policy
     and queries = the `n_queries` smallest ids (mirroring q3_batch)."""
-    d_ec = duckdb_dot(f"e.{vec_col}", "c.centroid_vec")
-    d_cq = duckdb_dot("c.centroid_vec", "q.qv")
-    d_aq = duckdb_dot(f"a.{vec_col}", "q.qv")
-    return f"""
-        WITH cent AS (
-            SELECT {id_col} AS centroid_id, {vec_col} AS centroid_vec
-            FROM {table} WHERE {id_col} < {n_centroids}
+    scored = f"""
+            SELECT q.query_id, r.{id_col},
+                   {duckdb_dot(f"r.{vec_col}", "q.qv")} AS score
+            FROM {table} r{_duckdb_ivf_probed("r", id_col, batch=True)}"""
+    return _duckdb_topk_batch(
+        _duckdb_ivf_ctes(
+            n_centroids, table, id_col, vec_col, nprobe, n_queries=n_queries
         ),
-        assigned AS (
-            SELECT {id_col}, {vec_col}, centroid_id AS cluster_id FROM (
-                SELECT e.{id_col}, e.{vec_col}, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY e.{id_col}
-                           ORDER BY {d_ec} DESC, c.centroid_id ASC
-                       ) AS rn
-                FROM {table} e, cent c
-            ) WHERE rn = 1
-        ),
-        q AS (
-            SELECT {id_col} AS query_id, {vec_col} AS qv
-            FROM {table} WHERE {id_col} < {n_queries}
-        ),
-        probes AS (
-            SELECT query_id, centroid_id FROM (
-                SELECT q.query_id, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY q.query_id
-                           ORDER BY {d_cq} DESC, c.centroid_id ASC
-                       ) AS rn
-                FROM cent c, q
-            ) WHERE rn <= {nprobe}
-        ),
-        scored AS (
-            SELECT q.query_id, a.{id_col}, {d_aq} AS score
-            FROM assigned a
-            JOIN probes p ON a.cluster_id = p.centroid_id
-            JOIN q ON q.query_id = p.query_id
-        )
-        SELECT query_id, {id_col}, score, rank FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id ORDER BY score DESC, {id_col} ASC
-            ) AS rank
-            FROM scored
-        ) WHERE rank <= {k}
-    """
+        scored, k, table=table, id_col=id_col, vec_col=vec_col,
+    )
 
 
 def ivf_recall_curve(
@@ -1297,42 +1330,18 @@ def duckdb_ivf_recall_curve(
 ) -> str:
     """Oracle twin of `ivf_recall_curve` with the take_centroids policy
     and queries = the `n_queries` smallest ids (the q2 conventions)."""
-    d_ec = duckdb_dot(f"e.{vec_col}", "c.centroid_vec")
-    d_cq = duckdb_dot("c.centroid_vec", "q.qv")
-    d_aq = duckdb_dot(f"a.{vec_col}", "q.qv")
+    ctes = ",\n".join(
+        _duckdb_ivf_ctes(
+            n_centroids, table, id_col, vec_col, n_queries=n_queries
+        )
+    )
     sweep = ", ".join(str(p) for p in nprobes)
     return f"""
-        WITH cent AS (
-            SELECT {id_col} AS centroid_id, {vec_col} AS centroid_vec
-            FROM {table} WHERE {id_col} < {n_centroids}
-        ),
-        assigned AS (
-            SELECT {id_col}, {vec_col}, centroid_id AS cluster_id FROM (
-                SELECT e.{id_col}, e.{vec_col}, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY e.{id_col}
-                           ORDER BY {d_ec} DESC, c.centroid_id ASC
-                       ) AS rn
-                FROM {table} e, cent c
-            ) WHERE rn = 1
-        ),
-        q AS (
-            SELECT {id_col} AS query_id, {vec_col} AS qv
-            FROM {table} WHERE {id_col} < {n_queries}
-        ),
-        pr AS (
-            SELECT q.query_id, c.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {d_cq} DESC, c.centroid_id ASC
-                   ) AS probe_rank
-            FROM cent c, q
-        ),
+        WITH {ctes},
         cand AS (
-            SELECT q.query_id, a.{id_col}, pr.probe_rank, {d_aq} AS score
-            FROM assigned a
-            JOIN pr ON a.cluster_id = pr.centroid_id
-            JOIN q ON q.query_id = pr.query_id
+            SELECT q.query_id, r.{id_col}, p.probe_rank,
+                   {duckdb_dot(f"r.{vec_col}", "q.qv")} AS score
+            FROM {table} r{_duckdb_ivf_probed("r", id_col, batch=True)}
         ),
         exact AS (
             SELECT query_id, {id_col} FROM (
@@ -1385,28 +1394,12 @@ def duckdb_ivf_drift_recall(
     inlines CTEs (CLAUDE.md measured rule)."""
 
     def pipeline(tag: str, cent: str) -> str:
-        d_ec = duckdb_dot(f"e.{vec_col}", "c.centroid_vec")
-        d_cq = duckdb_dot("c.centroid_vec", "q.qv")
         d_aq = duckdb_dot(f"a.{vec_col}", "q.qv")
         return f"""
         a_{tag} AS MATERIALIZED (
-            SELECT {id_col}, {vec_col}, centroid_id AS cluster_id FROM (
-                SELECT e.{id_col}, e.{vec_col}, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY e.{id_col}
-                           ORDER BY {d_ec} DESC, c.centroid_id ASC
-                       ) AS rn
-                FROM corpus e, {cent} c
-            ) WHERE rn = 1
+            {_duckdb_assign("corpus", cent, id_col, vec_col)}
         ),
-        pr_{tag} AS (
-            SELECT q.query_id, c.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {d_cq} DESC, c.centroid_id ASC
-                   ) AS probe_rank
-            FROM {cent} c, q
-        ),
+        pr_{tag} AS ({_duckdb_probe_ranks(cent, batch=True)}),
         cand_{tag} AS MATERIALIZED (
             SELECT q.query_id, a.{id_col}, pr.probe_rank, {d_aq} AS score
             FROM a_{tag} a
@@ -1457,10 +1450,7 @@ def duckdb_ivf_drift_recall(
             FROM corpus
             WHERE {id_col} % 2 = 0 AND {id_col} < {2 * n_centroids}
         ),
-        fresh_cent AS (
-            SELECT {id_col} AS centroid_id, {vec_col} AS centroid_vec
-            FROM corpus WHERE {id_col} < {n_centroids}
-        ),
+        fresh_cent AS ({_duckdb_cent(n_centroids, "corpus", id_col, vec_col)}),
         q AS (
             SELECT {id_col} AS query_id, {vec_col} AS qv
             FROM corpus WHERE {id_col} < {2 * n_queries}

@@ -22,12 +22,12 @@ Spark-first shape:
   (63 bits per word — DuckDB's left-shift overflows at bit 63, the
   same carry bound the SimHash packing documents). 64-dim corpus →
   16 bytes/row at scan time.
-- search: Hamming shortlist via `ORDER BY hamming ASC, id ASC LIMIT
-  refine·k` (TakeOrderedAndProject: per-partition heap, k-row driver
-  merge, no shuffle of the code table), then broadcast semi-join of
-  the shortlist against the full-vector table for the exact rescore —
-  the PQ/SQ8 refine shape, reusing the bit-parity-verified
-  dot()/duckdb_dot() fold.
+- search: the rung owns only its score Column, the Hamming distance
+  Σ bit_count(code XOR query word). Ranking it ASC (ties id ASC) and
+  the exact rescore of the refine·k shortlist are the shared
+  search.topk / search.topk_batch; IVF-BQ is bq_search over
+  `codes.filter(ann.ivf_probe(...))`. The twins add the thresholds,
+  packed codes and Hamming expression to search._duckdb_topk.
 
 Hamming ties are broken by id, so the shortlist — and therefore the
 whole composed result — is deterministic and SQL-oracle-exact
@@ -38,7 +38,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from leann_rs_spark.functions.vector import dot, duckdb_dot, lit_vec
+from leann_rs_spark.operators.ann import _duckdb_ivf_ctes, _duckdb_ivf_probed
+from leann_rs_spark.operators.search import (
+    _duckdb_q, _duckdb_topk, _duckdb_topk_batch, topk, topk_batch,
+)
 
 _WORD_BITS = 63  # DuckDB `1::BIGINT << 63` overflows; 63 bits/word both engines
 
@@ -133,21 +136,12 @@ def bq_search(
     distance, so the shortlist is deterministic), then the true
     dot-product top-k over the shortlist. refine == 0 returns the raw
     Hamming ranking (diagnostics only — scores are distances)."""
-    qwords = bq_query_words(query_vector, thresholds)
-    ranked = codes.select(
-        id_col, bq_hamming_col(F.col("bcode"), qwords).alias("hamming")
-    ).orderBy(F.col("hamming").asc(), F.col(id_col).asc())
-    if refine <= 0:
-        return ranked.limit(k)
-    if vectors is None:
-        raise ValueError("refine > 0 needs the full-vector table")
-    q = lit_vec(query_vector)
-    shortlist = ranked.limit(refine * k).select(id_col)
-    return (
-        vectors.join(F.broadcast(shortlist), id_col, "left_semi")
-        .select(id_col, dot(F.col(vec_col), q).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
+    hamming = bq_hamming_col(
+        F.col("bcode"), bq_query_words(query_vector, thresholds)
+    )
+    return topk(
+        codes, hamming.alias("hamming"), query_vector, k, refine, vectors,
+        id_col, vec_col, ascending=True,
     )
 
 
@@ -155,6 +149,45 @@ def bq_search(
 # DuckDB oracle twin — derives thresholds, codes, query words, Hamming
 # shortlist, and the exact rescore from the parquet table alone.
 # ---------------------------------------------------------------------------
+
+def _duckdb_pack(vec: str, dims: int) -> str:
+    """bq_encode_col's twin: one packed word per array slot, the same
+    63-bit layout, against the thresholds `s.thr`."""
+    words = []
+    for w in range(_n_words(dims)):
+        lo = w * _WORD_BITS + 1
+        hi = min((w + 1) * _WORD_BITS, dims)
+        words.append(
+            f"list_reduce(list_transform(generate_series({lo}, {hi}),"
+            f" j -> CASE WHEN {vec}[j]::double > s.thr[j]"
+            f" THEN (1::BIGINT << (j - {lo})) ELSE 0::BIGINT END),"
+            f" (a, x) -> a | x)"
+        )
+    return "[" + ", ".join(words) + "]"
+
+
+def _duckdb_hamming(a: str, b: str, dims: int) -> str:
+    return " + ".join(
+        f"bit_count(xor({a}[{w + 1}], {b}[{w + 1}]))"
+        for w in range(_n_words(dims))
+    )
+
+
+def _duckdb_bq_ctes(dims: int, table: str, id_col: str, vec_col: str) -> str:
+    """bq_train's thresholds `s.thr` (per-dim medians) and the packed
+    codes (id, bcode) of every row."""
+    return f"""
+        dims_t AS (SELECT jj.i AS j FROM unnest(generate_series(1, {dims})) jj(i)),
+        med AS (
+            SELECT d.j, quantile_cont(e.{vec_col}[d.j]::double, 0.5) AS m
+            FROM {table} e, dims_t d GROUP BY d.j
+        ),
+        s AS (SELECT list(m ORDER BY j) AS thr FROM med),
+        codes AS (
+            SELECT e.{id_col}, {_duckdb_pack(f"e.{vec_col}", dims)} AS bcode
+            FROM {table} e, s
+        )"""
+
 
 def duckdb_bq_search(
     query_vec_id: int,
@@ -167,104 +200,14 @@ def duckdb_bq_search(
 ) -> str:
     """Oracle twin of bq_train → bq_encode → bq_search(refine),
     query = the embedding of `query_vec_id` (the q1 convention)."""
-    n_words = _n_words(dims)
-
-    def pack(vec: str) -> str:
-        """One packed word per array slot, same 63-bit layout."""
-        words = []
-        for w in range(n_words):
-            lo = w * _WORD_BITS + 1
-            hi = min((w + 1) * _WORD_BITS, dims)
-            words.append(
-                f"list_reduce(list_transform(generate_series({lo}, {hi}),"
-                f" j -> CASE WHEN {vec}[j]::double > s.thr[j]"
-                f" THEN (1::BIGINT << (j - {lo})) ELSE 0::BIGINT END),"
-                f" (a, x) -> a | x)"
-            )
-        return "[" + ", ".join(words) + "]"
-
-    hamming = " + ".join(
-        f"bit_count(xor(c.bcode[{w + 1}], qw.w[{w + 1}]))"
-        for w in range(n_words)
-    )
-    return f"""
-        WITH dims AS (SELECT jj.i AS j FROM unnest(generate_series(1, {dims})) jj(i)),
-        med AS (
-            SELECT d.j, quantile_cont(e.{vec_col}[d.j]::double, 0.5) AS m
-            FROM {table} e, dims d GROUP BY d.j
-        ),
-        s AS (SELECT list(m ORDER BY j) AS thr FROM med),
-        codes AS (
-            SELECT e.{id_col}, {pack(f"e.{vec_col}")} AS bcode
-            FROM {table} e, s
-        ),
-        q AS (
-            SELECT {vec_col} AS qv FROM {table} WHERE {id_col} = {query_vec_id}
-        ),
-        qw AS (SELECT {pack("q.qv")} AS w FROM q, s),
-        shortlist AS (
-            SELECT c.{id_col}
-            FROM codes c, qw
-            ORDER BY {hamming} ASC, c.{id_col} ASC
-            LIMIT {refine * k}
-        )
-        SELECT e.{id_col}, {duckdb_dot(f"e.{vec_col}", "q.qv")} AS score
-        FROM {table} e JOIN shortlist USING ({id_col}), q
-        ORDER BY score DESC, e.{id_col} ASC
-        LIMIT {k}
-    """
-
-
-def ivfbq_search(
-    assigned_codes: DataFrame,
-    centroids: DataFrame,
-    thresholds: list[float],
-    query_vector: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    refine: int = 4,
-    vectors: DataFrame | None = None,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF-BQ — the composed serving shape: coarse probe pruning
-    (read only nprobe/C of the corpus) × binary codes inside the
-    probed clusters (1 bit/dim of what IS read) × broadcast exact
-    rescore. Per-query scan bytes ≈ (nprobe/C) · N · D/8 — the
-    multiplicative combination of the IVF and BQ cuts, the same
-    composition as IVF-PQ (operators/pq.py) at the cheaper rung.
-
-    `assigned_codes`: (id_col, cluster_id, bcode) — bq_encode output
-    joined with ivf_assign's cluster ids (or read from a
-    cluster-partitioned layout, where the probe filter is static
-    partition pruning at the file level)."""
-    from leann_rs_spark.functions.vector import dot as _dot
-
-    q = lit_vec(query_vector)
-    probe_rows = (
-        centroids.select(
-            "centroid_id", _dot(F.col("centroid_vec"), q).alias("__qs")
-        )
-        .orderBy(F.col("__qs").desc(), F.col("centroid_id").asc())
-        .limit(nprobe)
-        .collect()
-    )
-    probe_ids = [r["centroid_id"] for r in probe_rows]
-    qwords = bq_query_words(query_vector, thresholds)
-    ranked = (
-        assigned_codes.filter(F.col("cluster_id").isin(probe_ids))
-        .select(id_col, bq_hamming_col(F.col("bcode"), qwords).alias("hamming"))
-        .orderBy(F.col("hamming").asc(), F.col(id_col).asc())
-    )
-    if refine <= 0:
-        return ranked.limit(k)
-    if vectors is None:
-        raise ValueError("refine > 0 needs the full-vector table")
-    shortlist = ranked.limit(refine * k).select(id_col)
-    return (
-        vectors.join(F.broadcast(shortlist), id_col, "left_semi")
-        .select(id_col, dot(F.col("embedding"), q).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
+    return _duckdb_topk(
+        [
+            _duckdb_q(table, id_col, vec_col, query_vec_id),
+            _duckdb_bq_ctes(dims, table, id_col, vec_col),
+            f"qw AS (SELECT {_duckdb_pack('q.qv', dims)} AS w FROM q, s)",
+        ],
+        "codes r, qw", _duckdb_hamming("r.bcode", "qw.w", dims), k, refine,
+        table, id_col, vec_col, name="hamming", ascending=True,
     )
 
 
@@ -279,77 +222,21 @@ def duckdb_ivfbq_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
-    """Oracle twin: IVF assignment + probe set (the duckdb_ivf_search
-    construction) intersected with the BQ code ranking, then the exact
-    rescore."""
-    n_words = _n_words(dims)
-
-    def pack(vec: str) -> str:
-        words = []
-        for w in range(n_words):
-            lo = w * _WORD_BITS + 1
-            hi = min((w + 1) * _WORD_BITS, dims)
-            words.append(
-                f"list_reduce(list_transform(generate_series({lo}, {hi}),"
-                f" j -> CASE WHEN {vec}[j]::double > s.thr[j]"
-                f" THEN (1::BIGINT << (j - {lo})) ELSE 0::BIGINT END),"
-                f" (a, x) -> a | x)"
-            )
-        return "[" + ", ".join(words) + "]"
-
-    d_ec = duckdb_dot(f"e.{vec_col}", "c.centroid_vec")
-    d_cq = duckdb_dot("c.centroid_vec", "q.qv")
-    hamming = " + ".join(
-        f"bit_count(xor(cd.bcode[{w + 1}], qw.w[{w + 1}]))"
-        for w in range(n_words)
-    )
-    return f"""
-        WITH cent AS (
-            SELECT {id_col} AS centroid_id, {vec_col} AS centroid_vec
-            FROM {table} WHERE {id_col} < {n_centroids}
-        ),
-        assigned AS (
-            SELECT {id_col}, centroid_id AS cluster_id FROM (
-                SELECT e.{id_col}, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY e.{id_col}
-                           ORDER BY {d_ec} DESC, c.centroid_id ASC
-                       ) AS rn
-                FROM {table} e, cent c
-            ) WHERE rn = 1
-        ),
-        q AS (SELECT {vec_col} AS qv FROM {table} WHERE {id_col} = {query_vec_id}),
-        probes AS (
-            SELECT centroid_id FROM (
-                SELECT c.centroid_id,
-                       row_number() OVER (ORDER BY {d_cq} DESC, c.centroid_id ASC) AS rn
-                FROM cent c, q
-            ) WHERE rn <= {nprobe}
-        ),
-        dims_t AS (SELECT jj.i AS j FROM unnest(generate_series(1, {dims})) jj(i)),
-        med AS (
-            SELECT d.j, quantile_cont(e.{vec_col}[d.j]::double, 0.5) AS m
-            FROM {table} e, dims_t d GROUP BY d.j
-        ),
-        s AS (SELECT list(m ORDER BY j) AS thr FROM med),
-        codes AS (
-            SELECT e.{id_col}, {pack(f"e.{vec_col}")} AS bcode
-            FROM {table} e, s
-        ),
-        qw AS (SELECT {pack("q.qv")} AS w FROM q, s),
-        shortlist AS (
-            SELECT cd.{id_col}
-            FROM codes cd
-            JOIN assigned a ON cd.{id_col} = a.{id_col}
-            JOIN probes p ON a.cluster_id = p.centroid_id, qw
-            ORDER BY {hamming} ASC, cd.{id_col} ASC
-            LIMIT {refine * k}
+    """Oracle twin of bq_search over the ivf_probe-filtered codes: the
+    Hamming ranking restricted to the probed rows of the IVF twin."""
+    return _duckdb_topk(
+        _duckdb_ivf_ctes(
+            n_centroids, table, id_col, vec_col, nprobe,
+            query_vec_id=query_vec_id,
         )
-        SELECT e.{id_col}, {duckdb_dot(f"e.{vec_col}", "q.qv")} AS score
-        FROM {table} e JOIN shortlist USING ({id_col}), q
-        ORDER BY score DESC, e.{id_col} ASC
-        LIMIT {k}
-    """
+        + [
+            _duckdb_bq_ctes(dims, table, id_col, vec_col),
+            f"qw AS (SELECT {_duckdb_pack('q.qv', dims)} AS w FROM q, s)",
+        ],
+        "codes r" + _duckdb_ivf_probed("r", id_col) + ", qw",
+        _duckdb_hamming("r.bcode", "qw.w", dims), k, refine,
+        table, id_col, vec_col, name="hamming", ascending=True,
+    )
 
 
 def bq_search_batch(
@@ -372,8 +259,6 @@ def bq_search_batch(
     shuffled), an Arrow local prune caps the per-query ranking shuffle
     at P·(refine·k)·Q rows, and a broadcast candidate set drives the
     exact rescore. → (query_id, id, score, rank)."""
-    from pyspark.sql import Window
-
     n_words = _n_words(len(thresholds))
     qcodes = queries.select(
         query_id_col,
@@ -389,48 +274,11 @@ def bq_search_batch(
     scored = codes.join(F.broadcast(qcodes)).select(
         query_id_col, id_col, ham.alias("hamming")
     )
-    shortlist_k = k if refine <= 0 else refine * k
-    if prune_partitions:
-        # selection only — integer Hamming, no float math in Python
-        schema = scored.schema
-
-        def local_topk(batches):
-            for pdf in batches:
-                if len(pdf):
-                    yield (
-                        pdf.sort_values(
-                            ["hamming", id_col], ascending=[True, True]
-                        ).groupby(query_id_col, sort=False).head(shortlist_k)
-                    )
-
-        scored = scored.mapInPandas(local_topk, schema=schema)
-    w_rank = Window.partitionBy(query_id_col).orderBy(
-        F.col("hamming").asc(), F.col(id_col).asc()
-    )
-    shortlist = scored.withColumn("rank", F.row_number().over(w_rank)).filter(
-        F.col("rank") <= shortlist_k
-    )
-    if refine <= 0:
-        return shortlist.select(query_id_col, id_col, "hamming", "rank")
-    if vectors is None:
-        raise ValueError("refine > 0 needs the full-vector table")
-    cand = shortlist.select(query_id_col, id_col).join(
-        F.broadcast(queries.select(query_id_col, query_vec_col)),
-        query_id_col,
-    )
-    rescored = vectors.join(F.broadcast(cand), id_col).select(
-        query_id_col,
-        id_col,
-        dot(F.col(vec_col), F.col(query_vec_col)).alias("score"),
-    )
-    w_score = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w_score))
-        .filter(F.col("rank") <= k)
-        .orderBy(query_id_col, "rank")
-    )
+    return topk_batch(
+        scored, k, refine, vectors, queries, id_col, vec_col,
+        query_id_col, query_vec_col, ascending=True,
+        prune_partitions=prune_partitions,
+    ).orderBy(query_id_col, "rank")
 
 
 def duckdb_bq_search_batch(
@@ -444,63 +292,19 @@ def duckdb_bq_search_batch(
 ) -> str:
     """Oracle twin of bq_search_batch, queries = the first `n_queries`
     embeddings (the q2 convention)."""
-    n_words = _n_words(dims)
-
-    def pack(vec: str) -> str:
-        words = []
-        for w in range(n_words):
-            lo = w * _WORD_BITS + 1
-            hi = min((w + 1) * _WORD_BITS, dims)
-            words.append(
-                f"list_reduce(list_transform(generate_series({lo}, {hi}),"
-                f" j -> CASE WHEN {vec}[j]::double > s.thr[j]"
-                f" THEN (1::BIGINT << (j - {lo})) ELSE 0::BIGINT END),"
-                f" (a, x) -> a | x)"
-            )
-        return "[" + ", ".join(words) + "]"
-
-    hamming = " + ".join(
-        f"bit_count(xor(c.bcode[{w + 1}], qc.qcode[{w + 1}]))"
-        for w in range(n_words)
+    scored = f"""
+            SELECT qc.query_id, c.{id_col},
+                   {_duckdb_hamming("c.bcode", "qc.qcode", dims)} AS hamming
+            FROM codes c, qcodes qc"""
+    return _duckdb_topk_batch(
+        [
+            _duckdb_bq_ctes(dims, table, id_col, vec_col),
+            _duckdb_q(table, id_col, vec_col, n_queries=n_queries),
+            f"""qcodes AS (
+            SELECT q.query_id, {_duckdb_pack("q.qv", dims)} AS qcode
+            FROM q, s
+        )""",
+        ],
+        scored, k, refine, table, id_col, vec_col, name="hamming",
+        ascending=True,
     )
-    return f"""
-        WITH dims_t AS (SELECT jj.i AS j FROM unnest(generate_series(1, {dims})) jj(i)),
-        med AS (
-            SELECT d.j, quantile_cont(e.{vec_col}[d.j]::double, 0.5) AS m
-            FROM {table} e, dims_t d GROUP BY d.j
-        ),
-        s AS (SELECT list(m ORDER BY j) AS thr FROM med),
-        codes AS (
-            SELECT e.{id_col}, {pack(f"e.{vec_col}")} AS bcode
-            FROM {table} e, s
-        ),
-        qs AS (
-            SELECT {id_col} AS query_id, {vec_col} AS qv
-            FROM {table} WHERE {id_col} < {n_queries}
-        ),
-        qcodes AS (
-            SELECT q.query_id, q.qv, {pack("q.qv")} AS qcode FROM qs q, s
-        ),
-        shortlist AS (
-            SELECT query_id, {id_col} FROM (
-                SELECT qc.query_id, c.{id_col},
-                       row_number() OVER (
-                           PARTITION BY qc.query_id
-                           ORDER BY {hamming} ASC, c.{id_col} ASC
-                       ) AS hrank
-                FROM codes c, qcodes qc
-            ) WHERE hrank <= {refine * k}
-        )
-        SELECT sl.query_id, e.{id_col},
-               {duckdb_dot(f"e.{vec_col}", "qc.qv")} AS score,
-               row_number() OVER (
-                   PARTITION BY sl.query_id
-                   ORDER BY {duckdb_dot(f"e.{vec_col}", "qc.qv")} DESC,
-                            e.{id_col} ASC
-               ) AS rank
-        FROM shortlist sl
-        JOIN {table} e USING ({id_col})
-        JOIN qcodes qc ON qc.query_id = sl.query_id
-        QUALIFY rank <= {k}
-        ORDER BY sl.query_id, rank
-    """

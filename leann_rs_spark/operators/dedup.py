@@ -54,7 +54,7 @@ from leann_rs_spark.functions.text import (
     tokenize,
     word_ngrams,
 )
-from leann_rs_spark.functions.vector import cosine, dot, duckdb_cosine, duckdb_dot
+from leann_rs_spark.functions.vector import cosine, dot
 
 
 # ---------------------------------------------------------------------------
@@ -2210,27 +2210,6 @@ def embedding_near_dups_blocked(
                 )
 
     return pairs.mapInPandas(kernel, "id_a long, id_b long, cos double")
-
-
-def duckdb_embedding_near_dups(
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    table: str = "embeddings",
-    threshold: float = 0.95,
-    assume_normalized: bool = False,
-) -> str:
-    cos = (
-        duckdb_dot("a.va", "b.vb")
-        if assume_normalized
-        else duckdb_cosine("a.va", "b.vb")
-    )
-    return f"""
-        WITH a AS (SELECT {id_col} AS id_a, {vec_col} AS va FROM {table}),
-             b AS (SELECT {id_col} AS id_b, {vec_col} AS vb FROM {table})
-        SELECT id_a, id_b, {cos} AS cos
-        FROM a, b
-        WHERE id_a < id_b AND {cos} >= {threshold}
-    """
 
 
 # ---------------------------------------------------------------------------

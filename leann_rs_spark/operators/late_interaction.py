@@ -801,7 +801,7 @@ def late_interaction_topk_batch_refined(
     scanned), then EXACT MaxSim rescores only the shortlisted (query,
     doc) pairs against the full token index (refine·k·|doc tokens|
     point reads via a broadcast shortlist join, never a second full
-    pass). The pq_search_refined ruling applied to multi-vector
+    pass). The pq_search(refine=) ruling applied to multi-vector
     retrieval.
 
     Output scores are exact-MaxSim values: with a covering codebook

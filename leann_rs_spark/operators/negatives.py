@@ -31,9 +31,10 @@ pos_score is NULL-safe).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from leann_rs_spark.functions.vector import dot, duckdb_dot
+from leann_rs_spark.operators.search import topk_batch
 
 
 def mine_hard_negatives(
@@ -94,30 +95,10 @@ def mine_hard_negatives(
         F.col("_s").alias("score"),
         "pos_score",
     )
-    if prune_partitions:
-        # selection only — no float math in Python (the batch_search
-        # local-prune: caps the ranking shuffle at P·k·Q rows)
-        schema = neg.schema
-
-        def local_topk(batches):
-            for pdf in batches:
-                if len(pdf):
-                    yield (
-                        pdf.sort_values(
-                            ["score", "neg_id"], ascending=[False, True]
-                        ).groupby("anchor_id", sort=False).head(k)
-                    )
-
-        neg = neg.mapInPandas(local_topk, schema=schema)
-
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("score").desc(), F.col("neg_id").asc()
-    )
-    return (
-        neg.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("anchor_id", "rank")
-    )
+    return topk_batch(
+        neg, k, id_col="neg_id", query_id_col="anchor_id",
+        prune_partitions=prune_partitions,
+    ).orderBy("anchor_id", "rank")
 
 
 def duckdb_mine_hard_negatives(

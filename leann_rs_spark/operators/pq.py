@@ -20,20 +20,20 @@ Spark-first shape — every step is a narrow projection or a broadcast:
            ONE projection, no shuffle (the same inline-literal trick as
            ivf_assign). Codes are `array<int>` of length M; at K ≤ 256
            that is M bytes on disk after parquet byte-packing.
-  search:  reconstruct each code to its decoded vector (a per-row
-           literal lookup) and score dot(query, decode(code)) — the
-           textbook ADC lookup-table sum evaluated as the equivalent
-           decode-then-dot, which reuses the bit-parity-verified
-           dot()/duckdb_dot() fold (functions/vector.py). Top-k is one
-           TakeOrderedAndProject over a column the scan never shuffles.
-  refine:  top (refine·k) by ADC → broadcast those ids into a semi-join
-           with the full-vector table → exact top-k. The full vectors
-           are touched for only refine·k rows per query.
+  search:  the rung owns only its score Column: reconstruct each code
+           to its decoded vector (a per-row literal lookup) and score
+           dot(query, decode(code)) — the textbook ADC lookup-table sum
+           evaluated as the equivalent decode-then-dot, which reuses
+           the bit-parity-verified dot()/duckdb_dot() fold
+           (functions/vector.py). Ranking and refine (top refine·k by
+           ADC → broadcast semi-join with the full vectors → exact
+           top-k) are the shared search.topk / search.topk_batch.
 
-Composes with IVF (operators/ann.py): encode the assigned table once,
-then a probed search scans nprobe/C of the corpus at M bytes/vector —
 IVF-PQ, the standard billion-scale layout (FAISS IndexIVFPQ is the
-public reference implementation of the same math).
+public reference implementation of the same math), is pq_search over
+`assigned_codes.filter(ann.ivf_probe(...))`: encode the assigned table
+once, then a probed search scans nprobe/C of the corpus at M
+bytes/vector.
 
 Codebook policy mirrors the IVF module: `take_subcodebooks` (sub-slices
 of the K smallest ids — deterministic, oracle-reproducible; the gates
@@ -47,7 +47,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from leann_rs_spark.functions.vector import (
-    dot, duckdb_dot, lit_vec, lit_vec_sql, sql_double,
+    dot, duckdb_dot, lit_vec, lit_vec_sql,
+)
+from leann_rs_spark.operators.ann import (
+    _duckdb_ivf_ctes, _duckdb_ivf_probed, _ivf_probe_join, ivf_probe,
+)
+from leann_rs_spark.operators.search import (
+    _duckdb_q, _duckdb_topk, _duckdb_topk_batch, topk, topk_batch,
 )
 
 PQ_DEFAULT_M = 8
@@ -345,50 +351,22 @@ def pq_search(
     query_vector: list[float],
     k: int = 10,
     id_col: str = "vec_id",
+    refine: int = 0,
+    vectors: DataFrame | None = None,
+    vec_col: str = "embedding",
 ) -> DataFrame:
     """ADC top-k over the code table alone: (id, score). The scan reads
     M bytes per row instead of the full vector; the plan is
-    Scan → Project → TakeOrderedAndProject, no shuffle of the corpus."""
-    q = lit_vec(query_vector)
-    return (
-        codes.select(
-            id_col,
-            dot(q, pq_reconstruct_col(F.col("code"), codebook)).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
+    Scan → Project → TakeOrderedAndProject, no shuffle of the corpus.
+    refine > 0 exact-rescores the ADC top refine·k (search.topk): the
+    shortlist ids BROADCAST into the full-vector join, so the expensive
+    table contributes refine·k point reads, never a full pass."""
+    score = dot(
+        lit_vec(query_vector), pq_reconstruct_col(F.col("code"), codebook)
     )
-
-
-def pq_search_refined(
-    codes: DataFrame,
-    vectors: DataFrame,
-    codebook: Codebook,
-    query_vector: list[float],
-    k: int = 10,
-    refine: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ADC shortlist of refine·k, exact rescore of only those rows:
-    the shortlist ids BROADCAST into the full-vector join, so the
-    expensive table contributes refine·k point reads (on an id-sorted
-    or bucketed table, a pruned scan), never a full pass."""
-    q = lit_vec(query_vector)
-    shortlist = (
-        codes.select(
-            id_col,
-            dot(q, pq_reconstruct_col(F.col("code"), codebook)).alias("__adc"),
-        )
-        .orderBy(F.col("__adc").desc(), F.col(id_col).asc())
-        .limit(refine * k)
-        .select(id_col)
-    )
-    return (
-        vectors.join(F.broadcast(shortlist), id_col, "left_semi")
-        .select(id_col, dot(F.col(vec_col), q).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
+    return topk(
+        codes, score.alias("score"), query_vector, k, refine, vectors,
+        id_col, vec_col,
     )
 
 
@@ -405,11 +383,11 @@ def ivf_pq_search(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """The composed billion-scale serving shape (FAISS IndexIVFPQ):
-    coarse IVF probing prunes the scan to nprobe/C of the corpus
-    (static partition pruning on a cluster_id-partitioned table), ADC
-    scores the survivors at M bytes/row, and refine > 0 exact-rescores
-    the top refine·k against the full vectors (broadcast semi-join —
-    refine·k point reads, never a second pass).
+    pq_search over the ivf_probe-filtered codes. Coarse probing prunes
+    the scan to nprobe/C of the corpus (static partition pruning on a
+    cluster_id-partitioned table), ADC scores the survivors at M
+    bytes/row, and refine > 0 exact-rescores the top refine·k against
+    the full vectors.
 
     `assigned_codes` is pq_encode(ivf_assign(...),
     extra_cols=["cluster_id"]). nprobe = C with refine covering k·refine
@@ -417,31 +395,9 @@ def ivf_pq_search(
     (test-pinned). Per-query scan bytes: (nprobe/C) · N · M — the two
     knobs multiply.
     """
-    q = lit_vec(query_vector)
-    probe_rows = (
-        centroids.select(
-            "centroid_id", dot(F.col("centroid_vec"), q).alias("__qs")
-        )
-        .orderBy(F.col("__qs").desc(), F.col("centroid_id").asc())
-        .limit(nprobe)
-        .collect()
-    )
-    probe_ids = [r["centroid_id"] for r in probe_rows]
-    pruned = assigned_codes.filter(F.col("cluster_id").isin(probe_ids))
-    adc = pruned.select(
-        id_col,
-        dot(q, pq_reconstruct_col(F.col("code"), codebook)).alias("score"),
-    ).orderBy(F.col("score").desc(), F.col(id_col).asc())
-    if refine <= 0:
-        return adc.limit(k)
-    if vectors is None:
-        raise ValueError("refine > 0 needs the full-vector table")
-    shortlist = adc.limit(refine * k).select(id_col)
-    return (
-        vectors.join(F.broadcast(shortlist), id_col, "left_semi")
-        .select(id_col, dot(F.col(vec_col), q).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
+    probed = assigned_codes.filter(ivf_probe(centroids, query_vector, nprobe))
+    return pq_search(
+        probed, codebook, query_vector, k, id_col, refine, vectors, vec_col
     )
 
 
@@ -460,54 +416,24 @@ def ivf_pq_search_batch(
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Batch-serving IVF-PQ (the ivf_search_batch twin over codes):
-    per-query probe ranking → the Q×nprobe probe table BROADCASTS into
-    the code join (dynamic partition pruning on a cluster-partitioned
-    table; the corpus is never shuffled) → ADC per (query, code) pair
-    → per-query ADC top-(refine·k) window → optional exact rescore via
-    a broadcast shortlist semi-join. Returns (query_id, id, score,
-    rank). Per-batch scan bytes: union of probed clusters × M bytes."""
-    from pyspark.sql import Window
-
-    from leann_rs_spark.operators.ann import probe_ranks
-
-    qv = F.col(query_vec_col)
-    probes = (
-        probe_ranks(queries, centroids, query_id_col, query_vec_col)
-        .filter(F.col("probe_rank") <= nprobe)
-        .drop("probe_rank")
-    )
-    scored = assigned_codes.join(F.broadcast(probes), "cluster_id").select(
-        query_id_col,
-        id_col,
-        dot(qv, pq_reconstruct_col(F.col("code"), codebook)).alias("score"),
-    )
-    w_rank = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    shortlist_k = k if refine <= 0 else refine * k
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= shortlist_k)
-    )
-    if refine <= 0:
-        return shortlist.select(query_id_col, id_col, "score", "rank")
-    if vectors is None:
-        raise ValueError("refine > 0 needs the full-vector table")
-    cand = shortlist.select(query_id_col, id_col).join(
-        F.broadcast(queries.select(query_id_col, query_vec_col)),
-        query_id_col,
-    )
-    rescored = vectors.join(
-        F.broadcast(cand), id_col
+    the per-query probe table broadcasts into the code join
+    (ann._ivf_probe_join) → ADC per (query, code) pair → per-query ADC
+    top-(refine·k) → optional broadcast exact rescore (search.topk_batch).
+    Returns (query_id, id, score, rank). Per-batch scan bytes: union of
+    probed clusters × M bytes."""
+    scored = _ivf_probe_join(
+        assigned_codes, centroids, queries, nprobe, query_id_col,
+        query_vec_col,
     ).select(
         query_id_col,
         id_col,
-        dot(F.col(vec_col), F.col(query_vec_col)).alias("score"),
+        dot(
+            F.col(query_vec_col), pq_reconstruct_col(F.col("code"), codebook)
+        ).alias("score"),
     )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "score", "rank")
+    return topk_batch(
+        scored, k, refine, vectors, queries, id_col, vec_col,
+        query_id_col, query_vec_col,
     )
 
 
@@ -686,20 +612,16 @@ def duckdb_pq_search(
 ) -> str:
     """Oracle twin of take-policy train → encode → ADC top-k, with the
     query = the embedding of `query_vec_id` (the q1 convention)."""
-    d = dims // m
-    common = _duckdb_pq_common(m, n_codebook, d, table, id_col, vec_col)
-    score = duckdb_dot("q.qv", "r.rv")
-    return f"""
-        WITH {common},
-        q AS (
-            SELECT {vec_col} AS qv FROM {table}
-            WHERE {id_col} = {query_vec_id}
-        )
-        SELECT r.{id_col}, {score} AS score
-        FROM recon r, q
-        ORDER BY score DESC, r.{id_col} ASC
-        LIMIT {k}
-    """
+    return _duckdb_topk(
+        [
+            _duckdb_pq_common(
+                m, n_codebook, dims // m, table, id_col, vec_col
+            ),
+            _duckdb_q(table, id_col, vec_col, query_vec_id),
+        ],
+        "recon r", duckdb_dot("q.qv", "r.rv"), k,
+        table=table, id_col=id_col, vec_col=vec_col,
+    )
 
 
 def duckdb_ivf_pq_search(
@@ -717,66 +639,15 @@ def duckdb_ivf_pq_search(
 ) -> str:
     """Oracle twin of `ivf_pq_search`: take-policy coarse centroids AND
     sub-codebooks, query = the embedding of `query_vec_id`."""
-    d = dims // m
-    common = _duckdb_pq_common(m, n_codebook, d, table, id_col, vec_col)
-    d_ec = duckdb_dot(f"e.{vec_col}", "c.centroid_vec")
-    d_cq = duckdb_dot("c.centroid_vec", "q.qv")
-    adc = duckdb_dot("q.qv", "r.rv")
-    exact = duckdb_dot(f"e.{vec_col}", "q.qv")
-    final = (
-        f"""
-        shortlist AS (
-            SELECT {id_col} FROM adc_ranked WHERE rn <= {refine * k}
-        )
-        SELECT e.{id_col}, {exact} AS score
-        FROM {table} e JOIN shortlist s ON s.{id_col} = e.{id_col}, q
-        ORDER BY score DESC, e.{id_col} ASC LIMIT {k}"""
-        if refine > 0
-        else f"""
-        noop AS (SELECT 1)
-        SELECT {id_col}, score FROM adc_ranked
-        ORDER BY score DESC, {id_col} ASC LIMIT {k}"""
+    return _duckdb_topk(
+        [_duckdb_pq_common(m, n_codebook, dims // m, table, id_col, vec_col)]
+        + _duckdb_ivf_ctes(
+            n_centroids, table, id_col, vec_col, nprobe,
+            query_vec_id=query_vec_id,
+        ),
+        "recon r" + _duckdb_ivf_probed("r", id_col),
+        duckdb_dot("q.qv", "r.rv"), k, refine, table, id_col, vec_col,
     )
-    return f"""
-        WITH {common},
-        cent AS (
-            SELECT {id_col} AS centroid_id, {vec_col} AS centroid_vec
-            FROM {table} WHERE {id_col} < {n_centroids}
-        ),
-        assigned AS (
-            SELECT {id_col}, centroid_id AS cluster_id FROM (
-                SELECT e.{id_col}, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY e.{id_col}
-                           ORDER BY {d_ec} DESC, c.centroid_id ASC
-                       ) AS rn
-                FROM {table} e, cent c
-            ) WHERE rn = 1
-        ),
-        q AS (
-            SELECT {vec_col} AS qv FROM {table}
-            WHERE {id_col} = {query_vec_id}
-        ),
-        probes AS (
-            SELECT centroid_id FROM (
-                SELECT c.centroid_id,
-                       row_number() OVER (
-                           ORDER BY {d_cq} DESC, c.centroid_id ASC
-                       ) AS rn
-                FROM cent c, q
-            ) WHERE rn <= {nprobe}
-        ),
-        adc_ranked AS (
-            SELECT r.{id_col}, {adc} AS score,
-                   row_number() OVER (
-                       ORDER BY {adc} DESC, r.{id_col} ASC
-                   ) AS rn
-            FROM recon r
-            JOIN assigned a ON a.{id_col} = r.{id_col}
-            JOIN probes p ON p.centroid_id = a.cluster_id, q
-        ),
-        {final}
-    """
 
 
 def duckdb_ivf_pq_search_batch(
@@ -794,77 +665,17 @@ def duckdb_ivf_pq_search_batch(
 ) -> str:
     """Oracle twin of `ivf_pq_search_batch` (take policies, queries =
     the `n_queries` smallest ids — the q2 conventions)."""
-    d = dims // m
-    common = _duckdb_pq_common(m, n_codebook, d, table, id_col, vec_col)
-    d_ec = duckdb_dot(f"e.{vec_col}", "c.centroid_vec")
-    d_cq = duckdb_dot("c.centroid_vec", "q.qv")
-    adc = duckdb_dot("q.qv", "r.rv")
-    exact = duckdb_dot(f"e.{vec_col}", "q.qv")
-    shortlist_k = k if refine <= 0 else refine * k
-    final = (
-        f"""
-        rescored AS (
-            SELECT s.query_id, e.{id_col}, {exact} AS score
-            FROM {table} e
-            JOIN short s ON s.{id_col} = e.{id_col}
-            JOIN q ON q.query_id = s.query_id
-        )
-        SELECT query_id, {id_col}, score, rank FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id ORDER BY score DESC, {id_col} ASC
-            ) AS rank FROM rescored
-        ) WHERE rank <= {k}"""
-        if refine > 0
-        else f"""
-        noop AS (SELECT 1)
-        SELECT query_id, {id_col}, score, rank FROM short"""
+    scored = f"""
+            SELECT q.query_id, r.{id_col},
+                   {duckdb_dot("q.qv", "r.rv")} AS score
+            FROM recon r{_duckdb_ivf_probed("r", id_col, batch=True)}"""
+    return _duckdb_topk_batch(
+        [_duckdb_pq_common(m, n_codebook, dims // m, table, id_col, vec_col)]
+        + _duckdb_ivf_ctes(
+            n_centroids, table, id_col, vec_col, nprobe, n_queries=n_queries
+        ),
+        scored, k, refine, table, id_col, vec_col,
     )
-    return f"""
-        WITH {common},
-        cent AS (
-            SELECT {id_col} AS centroid_id, {vec_col} AS centroid_vec
-            FROM {table} WHERE {id_col} < {n_centroids}
-        ),
-        assigned AS (
-            SELECT {id_col}, centroid_id AS cluster_id FROM (
-                SELECT e.{id_col}, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY e.{id_col}
-                           ORDER BY {d_ec} DESC, c.centroid_id ASC
-                       ) AS rn
-                FROM {table} e, cent c
-            ) WHERE rn = 1
-        ),
-        q AS (
-            SELECT {id_col} AS query_id, {vec_col} AS qv
-            FROM {table} WHERE {id_col} < {n_queries}
-        ),
-        probes AS (
-            SELECT query_id, centroid_id FROM (
-                SELECT q.query_id, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY q.query_id
-                           ORDER BY {d_cq} DESC, c.centroid_id ASC
-                       ) AS rn
-                FROM cent c, q
-            ) WHERE rn <= {nprobe}
-        ),
-        adc AS (
-            SELECT q.query_id, r.{id_col}, {adc} AS score
-            FROM recon r
-            JOIN assigned a ON a.{id_col} = r.{id_col}
-            JOIN probes p ON p.centroid_id = a.cluster_id
-            JOIN q ON q.query_id = p.query_id
-        ),
-        short AS (
-            SELECT query_id, {id_col}, score, rank FROM (
-                SELECT *, row_number() OVER (
-                    PARTITION BY query_id ORDER BY score DESC, {id_col} ASC
-                ) AS rank FROM adc
-            ) WHERE rank <= {shortlist_k}
-        ),
-        {final}
-    """
 
 
 def duckdb_pq_refine_recall_curve(
@@ -887,10 +698,7 @@ def duckdb_pq_refine_recall_curve(
     sweep = ", ".join(str(r) for r in refines)
     return f"""
         WITH {common},
-        q AS (
-            SELECT {id_col} AS query_id, {vec_col} AS qv
-            FROM {table} WHERE {id_col} < {n_queries}
-        ),
+        {_duckdb_q(table, id_col, vec_col, n_queries=n_queries)},
         cand AS (
             SELECT q.query_id, e.{id_col}, {adc} AS adc, {exact} AS exact
             FROM {table} e

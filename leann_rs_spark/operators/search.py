@@ -21,13 +21,21 @@ Scale design (100 TB / 1000 executors):
 - Tie-break `score DESC, id ASC` everywhere: the reference's float sort
   leaves tie order unspecified (src/index/recompute.rs:106-110); the
   oracle needs a total order.
+
+Every rung of the search ladder (exact, MRL here; SQ8, PQ, BQ in their
+modules; each optionally behind ann.ivf_probe) is a score Column handed
+to the one ranking core: `topk` for a single query, `topk_batch` for a
+query table. Their DuckDB twins share `_duckdb_topk` /
+`_duckdb_topk_batch` the same way.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from leann_rs_spark.functions.vector import cosine, dot, lit_vec
+from leann_rs_spark.functions.vector import (
+    cosine, dot, duckdb_cosine, duckdb_dot, lit_vec,
+)
 
 
 def _score(metric: str, vec_col: Column, query_col: Column) -> Column:
@@ -36,6 +44,41 @@ def _score(metric: str, vec_col: Column, query_col: Column) -> Column:
     if metric == "cosine":
         return cosine(vec_col, query_col)
     raise ValueError(f"unknown metric {metric!r} (expected 'ip' or 'cosine')")
+
+
+def topk(
+    rows: DataFrame,
+    score: Column,
+    query_vector: list[float],
+    k: int,
+    refine: int = 0,
+    vectors: DataFrame | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    ascending: bool = False,
+) -> DataFrame:
+    """The single-query ranking core every rung shares: rank `rows` by
+    `score` (an aliased Column; DESC, or ASC for distances) with ties
+    broken id ASC and keep the top k — one TakeOrderedAndProject.
+    refine > 0 broadcasts the top refine·k ids as a shortlist into a
+    semi-join with `vectors` and exact-rescores them by dot(vec_col,
+    query) — refine·k point reads of the full-vector table.
+    → (id_col, <score alias>) when refine <= 0, else (id_col, score)."""
+    ranked = rows.select(id_col, score)
+    key = F.col(ranked.columns[1])
+    ranked = ranked.orderBy(
+        key.asc() if ascending else key.desc(), F.col(id_col).asc()
+    )
+    if refine <= 0:
+        return ranked.limit(k)
+    if vectors is None:
+        raise ValueError("refine > 0 needs the full-vector table")
+    shortlist = ranked.limit(refine * k).select(id_col)
+    return topk(
+        vectors.join(F.broadcast(shortlist), id_col, "left_semi"),
+        dot(F.col(vec_col), lit_vec(query_vector)).alias("score"),
+        query_vector, k, id_col=id_col,
+    )
 
 
 def exact_search(
@@ -55,15 +98,85 @@ def exact_search(
     the Parquet scan.
     Returns (id_col, score) with score DOUBLE, ordered score DESC, id ASC.
     """
-    q = lit_vec(query_vector)
+    score = _score(metric, F.col(vec_col), lit_vec(query_vector))
     df = vectors
     if predicate is not None:
         df = df.filter(predicate)
-    return (
-        df.select(id_col, _score(metric, F.col(vec_col), q).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
+    return topk(df, score.alias("score"), query_vector, k, id_col=id_col)
+
+
+def topk_batch(
+    scored: DataFrame,
+    k: int,
+    refine: int = 0,
+    vectors: DataFrame | None = None,
+    queries: DataFrame | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+    ascending: bool = False,
+    prune_partitions: bool = False,
+) -> DataFrame:
+    """The batch ranking core: `scored` is (query_id, id, <score>,
+    extra columns...); keep the top k per query by a row_number window
+    over the third column (DESC, or ASC for distances, ties id ASC),
+    extra columns riding along. prune_partitions first cuts each
+    partition to its local top rows per query (Arrow, selection only),
+    so the ranking shuffle moves P·k·Q rows instead of all pairs.
+    refine > 0 ranks the top refine·k by `score`, broadcasts those
+    (query, id) candidates with their query vectors into a join with
+    `vectors`, and exact-rescores them by dot. → (query_id, id,
+    <score> or score, rank), unordered."""
+    n = k if refine <= 0 else refine * k
+    if prune_partitions:
+        scored = _local_topk(scored, n, id_col, query_id_col, ascending)
+    shortlist = _rank_per_query(scored, n, id_col, query_id_col, ascending)
+    if refine <= 0:
+        return shortlist
+    if vectors is None:
+        raise ValueError("refine > 0 needs the full-vector table")
+    cand = shortlist.select(query_id_col, id_col).join(
+        F.broadcast(queries.select(query_id_col, query_vec_col)),
+        query_id_col,
     )
+    rescored = vectors.join(F.broadcast(cand), id_col).select(
+        query_id_col,
+        id_col,
+        dot(F.col(vec_col), F.col(query_vec_col)).alias("score"),
+    )
+    return _rank_per_query(rescored, k, id_col, query_id_col, False)
+
+
+def _rank_per_query(
+    scored: DataFrame, n: int, id_col: str, query_id_col: str, ascending: bool
+) -> DataFrame:
+    key = F.col(scored.columns[2])
+    w = Window.partitionBy(query_id_col).orderBy(
+        key.asc() if ascending else key.desc(), F.col(id_col).asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= n
+    )
+
+
+def _local_topk(
+    scored: DataFrame, n: int, id_col: str, query_id_col: str, ascending: bool
+) -> DataFrame:
+    # Selection only — no float math happens in Python, so results
+    # stay bit-identical; Arrow round-trips doubles losslessly.
+    key = scored.columns[2]
+
+    def local_topk(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield (
+                    pdf.sort_values(
+                        [key, id_col], ascending=[ascending, True]
+                    ).groupby(query_id_col, sort=False).head(n)
+                )
+
+    return scored.mapInPandas(local_topk, schema=scored.schema)
 
 
 def batch_search(
@@ -97,33 +210,10 @@ def batch_search(
             _score(metric, F.col(vec_col), F.col(query_vec_col)).alias("score"),
         )
     )
-
-    if prune_partitions:
-        # Selection only — no float math happens in Python, so results
-        # stay bit-identical; Arrow round-trips doubles losslessly.
-        import pandas as pd
-
-        schema = scored.schema
-
-        def local_topk(batches):
-            for pdf in batches:
-                if len(pdf):
-                    yield (
-                        pdf.sort_values(
-                            ["score", id_col], ascending=[False, True]
-                        ).groupby(query_id_col, sort=False).head(k)
-                    )
-
-        scored = scored.mapInPandas(local_topk, schema=schema)
-
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy(query_id_col, "rank")
-    )
+    return topk_batch(
+        scored, k, id_col=id_col, query_id_col=query_id_col,
+        prune_partitions=prune_partitions,
+    ).orderBy(query_id_col, "rank")
 
 
 def assemble_results(
@@ -155,28 +245,113 @@ def mrl_search(
     so a d-dim prefix is a valid low-cost embedding), then optionally
     exact-rescore the top refine·k with the full vector — the
     coarse-to-fine funnel the paper serves with. Scan cost of the
-    first pass is d/D of the full scan; the funnel shape is the same
-    broadcast-shortlist refine as SQ8/PQ/BQ.
+    first pass is d/D of the full scan; the refine is the shared
+    `topk` shortlist rescore.
 
     Cosine (not IP) on the prefix: truncation changes norms, so
     prefix scores are only comparable normalized. All float math
     stays in the verified dot/l2 folds — deterministic cross-engine.
     """
-    qd = lit_vec(query_vector[:d])
     pref = F.slice(F.col(vec_col), 1, d)
-    ranked = vectors.select(
-        id_col, cosine(pref, qd).alias("score")
-    ).orderBy(F.col("score").desc(), F.col(id_col).asc())
-    if refine <= 0:
-        return ranked.limit(k)
-    q = lit_vec(query_vector)
-    shortlist = ranked.limit(refine * k).select(id_col)
-    return (
-        vectors.join(F.broadcast(shortlist), id_col, "left_semi")
-        .select(id_col, dot(F.col(vec_col), q).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
+    return topk(
+        vectors,
+        cosine(pref, lit_vec(query_vector[:d])).alias("score"),
+        query_vector, k, refine, vectors, id_col, vec_col,
     )
+
+
+def _duckdb_q(
+    table: str = "embeddings",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_vec_id: int | None = None,
+    n_queries: int | None = None,
+) -> str:
+    """The twins' query CTE: `q(qv)` = the embedding of `query_vec_id`
+    (the q1 convention), or `q(query_id, qv)` = the `n_queries`
+    smallest ids (the q2 batch convention)."""
+    if n_queries is None:
+        return f"""q AS (
+            SELECT {vec_col} AS qv FROM {table}
+            WHERE {id_col} = {query_vec_id}
+        )"""
+    return f"""q AS (
+            SELECT {id_col} AS query_id, {vec_col} AS qv
+            FROM {table} WHERE {id_col} < {n_queries}
+        )"""
+
+
+def _duckdb_topk(
+    ctes: list[str],
+    rows: str,
+    score: str,
+    k: int,
+    refine: int = 0,
+    table: str = "embeddings",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    name: str = "score",
+    ascending: bool = False,
+) -> str:
+    """Oracle twin of `topk`: rank the FROM item `rows` (alias r,
+    joined with the single-query CTE q) by the SQL `score`, ties id
+    ASC, keep k; refine > 0 keeps refine·k as `shortlist` and
+    exact-rescores it by dot against q.qv."""
+    order = "ASC" if ascending else "DESC"
+    ranked = f"""
+        SELECT r.{id_col}, {score} AS {name}
+        FROM {rows}, q
+        ORDER BY {name} {order}, r.{id_col} ASC"""
+    with_ = "WITH " + ",\n".join(ctes)
+    if refine <= 0:
+        return f"{with_}{ranked}\n        LIMIT {k}"
+    return f"""{with_},
+        shortlist AS ({ranked} LIMIT {refine * k})
+        SELECT e.{id_col}, {duckdb_dot(f"e.{vec_col}", "q.qv")} AS score
+        FROM {table} e JOIN shortlist USING ({id_col}), q
+        ORDER BY score DESC, e.{id_col} ASC
+        LIMIT {k}"""
+
+
+def _duckdb_topk_batch(
+    ctes: list[str],
+    scored: str,
+    k: int,
+    refine: int = 0,
+    table: str = "embeddings",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    name: str = "score",
+    ascending: bool = False,
+) -> str:
+    """Oracle twin of `topk_batch`: `scored` is a SELECT of (query_id,
+    id_col, <name>) over `ctes`, which define the batch query CTE
+    q(query_id, qv). Per-query row_number rank, ties id ASC; refine > 0
+    ranks refine·k and exact-rescores them against q.qv.
+    → (query_id, id_col, <name> or score, rank)."""
+
+    def rank(sql: str, col: str, order: str, n: int) -> str:
+        return f"""
+            SELECT query_id, {id_col}, {col}, rank FROM (
+                SELECT *, row_number() OVER (
+                    PARTITION BY query_id ORDER BY {col} {order}, {id_col} ASC
+                ) AS rank FROM ({sql})
+            ) WHERE rank <= {n}"""
+
+    n = k if refine <= 0 else refine * k
+    short = rank(scored, name, "ASC" if ascending else "DESC", n)
+    with_ = "WITH " + ",\n".join(ctes)
+    if refine <= 0:
+        return f"{with_}{short}"
+    rescored = f"""
+            SELECT s.query_id, e.{id_col},
+                   {duckdb_dot(f"e.{vec_col}", "q.qv")} AS score
+            FROM {table} e
+            JOIN short s ON s.{id_col} = e.{id_col}
+            JOIN q ON q.query_id = s.query_id"""
+    return f"""{with_},
+        short AS ({short})
+        {rank(rescored, "score", "DESC", k)}"""
 
 
 def duckdb_mrl_search(
@@ -189,27 +364,13 @@ def duckdb_mrl_search(
     vec_col: str = "embedding",
 ) -> str:
     """Oracle twin of mrl_search, query = embedding of `query_vec_id`."""
-    from leann_rs_spark.functions.vector import duckdb_cosine, duckdb_dot
-
     trunc_score = duckdb_cosine(
-        f"list_slice(e.{vec_col}, 1, {d})", f"list_slice(q.{vec_col}, 1, {d})"
+        f"list_slice(r.{vec_col}, 1, {d})", f"list_slice(q.qv, 1, {d})"
     )
-    base = f"""
-        SELECT e.{id_col}, {trunc_score} AS score
-        FROM {table} e, {table} q
-        WHERE q.{id_col} = {query_vec_id}
-        ORDER BY score DESC, e.{id_col} ASC
-    """
-    if refine <= 0:
-        return base + f" LIMIT {k}"
-    return f"""
-        WITH shortlist AS ({base} LIMIT {refine * k})
-        SELECT e.{id_col}, {duckdb_dot(f"e.{vec_col}", f"q.{vec_col}")} AS score
-        FROM {table} e JOIN shortlist USING ({id_col}), {table} q
-        WHERE q.{id_col} = {query_vec_id}
-        ORDER BY score DESC, e.{id_col} ASC
-        LIMIT {k}
-    """
+    return _duckdb_topk(
+        [_duckdb_q(table, id_col, vec_col, query_vec_id)],
+        f"{table} r", trunc_score, k, refine, table, id_col, vec_col,
+    )
 
 
 def mmr_search(
@@ -297,8 +458,6 @@ def duckdb_mmr_search(
     """Oracle twin of mmr_search (metric='ip'): the greedy unrolled as
     k chained CTEs — step n picks argmax of the identical rounded MMR
     key over candidates not yet chosen, ties by id."""
-    from leann_rs_spark.functions.vector import duckdb_dot
-
     rel = duckdb_dot(f"e.{vec_col}", f"q.{vec_col}")
     ctes = [
         f"""cand AS (

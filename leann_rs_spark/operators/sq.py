@@ -14,12 +14,17 @@ and scored against the dequantized vector
     v̂_j = min_j + (q_j · (max_j − min_j)) / 255.
 
 Spark-first shape, same as the PQ module: the stats are ONE aggregate
-pass (2·D doubles — plan literals thereafter), encode is a shuffle-free
-projection, scoring is decode-then-dot reusing the bit-parity-verified
-dot()/duckdb_dot() fold, and refine exact-rescores a broadcast
-shortlist. floor (not round) keeps the quantizer reproducible across
-engines — round's half-way rule differs between them; endpoints map
-exactly (v = min → 0, v = max → 255).
+pass (2·D doubles — plan literals thereafter) and encode is a
+shuffle-free projection. floor (not round) keeps the quantizer
+reproducible across engines — round's half-way rule differs between
+them; endpoints map exactly (v = min → 0, v = max → 255).
+
+As a rung of the search ladder SQ8 owns only its score Column:
+dot(query, dequant(code)), through the bit-parity-verified
+dot()/duckdb_dot() fold. Ranking, the refine rescore and the IVF probe
+are shared — search.topk and ann.ivf_probe (IVF-SQ8 is sq8_search over
+`codes.filter(ivf_probe(...))`); the twins likewise add only the
+`stats`/`recon` CTEs to search._duckdb_topk and ann._duckdb_ivf_ctes.
 """
 
 from __future__ import annotations
@@ -27,6 +32,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from leann_rs_spark.functions.vector import dot, duckdb_dot, lit_vec
+from leann_rs_spark.operators.ann import _duckdb_ivf_ctes, _duckdb_ivf_probed
+from leann_rs_spark.operators.search import (
+    _duckdb_q, _duckdb_topk, topk,
+)
 
 
 def sq8_train(
@@ -118,22 +127,14 @@ def sq8_search(
 ) -> DataFrame:
     """Top-k by dot(query, dequant(code)) over the byte codes — a 4×
     scan-bytes cut at ~0.2 % score error; refine > 0 exact-rescores
-    the top refine·k via a broadcast shortlist (the PQ refine shape)."""
-    q = lit_vec(query_vector)
-    scored = codes.select(
-        id_col,
-        dot(q, sq8_reconstruct_col(F.col("qcode"), mins, rngs)).alias("score"),
-    ).orderBy(F.col("score").desc(), F.col(id_col).asc())
-    if refine <= 0:
-        return scored.limit(k)
-    if vectors is None:
-        raise ValueError("refine > 0 needs the full-vector table")
-    shortlist = scored.limit(refine * k).select(id_col)
-    return (
-        vectors.join(F.broadcast(shortlist), id_col, "left_semi")
-        .select(id_col, dot(F.col(vec_col), q).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
+    the top refine·k (search.topk). IVF-SQ8 is this search over
+    `assigned_codes.filter(ann.ivf_probe(centroids, query, nprobe))`."""
+    score = dot(
+        lit_vec(query_vector), sq8_reconstruct_col(F.col("qcode"), mins, rngs)
+    )
+    return topk(
+        codes, score.alias("score"), query_vector, k, refine, vectors,
+        id_col, vec_col,
     )
 
 
@@ -141,6 +142,35 @@ def sq8_search(
 # DuckDB oracle twin — derives the per-dim stats, the quantizer, and
 # the decode-then-dot score from the parquet table alone.
 # ---------------------------------------------------------------------------
+
+def _duckdb_sq8_ctes(dims: int, table: str, id_col: str, vec_col: str) -> str:
+    """sq8_train's stats (per-dim mins and ranges, from min/max) and
+    recon (id, rv = the dequantized sq8 code of each row)."""
+    return f"""
+        dims_t AS (SELECT jj.i AS j FROM unnest(generate_series(1, {dims})) jj(i)),
+        mm AS (
+            SELECT d.j,
+                   min(e.{vec_col}[d.j]::double) AS mn,
+                   max(e.{vec_col}[d.j]::double) AS mx
+            FROM {table} e, dims_t d GROUP BY d.j
+        ),
+        stats AS (
+            SELECT list(mn ORDER BY j) AS mins,
+                   list(mx - mn ORDER BY j) AS rngs
+            FROM mm
+        ),
+        recon AS (
+            SELECT e.{id_col},
+                   list_transform(generate_series(1, {dims}), j ->
+                       s.mins[j] + (CASE WHEN s.rngs[j] = 0 THEN 0
+                            ELSE floor(least(greatest(
+                                (e.{vec_col}[j]::double - s.mins[j])
+                                    / s.rngs[j], 0.0), 1.0) * 255.0)::int
+                       END::double * s.rngs[j]) / 255.0
+                   ) AS rv
+            FROM {table} e, stats s
+        )"""
+
 
 def duckdb_sq8_search(
     query_vec_id: int,
@@ -152,123 +182,15 @@ def duckdb_sq8_search(
     refine: int = 0,
 ) -> str:
     """Oracle twin of sq8_train → sq8_encode → sq8_search, query = the
-    embedding of `query_vec_id` (the q1 convention). refine > 0 wraps
-    the quantized ranking in a shortlist CTE and exact-rescores it —
-    the production serving form."""
-    if refine > 0:
-        base = duckdb_sq8_search(
-            query_vec_id, refine * k, dims=dims, table=table,
-            id_col=id_col, vec_col=vec_col, refine=0,
-        )
-        return f"""
-            WITH shortlist AS ({base})
-            SELECT e.{id_col}, {duckdb_dot(f"e.{vec_col}", f"q2.{vec_col}")} AS score
-            FROM {table} e
-            JOIN shortlist USING ({id_col}),
-                 (SELECT {vec_col} FROM {table}
-                  WHERE {id_col} = {query_vec_id}) q2
-            ORDER BY score DESC, e.{id_col} ASC
-            LIMIT {k}
-        """
-    score = duckdb_dot("q.qv", "r.rv")
-    return f"""
-        WITH dims AS (SELECT jj.i AS j FROM unnest(generate_series(1, {dims})) jj(i)),
-        mm AS (
-            SELECT d.j,
-                   min(e.{vec_col}[d.j]::double) AS mn,
-                   max(e.{vec_col}[d.j]::double) AS mx
-            FROM {table} e, dims d GROUP BY d.j
-        ),
-        stats AS (
-            SELECT list(mn ORDER BY j) AS mins,
-                   list(mx - mn ORDER BY j) AS rngs
-            FROM mm
-        ),
-        codes AS (
-            SELECT e.{id_col},
-                   list_transform(generate_series(1, {dims}), j ->
-                       CASE WHEN s.rngs[j] = 0 THEN 0
-                            ELSE floor(least(greatest(
-                                (e.{vec_col}[j]::double - s.mins[j])
-                                    / s.rngs[j], 0.0), 1.0) * 255.0)::int
-                       END) AS qcode
-            FROM {table} e, stats s
-        ),
-        recon AS (
-            SELECT c.{id_col},
-                   list_transform(generate_series(1, {dims}), j ->
-                       s.mins[j] + (c.qcode[j]::double * s.rngs[j]) / 255.0
-                   ) AS rv
-            FROM codes c, stats s
-        ),
-        q AS (
-            SELECT {vec_col} AS qv FROM {table}
-            WHERE {id_col} = {query_vec_id}
-        )
-        SELECT r.{id_col}, {score} AS score
-        FROM recon r, q
-        ORDER BY score DESC, r.{id_col} ASC
-        LIMIT {k}
-    """
-
-
-def ivfsq_search(
-    assigned_codes: DataFrame,
-    centroids: DataFrame,
-    mins: list[float],
-    rngs: list[float],
-    query_vector: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    refine: int = 3,
-    vectors: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-SQ8 — the composed serving shape that completes the ladder's
-    composition matrix (IVF×full = q1, IVF×PQ = pq.ivf_pq_search,
-    IVF×BQ = bq.ivfbq_search): coarse probe pruning reads nprobe/C of
-    the corpus, SQ8 byte codes cut what IS read 4×, a broadcast exact
-    rescore touches refine·k rows. Per-query scan bytes ≈
-    (nprobe/C)·N·D — the middle-rung compression composed with
-    pruning; on a cluster-partitioned code layout the probe filter is
-    static partition pruning at the file level.
-
-    `assigned_codes`: (id_col, cluster_id, qcode) — sq8_encode output
-    carrying ivf_assign's cluster ids (pack the code in the same
-    assignment projection; no join)."""
-    from leann_rs_spark.functions.vector import dot as _dot
-
-    q = lit_vec(query_vector)
-    probe_rows = (
-        centroids.select(
-            "centroid_id", _dot(F.col("centroid_vec"), q).alias("__qs")
-        )
-        .orderBy(F.col("__qs").desc(), F.col("centroid_id").asc())
-        .limit(nprobe)
-        .collect()
-    )
-    probe_ids = [r["centroid_id"] for r in probe_rows]
-    ranked = (
-        assigned_codes.filter(F.col("cluster_id").isin(probe_ids))
-        .select(
-            id_col,
-            dot(q, sq8_reconstruct_col(F.col("qcode"), mins, rngs)).alias(
-                "score"
-            ),
-        )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-    )
-    if refine <= 0:
-        return ranked.limit(k)
-    if vectors is None:
-        raise ValueError("refine > 0 needs the full-vector table")
-    shortlist = ranked.limit(refine * k).select(id_col)
-    return (
-        vectors.join(F.broadcast(shortlist), id_col, "left_semi")
-        .select(id_col, dot(F.col(vec_col), q).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
+    embedding of `query_vec_id` (the q1 convention); refine > 0 is the
+    production serving form (search._duckdb_topk's exact rescore)."""
+    return _duckdb_topk(
+        [
+            _duckdb_q(table, id_col, vec_col, query_vec_id),
+            _duckdb_sq8_ctes(dims, table, id_col, vec_col),
+        ],
+        "recon r", duckdb_dot("q.qv", "r.rv"), k, refine, table, id_col,
+        vec_col,
     )
 
 
@@ -283,79 +205,14 @@ def duckdb_ivfsq_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
-    """Oracle twin: the duckdb_ivf_search probe construction
-    intersected with the SQ8 dequant-dot ranking, then the exact
-    rescore — cent/assigned/probes from the IVF twin, stats/codes/recon
-    from the SQ8 twin."""
-    d_ec = duckdb_dot(f"e.{vec_col}", "c.centroid_vec")
-    d_cq = duckdb_dot("c.centroid_vec", "q.qv")
-    return f"""
-        WITH cent AS (
-            SELECT {id_col} AS centroid_id, {vec_col} AS centroid_vec
-            FROM {table} WHERE {id_col} < {n_centroids}
-        ),
-        assigned AS (
-            SELECT {id_col}, centroid_id AS cluster_id FROM (
-                SELECT e.{id_col}, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY e.{id_col}
-                           ORDER BY {d_ec} DESC, c.centroid_id ASC
-                       ) AS rn
-                FROM {table} e, cent c
-            ) WHERE rn = 1
-        ),
-        q AS (
-            SELECT {vec_col} AS qv FROM {table}
-            WHERE {id_col} = {query_vec_id}
-        ),
-        probes AS (
-            SELECT centroid_id FROM (
-                SELECT c.centroid_id,
-                       row_number() OVER (
-                           ORDER BY {d_cq} DESC, c.centroid_id ASC
-                       ) AS rn
-                FROM cent c, q
-            ) WHERE rn <= {nprobe}
-        ),
-        dims_t AS (
-            SELECT jj.i AS j FROM unnest(generate_series(1, {dims})) jj(i)
-        ),
-        mm AS (
-            SELECT d.j,
-                   min(e.{vec_col}[d.j]::double) AS mn,
-                   max(e.{vec_col}[d.j]::double) AS mx
-            FROM {table} e, dims_t d GROUP BY d.j
-        ),
-        stats AS (
-            SELECT list(mn ORDER BY j) AS mins,
-                   list(mx - mn ORDER BY j) AS rngs
-            FROM mm
-        ),
-        probed AS (
-            SELECT e.{id_col}, e.{vec_col}
-            FROM {table} e
-            JOIN assigned a ON e.{id_col} = a.{id_col}
-            JOIN probes p ON a.cluster_id = p.centroid_id
-        ),
-        recon AS (
-            SELECT e.{id_col},
-                   list_transform(generate_series(1, {dims}), j ->
-                       s.mins[j] + (CASE WHEN s.rngs[j] = 0 THEN 0
-                            ELSE floor(least(greatest(
-                                (e.{vec_col}[j]::double - s.mins[j])
-                                    / s.rngs[j], 0.0), 1.0) * 255.0)::int
-                       END::double * s.rngs[j]) / 255.0
-                   ) AS rv
-            FROM probed e, stats s
-        ),
-        shortlist AS (
-            SELECT r.{id_col}
-            FROM recon r, q
-            ORDER BY {duckdb_dot("q.qv", "r.rv")} DESC, r.{id_col} ASC
-            LIMIT {refine * k}
+    """Oracle twin of sq8_search over the ivf_probe-filtered codes: the
+    SQ8 ranking restricted to the probed rows of the IVF twin."""
+    return _duckdb_topk(
+        _duckdb_ivf_ctes(
+            n_centroids, table, id_col, vec_col, nprobe,
+            query_vec_id=query_vec_id,
         )
-        SELECT e.{id_col}, {duckdb_dot(f"e.{vec_col}", "q.qv")} AS score
-        FROM {table} e JOIN shortlist USING ({id_col}), q
-        ORDER BY score DESC, e.{id_col} ASC
-        LIMIT {k}
-    """
+        + [_duckdb_sq8_ctes(dims, table, id_col, vec_col)],
+        "recon r" + _duckdb_ivf_probed("r", id_col),
+        duckdb_dot("q.qv", "r.rv"), k, refine, table, id_col, vec_col,
+    )

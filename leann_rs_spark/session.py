@@ -12,13 +12,27 @@ import os
 from pyspark.sql import SparkSession
 
 
+def effective_cpus() -> int:
+    """Cores the local session runs with: SPARK_GRAFT_CPUS when set,
+    else os.cpu_count() (4 if unknown)."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return os.cpu_count() or 4
+    try:
+        return int(raw)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be an integer core count, got {raw!r}"
+        ) from None
+
+
 def get_spark(
     app_name: str = "leann-rs-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = effective_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
 
@@ -51,11 +65,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Load the driver's parquet tables as a dict of DataFrames."""
-    names = names or [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

@@ -76,8 +76,3 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "props",
     )
 
-
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        return read_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -242,8 +242,10 @@ def test_mmr_k_exceeding_pool_returns_pool(spark):
 
 def test_ivfbq_full_probe_full_refine_equals_exact(emb, thr):
     """nprobe = C and refine·k >= N degrade the composition to exact."""
-    from leann_rs_spark.operators.ann import ivf_assign, take_centroids
-    from leann_rs_spark.operators.bq import bq_encode_col, ivfbq_search
+    from leann_rs_spark.operators.ann import (
+        ivf_assign, ivf_probe, take_centroids,
+    )
+    from leann_rs_spark.operators.bq import bq_encode_col
 
     cents = take_centroids(emb, 8)
     codes = ivf_assign(emb, cents).select(
@@ -252,9 +254,9 @@ def test_ivfbq_full_probe_full_refine_equals_exact(emb, thr):
     )
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 5).head()["embedding"]]
     n = emb.count()
-    got = ivfbq_search(
-        codes, cents, thr, qv, k=10, nprobe=8, refine=(n // 10) + 1,
-        vectors=emb,
+    got = bq_search(
+        codes.filter(ivf_probe(cents, qv, 8)), thr, qv, k=10,
+        refine=(n // 10) + 1, vectors=emb,
     ).collect()
     exact = exact_search(emb, qv, k=10, metric="ip").collect()
     assert [(r["vec_id"], r["score"]) for r in got] == [
@@ -263,8 +265,10 @@ def test_ivfbq_full_probe_full_refine_equals_exact(emb, thr):
 
 
 def test_ivfbq_nprobe1_stays_in_one_cluster(emb, thr):
-    from leann_rs_spark.operators.ann import ivf_assign, take_centroids
-    from leann_rs_spark.operators.bq import bq_encode_col, ivfbq_search
+    from leann_rs_spark.operators.ann import (
+        ivf_assign, ivf_probe, take_centroids,
+    )
+    from leann_rs_spark.operators.bq import bq_encode_col
 
     cents = take_centroids(emb, 8)
     assigned = ivf_assign(emb, cents)
@@ -273,8 +277,8 @@ def test_ivfbq_nprobe1_stays_in_one_cluster(emb, thr):
         bq_encode_col(F.col("embedding"), thr).alias("bcode"),
     )
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 5).head()["embedding"]]
-    hits = ivfbq_search(
-        codes, cents, thr, qv, k=10, nprobe=1, refine=0
+    hits = bq_search(
+        codes.filter(ivf_probe(cents, qv, 1)), thr, qv, k=10, refine=0
     ).collect()
     ids = [r["vec_id"] for r in hits]
     clusters = {

@@ -823,9 +823,6 @@ class TestEditDistNearDups:
 def test_dedup_pr_gate_semantics(spark):
     """x_dedup_pr (the dedup-family recall diagnostic): planted pairs
     count as tp, P/R arithmetic checks out, thresholds monotone."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as e
 
     rows = e.queries()["x_dedup_pr"](spark, "/root/testdata/sf0.001").collect()

@@ -11,7 +11,6 @@ from leann_rs_spark.operators.pq import (
     pq_reconstruct_col,
     pq_refine_recall_curve,
     pq_search,
-    pq_search_refined,
     take_subcodebooks,
 )
 from leann_rs_spark.operators.search import exact_search
@@ -76,8 +75,8 @@ def test_full_refine_equals_exact(spark, emb, cb):
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 3).head()["embedding"]]
     n = emb.count()
     codes = pq_encode(emb, cb)
-    refined = pq_search_refined(
-        codes, emb, cb, qv, k=10, refine=(n // 10) + 1
+    refined = pq_search(
+        codes, cb, qv, k=10, refine=(n // 10) + 1, vectors=emb
     ).collect()
     exact = exact_search(emb, qv, k=10, metric="ip").collect()
     assert [(r["vec_id"], r["score"]) for r in refined] == [

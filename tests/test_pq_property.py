@@ -76,7 +76,7 @@ def test_full_refine_equals_exact_on_random_corpora(spark, seed):
     import random
 
     from leann_rs_spark.operators.pq import (
-        pq_encode, pq_search_refined, take_subcodebooks,
+        pq_encode, pq_search, take_subcodebooks,
     )
     from leann_rs_spark.operators.search import exact_search
 
@@ -90,8 +90,8 @@ def test_full_refine_equals_exact_on_random_corpora(spark, seed):
     cb = take_subcodebooks(emb, m=4, k=5)
     codes = pq_encode(emb, cb)
     qv = rows[seed % n][1]
-    got = pq_search_refined(
-        codes, emb, cb, qv, k=7, refine=(n // 7) + 1
+    got = pq_search(
+        codes, cb, qv, k=7, refine=(n // 7) + 1, vectors=emb
     ).collect()
     exp = exact_search(emb, qv, k=7, metric="ip").collect()
     assert [(r["vec_id"], r["score"]) for r in got] == [

@@ -2,9 +2,11 @@
 gates lead, then gates whose CODE changed since their last driver row,
 then everything ascending by most recent driver CORRECTNESS round."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 
 def test_rotated_ordering_rules():
@@ -89,7 +91,7 @@ def test_current_entry_ordering_is_fresh():
     round-5 verdict added the code-staleness weighting)."""
     from rotate_gates import code_stale, current_keys, last_seen, rotated
 
-    src = open("/root/repo/__spark_entry__.py").read()
+    src = open(os.path.join(ROOT, "__spark_entry__.py")).read()
     keys = current_keys(src)
     assert len(keys) >= 129
     seen = last_seen()
@@ -100,7 +102,7 @@ def test_every_query_key_extracted():
     import __spark_entry__ as e
     from rotate_gates import current_keys
 
-    src = open("/root/repo/__spark_entry__.py").read()
+    src = open(os.path.join(ROOT, "__spark_entry__.py")).read()
     assert current_keys(src) == list(e.queries().keys())
 
 

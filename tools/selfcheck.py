@@ -12,12 +12,13 @@ Usage: python tools/selfcheck.py [sf_dir] [query_name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -77,7 +78,6 @@ def main() -> int:
     failures = []
     ran = 0
     skipped = 0
-    import os
 
     cross_scale = os.path.realpath(sf_dir) != os.path.realpath(GOLDEN_SF_DIR)
     # explicit names run in ARGUMENT order (so a deadline-bounded

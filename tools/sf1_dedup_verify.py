@@ -39,13 +39,14 @@ Exit 0 iff every requested check passes. Expect ~15-30 min total.
 """
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from selfcheck import normalize  # noqa: E402  (tools/ sibling)
 
