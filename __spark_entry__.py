@@ -6897,6 +6897,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q1_ivf_topk": q1_ivf_topk,
         "x_lm_score": x_lm_score,
         "q15_expanded_search": q15_expanded_search,
+        "t2_code_chunks": t2_code_chunks,
+        "t1_chunk_passages": t1_chunk_passages,
         "x_length_percentiles": x_length_percentiles,
         "x_asof_join_salted": x_asof_join_salted,
         "x_asof_nearest": x_asof_nearest,
@@ -6962,8 +6964,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_dedup_editdist": x_dedup_editdist,
         "x_upsert": x_upsert,
         "x_dup_source_matrix": x_dup_source_matrix,
-        "t2_code_chunks": t2_code_chunks,
-        "t1_chunk_passages": t1_chunk_passages,
         "x_ann_lsh_near_dups": x_ann_lsh_near_dups,
         "x_corpus_stats": x_corpus_stats,
         "x_stream_window_stats": x_stream_window_stats,

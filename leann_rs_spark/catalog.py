@@ -39,6 +39,7 @@ import shutil
 from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from leann_rs_spark.operators.bm25 import build_bm25_index, score_query
 from leann_rs_spark.operators.chunker import chunk_documents
@@ -112,6 +113,45 @@ def save_meta(warehouse: str, name: str, meta: IndexMeta) -> None:
     os.makedirs(_index_dir(warehouse, name), exist_ok=True)
     with open(_meta_path(warehouse, name), "w") as f:
         json.dump(asdict(meta), f, indent=2)
+
+
+# table path -> (meta.json stamp, schema). Schemas only: appends add
+# files and compact_ivf_index swaps them without a meta save, so file
+# listings (and the DataFrames that hold them) must be taken per read.
+_SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
+
+
+def _read(
+    spark: SparkSession,
+    base: str,
+    table: str,
+    partitions: tuple[str, list] | None = None,
+) -> DataFrame:
+    """Read one table of the index at `base` with no Spark job of its
+    own. A schema-less `spark.read.parquet` runs a one-task schema
+    inference job per call; here the schema is inferred once per (table,
+    meta.json mtime_ns and size) and passed in. `partitions=(col,
+    values)` reads only the existing `<col>=<value>` directories (with
+    basePath, so `col` is kept): past 32 directories Spark lists a table
+    with a parallel job, even when a filter then prunes it to a few. No
+    existing directory → an empty frame with the table's schema."""
+    path = f"{base}/{table}"
+    st = os.stat(os.path.join(base, "meta.json"))
+    stamp = (st.st_mtime_ns, st.st_size)
+    hit = _SCHEMAS.get(path)
+    if hit is None or hit[0] != stamp:
+        hit = _SCHEMAS[path] = (stamp, spark.read.parquet(path).schema)
+    reader = spark.read.schema(hit[1])
+    if partitions is None:
+        return reader.parquet(path)
+    col, values = partitions
+    dirs = [f"{path}/{col}={v}" for v in values]
+    dirs = [d for d in dirs if os.path.isdir(d)]
+    if not dirs:
+        return spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in hit[1]]
+        )
+    return reader.option("basePath", path).parquet(*dirs)
 
 
 def build_index(
@@ -359,8 +399,9 @@ def append_to_index(
         _write_bm25(passages, base, mode="append")
 
     old_count = meta.passage_count
-    meta.passage_count += added
-    save_meta(warehouse, name, meta)
+    # meta is saved LAST: until then readers see the old passage_count
+    # (and its IVF layout), and a crash before the save leaves orphans
+    # that the next append refuses
     if meta.backend == "ivf" and not meta.is_pruned:
         # keep the ANN artifact coherent with the appended rows — the
         # IVF layout is a derived table (the reference has the same
@@ -422,6 +463,10 @@ def append_to_index(
                 pq_m=int(pq_m) if pq_m is not None else None,
                 pq_k=int(meta.extra.get("pq_k", 16)),
             )
+            # the rebuilt layout already covers the batch
+            meta.extra["ivf_built_count"] = old_count + added
+    meta.passage_count = old_count + added
+    save_meta(warehouse, name, meta)
     return meta
 
 
@@ -506,6 +551,17 @@ def prune_index(warehouse: str, name: str) -> IndexMeta:
     return meta
 
 
+def _read_postings(spark: SparkSession, base: str, query: str) -> DataFrame:
+    """The BM25 postings of the query's terms. All rows of a term share
+    one term_bucket, so reading only the query terms' bucket directories
+    reads ≤ |query terms| of the 64 partitions, and every read term's
+    rows are complete: df counts stay exact."""
+    from leann_rs_spark.operators.bm25 import tokenize_py
+
+    buckets = sorted({py_term_bucket(t) for t in tokenize_py(query)})
+    return _read(spark, base, "bm25_postings", ("term_bucket", buckets))
+
+
 def _embeddings_for_search(
     spark: SparkSession, base: str, meta: IndexMeta, passages: DataFrame,
     provider=None,
@@ -530,7 +586,7 @@ def _embeddings_for_search(
             prompt_template=meta.doc_prompt_template,
             id_col="idx",
         ).select("idx", "embedding")
-    return spark.read.parquet(f"{base}/embeddings")
+    return _read(spark, base, "embeddings")
 
 
 def search_index(
@@ -568,7 +624,7 @@ def search_index(
     meta = load_meta(warehouse, name)
     check_embedding_model(meta, strict=False)
     base = _index_dir(warehouse, name)
-    passages_all = spark.read.parquet(f"{base}/passages")
+    passages_all = _read(spark, base, "passages")
     passages = passages_all
 
     if filter_str:
@@ -580,7 +636,6 @@ def search_index(
 
     search_query = query
     if expand and not meta.is_pruned and os.path.isdir(f"{base}/bm25_postings"):
-        from leann_rs_spark.operators.bm25 import tokenize_py
         from leann_rs_spark.operators.query_expansion import (
             expansion_terms,
             should_expand,
@@ -593,11 +648,8 @@ def search_index(
             # 6dp-rounded score: BM25 term sums are order-sensitive in
             # the last ulp across engines, and the rounded rank keeps
             # the mined-term set oracle-reproducible.
-            qb = sorted({py_term_bucket(t) for t in tokenize_py(query)})
-            postings0 = spark.read.parquet(f"{base}/bm25_postings").filter(
-                F.col("term_bucket").isin(qb)
-            )
-            docstats0 = spark.read.parquet(f"{base}/bm25_docstats")
+            postings0 = _read_postings(spark, base, query)
+            docstats0 = _read(spark, base, "bm25_docstats")
             termstats0 = postings0.groupBy("term").agg(F.count("*").alias("df"))
             scored0 = score_query(postings0, docstats0, termstats0, query, id_col="idx")
             top5 = (
@@ -641,29 +693,22 @@ def search_index(
     vec_hits = exact_search(emb, qv, k=fetch_k, id_col="idx", metric="ip")
 
     if hybrid:
-        from leann_rs_spark.operators.bm25 import tokenize_py
-
-        # Partition pruning: all rows of a term share one term_bucket,
-        # so restricting the scan to the query terms' buckets reads
-        # ≤ |query terms| of the table's 64 partitions — and every
-        # pruned-in term's rows are COMPLETE, so df counts stay exact.
-        qbuckets = sorted({py_term_bucket(t) for t in tokenize_py(search_query)})
-        postings = spark.read.parquet(f"{base}/bm25_postings").filter(
-            F.col("term_bucket").isin(qbuckets)
-        )
-        docstats = spark.read.parquet(f"{base}/bm25_docstats")
+        postings = _read_postings(spark, base, search_query)
+        docstats = _read(spark, base, "bm25_docstats")
         termstats = postings.groupBy("term").agg(F.count("*").alias("df"))
         if filter_str:
             keep = passages.select("idx")
             postings = postings.join(keep, "idx", "left_semi")
             docstats = docstats.join(keep, "idx", "left_semi")
         # the EXPANDED query drives the BM25 side (search.rs:204, the
-        # opts.with_hybrid(search_query) call). Persisted: the scored
-        # table feeds the candidate join, the min/max stats, and the
-        # top-k cut.
+        # opts.with_hybrid(search_query) call). Not persisted: its three
+        # consumers (candidate join, min/max stats, top-k cut) sit in
+        # one plan that reuses the scoring exchange, and a per-request
+        # persist would pin a cached frame per request in a long-lived
+        # server.
         scored = score_query(
             postings, docstats, termstats, search_query, id_col="idx"
-        ).persist()
+        )
         # candidate cut on the 6dp-rounded score (cross-engine
         # determinism; sub-1e-6 reorderings are fp noise) — the same
         # rank the duckdb_hybrid_rerank twin uses
@@ -1138,64 +1183,53 @@ def search_ivf_index(
 ) -> DataFrame:
     """Probe-pruned search over the persisted IVF layout: rank centroids
     for the query on the driver (n_centroids rows), then exact top-k
-    over only the probed clusters' files (partition pruning does the
-    seek a graph traversal would). Returns (idx, score, doc_id, source,
-    text) like search_index.
+    over only the probed clusters' directories (the read lists nothing
+    else — the seek a graph traversal would do). Returns (idx, score,
+    doc_id, source, text) like search_index.
 
     `use_pq=True` (needs a pq-enabled build) scores the probed rows by
     ADC over the packed codes — 8 bytes/row instead of the full vector
     — and, when refine > 0, exact-rescores only the top refine·k
     against the embeddings table. The 100 TB read path: scan bytes =
     (nprobe/C)·N·8 plus refine·k point reads."""
-    from leann_rs_spark.operators.ann import ivf_search
+    from leann_rs_spark.operators.ann import ivf_probe_ids
     from leann_rs_spark.operators.embedder import py_hash_embedding
 
     base = _index_dir(warehouse, name)
     meta = load_meta(warehouse, name)
     if meta.backend != "ivf":
         raise ValueError(f"index {name!r} has no IVF layout (backend={meta.backend})")
+    if use_pq and "pq_m" not in meta.extra:
+        raise ValueError(
+            f"index {name!r} has no PQ codes — rebuild with "
+            f"build_ivf_index(pq_m=...)"
+        )
     # prefix concatenation, identical to search_index (and the
     # reference's embed_with_template, src/embedding/mod.rs:126-143) —
     # both paths must embed the identical query vector for a given index
     qtext = (meta.query_prompt_template or "") + query
     qv = py_hash_embedding(qtext, meta.dimensions)
-    assigned = spark.read.parquet(f"{base}/ivf")
-    cents = spark.read.parquet(f"{base}/ivf_centroids")
+    probe = ivf_probe_ids(_read(spark, base, "ivf_centroids"), qv, nprobe)
+    probed = _read(spark, base, "ivf", ("cluster_id", probe))
     if use_pq:
-        if "pq_m" not in meta.extra:
-            raise ValueError(
-                f"index {name!r} has no PQ codes — rebuild with "
-                f"build_ivf_index(pq_m=...)"
-            )
         from leann_rs_spark.operators.pq import (
             codebook_from_rows,
-            ivf_pq_search,
             pq_bits,
+            pq_search,
             pq_unpack_col,
         )
 
         m = int(meta.extra["pq_m"])
         bits = pq_bits(int(meta.extra["pq_k"]))
-        cb = codebook_from_rows(
-            spark.read.parquet(f"{base}/pq_codebook").collect()
+        cb = codebook_from_rows(_read(spark, base, "pq_codebook").collect())
+        codes = probed.select(
+            "idx", pq_unpack_col(F.col("code"), m, bits).alias("code")
         )
-        codes = assigned.select(
-            "idx",
-            pq_unpack_col(F.col("code"), m, bits).alias("code"),
-            "cluster_id",
-        )
-        vectors = (
-            spark.read.parquet(f"{base}/embeddings")
-            if refine > 0
-            else None
-        )
-        hits = ivf_pq_search(
-            codes, cents, cb, qv, k=k, nprobe=nprobe,
-            refine=refine, vectors=vectors, id_col="idx",
-        )
+        vectors = _read(spark, base, "embeddings") if refine > 0 else None
+        hits = pq_search(codes, cb, qv, k, "idx", refine, vectors)
     else:
-        hits = ivf_search(assigned, cents, qv, k=k, nprobe=nprobe, id_col="idx")
-    passages = spark.read.parquet(f"{base}/passages")
+        hits = exact_search(probed, qv, k, "idx")
+    passages = _read(spark, base, "passages")
     return (
         F.broadcast(hits)
         .join(passages, "idx")

@@ -314,15 +314,13 @@ def lloyd_refine_centroids(
     return centroids
 
 
-def ivf_probe(
+def ivf_probe_ids(
     centroids: DataFrame, query_vector: list[float], nprobe: int
-) -> Column:
-    """`cluster_id IN (<the nprobe centroids nearest the query>)` — the
-    one probe every IVF composition filters its rows with. Centroids
-    rank by inner product, ties centroid_id ASC; the C-row ranking is
-    collected on the driver so the filter is a literal IN list: on a
-    table written partitionBy("cluster_id") that is static partition
-    pruning at the file level."""
+) -> list[int]:
+    """The ids of the nprobe centroids nearest the query — the one probe
+    every IVF composition uses. Centroids rank by inner product, ties
+    centroid_id ASC; the C-row ranking is collected on the driver, so a
+    caller can read just the probed `cluster_id=` directories."""
     probe_rows = (
         centroids.select(
             "centroid_id",
@@ -332,7 +330,16 @@ def ivf_probe(
         .limit(nprobe)
         .collect()
     )
-    return F.col("cluster_id").isin([r["centroid_id"] for r in probe_rows])
+    return [r["centroid_id"] for r in probe_rows]
+
+
+def ivf_probe(
+    centroids: DataFrame, query_vector: list[float], nprobe: int
+) -> Column:
+    """`cluster_id IN (<ivf_probe_ids>)` — a literal IN list, so on a
+    table written partitionBy("cluster_id") the filter is static
+    partition pruning at the file level."""
+    return F.col("cluster_id").isin(ivf_probe_ids(centroids, query_vector, nprobe))
 
 
 def ivf_search(

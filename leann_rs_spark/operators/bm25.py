@@ -23,14 +23,17 @@ one shuffle on (doc_id, term) with map-side combine, then a term-keyed
 aggregation for df. Query-side, the `term IN (...)` predicate prunes
 the postings scan (pushed to Parquet; partition postings by a term hash
 bucket at 100 TB so pruning skips files), and everything after the scan
-touches only rows for the query's terms.
+touches only rows for the query's terms. The query's term counts ride
+in the plan as a literal map Column (`_query_weights`), so scoring runs
+no Python worker.
 """
 
 from __future__ import annotations
 
 import re
+from collections import Counter
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from leann_rs_spark.functions.text import duckdb_tokenize, tokenize
 
@@ -44,6 +47,19 @@ def tokenize_py(text: str) -> list[str]:
     """Driver-side tokenizer for query strings — same semantics as the
     tokenize() Column (and src/index/bm25.rs:127-132)."""
     return [t.lower() for t in _TOKEN_RE.findall(text) if len(t) > 1]
+
+
+def _query_weights(qtokens: list[str]) -> tuple[list[str], Column]:
+    """(distinct query terms, qtf Column): each term's count in the
+    query (the reference scores every duplicated token, :81) as a
+    literal map looked up by the row's `term`. A Column, not a
+    createDataFrame'd term table: a frame built from a Python list is
+    a Python-RDD scan, run on Python workers per query."""
+    counts = Counter(qtokens)
+    weights = F.create_map(
+        *[x for t, c in counts.items() for x in (F.lit(t), F.lit(float(c)))]
+    )
+    return list(counts), F.element_at(weights, F.col("term"))
 
 
 def build_bm25_index(
@@ -89,17 +105,10 @@ def score_query(
 
     Returns (id_col, score DOUBLE).
     """
-    spark = postings.sparkSession
     qtokens = tokenize_py(query)
     if not qtokens:
         return postings.select(id_col).limit(0).withColumn("score", F.lit(0.0))
-
-    counts: dict[str, int] = {}
-    for t in qtokens:
-        counts[t] = counts.get(t, 0) + 1
-    qterms = spark.createDataFrame(
-        [(t, float(c)) for t, c in sorted(counts.items())], "term string, qtf double"
-    )
+    terms, qtf = _query_weights(qtokens)
 
     # Corpus N / avg_doc_len folded in as a broadcast 1-row aggregate —
     # no eager driver action; the whole score is ONE Spark job (the same
@@ -118,9 +127,7 @@ def score_query(
         + F.lit(1.0)
     )
 
-    relevant = postings.filter(
-        F.col("term").isin(list(counts.keys()))
-    )  # pushed to the postings scan
+    relevant = postings.filter(F.col("term").isin(terms))  # pushed to the scan
     norm = F.lit(1.0 - b) + F.lit(b) * (
         F.col("doc_len").cast("double") / F.col("avg_len")
     )
@@ -138,9 +145,8 @@ def score_query(
     )
     return (
         relevant.join(F.broadcast(terms_b), "term")
-        .join(F.broadcast(qterms), "term")
         .join(docstats, id_col)
-        .select(id_col, (F.col("qtf") * term_score).alias("term_score"))
+        .select(id_col, (qtf * term_score).alias("term_score"))
         .groupBy(id_col)
         .agg(F.sum("term_score").alias("score"))
     )
@@ -169,17 +175,10 @@ def score_adhoc_query(
     the query is known before an index exists; use the persisted
     postings tables (build_bm25_index) for repeated queries.
     """
-    spark = docs.sparkSession
     qtokens = tokenize_py(query)
     if not qtokens:
         return docs.select(id_col).limit(0).withColumn("score", F.lit(0.0))
-
-    counts: dict[str, int] = {}
-    for t in qtokens:
-        counts[t] = counts.get(t, 0) + 1
-    qterms = spark.createDataFrame(
-        [(t, float(c)) for t, c in sorted(counts.items())], "term string, qtf double"
-    )
+    terms, qtf = _query_weights(qtokens)
 
     tokd = docs.select(id_col, tokenize(text_col).alias("toks"))
     if cache:
@@ -197,7 +196,7 @@ def score_adhoc_query(
 
     tf = (
         tokd.select(id_col, F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(list(counts.keys())))
+        .filter(F.col("term").isin(terms))
         .groupBy(id_col, "term")
         .agg(F.count("*").alias("tf"))
     )
@@ -225,9 +224,8 @@ def score_adhoc_query(
     )
     return (
         tf.join(F.broadcast(terms_b), "term")
-        .join(F.broadcast(qterms), "term")
         .join(docstats, id_col)
-        .select(id_col, (F.col("qtf") * term_score).alias("term_score"))
+        .select(id_col, (qtf * term_score).alias("term_score"))
         .groupBy(id_col)
         .agg(F.sum("term_score").alias("score"))
     )

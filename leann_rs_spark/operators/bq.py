@@ -250,14 +250,13 @@ def bq_search_batch(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    prune_partitions: bool = True,
 ) -> DataFrame:
     """Batch-serving BQ (the batch_search twin over bits): query
     vectors are packed IN-PLAN with the same bq_encode_col (thresholds
     are literals — no driver round), the Q-row code table broadcasts
     into the corpus scan (Q×N Hamming pairs map-side, corpus never
-    shuffled), an Arrow local prune caps the per-query ranking shuffle
-    at P·(refine·k)·Q rows, and a broadcast candidate set drives the
+    shuffled), a partial WindowGroupLimit caps the per-query ranking
+    shuffle at P·(refine·k)·Q rows, and a broadcast candidate set drives the
     exact rescore. → (query_id, id, score, rank)."""
     n_words = _n_words(len(thresholds))
     qcodes = queries.select(
@@ -277,7 +276,6 @@ def bq_search_batch(
     return topk_batch(
         scored, k, refine, vectors, queries, id_col, vec_col,
         query_id_col, query_vec_col, ascending=True,
-        prune_partitions=prune_partitions,
     ).orderBy(query_id_col, "rank")
 
 

@@ -13,9 +13,10 @@ Reference semantics, preserved exactly:
 - Over-fetch factor 5× when hybrid/filtered (src/index/searcher.rs:129-133).
 
 Scale design: both candidate sets are ≤ fetch_k rows (tiny), so the
-union, the min/max aggregates, and the rerank are all broadcast-sized.
+union, the min/max stats, and the rerank are all broadcast-sized.
 The only large-data stages are the two top-k producers upstream, which
-prune to k per partition before shuffling.
+prune to k per partition before shuffling. The rerank is one lazy plan
+with no persist, so a long-lived server caches nothing per request.
 """
 
 from __future__ import annotations
@@ -54,11 +55,12 @@ def hybrid_rerank(
         its count is folded into the same Spark job as a broadcast
         1-row aggregate instead of a separate eager .count() action
 
-    The candidate table is consumed twice (its own min/max stats + the
-    rerank projection). It is at most 2×fetch_k rows but its SUBTREE
-    contains the full vector top-k scan — so it is persisted and
-    materialized here; without that, every consumer re-runs the
-    vector search (measured 2× the whole rerank cost at sf0.1).
+    The candidate table (≤ 2×fetch_k rows) needs its own min/max for
+    the vector normalization. Its subtree holds the full vector top-k
+    scan, so the stats are an unpartitioned window over the candidates
+    — one pass, where an aggregate cross-joined back would re-run that
+    subtree per consumer. Nothing is persisted: a persist per request
+    would leave cached frames behind in a long-lived server.
     """
     if isinstance(num_docs, DataFrame):
         ndocs = num_docs.agg(F.count("*").alias("_n_docs"))
@@ -80,13 +82,13 @@ def hybrid_rerank(
         "vec_score",
         F.coalesce(F.col("bm25_score"), F.lit(0.0)).alias("bm25_score"),
     )
-    # ≤ 2×fetch_k rows, but the subtree holds the vector top-k scan —
-    # persist + materialize so vstats and the rerank don't each re-run it
-    cand = cand.persist()
-    cand.count()
-
-    vstats = cand.agg(
-        F.min("vec_score").alias("vmin"), F.max("vec_score").alias("vmax")
+    # ≤ 2×fetch_k rows: the stats ride along as one unpartitioned
+    # window, so the vector top-k subtree below runs once
+    everything = Window.partitionBy()
+    cand = cand.select(
+        "*",
+        F.min("vec_score").over(everything).alias("vmin"),
+        F.max("vec_score").over(everything).alias("vmax"),
     )
     # BM25 min/max over the whole zero-initialized score vector
     # (src/index/bm25.rs:152-154): docs matching no term contribute 0.0.
@@ -105,8 +107,7 @@ def hybrid_rerank(
     )
 
     out = (
-        cand.crossJoin(F.broadcast(vstats))
-        .crossJoin(F.broadcast(bstats))
+        cand.crossJoin(F.broadcast(bstats))
         .select(
             id_col,
             "vec_score",

@@ -19,8 +19,8 @@ Scale shape (the batch_search layout, operators/search.py):
   side) is scored map-side ONCE and never shuffled;
 - per-anchor best-positive is a map-side-combined max over the same
   scored pass (≤Q rows after partials) broadcast back;
-- the banded negatives are pruned to k per (partition, anchor) in an
-  Arrow batch (selection only — no float math in Python) BEFORE the
+- the banded negatives are pruned to k per (partition, anchor) by
+  Spark's partial WindowGroupLimit (JVM-side, k ≤ 1000) BEFORE the
   single per-anchor ranking shuffle, so shuffle volume is P·k·Q, not
   the band size.
 
@@ -49,7 +49,6 @@ def mine_hard_negatives(
     anchor_id_col: str = "anchor_id",
     anchor_vec_col: str = "anchor_vec",
     anchor_label_col: str = "anchor_label",
-    prune_partitions: bool = True,
 ) -> DataFrame:
     """→ (anchor_id, neg_id, score DOUBLE, pos_score DOUBLE, rank)
     — top-k selected negatives per anchor, rank 1 = highest score,
@@ -96,8 +95,7 @@ def mine_hard_negatives(
         "pos_score",
     )
     return topk_batch(
-        neg, k, id_col="neg_id", query_id_col="anchor_id",
-        prune_partitions=prune_partitions,
+        neg, k, id_col="neg_id", query_id_col="anchor_id"
     ).orderBy("anchor_id", "rank")
 
 

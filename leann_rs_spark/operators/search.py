@@ -15,9 +15,11 @@ Scale design (100 TB / 1000 executors):
   implements the winning variant.
 - Query batch: broadcast the Q queries (they're small), score Q×N
   map-side (no shuffle), then prune to k rows per (partition, query)
-  *before* the single shuffle that ranks globally per query. Shuffle
-  volume drops from N×Q rows to P×k×Q (P = #partitions) — at 100 TB the
-  difference between an impossible job and a cheap one.
+  *before* the single shuffle that ranks globally per query — Spark's
+  partial WindowGroupLimit under the `row_number() <= k` filter, in the
+  JVM (no Python worker), for k ≤ 1000. Shuffle volume drops from N×Q
+  rows to P×k×Q (P = #partitions) — at 100 TB the difference between
+  an impossible job and a cheap one.
 - Tie-break `score DESC, id ASC` everywhere: the reference's float sort
   leaves tie order unspecified (src/index/recompute.rs:106-110); the
   oracle needs a total order.
@@ -116,21 +118,19 @@ def topk_batch(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     ascending: bool = False,
-    prune_partitions: bool = False,
 ) -> DataFrame:
     """The batch ranking core: `scored` is (query_id, id, <score>,
     extra columns...); keep the top k per query by a row_number window
     over the third column (DESC, or ASC for distances, ties id ASC),
-    extra columns riding along. prune_partitions first cuts each
-    partition to its local top rows per query (Arrow, selection only),
-    so the ranking shuffle moves P·k·Q rows instead of all pairs.
-    refine > 0 ranks the top refine·k by `score`, broadcasts those
-    (query, id) candidates with their query vectors into a join with
-    `vectors`, and exact-rescores them by dot. → (query_id, id,
-    <score> or score, rank), unordered."""
+    extra columns riding along. For n = k (or refine·k) ≤ 1000
+    (spark.sql.optimizer.windowGroupLimitThreshold) Catalyst plans a
+    partial WindowGroupLimit below the ranking Exchange: each partition
+    keeps its top n rows per query in the JVM, so the shuffle moves
+    P·n·Q rows instead of all pairs. refine > 0 ranks the top refine·k
+    by `score`, broadcasts those (query, id) candidates with their
+    query vectors into a join with `vectors`, and exact-rescores them
+    by dot. → (query_id, id, <score> or score, rank), unordered."""
     n = k if refine <= 0 else refine * k
-    if prune_partitions:
-        scored = _local_topk(scored, n, id_col, query_id_col, ascending)
     shortlist = _rank_per_query(scored, n, id_col, query_id_col, ascending)
     if refine <= 0:
         return shortlist
@@ -160,25 +160,6 @@ def _rank_per_query(
     )
 
 
-def _local_topk(
-    scored: DataFrame, n: int, id_col: str, query_id_col: str, ascending: bool
-) -> DataFrame:
-    # Selection only — no float math happens in Python, so results
-    # stay bit-identical; Arrow round-trips doubles losslessly.
-    key = scored.columns[2]
-
-    def local_topk(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield (
-                    pdf.sort_values(
-                        [key, id_col], ascending=[ascending, True]
-                    ).groupby(query_id_col, sort=False).head(n)
-                )
-
-    return scored.mapInPandas(local_topk, schema=scored.schema)
-
-
 def batch_search(
     vectors: DataFrame,
     queries: DataFrame,
@@ -189,14 +170,12 @@ def batch_search(
     query_vec_col: str = "query_vec",
     metric: str = "ip",
     predicate: Column | None = None,
-    prune_partitions: bool = True,
 ) -> DataFrame:
     """Top-k per query for a whole table of queries.
 
     Plan: broadcast-nested-loop join (map-side, no shuffle of `vectors`)
-    → score → optional partition-local prune to k rows per query (a
-    shuffle-volume optimization that cannot change the exact result) →
-    global rank per query.
+    → score → partition-local WindowGroupLimit to k rows per query
+    (k ≤ 1000; see topk_batch) → global rank per query.
     """
     df = vectors
     if predicate is not None:
@@ -211,8 +190,7 @@ def batch_search(
         )
     )
     return topk_batch(
-        scored, k, id_col=id_col, query_id_col=query_id_col,
-        prune_partitions=prune_partitions,
+        scored, k, id_col=id_col, query_id_col=query_id_col
     ).orderBy(query_id_col, "rank")
 
 

@@ -316,13 +316,13 @@ def test_bq_batch_prune_invariance(emb, thr):
         F.col("embedding").alias("query_vec"),
     )
 
-    def run(prune):
+    def run(corpus):
         return [
             (r["query_id"], r["vec_id"], r["rank"])
             for r in bq_search_batch(
-                bq_encode(emb.repartition(8), thr), thr, queries,
-                k=5, refine=3, vectors=emb, prune_partitions=prune,
+                bq_encode(corpus, thr), thr, queries,
+                k=5, refine=3, vectors=emb,
             ).collect()
         ]
 
-    assert run(True) == run(False)
+    assert run(emb.repartition(8)) == run(emb)

@@ -77,8 +77,9 @@ def test_unknown_mode_raises(spark):
 
 
 def test_prune_invariance_on_corpus(spark):
-    """The local prune is a physical optimization — results identical
-    with it off, on the real embeddings table."""
+    """The partition-local top-k (a partial WindowGroupLimit) is a
+    physical optimization — results identical over 8 partitions and
+    over the unpartitioned table, on the real embeddings."""
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     anchors = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("anchor_id"),
@@ -86,16 +87,15 @@ def test_prune_invariance_on_corpus(spark):
         F.col("label").alias("anchor_label"),
     )
 
-    def run(prune):
+    def run(corpus):
         return [
             (r["anchor_id"], r["neg_id"], r["score"], r["rank"])
             for r in mine_hard_negatives(
-                emb.repartition(8), anchors, k=5, mode="semi_hard",
-                margin=0.5, prune_partitions=prune,
+                corpus, anchors, k=5, mode="semi_hard", margin=0.5,
             ).collect()
         ]
 
-    assert run(True) == run(False)
+    assert run(emb.repartition(8)) == run(emb)
 
 
 def test_rank_one_is_hardest_in_band(spark):

@@ -561,3 +561,89 @@ def test_li_bm25_hybrid_gate_serves_from_postings_artifact(spark):
         for seg in plan.split("PartitionFilters: [")[1:]
     ]
     assert any("term_bucket" in pf for pf in pfs), plan
+
+
+# ---------------------------------------------------------------------------
+# The serve path: index reads cost no job of their own, no Python workers
+# ---------------------------------------------------------------------------
+
+_PY_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "ExistingRDD")
+
+
+def _stage_names(spark, group: str) -> list[str]:
+    st = spark.sparkContext.statusTracker()
+    names = []
+    for j in st.getJobIdsForGroup(group):
+        for sid in st.getJobInfo(j).stageIds:
+            info = st.getStageInfo(sid)
+            if info is not None:
+                names.append(info.name)
+    return names
+
+
+def test_warm_serve_reads_run_no_parquet_jobs_or_python(spark, tmp_path):
+    """A warm hybrid+expand search and a warm IVF-PQ search: no
+    "parquet at" job (schema inference, or the parallel listing of a
+    table with more than 32 partition directories — C = 40 here), and
+    no Python worker node in the executed plan (the BM25 query weights
+    are a literal map, not a createDataFrame'd table)."""
+    from leann_rs_spark import catalog
+
+    wh = str(tmp_path / "wh")
+    from conftest import SF_SMOKE
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").filter(
+        F.col("doc_id") < 40
+    )
+    catalog.build_index(
+        spark, wh, "ix", docs, chunk_size=16, chunk_overlap=4, dims=32
+    )
+    catalog.build_ivf_index(
+        spark, wh, "ix", n_centroids=40, centroids="take", pq_m=8, pq_k=8
+    )
+    requests = {
+        "expand": lambda: catalog.search_index(
+            spark, wh, "ix", "spark filter", k=5, hybrid=True, expand=True
+        ),
+        "ivfpq": lambda: catalog.search_ivf_index(
+            spark, wh, "ix", "spark filter", k=5, nprobe=4, use_pq=True
+        ),
+    }
+    sc = spark.sparkContext
+    for kind, request in requests.items():
+        request().collect()  # cold: infers and remembers the schemas
+        group = f"warm-{kind}"
+        sc.setJobGroup(group, group)
+        try:
+            df = request()
+            assert df.collect()
+        finally:
+            sc.setJobGroup(None, None)
+        names = _stage_names(spark, group)
+        assert names, kind
+        assert not [n for n in names if n.startswith("parquet at")], (kind, names)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for node in _PY_NODES:
+            assert node not in plan, (kind, node, plan)
+
+
+def test_batch_search_prunes_partitions_in_jvm(spark):
+    """batch_search's per-query row_number <= k plans a partial
+    WindowGroupLimit below the ranking Exchange — the partition-local
+    top-k, with no Python worker."""
+    emb = _emb(spark)
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    plan = plan_of(batch_search(emb, queries, k=5, metric="ip"), "simple")
+    lines = plan.splitlines()
+    exchange = next(
+        i for i, l in enumerate(lines)
+        if "Exchange hashpartitioning(query_id" in l
+    )
+    assert any(
+        "WindowGroupLimit" in l and "Partial" in l for l in lines[exchange + 1:]
+    ), plan
+    for node in _PY_NODES:
+        assert node not in plan, node
