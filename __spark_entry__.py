@@ -6899,13 +6899,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q15_expanded_search": q15_expanded_search,
         "t2_code_chunks": t2_code_chunks,
         "t1_chunk_passages": t1_chunk_passages,
-        "x_length_percentiles": x_length_percentiles,
-        "x_asof_join_salted": x_asof_join_salted,
-        "x_asof_nearest": x_asof_nearest,
         "x_paragraph_dedup": x_paragraph_dedup,
-        "x_c4_clean": x_c4_clean,
-        "q5_filter_dsl_json": q5_filter_dsl_json,
-        "q5_filter_dsl_columns": q5_filter_dsl_columns,
         "x_multimodal_features": x_multimodal_features,
         "x_text_stats": x_text_stats,
         "x_text_quality": x_text_quality,
@@ -6915,15 +6909,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_quality_gopher": x_quality_gopher,
         "x_media_frame_sample": x_media_frame_sample,
         "x_media_resize": x_media_resize,
-        "x_hopping_stats": x_hopping_stats,
-        "x_sessionize": x_sessionize,
-        "x_window_stats": x_window_stats,
-        "x_asof_join": x_asof_join,
-        "x_interval_join": x_interval_join,
         "x_quality_expectations": x_quality_expectations,
         "x_text_redact": x_text_redact,
         "x_decontaminate": x_decontaminate,
-        "x_stream_sessionize": x_stream_sessionize,
         "x_domain_budget": x_domain_budget,
         "x_stream_rolling": x_stream_rolling,
         "x_lm_ref_score": x_lm_ref_score,
@@ -6966,8 +6954,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_dup_source_matrix": x_dup_source_matrix,
         "x_ann_lsh_near_dups": x_ann_lsh_near_dups,
         "x_corpus_stats": x_corpus_stats,
-        "x_stream_window_stats": x_stream_window_stats,
-        "x_stream_dedup": x_stream_dedup,
         "x_tfidf_embed": x_tfidf_embed,
         "x_tfidf_topk": x_tfidf_topk,
         "x_bucketed_join": x_bucketed_join,
@@ -6985,6 +6971,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_minhash_sig_estimate": x_minhash_sig_estimate,
         "x_dedup_triage_pipeline": x_dedup_triage_pipeline,
         "x_dedup_pr_bands": x_dedup_pr_bands,
+        "x_length_percentiles": x_length_percentiles,
+        "x_asof_join_salted": x_asof_join_salted,
+        "x_asof_nearest": x_asof_nearest,
+        "x_c4_clean": x_c4_clean,
+        "q5_filter_dsl_json": q5_filter_dsl_json,
+        "q5_filter_dsl_columns": q5_filter_dsl_columns,
+        "x_hopping_stats": x_hopping_stats,
+        "x_sessionize": x_sessionize,
+        "x_window_stats": x_window_stats,
+        "x_asof_join": x_asof_join,
+        "x_interval_join": x_interval_join,
+        "x_stream_sessionize": x_stream_sessionize,
+        "x_stream_window_stats": x_stream_window_stats,
+        "x_stream_dedup": x_stream_dedup,
         "x_analyze_report": x_analyze_report,
     }
 

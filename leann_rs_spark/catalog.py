@@ -1511,17 +1511,14 @@ def build_minhash_index(
     + meta.extra["minhash_index"] = {shingle_k, num_hashes, id_col,
     rows}. Docs shorter than shingle_k carry no signature (they cannot
     be near-dups — the bulk builder's documented drop)."""
-    from leann_rs_spark.operators.dedup import _minhash_signatures_bulk
+    from leann_rs_spark.operators.dedup import (
+        _band_width, _minhash_signatures_bulk,
+    )
 
     # `bands` is the artifact's DEFAULT query-time banding (a serving
     # config, recorded so the query path doesn't silently band over a
     # truncated signature prefix); num_hashes must tile into it.
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes={num_hashes} is not divisible by bands={bands} —"
-            " a banded query would silently use only"
-            f" {(num_hashes // bands) * bands} of the {num_hashes} hashes"
-        )
+    _band_width(num_hashes, bands)
     base = _index_dir(warehouse, name)
     sigs = _minhash_signatures_bulk(
         docs, id_col=id_col, text_col=text_col,

@@ -37,7 +37,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from leann_rs_spark.functions.vector import (
-    duckdb_dot, dot, lit_vec, lit_vec_sql,
+    cosine, duckdb_cosine, duckdb_dot, dot, lit_vec, lit_vec_sql,
+)
+from leann_rs_spark.operators.dedup import (
+    _attach, _band_width, _banded_candidate_pairs, _cross_pairs,
+    _duckdb_bands, _duckdb_capped_cand, _hot_split,
 )
 from leann_rs_spark.operators.search import (
     _duckdb_q, _duckdb_topk, _duckdb_topk_batch, exact_search, topk_batch,
@@ -366,6 +370,9 @@ def ivf_search(
 # ---------------------------------------------------------------------------
 # Hyperplane-LSH near-duplicate pairs — the scale path for
 # dedup.embedding_near_dups (whose exact all-pairs form is quadratic).
+# A sign-bit sketch + band builder (`_signbit_bands`) and a cosine / dot
+# verify around the banded-LSH core in operators/dedup.py; the twins
+# share `_duckdb_lsh_ctes`.
 # ---------------------------------------------------------------------------
 
 def _signbit_sketch(vec: Column, hp: list[list[float]]) -> Column:
@@ -484,10 +491,8 @@ def lsh_near_dups(
     dominating, add planes (narrower buckets) rather than raising
     bucket_block.
     """
-    from leann_rs_spark.functions.vector import cosine
-
     hp = _hyperplanes(planes, dims)
-    width = planes // bands
+    width = _band_width(planes, bands, "planes")
     vec = F.col(vec_col)
     bits = _signbit_sketch(vec, hp)
     sk = emb.select(F.col(id_col), vec.alias("__v"), bits.alias("__bits"))
@@ -500,71 +505,24 @@ def lsh_near_dups(
     # the DEDUPED candidate pairs, so the (band, bb) shuffle moves id
     # width — not `bands` copies of every vector — and each surviving
     # pair is scored exactly once.
-    banded = sk.select(
-        id_col,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.concat_ws(
-                        "",
-                        F.transform(
-                            F.slice(F.col("__bits"), b * width + 1, width),
-                            lambda x: x.cast("string"),
-                        ),
-                    ).alias("bb"),
-                ),
-            )
-        ).alias("e"),
-    ).select(id_col, F.col("e.band"), F.col("e.bb"))
-    spanning = None
-    if max_bucket_size is not None:
-        from leann_rs_spark.operators.dedup import _chain_star_pairs
-
-        # three consumers (size aggregate, big join, small anti-join):
-        # persist per the measured multi-consumer rule; the oversized-
-        # key aggregate IS the materializing action, and its (tiny,
-        # broadcast-bound anyway) result comes back as driver rows so
-        # the final action broadcasts a literal instead of re-running
-        # the aggregate over the cache (one job, not two — r10 fold,
-        # same as the MinHash/SimHash guards).
-        banded = banded.persist()
-        key_schema = banded.select("band", "bb").schema
-        hot = (
-            banded.groupBy("band", "bb")
-            .agg(F.count("*").alias("__bsz"))
-            .filter(F.col("__bsz") > max_bucket_size)
-            .select("band", "bb")
-            .collect()
-        )
-        if intermediates is not None:
-            intermediates.append(banded)
-        if hot:
-            from leann_rs_spark.operators.dedup import _local_keys_frame
-
-            big_keys = F.broadcast(
-                _local_keys_frame(emb.sparkSession, hot, key_schema)
-            )
-            # order key = the FULL sign-bit sketch (not just the
-            # bucket's band): identical vectors share the whole
-            # sketch, so a true dup-group inside a hot bucket sorts
-            # contiguous and stays connected through its chain links.
-            sk_str = sk.select(
-                F.col(id_col),
-                F.concat_ws(
-                    "",
-                    F.transform(F.col("__bits"), lambda x: x.cast("string")),
-                ).alias("__sk"),
-            )
-            big = banded.join(big_keys, ["band", "bb"]).join(sk_str, id_col)
-            spanning = _chain_star_pairs(
-                big, ["band", "bb"], ["__sk", id_col], id_col
-            )
-            banded = banded.join(big_keys, ["band", "bb"], "left_anti")
-        # with no bucket over the cap the guard is the identity: keep
-        # the cached banded frame and the exact all-pairs verify below.
+    banded = _signbit_bands(sk, id_col, "__bits", bands, width)
+    keys = ["band", "bb"]
+    # hot-bucket order key = the FULL sign-bit sketch (not just the
+    # bucket's band): identical vectors share the whole sketch, so a
+    # true dup-group inside a hot bucket sorts contiguous and stays
+    # connected through its chain links.
+    order = ("__sk", sk.select(
+        F.col(id_col),
+        F.concat_ws(
+            "", F.transform(F.col("__bits"), lambda x: x.cast("string"))
+        ).alias("__sk"),
+    ))
     if assume_normalized:
+        # with no bucket over the cap the guard is the identity: the
+        # cached banded frame goes to the kernel whole.
+        banded, spanning = _hot_split(
+            banded, keys, id_col, max_bucket_size, order, intermediates
+        )
         # bucket-kernel verify: each (band, bits) bucket's rows flow as
         # a grouped-map (applyInPandas) group — streamed to the worker
         # as ordinary Arrow BATCHES of (id, vector) rows, so no single
@@ -639,42 +597,51 @@ def lsh_near_dups(
             # (identical fold order to the kernel), then union with the
             # small-bucket kernel output; a pair surviving both paths
             # scores identically, so the dedup keeps either copy.
-            va = sk.select(F.col(id_col).alias("id_a"), F.col("__v").alias("va"))
-            vb = sk.select(F.col(id_col).alias("id_b"), F.col("__v").alias("vb"))
-            big_scored = (
-                spanning.join(va, "id_a")
-                .join(vb, "id_b")
+            kernel_out = kernel_out.unionByName(
+                _attach(spanning, sk, id_col, "__v", "v")
                 .withColumn("cos", dot(F.col("va"), F.col("vb")))
                 .filter(F.col("cos") >= threshold)
                 .select("id_a", "id_b", "cos")
             )
-            kernel_out = kernel_out.unionByName(big_scored)
         return kernel_out.dropDuplicates(["id_a", "id_b"])
-
-    a = banded.select("band", "bb", F.col(id_col).alias("id_a"))
-    b = banded.select("band", "bb", F.col(id_col).alias("id_b"))
-    pairs = (
-        a.join(b, ["band", "bb"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    if spanning is not None:
-        pairs = pairs.unionByName(spanning)
-    pairs = pairs.dropDuplicates(["id_a", "id_b"])
-    va = sk.select(F.col(id_col).alias("id_a"), F.col("__v").alias("va"))
-    vb = sk.select(F.col(id_col).alias("id_b"), F.col("__v").alias("vb"))
-    score = (
-        dot(F.col("va"), F.col("vb"))
-        if assume_normalized
-        else cosine(F.col("va"), F.col("vb"))
+    pairs = _banded_candidate_pairs(
+        banded, keys, id_col, max_bucket_size, order, intermediates
     )
     return (
-        pairs.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cos", score)
+        _attach(pairs, sk, id_col, "__v", "v")
+        .withColumn("cos", cosine(F.col("va"), F.col("vb")))
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
     )
+
+
+def _signbit_bands(
+    sk: DataFrame,
+    id_col: str,
+    bits_col: str,
+    bands: int,
+    width: int,
+) -> DataFrame:
+    """(id, sign-bit array) → (id, band, bb): band b's `width` bits as
+    a '0'/'1' string — the sign-bit band builder of both LSH forms."""
+    return sk.select(
+        F.col(id_col),
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda b: F.struct(
+                    b.alias("band"),
+                    F.concat_ws(
+                        "",
+                        F.transform(
+                            F.slice(F.col(bits_col), b * width + 1, width),
+                            lambda x: x.cast("string"),
+                        ),
+                    ).alias("bb"),
+                ),
+            )
+        ).alias("e"),
+    ).select(id_col, F.col("e.band"), F.col("e.bb"))
 
 
 # ---------------------------------------------------------------------------
@@ -775,6 +742,40 @@ def duckdb_ivf_search(
     )
 
 
+def _duckdb_lsh_ctes(
+    src: str, prefix: str, dims: int, id_col: str, vec_col: str,
+    planes: int, bands: int,
+) -> str:
+    """`{prefix}sk` (id, v, bb0…bb{bands-1}) and `{prefix}banded`
+    (+ band, bb) CTEs over the (id_col, vec_col) rows of `src` — the
+    twin of `_signbit_sketch` + `_signbit_bands`: identical hyperplanes
+    (the md5 family is engine-independent), identical sign bits and
+    banding. bb0‖bb1‖… is the full sketch string, the planes in order."""
+    hp = _hyperplanes(planes, dims)
+    width = _band_width(planes, bands, "planes")
+
+    def bit(p: int) -> str:
+        lit = "[" + ", ".join(f"{x!r}::double" for x in hp[p]) + "]"
+        return f"(case when {duckdb_dot('v', lit)} > 0 then '1' else '0' end)"
+
+    band_cols = ", ".join(
+        "(" + " || ".join(bit(b * width + w) for w in range(width)) + f") AS bb{b}"
+        for b in range(bands)
+    )
+    band_case = (
+        "case t.band "
+        + " ".join(f"when {b} then bb{b}" for b in range(bands))
+        + " end"
+    )
+    return f"""{prefix}sk AS (
+            SELECT id, v, {band_cols}
+            FROM (SELECT {id_col} AS id, {vec_col} AS v FROM {src}) _e
+        ),
+        {prefix}banded AS (
+            {_duckdb_bands(f"{prefix}sk", bands, band_case, band="band")}
+        )"""
+
+
 def duckdb_lsh_near_dups(
     emb_sql: str,
     dims: int,
@@ -790,24 +791,6 @@ def duckdb_lsh_near_dups(
     banding and exact verification, so the candidate SET and the scores
     match bit-for-bit. `emb_sql` is a complete SELECT producing
     (id_col, vec_col)."""
-    hp = _hyperplanes(planes, dims)
-    width = planes // bands
-
-    def bit(p: int) -> str:
-        lit = "[" + ", ".join(f"{x!r}::double" for x in hp[p]) + "]"
-        return f"(case when {duckdb_dot(vec_col, lit)} > 0 then '1' else '0' end)"
-
-    band_cols = ", ".join(
-        "(" + " || ".join(bit(b * width + w) for w in range(width)) + f") AS bb{b}"
-        for b in range(bands)
-    )
-    band_case = (
-        "case t.band "
-        + " ".join(f"when {b} then bb{b}" for b in range(bands))
-        + " end"
-    )
-    from leann_rs_spark.functions.vector import duckdb_cosine
-
     cos = (
         duckdb_dot("a.v", "b.v")
         if assume_normalized
@@ -815,11 +798,7 @@ def duckdb_lsh_near_dups(
     )
     return f"""
         WITH emb AS ({emb_sql}),
-        sk AS (SELECT {id_col} AS id, {vec_col} AS v, {band_cols} FROM emb),
-        banded AS (
-            SELECT id, v, t.band, {band_case} AS bb
-            FROM sk, unnest(generate_series(0, {bands - 1})) t(band)
-        )
+        {_duckdb_lsh_ctes("emb", "", dims, id_col, vec_col, planes, bands)}
         SELECT DISTINCT a.id AS id_a, b.id AS id_b, {cos} AS cos
         FROM banded a JOIN banded b ON a.band = b.band AND a.bb = b.bb
         WHERE a.id < b.id AND {cos} >= {threshold}
@@ -882,9 +861,7 @@ def lsh_near_dups_incremental(
     side — measured 10.1 s → ~3 s on the sf0.1 gate). `intermediates`
     receives the persisted frames for caller-side unpersist.
     """
-    from leann_rs_spark.functions.vector import cosine
-
-    width = planes // bands
+    width = _band_width(planes, bands, "planes")
     hp = _hyperplanes(planes, dims)
     vec = F.col(vec_col)
     bits = _signbit_sketch(vec, hp)
@@ -907,35 +884,14 @@ def lsh_near_dups_incremental(
     else:
         sk_c = sketch(corpus)
     sk_n = sketch(new_emb)
+    def side(sk: DataFrame, label: str) -> DataFrame:
+        return _signbit_bands(sk, id_col, "bits", bands, width).select(
+            F.col(id_col).alias(label), "band", "bb"
+        )
 
-    def banded(sk: DataFrame, out_id: str) -> DataFrame:
-        return sk.select(
-            F.col(id_col).alias(out_id),
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    lambda b: F.struct(
-                        b.alias("band"),
-                        F.concat_ws(
-                            "",
-                            F.transform(
-                                F.slice(F.col("bits"), b * width + 1, width),
-                                lambda x: x.cast("string"),
-                            ),
-                        ).alias("bb"),
-                    ),
-                )
-            ).alias("e"),
-        ).select(out_id, F.col("e.band"), F.col("e.bb"))
-
-    banded_c = banded(sk_c, "corpus_id")
-    banded_n = banded(sk_n, "new_id")
-    if broadcast_new:
-        banded_n = F.broadcast(banded_n)
-    pairs = (
-        banded_c.join(banded_n, ["band", "bb"])
-        .select("new_id", "corpus_id")
-        .dropDuplicates(["new_id", "corpus_id"])
+    pairs = _cross_pairs(
+        side(sk_c, "corpus_id"), side(sk_n, "new_id"), ["band", "bb"],
+        broadcast_new,
     )
     vc = sk_c.select(F.col(id_col).alias("corpus_id"), F.col("__v").alias("vc"))
     vn = sk_n.select(F.col(id_col).alias("new_id"), F.col("__v").alias("vn"))
@@ -966,24 +922,6 @@ def duckdb_lsh_near_dups_incremental(
 ) -> str:
     """Twin of lsh_near_dups_incremental: identical hyperplane family,
     band both sides, join, exact verify."""
-    hp = _hyperplanes(planes, dims)
-    width = planes // bands
-
-    def bit(p: int) -> str:
-        lit = "[" + ", ".join(f"{x!r}::double" for x in hp[p]) + "]"
-        return f"(case when {duckdb_dot('v', lit)} > 0 then '1' else '0' end)"
-
-    band_cols = ", ".join(
-        "(" + " || ".join(bit(b * width + w) for w in range(width)) + f") AS bb{b}"
-        for b in range(bands)
-    )
-    band_case = (
-        "case t.band "
-        + " ".join(f"when {b} then bb{b}" for b in range(bands))
-        + " end"
-    )
-    from leann_rs_spark.functions.vector import duckdb_cosine
-
     cos = (
         duckdb_dot("vn.v", "vc.v")
         if assume_normalized
@@ -991,15 +929,9 @@ def duckdb_lsh_near_dups_incremental(
     )
 
     def side(src: str, name: str) -> str:
-        return f"""
-        {name}_sk AS (
-            SELECT id, v, {band_cols}
-            FROM (SELECT {id_col} AS id, {vec_col} AS v FROM ({src})) _e
-        ),
-        {name}_banded AS (
-            SELECT id, t.band, {band_case} AS bb
-            FROM {name}_sk, unnest(generate_series(0, {bands - 1})) t(band)
-        )"""
+        return _duckdb_lsh_ctes(
+            f"({src})", f"{name}_", dims, id_col, vec_col, planes, bands
+        )
 
     return f"""
         WITH {side(corpus_sql, 'c')}, {side(new_sql, 'n')},
@@ -1037,25 +969,6 @@ def duckdb_lsh_near_dups_capped(
     all-pairs. `plant_n` appends copies of row `plant_src_id`'s vector
     at ids `plant_offset`+i — the identical-embedding hot cluster the
     gate plants on the Spark side."""
-    hp = _hyperplanes(planes, dims)
-    width = planes // bands
-
-    def bit(p: int) -> str:
-        lit = "[" + ", ".join(f"{x!r}::double" for x in hp[p]) + "]"
-        return f"(case when {duckdb_dot('v', lit)} > 0 then '1' else '0' end)"
-
-    band_cols = ", ".join(
-        "(" + " || ".join(bit(b * width + w) for w in range(width)) + f") AS bb{b}"
-        for b in range(bands)
-    )
-    band_case = (
-        "case t.band "
-        + " ".join(f"when {b} then bb{b}" for b in range(bands))
-        + " end"
-    )
-    sk_full = " || ".join(f"bb{b}" for b in range(bands))
-    from leann_rs_spark.functions.vector import duckdb_cosine
-
     cos = (
         duckdb_dot("va.v", "vb.v")
         if assume_normalized
@@ -1069,46 +982,11 @@ def duckdb_lsh_near_dups_capped(
             f" unnest(generate_series(0, {plant_n - 1})) s(i)"
             f" WHERE e.{id_col} = {plant_src_id}"
         )
-    bb_list = ", ".join(f"bb{b}" for b in range(bands))
+    sk_full = " || ".join(f"bb{b}" for b in range(bands))
     return f"""
         WITH emb AS (SELECT * FROM ({emb_sql}){plant}),
-        skb AS (
-            SELECT id, v, {band_cols}
-            FROM (SELECT {id_col} AS id, {vec_col} AS v FROM emb) _e
-        ),
-        sk AS (SELECT id, v, {sk_full} AS skf, {bb_list} FROM skb),
-        banded AS (
-            SELECT id, skf, t.band, {band_case} AS bb
-            FROM sk, unnest(generate_series(0, {bands - 1})) t(band)
-        ),
-        big AS (
-            SELECT band, bb FROM banded
-            GROUP BY band, bb HAVING count(*) > {max_bucket_size}
-        ),
-        small_cand AS (
-            SELECT a.id AS id_a, b2.id AS id_b
-            FROM banded a JOIN banded b2
-              ON a.band = b2.band AND a.bb = b2.bb AND a.id < b2.id
-            WHERE NOT EXISTS (
-              SELECT 1 FROM big g WHERE g.band = a.band AND g.bb = a.bb
-            )
-        ),
-        ranked AS (
-            SELECT id, lead(id) OVER w AS nxt, first_value(id) OVER w AS head
-            FROM banded JOIN big USING (band, bb)
-            WINDOW w AS (PARTITION BY band, bb ORDER BY skf, id)
-        ),
-        cand AS (
-            SELECT DISTINCT id_a, id_b FROM (
-              SELECT id_a, id_b FROM small_cand
-              UNION ALL
-              SELECT least(id, nxt), greatest(id, nxt) FROM ranked
-              WHERE nxt IS NOT NULL
-              UNION ALL
-              SELECT least(id, head), greatest(id, head) FROM ranked
-              WHERE id <> head
-            )
-        )
+        {_duckdb_lsh_ctes("emb", "", dims, id_col, vec_col, planes, bands)},
+        {_duckdb_capped_cand("banded", ["band", "bb"], sk_full, max_bucket_size)}
         SELECT c.id_a, c.id_b, {cos} AS cos
         FROM cand c
         JOIN sk va ON va.id = c.id_a

@@ -27,6 +27,16 @@ Spark-first for 100 TB:
                        canonical semantics); the ANN-bucketed scale
                        path lives in operators/ann.py.
 
+Banded-LSH core: every banded near-dup operator — MinHash and SimHash
+here, hyperplane LSH (ann.lsh_near_dups*), image aHash / audio / video
+(multimodal) — is a band builder plus a verify Column around ONE set of
+private pieces in this module: `_self_pairs` / `_cross_pairs` (the
+candidate joins), `_hot_split` (the `max_bucket_size` guard) and
+`_banded_candidate_pairs`. Their DuckDB twins share `_duckdb_bands`,
+`_duckdb_capped_cand` and the `_duckdb_minhash_*` fragments the same
+way. Bad banding configs raise ValueError (`_band_width`,
+`_pigeonhole`).
+
 Every operator is a pure Catalyst expression pipeline (no Python UDFs)
 and has a DuckDB twin for the oracle gate. Hashing is md5-based
 (cross-engine stable, tools/parity_exp.py).
@@ -245,7 +255,8 @@ def _minhash_signatures_bulk(
 
 def _band_sigs(sigs: DataFrame, id_col: str, bands: int, rows: int) -> DataFrame:
     """(id, sig) → (id, band, bucket): hash each signature band into a
-    64-bit bucket key. The explode duplicates only id-width rows."""
+    64-bit bucket key — the MinHash band builder. The explode
+    duplicates only id-width rows."""
     return sigs.select(
         F.col(id_col),
         F.explode(
@@ -268,56 +279,187 @@ def _band_sigs(sigs: DataFrame, id_col: str, bands: int, rows: int) -> DataFrame
     ).select(id_col, F.col("bb.band"), F.col("bb.bucket"))
 
 
-def _banded_candidate_pairs(
-    banded: DataFrame,
-    id_col: str,
-    max_bucket_size: int | None = None,
-    sigs: DataFrame | None = None,
-    intermediates: list | None = None,
-) -> DataFrame:
-    """(id, band, bucket) → deduped candidate (id_a, id_b) pairs.
+# ---------------------------------------------------------------------------
+# Banded-LSH core (see the module docstring). Band builders, each
+# emitting one (id, *keys) row per band: `_band_sigs` (MinHash),
+# `_packed_bands` (SimHash, aHash, audio, video), `ann._signbit_bands`.
+# ---------------------------------------------------------------------------
 
-    Default (`max_bucket_size=None`): all-pairs within each
-    (band, bucket) — exact LSH candidate semantics. The hazard at
-    100 TB: ONE hot bucket of B near-identical docs (license
-    boilerplate, templated pages — million-doc clusters are real crawl
-    inputs) emits B(B-1)/2 candidate rows before verify, a quadratic
-    stage hiding inside an otherwise candidate-proportional plan.
-
-    With `max_bucket_size=B_max`, buckets larger than B_max are
-    CHAINED instead of all-paired: members sort by full MinHash
-    signature (lexicographic, so near-identical docs land adjacent;
-    requires `sigs` = the (id, sig) frame), and each member pairs with
-    (a) its successor in that order and (b) the bucket's first member
-    — ≤ 2(B-1) pairs, a spanning set. Small buckets are untouched, so
-    results only change when a bucket exceeds the cap.
-
-    Semantics under the cap: the PAIR output for an oversized bucket
-    is a spanning subset, not all pairs — downstream connected-
-    component clustering (`dedup_clusters` / `dedup_keep_canonical`)
-    yields identical components whenever verifying members form
-    contiguous runs in signature order (trivially true for the
-    boilerplate case, where every member shares the signature). Use
-    the cap when the deliverable is clusters/keep decisions; leave it
-    off when every individual pair must be reported.
-
-    Plan shape: one tiny (band, bucket) count aggregate finds
-    oversized buckets (broadcast both ways — the oversized set is a
-    handful of keys); the small side keeps the original equi-join; the
-    big side is one window over (band, bucket). No stage is ever
-    quadratic in the hot-bucket size.
-    """
-    a = banded.select("band", "bucket", F.col(id_col).alias("id_a"))
-    b = banded.select("band", "bucket", F.col(id_col).alias("id_b"))
-    if max_bucket_size is None:
-        return (
-            a.join(b, ["band", "bucket"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .dropDuplicates(["id_a", "id_b"])
+def _band_width(total: int, bands: int, what: str = "num_hashes") -> int:
+    """Rows per band; raises unless `bands` divides `total` (the
+    signature's num_hashes, or the LSH planes) — band slicing would
+    otherwise silently drop the trailing hashes."""
+    if total % bands != 0:
+        raise ValueError(
+            f"{what}={total} is not divisible by bands={bands} —"
+            " a banded query would silently use only"
+            f" {(total // bands) * bands} of the {total}"
+            f" {what.removeprefix('num_')}"
         )
-    if sigs is None:
-        raise ValueError("max_bucket_size requires the (id, sig) frame")
+    return total // bands
+
+
+def _pigeonhole(bits: int, bands: int, max_hamming: int) -> None:
+    """Input check of the packed-long sketches (SimHash, aHash, audio,
+    video): candidates are complete only when some band must agree,
+    and the sketch must fit one signed long."""
+    if bands < max_hamming + 1:
+        raise ValueError(
+            f"bands={bands} must exceed max_hamming={max_hamming} — the"
+            " pigeonhole candidate join only finds every pair within the"
+            " hamming budget when bands >= max_hamming + 1"
+        )
+    if bits > 63:
+        raise ValueError(
+            f"bits={bits} does not fit the packed-long sketch (bits <= 63)"
+        )
+
+
+def _packed_bands(
+    sk: DataFrame, cols: list[str], hash_col: str, bits: int, bands: int
+) -> DataFrame:
+    """`cols` (incl. the packed-long `hash_col`) → `cols` + (band, bb),
+    one row per band: band b is bit block [bits−(b+1)·width,
+    bits−b·width) of the packed long, width = bits // bands — the same
+    contiguous array blocks the DuckDB twins slice (labels reversed
+    between engines; only bucket SETS matter to banding semantics).
+
+    `bb` is coalesced to −1 (outside the [0, 2^width) range of real
+    buckets) so the column is provably NON-NULL: when bb is nullable,
+    the bucket equi-join infers isnotnull(bb) and pushes the whole
+    sketch expression below the fan-out repartition onto the
+    single-task parquet scan — the SimHash incremental form's job
+    profile showed the entire side's SimHash computed twice, once of
+    them single-threaded (1.85 s of a 3.1 s gate). A NULL hash lands
+    in bucket −1 of EVERY band, so N NULL-hash rows would all-pair
+    there (bands·N²/2 candidate rows before the verify drops them) —
+    callers whose sketch can be NULL (real-engine aHash and audio,
+    video frames: undecodable media) filter NULL hashes out before
+    banding rather than rely on Catalyst inferring isnotnull from a
+    null-intolerant verify. SimHash and fake-engine aHash never produce one: both
+    engines sketch NULL and '' text to 0, so such rows are reported
+    as hamming-0 pairs of each other."""
+    width = bits // bands
+    mask = (1 << width) - 1
+    return sk.select(
+        *cols,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.coalesce(
+                            F.shiftright(F.col(hash_col), bits - (b + 1) * width)
+                            .bitwiseAND(F.lit(mask)),
+                            F.lit(-1),
+                        ).alias("bb"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("e"),
+    ).select(*cols, F.col("e.band"), F.col("e.bb"))
+
+
+def _self_pairs(
+    banded: DataFrame,
+    keys: list[str],
+    id_col: str,
+    carry: dict[str, str] | None = None,
+) -> DataFrame:
+    """All pairs sharing every `keys` value → keys + (id_a, id_b, …)
+    with id_a < id_b, NOT deduplicated (a pair colliding in several
+    bands repeats). `carry` maps a column of `banded` to a stem; the
+    column rides along as stem+"a" / stem+"b", so a verify Column can
+    filter before the dedup shuffle."""
+    def side(s: str) -> DataFrame:
+        return banded.select(
+            *keys,
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(stem + s) for c, stem in (carry or {}).items()],
+        )
+
+    return side("a").join(side("b"), keys).filter(F.col("id_a") < F.col("id_b"))
+
+
+def _attach(
+    pairs: DataFrame, sk: DataFrame, id_col: str, col: str, stem: str
+) -> DataFrame:
+    """(id_a, id_b, …) pairs + `sk`'s `col` of each end, as stem+"a" /
+    stem+"b" — sketches or vectors re-attach to unique pairs only."""
+    for s in "ab":
+        pairs = pairs.join(
+            sk.select(F.col(id_col).alias(f"id_{s}"), F.col(col).alias(stem + s)),
+            f"id_{s}",
+        )
+    return pairs
+
+
+def _hamming(pairs: DataFrame, max_hamming: int) -> DataFrame:
+    """Exact packed-sketch verify of (id_a, id_b, sha, shb) pairs:
+    one codegen'd bit_count(sha XOR shb) → (id_a, id_b, hamming)."""
+    return (
+        pairs.withColumn(
+            "hamming", F.bit_count(F.col("sha").bitwiseXOR(F.col("shb")))
+        )
+        .filter(F.col("hamming") <= max_hamming)
+        .select("id_a", "id_b", "hamming")
+    )
+
+
+def _cross_pairs(
+    banded_c: DataFrame,
+    banded_n: DataFrame,
+    keys: list[str],
+    broadcast_new: bool,
+) -> DataFrame:
+    """New-vs-corpus candidates: (*keys, corpus_id) ⋈ (*keys, new_id)
+    → deduped (new_id, corpus_id). An ingest batch is small relative
+    to the corpus, so with `broadcast_new` the batch side broadcasts
+    and the corpus is never shuffled."""
+    if broadcast_new:
+        banded_n = F.broadcast(banded_n)
+    return (
+        banded_c.join(banded_n, keys)
+        .select("new_id", "corpus_id")
+        .dropDuplicates(["new_id", "corpus_id"])
+    )
+
+
+def _hot_split(
+    banded: DataFrame,
+    keys: list[str],
+    id_col: str,
+    max_bucket_size: int | None,
+    order: tuple[str, DataFrame | None],
+    intermediates: list | None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """The hot-bucket guard: → (banded rows of buckets at or under
+    `max_bucket_size`, chain+star spanning pairs of the buckets over
+    it). With no cap, or no bucket over it, the spanning side is None.
+
+    The hazard at 100 TB: ONE hot bucket of B near-identical docs
+    (license boilerplate, templated pages — million-doc clusters are
+    real crawl inputs) emits B(B-1)/2 candidate rows before verify, a
+    quadratic stage hiding inside an otherwise candidate-proportional
+    plan. Buckets over the cap are CHAINED instead of all-paired
+    (`_chain_star_pairs` in (order_col, id) order, ≤ 2(B-1) pairs — a
+    spanning set); small buckets are untouched, so results only change
+    when a bucket exceeds the cap. `order` = (order_col, frame): the
+    operator's full sketch, read from `banded` when frame is None,
+    else joined to the hot rows from the (id_col, order_col) frame.
+
+    Plan shape: one tiny (*keys) count aggregate finds the oversized
+    buckets; the small side keeps the original equi-join behind a
+    broadcast left-anti join; the big side is one window over the
+    bucket. No stage is ever quadratic in the hot-bucket size."""
+    if max_bucket_size is None:
+        return banded, None
+    if order is None:
+        raise ValueError(
+            "max_bucket_size requires `order` = (sketch column, optional"
+            " (id, sketch) frame) for the hot-bucket chain"
+        )
     # three consumers of banded below (small anti-join, big inner join,
     # and the oversized-key aggregate) — persist per the measured
     # multi-consumer rule, or each branch re-explodes the band hash.
@@ -330,12 +472,12 @@ def _banded_candidate_pairs(
     # count-then-broadcast-subtree form paid the count job PLUS an
     # in-action aggregate (r10 fold).
     banded = banded.persist()
-    key_schema = banded.select("band", "bucket").schema
+    key_schema = banded.select(*keys).schema
     hot = (
-        banded.groupBy("band", "bucket")
+        banded.groupBy(*keys)
         .agg(F.count("*").alias("__bsz"))
         .filter(F.col("__bsz") > max_bucket_size)
-        .select("band", "bucket")
+        .select(*keys)
         .collect()
     )
     if intermediates is not None:
@@ -344,38 +486,46 @@ def _banded_candidate_pairs(
         # no bucket exceeds the cap — the guarded plan degenerates to
         # the exact all-pairs form (anti-join with an empty key set is
         # the identity; the spanning branch is empty), so skip both.
-        a2 = banded.select("band", "bucket", F.col(id_col).alias("id_a"))
-        b2 = banded.select("band", "bucket", F.col(id_col).alias("id_b"))
-        return (
-            a2.join(b2, ["band", "bucket"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .dropDuplicates(["id_a", "id_b"])
-        )
+        return banded, None
     big_keys = F.broadcast(_local_keys_frame(banded.sparkSession, hot, key_schema))
-    small = banded.join(big_keys, ["band", "bucket"], "left_anti")
-    sa = small.select("band", "bucket", F.col(id_col).alias("id_a"))
-    sb = small.select("band", "bucket", F.col(id_col).alias("id_b"))
-    pairs_small = (
-        sa.join(sb, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+    order_col, order_frame = order
+    big = banded.join(big_keys, keys)
+    if order_frame is not None:
+        big = big.join(order_frame, id_col)
+    spanning = _chain_star_pairs(big, keys, [order_col, id_col], id_col)
+    return banded.join(big_keys, keys, "left_anti"), spanning
+
+
+def _banded_candidate_pairs(
+    banded: DataFrame,
+    keys: list[str],
+    id_col: str,
+    max_bucket_size: int | None = None,
+    order: tuple[str, DataFrame | None] | None = None,
+    intermediates: list | None = None,
+) -> DataFrame:
+    """(id, *keys) → deduped candidate (id_a, id_b) pairs.
+
+    Default (`max_bucket_size=None`): all-pairs within each bucket —
+    exact LSH candidate semantics. With `max_bucket_size=B_max`,
+    buckets larger than B_max are chained instead (`_hot_split`, with
+    `order` naming the full sketch the chain sorts by).
+
+    Semantics under the cap: the PAIR output for an oversized bucket
+    is a spanning subset, not all pairs — downstream connected-
+    component clustering (`dedup_clusters` / `dedup_keep_canonical`)
+    yields identical components whenever verifying members form
+    contiguous runs in sketch order (trivially true for the
+    boilerplate case, where every member shares the sketch). Use the
+    cap when the deliverable is clusters/keep decisions; leave it off
+    when every individual pair must be reported."""
+    banded, spanning = _hot_split(
+        banded, keys, id_col, max_bucket_size, order, intermediates
     )
-    # chain + star over signature order: lexicographic sig sort puts
-    # near-identical members adjacent, so a true dup-group inside the
-    # bucket stays connected through its chain links; the star to the
-    # bucket head adds hub redundancy for the dominant group.
-    big = (
-        banded.join(big_keys, ["band", "bucket"])
-        .join(sigs.select(F.col(id_col), F.col("sig").alias("__sig")), id_col)
-    )
-    spanning = _chain_star_pairs(
-        big, ["band", "bucket"], ["__sig", id_col], id_col
-    )
-    return (
-        pairs_small.unionByName(spanning)
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    pairs = _self_pairs(banded, keys, id_col).select("id_a", "id_b")
+    if spanning is not None:
+        pairs = pairs.unionByName(spanning)
+    return pairs.dropDuplicates(["id_a", "id_b"])
 
 
 def _local_keys_frame(spark, rows: list, schema) -> DataFrame:
@@ -403,11 +553,11 @@ def _chain_star_pairs(
     """Hot-bucket spanning set: per `part_cols` group, each member
     pairs with (a) its successor in `order_cols` order (chain) and
     (b) the group's first member (star) → (id_a, id_b) with
-    id_a < id_b, ≤ 2(B-1) pairs for a B-member group. Shared by the
-    MinHash / SimHash / hyperplane-LSH max_bucket_size guards — the
-    order key is the operator's full sketch, so near-identical members
-    sort adjacent and true dup-groups stay connected through chain
-    links; downstream connected components are unchanged whenever
+    id_a < id_b, ≤ 2(B-1) pairs for a B-member group. The order key
+    is the operator's full sketch, so near-identical members sort
+    adjacent and true dup-groups stay connected through chain links
+    (the star to the bucket head adds hub redundancy for the dominant
+    group); downstream connected components are unchanged whenever
     verifying members form contiguous runs in that order (trivially
     the boilerplate case). One window over the group — never quadratic
     in the group size."""
@@ -430,6 +580,77 @@ def _chain_star_pairs(
         F.greatest("__id", "__head").alias("id_b"),
     )
     return chain.unionByName(star)
+
+
+def _duckdb_bands(src: str, bands: int, key_expr: str, key: str = "bb",
+                  band: str = "b") -> str:
+    """Twin band builder: `src`'s rows × bands → its columns + (`band`,
+    `key`), where `key_expr` computes band `band`'s bucket key."""
+    return (
+        f"SELECT *, {key_expr} AS {key}"
+        f" FROM {src}, unnest(generate_series(0, {bands - 1})) t({band})"
+    )
+
+
+def _duckdb_packed_bb(bits: int, bands: int, col: str) -> str:
+    """Band b's bit block of a packed-long hash — `_packed_bands`'
+    MSB-first blocks."""
+    width = bits // bands
+    return f"({col} >> ({bits} - (b + 1) * {width})) & {(1 << width) - 1}"
+
+
+def _duckdb_capped_cand(banded: str, keys: list[str], order: str, cap: int) -> str:
+    """CTEs big / small_cand / ranked / cand over the `banded` CTE (an
+    `id` column plus `keys`): the twin of `_banded_candidate_pairs`
+    with `max_bucket_size=cap` — all pairs in buckets at or under the
+    cap, chain+star in (`order`, id) order over the buckets above it;
+    `cand` holds the deduped (id_a, id_b)."""
+    k = ", ".join(keys)
+    same = " AND ".join(f"a.{c} = b2.{c}" for c in keys)
+    hot = " AND ".join(f"g.{c} = a.{c}" for c in keys)
+    return f"""big AS (
+          SELECT {k} FROM {banded}
+          GROUP BY {k} HAVING count(*) > {cap}
+        ),
+        small_cand AS (
+          SELECT a.id AS id_a, b2.id AS id_b
+          FROM {banded} a JOIN {banded} b2
+            ON {same} AND a.id < b2.id
+          WHERE NOT EXISTS (SELECT 1 FROM big g WHERE {hot})
+        ),
+        ranked AS (
+          SELECT id, lead(id) OVER w AS nxt, first_value(id) OVER w AS head
+          FROM {banded} JOIN big USING ({k})
+          WINDOW w AS (PARTITION BY {k} ORDER BY {order}, id)
+        ),
+        cand AS (
+          SELECT DISTINCT id_a, id_b FROM (
+            SELECT id_a, id_b FROM small_cand
+            UNION ALL
+            SELECT least(id, nxt), greatest(id, nxt) FROM ranked
+            WHERE nxt IS NOT NULL
+            UNION ALL
+            SELECT least(id, head), greatest(id, head) FROM ranked
+            WHERE id <> head
+          )
+        )"""
+
+
+def _duckdb_planted_corpus(
+    table: str, id_col: str, text_col: str,
+    plant_n: int, plant_offset: int, plant_text: str,
+) -> str:
+    """(id, t) rows of `table` plus `plant_n` copies of `plant_text` at
+    ids `plant_offset` + i — the hot bucket a capped gate plants on
+    the Spark side."""
+    sql = f"SELECT {id_col} AS id, {text_col} AS t FROM {table}"
+    if plant_n:
+        lit = plant_text.replace("'", "''")
+        sql += (
+            f" UNION ALL SELECT {plant_offset} + s.i AS id, '{lit}' AS t"
+            f" FROM unnest(generate_series(0, {plant_n - 1})) s(i)"
+        )
+    return sql
 
 
 def _jaccard(a: Column, b: Column) -> Column:
@@ -496,17 +717,17 @@ def minhash_near_dups(
     a single pathological hot bucket (B boilerplate near-identical
     docs in one (band, bucket)), which all-pairs into B²/2 candidates:
     `max_bucket_size` caps that by chaining oversized buckets in
-    signature order (see `_banded_candidate_pairs`; pairs for those
-    buckets become a spanning subset — component-equivalent for
-    cluster/keep pipelines, measured in tools/scale_check.py
-    hot_bucket_check).
+    lexicographic full-signature order, so near-identical docs land
+    adjacent (see `_banded_candidate_pairs`; pairs for those buckets
+    become a spanning subset — component-equivalent for cluster/keep
+    pipelines, measured in tools/scale_check.py hot_bucket_check).
 
     `cache` persists the signature table before the self-join: both join
     sides read it, and without a persist each side re-shingles and
     re-hashes the whole corpus (2× the dominant cost). At 100 TB the
     signature table is written to Parquet once instead.
     """
-    rows = num_hashes // bands
+    rows = _band_width(num_hashes, bands)
     if corpus_sigs is not None:
         if validate_sigs:
             # ONE job checks both failure modes: eligible docs
@@ -619,21 +840,17 @@ def minhash_near_dups(
         # moves each copy — keeping the shingle arrays out of it cuts
         # the shuffled bytes to the id width. Shingles re-attach later,
         # to unique candidate pairs only.
-        banded = _band_sigs(sigs, id_col, bands, rows)
         pairs = _banded_candidate_pairs(
-            banded, id_col, max_bucket_size=max_bucket_size, sigs=sigs,
-            intermediates=intermediates,
+            _band_sigs(sigs, id_col, bands, rows), ["band", "bucket"],
+            id_col, max_bucket_size,
+            ("__sig", sigs.select(F.col(id_col), F.col("sig").alias("__sig"))),
+            intermediates,
         )
         if sh_fut is not None:
             sh_fut.result()
-    with_sh = (
-        pairs.join(sh.select(F.col(id_col).alias("id_a"),
-                             F.col("shingles").alias("sh_a")), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"),
-                        F.col("shingles").alias("sh_b")), "id_b")
-    )
     return (
-        with_sh.withColumn("jaccard", _jaccard(F.col("sh_a"), F.col("sh_b")))
+        _attach(pairs, sh, id_col, "shingles", "sh_")
+        .withColumn("jaccard", _jaccard(F.col("sh_a"), F.col("sh_b")))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -671,7 +888,7 @@ def minhash_near_dups_incremental(
     `validate_sigs` check, or catalog meta's num_hashes, at artifact
     load time instead of per microbatch).
     """
-    rows = num_hashes // bands
+    rows = _band_width(num_hashes, bands)
     sigs_c = (
         corpus_sigs
         if corpus_sigs is not None
@@ -680,23 +897,32 @@ def minhash_near_dups_incremental(
     sigs_n = _minhash_signatures_bulk(
         new_docs, id_col, text_col, shingle_k, num_hashes
     )
-    banded_c = _band_sigs(sigs_c, id_col, bands, rows).select(
-        "band", "bucket", F.col(id_col).alias("corpus_id")
-    )
-    banded_n = _band_sigs(sigs_n, id_col, bands, rows).select(
-        "band", "bucket", F.col(id_col).alias("new_id")
-    )
-    if broadcast_new:
-        banded_n = F.broadcast(banded_n)
-    pairs = (
-        banded_c.join(banded_n, ["band", "bucket"])
-        .select("new_id", "corpus_id")
-        .dropDuplicates(["new_id", "corpus_id"])
-    )
+    pairs = _minhash_cross_pairs(sigs_c, sigs_n, id_col, bands, rows, broadcast_new)
     return verify_pairs_exact(
         corpus, new_docs, pairs,
         id_col=id_col, text_col=text_col,
         shingle_k=shingle_k, threshold=threshold,
+    )
+
+
+def _minhash_cross_pairs(
+    sigs_c: DataFrame,
+    sigs_n: DataFrame,
+    id_col: str,
+    bands: int,
+    rows: int,
+    broadcast_new: bool,
+) -> DataFrame:
+    """Corpus and batch (id, sig) tables → deduped (new_id, corpus_id)
+    banded candidates (`_cross_pairs`)."""
+    def side(sigs: DataFrame, label: str) -> DataFrame:
+        return _band_sigs(sigs, id_col, bands, rows).select(
+            "band", "bucket", F.col(id_col).alias(label)
+        )
+
+    return _cross_pairs(
+        side(sigs_c, "corpus_id"), side(sigs_n, "new_id"),
+        ["band", "bucket"], broadcast_new,
     )
 
 
@@ -783,25 +1009,15 @@ def minhash_estimate_pairs(
     reads drop from O(B) to O(k) per new doc. The banded join itself
     stays O(B·batch) sig-width rows (linear in B, never quadratic);
     only the expensive text stage is capped."""
-    rows = num_hashes // bands
+    rows = _band_width(num_hashes, bands)
     if new_sigs is None:
         if new_docs is None:
             raise ValueError("pass new_docs or new_sigs")
         new_sigs = _minhash_signatures_bulk(
             new_docs, id_col, text_col, shingle_k, num_hashes
         )
-    banded_c = _band_sigs(corpus_sigs, id_col, bands, rows).select(
-        "band", "bucket", F.col(id_col).alias("corpus_id")
-    )
-    banded_n = _band_sigs(new_sigs, id_col, bands, rows).select(
-        "band", "bucket", F.col(id_col).alias("new_id")
-    )
-    if broadcast_new:
-        banded_n = F.broadcast(banded_n)
-    pairs = (
-        banded_c.join(banded_n, ["band", "bucket"])
-        .select("new_id", "corpus_id")
-        .dropDuplicates(["new_id", "corpus_id"])
+    pairs = _minhash_cross_pairs(
+        corpus_sigs, new_sigs, id_col, bands, rows, broadcast_new
     )
     sig_c = corpus_sigs.select(
         F.col(id_col).alias("corpus_id"), F.col("sig").alias("sig_c")
@@ -839,6 +1055,75 @@ def minhash_estimate_pairs(
     return out
 
 
+def _duckdb_minhash_sigs(
+    src: str, id_col: str, text_col: str, shingle_k: int, num_hashes: int
+) -> str:
+    """(id, shingles, sig) over the `src` rows that shingle — the twin
+    of `_minhash_signatures_bulk` (same derived-hash family)."""
+    sh = f"list_distinct({duckdb_char_shingles(text_col, shingle_k)})"
+    sig = (
+        f"list_transform(generate_series(0, {num_hashes - 1}),"
+        f" i -> list_min(list_transform(pairs,"
+        f" p -> {duckdb_derived_hash('p', 'i')})))"
+    )
+    return f"""
+          SELECT id, shingles, {sig} AS sig
+          FROM (
+            SELECT id, shingles,
+                   list_transform(shingles, s -> {duckdb_hash_pair('s')}) AS pairs
+            FROM (SELECT {id_col} AS id, {sh} AS shingles FROM {src})
+            WHERE len(shingles) > 0
+          )"""
+
+
+def _duckdb_minhash_bucket(rows: int) -> str:
+    """Band b's 64-bit bucket key over `sig` — the twin of `_band_sigs`."""
+    return duckdb_hash64(
+        f"array_to_string(list_transform("
+        f"list_slice(sig, b * {rows} + 1, (b + 1) * {rows}), x -> x::varchar), ',')"
+    )
+
+
+def _duckdb_minhash_ctes(
+    src: str, prefix: str, id_col: str, text_col: str,
+    shingle_k: int, num_hashes: int, bands: int,
+) -> str:
+    """`{prefix}sigs` (`_duckdb_minhash_sigs`) and `{prefix}banded`
+    (+ b, bucket) CTEs over `src`."""
+    bucket = _duckdb_minhash_bucket(_band_width(num_hashes, bands))
+    return f"""{prefix}sigs AS ({_duckdb_minhash_sigs(src, id_col, text_col, shingle_k, num_hashes)}
+        ),
+        {prefix}banded AS ({_duckdb_bands(f"{prefix}sigs", bands, bucket, "bucket")})"""
+
+
+def _duckdb_minhash_cross(
+    corpus_sql: str, new_sql: str, col: str, stem: str, id_col: str,
+    text_col: str, shingle_k: int, num_hashes: int, bands: int,
+) -> str:
+    """c_/n_ MinHash CTEs of both inputs plus `cand`: the deduped
+    (new_id, corpus_id) banded candidates carrying each side's `col`
+    as stem+"n" / stem+"c" — the twin of `_minhash_cross_pairs`."""
+    def side(src: str, name: str) -> str:
+        return _duckdb_minhash_ctes(
+            f"({src})", f"{name}_", id_col, text_col, shingle_k, num_hashes, bands
+        )
+
+    return f"""{side(corpus_sql, 'c')},
+        {side(new_sql, 'n')},
+        cand AS (
+          SELECT DISTINCT n.id AS new_id, c.id AS corpus_id,
+                 n.{col} AS {stem}n, c.{col} AS {stem}c
+          FROM c_banded c JOIN n_banded n
+            ON c.b = n.b AND c.bucket = n.bucket
+        )"""
+
+
+def _duckdb_jaccard(a: str, b: str) -> str:
+    """Exact Jaccard of two distinct-element lists (the `_jaccard` twin)."""
+    inter = f"len(list_filter({a}, x -> list_contains({b}, x)))"
+    return f"{inter}::double / (len({a}) + len({b}) - {inter})"
+
+
 def duckdb_minhash_estimate_pairs(
     corpus_sql: str,
     new_sql: str,
@@ -854,34 +1139,6 @@ def duckdb_minhash_estimate_pairs(
     banding, the estimator as an index-wise position-match count —
     integer arithmetic end to end. `top_per_new` mirrors the ingest-
     side hot-bucket bound (row_number over the same total order)."""
-    rows = num_hashes // bands
-    sh = f"list_distinct({duckdb_char_shingles(text_col, shingle_k)})"
-    sig = (
-        f"list_transform(generate_series(0, {num_hashes - 1}),"
-        f" i -> list_min(list_transform(pairs,"
-        f" p -> {duckdb_derived_hash('p', 'i')})))"
-    )
-    bucket = duckdb_hash64(
-        f"array_to_string(list_transform("
-        f"list_slice(sig, b * {rows} + 1, (b + 1) * {rows}), x -> x::varchar), ',')"
-    )
-
-    def side(src: str, name: str) -> str:
-        return f"""
-        {name}_sigs AS (
-          SELECT id, {sig} AS sig
-          FROM (
-            SELECT id,
-                   list_transform(shingles, s -> {duckdb_hash_pair('s')}) AS pairs
-            FROM (SELECT {id_col} AS id, {sh} AS shingles FROM ({src}))
-            WHERE len(shingles) > 0
-          )
-        ),
-        {name}_banded AS (
-          SELECT id, sig, b, {bucket} AS bucket
-          FROM {name}_sigs, unnest(generate_series(0, {bands - 1})) t(b)
-        )"""
-
     matches = (
         f"len(list_filter(generate_series(1, {num_hashes}),"
         f" i -> sig_n[i] = sig_c[i]))"
@@ -900,13 +1157,10 @@ def duckdb_minhash_estimate_pairs(
         else "SELECT new_id, corpus_id, est_jaccard FROM est"
     )
     return f"""
-        WITH {side(corpus_sql, 'c')}, {side(new_sql, 'n')},
-        cand AS (
-          SELECT DISTINCT n.id AS new_id, c.id AS corpus_id,
-                 n.sig AS sig_n, c.sig AS sig_c
-          FROM c_banded c JOIN n_banded n
-            ON c.b = n.b AND c.bucket = n.bucket
-        ),
+        WITH {_duckdb_minhash_cross(
+            corpus_sql, new_sql, "sig", "sig_", id_col, text_col,
+            shingle_k, num_hashes, bands,
+        )},
         est AS (
           SELECT new_id, corpus_id,
                  {matches}::double / {num_hashes} AS est_jaccard
@@ -1102,44 +1356,12 @@ def duckdb_minhash_near_dups_incremental(
 ) -> str:
     """Oracle twin: `corpus_sql` / `new_sql` are SELECTs exposing
     (id_col, text_col)."""
-    rows = num_hashes // bands
-    sh = f"list_distinct({duckdb_char_shingles(text_col, shingle_k)})"
-    sig = (
-        f"list_transform(generate_series(0, {num_hashes - 1}),"
-        f" i -> list_min(list_transform(pairs,"
-        f" p -> {duckdb_derived_hash('p', 'i')})))"
-    )
-    bucket = duckdb_hash64(
-        f"array_to_string(list_transform("
-        f"list_slice(sig, b * {rows} + 1, (b + 1) * {rows}), x -> x::varchar), ',')"
-    )
-
-    def side(src: str, name: str) -> str:
-        return f"""
-        {name}_sigs AS (
-          SELECT id, shingles, {sig} AS sig
-          FROM (
-            SELECT id, shingles,
-                   list_transform(shingles, s -> {duckdb_hash_pair('s')}) AS pairs
-            FROM (SELECT {id_col} AS id, {sh} AS shingles FROM ({src}))
-            WHERE len(shingles) > 0
-          )
-        ),
-        {name}_banded AS (
-          SELECT id, shingles, b, {bucket} AS bucket
-          FROM {name}_sigs, unnest(generate_series(0, {bands - 1})) t(b)
-        )"""
-
-    inter = "len(list_filter(sh_n, x -> list_contains(sh_c, x)))"
-    jac = f"{inter}::double / (len(sh_n) + len(sh_c) - {inter})"
+    jac = _duckdb_jaccard("sh_n", "sh_c")
     return f"""
-        WITH {side(corpus_sql, 'c')}, {side(new_sql, 'n')},
-        cand AS (
-          SELECT DISTINCT n.id AS new_id, c.id AS corpus_id,
-                 n.shingles AS sh_n, c.shingles AS sh_c
-          FROM c_banded c JOIN n_banded n
-            ON c.b = n.b AND c.bucket = n.bucket
-        )
+        WITH {_duckdb_minhash_cross(
+            corpus_sql, new_sql, "shingles", "sh_", id_col, text_col,
+            shingle_k, num_hashes, bands,
+        )}
         SELECT new_id, corpus_id, {jac} AS jaccard
         FROM cand WHERE {jac} >= {threshold}
     """
@@ -1154,45 +1376,19 @@ def duckdb_minhash_near_dups(
     bands: int = 4,
     threshold: float = 0.5,
 ) -> str:
-    rows = num_hashes // bands
-    sh = f"list_distinct({duckdb_char_shingles(text_col, shingle_k)})"
-    sig = (
-        f"list_transform(generate_series(0, {num_hashes - 1}),"
-        f" i -> list_min(list_transform(pairs,"
-        f" p -> {duckdb_derived_hash('p', 'i')})))"
-    )
-    bucket = duckdb_hash64(
-        f"array_to_string(list_transform("
-        f"list_slice(sig, b * {rows} + 1, (b + 1) * {rows}), x -> x::varchar), ',')"
-    )
+    jac = _duckdb_jaccard("sh_a", "sh_b")
     return f"""
-        WITH sigs AS (
-          SELECT id, shingles, {sig} AS sig
-          FROM (
-            SELECT id, shingles,
-                   list_transform(shingles, s -> {duckdb_hash_pair('s')}) AS pairs
-            FROM (SELECT {id_col} AS id, {sh} AS shingles FROM {table})
-            WHERE len(shingles) > 0
-          )
-        ),
-        banded AS (
-          SELECT id, shingles, b, {bucket} AS bucket
-          FROM sigs, unnest(generate_series(0, {bands - 1})) t(b)
-        ),
+        WITH {_duckdb_minhash_ctes(
+            table, "", id_col, text_col, shingle_k, num_hashes, bands
+        )},
         cand AS (
           SELECT DISTINCT a.id AS id_a, b2.id AS id_b,
                  a.shingles AS sh_a, b2.shingles AS sh_b
           FROM banded a JOIN banded b2
             ON a.b = b2.b AND a.bucket = b2.bucket AND a.id < b2.id
         )
-        SELECT id_a, id_b,
-               len(list_filter(sh_a, x -> list_contains(sh_b, x)))::double /
-               (len(sh_a) + len(sh_b)
-                - len(list_filter(sh_a, x -> list_contains(sh_b, x)))) AS jaccard
-        FROM cand
-        WHERE len(list_filter(sh_a, x -> list_contains(sh_b, x)))::double /
-              (len(sh_a) + len(sh_b)
-               - len(list_filter(sh_a, x -> list_contains(sh_b, x)))) >= {threshold}
+        SELECT id_a, id_b, {jac} AS jaccard
+        FROM cand WHERE {jac} >= {threshold}
     """
 
 
@@ -1217,74 +1413,16 @@ def duckdb_minhash_near_dups_capped(
     `plant_offset` (the hot bucket the gate plants on the Spark side).
     List comparison is element-wise lexicographic in both engines;
     identical-sig members tie-break on id in both."""
-    rows = num_hashes // bands
-    sh = f"list_distinct({duckdb_char_shingles('t', shingle_k)})"
-    sig = (
-        f"list_transform(generate_series(0, {num_hashes - 1}),"
-        f" i -> list_min(list_transform(pairs,"
-        f" p -> {duckdb_derived_hash('p', 'i')})))"
-    )
-    bucket = duckdb_hash64(
-        f"array_to_string(list_transform("
-        f"list_slice(sig, b * {rows} + 1, (b + 1) * {rows}), x -> x::varchar), ',')"
-    )
-    plant = ""
-    if plant_n:
-        lit = plant_text.replace("'", "''")
-        plant = (
-            f" UNION ALL SELECT {plant_offset} + s.i AS id, '{lit}' AS t"
-            f" FROM unnest(generate_series(0, {plant_n - 1})) s(i)"
-        )
-    jac = (
-        "len(list_filter(sh_a, x -> list_contains(sh_b, x)))::double /"
-        " (len(sh_a) + len(sh_b)"
-        " - len(list_filter(sh_a, x -> list_contains(sh_b, x))))"
+    jac = _duckdb_jaccard("sh_a", "sh_b")
+    corpus = _duckdb_planted_corpus(
+        table, id_col, text_col, plant_n, plant_offset, plant_text
     )
     return f"""
-        WITH corpus AS (
-          SELECT {id_col} AS id, {text_col} AS t FROM {table}{plant}
-        ),
-        sigs AS (
-          SELECT id, shingles, {sig} AS sig
-          FROM (
-            SELECT id, shingles,
-                   list_transform(shingles, s -> {duckdb_hash_pair('s')}) AS pairs
-            FROM (SELECT id, {sh} AS shingles FROM corpus)
-            WHERE len(shingles) > 0
-          )
-        ),
-        banded AS (
-          SELECT id, sig, b, {bucket} AS bucket
-          FROM sigs, unnest(generate_series(0, {bands - 1})) t(b)
-        ),
-        big AS (
-          SELECT b, bucket FROM banded
-          GROUP BY b, bucket HAVING count(*) > {max_bucket_size}
-        ),
-        small_cand AS (
-          SELECT a.id AS id_a, b2.id AS id_b
-          FROM banded a JOIN banded b2
-            ON a.b = b2.b AND a.bucket = b2.bucket AND a.id < b2.id
-          WHERE NOT EXISTS (
-            SELECT 1 FROM big g WHERE g.b = a.b AND g.bucket = a.bucket
-          )
-        ),
-        ranked AS (
-          SELECT id, lead(id) OVER w AS nxt, first_value(id) OVER w AS head
-          FROM banded JOIN big USING (b, bucket)
-          WINDOW w AS (PARTITION BY b, bucket ORDER BY sig, id)
-        ),
-        cand AS (
-          SELECT DISTINCT id_a, id_b FROM (
-            SELECT id_a, id_b FROM small_cand
-            UNION ALL
-            SELECT least(id, nxt), greatest(id, nxt) FROM ranked
-            WHERE nxt IS NOT NULL
-            UNION ALL
-            SELECT least(id, head), greatest(id, head) FROM ranked
-            WHERE id <> head
-          )
-        ),
+        WITH corpus AS ({corpus}),
+        {_duckdb_minhash_ctes(
+            "corpus", "", "id", "t", shingle_k, num_hashes, bands
+        )},
+        {_duckdb_capped_cand("banded", ["b", "bucket"], "sig", max_bucket_size)},
         verified AS (
           SELECT c.id_a, c.id_b, sa.shingles AS sh_a, sb.shingles AS sh_b
           FROM cand c
@@ -1331,7 +1469,7 @@ def minhash_band_sweep(
         intermediates.append(sigs)
     banded_all = None
     for h, b in configs:
-        bd = _band_sigs(sigs, id_col, b, h // b).select(
+        bd = _band_sigs(sigs, id_col, b, _band_width(h, b)).select(
             F.lit(h).alias("num_hashes"),
             F.lit(b).alias("bands"),
             F.col(id_col),
@@ -1340,12 +1478,8 @@ def minhash_band_sweep(
         )
         banded_all = bd if banded_all is None else banded_all.unionByName(bd)
     keys = ["num_hashes", "bands", "band", "bucket"]
-    a = banded_all.select(*keys, F.col(id_col).alias("id_a"))
-    b2 = banded_all.select(*keys, F.col(id_col).alias("id_b"))
-    pairs = (
-        a.join(b2, keys)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["num_hashes", "bands", "id_a", "id_b"])
+    pairs = _self_pairs(banded_all, keys, id_col).dropDuplicates(
+        ["num_hashes", "bands", "id_a", "id_b"]
     )
     n_truth = truth.agg(F.count("*").alias("n_truth"))
     marked = pairs.join(
@@ -1405,36 +1539,20 @@ def duckdb_minhash_band_sweep(
     CTE are AS MATERIALIZED — both are referenced more than once and
     DuckDB inlines CTEs (the unrolled-oracle rule)."""
     max_h = max(h for h, _ in configs)
-    sh = f"list_distinct({duckdb_char_shingles(text_col, shingle_k)})"
-    sig = (
-        f"list_transform(generate_series(0, {max_h - 1}),"
-        f" i -> list_min(list_transform(pairs,"
-        f" p -> {duckdb_derived_hash('p', 'i')})))"
-    )
     ctes = [
         f"""sw_sigs AS MATERIALIZED (
-          SELECT id, {sig} AS sig
-          FROM (
-            SELECT id,
-                   list_transform(shingles, s -> {duckdb_hash_pair('s')}) AS pairs
-            FROM (SELECT {id_col} AS id, {sh} AS shingles FROM {corpus})
-            WHERE len(shingles) > 0
-          )
+          SELECT id, sig FROM ({_duckdb_minhash_sigs(
+              corpus, id_col, text_col, shingle_k, max_h
+          )})
         )""",
         f"sw_nt AS (SELECT count(*) AS n_truth FROM {truth})",
     ]
     aggs = []
     for i, (h, b) in enumerate(configs):
-        rows = h // b
-        bucket = duckdb_hash64(
-            f"array_to_string(list_transform("
-            f"list_slice(sig, b * {rows} + 1, (b + 1) * {rows}),"
-            f" x -> x::varchar), ',')"
-        )
+        bucket = _duckdb_minhash_bucket(_band_width(h, b))
         ctes.append(
             f"""sw_banded_{i} AS MATERIALIZED (
-              SELECT id, b, {bucket} AS bucket
-              FROM sw_sigs, unnest(generate_series(0, {b - 1})) t(b)
+              {_duckdb_bands("sw_sigs", b, bucket, "bucket")}
             )"""
         )
         ctes.append(
@@ -1622,47 +1740,6 @@ def _simhash_packed(
     )
 
 
-def _simhash_banded(
-    sh: DataFrame, id_col: str, bits: int, bands: int
-) -> DataFrame:
-    """(id, sh) → (id, sh, band, bb): band b is bit block
-    [bits−(b+1)·width, bits−b·width) of the packed long — the same
-    contiguous array blocks the DuckDB twins slice (labels reversed
-    between engines; only bucket SETS matter to banding semantics).
-
-    `bb` is coalesced to −1 (outside the [0, 2^width) range of real
-    buckets) so the column is provably NON-NULL: when bb is nullable,
-    the bucket equi-join infers isnotnull(bb) and pushes the whole
-    sketch expression below the fan-out repartition onto the
-    single-task parquet scan — the incremental form's job profile
-    showed the entire side's SimHash computed twice, once of them
-    single-threaded (1.85 s of a 3.1 s gate). A null sh (null text)
-    lands in bucket −1, collides only with other null-sh rows, and the
-    exact hamming verify (bit_count over null → null) drops those
-    pairs — output unchanged."""
-    width = bits // bands
-    mask = (1 << width) - 1
-    return sh.select(
-        F.col(id_col),
-        F.col("sh"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.coalesce(
-                            F.shiftright(F.col("sh"), bits - (b + 1) * width)
-                            .bitwiseAND(F.lit(mask)),
-                            F.lit(-1),
-                        ).alias("bb"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("e"),
-    ).select(id_col, "sh", F.col("e.band"), F.col("e.bb"))
-
-
 def simhash_near_dups(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -1676,10 +1753,11 @@ def simhash_near_dups(
 ) -> DataFrame:
     """→ (id_a, id_b, hamming) with hamming ≤ max_hamming.
 
-    Pigeonhole candidate generation: with `bands` ≥ max_hamming + 1,
-    any pair within the hamming budget agrees on at least one whole
-    band → equi-join on (band, band_bits) finds all of them; exact
-    hamming verifies. Same no-O(n²) shape as MinHash-LSH.
+    Pigeonhole candidate generation: with `bands` ≥ max_hamming + 1
+    (ValueError otherwise, and for bits > 63), any pair within the
+    hamming budget agrees on at least one whole band → equi-join on
+    (band, band_bits) finds all of them; exact hamming verifies. Same
+    no-O(n²) shape as MinHash-LSH (`_packed_near_dups`).
 
     `max_bucket_size`: hot-bucket guard — the same hazard the MinHash
     family caps: a B-doc boilerplate cluster shares its full sketch,
@@ -1694,116 +1772,60 @@ def simhash_near_dups(
     the banded frame when the cap is set) for caller-side unpersist;
     with the default None they stay cached until storage eviction.
     """
-    assert bands >= max_hamming + 1, "pigeonhole needs bands > max_hamming"
-    assert bits <= 63, "packed-long carry needs bits <= 63"
-    sh = _simhash_packed(docs, id_col, text_col, bits)
+    return _packed_near_dups(
+        _simhash_packed(docs, id_col, text_col, bits), id_col, "sh", bits,
+        bands, max_hamming, cache, max_bucket_size, intermediates,
+    )
+
+
+def _packed_near_dups(
+    sk: DataFrame,
+    id_col: str,
+    hash_col: str,
+    bits: int,
+    bands: int,
+    max_hamming: int,
+    cache: bool = True,
+    max_bucket_size: int | None = None,
+    intermediates: list | None = None,
+) -> DataFrame:
+    """(id, packed-long `hash_col`) → (id_a, id_b, hamming ≤
+    max_hamming): the one near-dup path of every packed sketch
+    (SimHash, image aHash, audio energy hash). `_packed_bands` →
+    `_self_pairs` carrying the sketch → exact bit_count(XOR) verify →
+    dedup; `max_bucket_size` chains oversized buckets in (sketch, id)
+    order (`_hot_split` — the sketch already rides the banded frame,
+    so no re-join). `cache` persists the sketch table, `intermediates`
+    receives every frame this call persisted."""
+    _pigeonhole(bits, bands, max_hamming)
     if cache:
         # both self-join sides read the sketch table; persist AND
         # materialize, or the racing join map stages hash twice.
-        sh = sh.persist()
-        sh.count()
+        sk = sk.persist()
+        sk.count()
         if intermediates is not None:
-            intermediates.append(sh)
-    banded = _simhash_banded(sh, id_col, bits, bands)
-
-    if max_bucket_size is not None:
-        # three consumers (size aggregate, small anti-join, big join):
-        # persist per the measured multi-consumer rule; the oversized-
-        # key aggregate IS the materializing action and its (tiny,
-        # broadcast-bound anyway) result comes back as driver rows, so
-        # the final action broadcasts a literal instead of re-running
-        # the aggregate (one job, not two — r10 fold, same as the
-        # MinHash guard).
-        banded = banded.persist()
-        key_schema = banded.select("band", "bb").schema
-        hot = (
-            banded.groupBy("band", "bb")
-            .agg(F.count("*").alias("__bsz"))
-            .filter(F.col("__bsz") > max_bucket_size)
-            .select("band", "bb")
-            .collect()
-        )
-        if intermediates is not None:
-            intermediates.append(banded)
-        if not hot:
-            # no bucket over the cap: the guard degenerates to the
-            # exact all-pairs form below — fall through to it.
-            a = banded.select(
-                "band", "bb", F.col(id_col).alias("id_a"),
-                F.col("sh").alias("sha"),
-            )
-            b = banded.select(
-                "band", "bb", F.col(id_col).alias("id_b"),
-                F.col("sh").alias("shb"),
-            )
-            return (
-                a.join(b, ["band", "bb"])
-                .filter(F.col("id_a") < F.col("id_b"))
-                .withColumn(
-                    "hamming",
-                    F.bit_count(F.col("sha").bitwiseXOR(F.col("shb"))),
-                )
-                .filter(F.col("hamming") <= max_hamming)
-                .select("id_a", "id_b", "hamming")
-                .dropDuplicates(["id_a", "id_b"])
-            )
-        big_keys = F.broadcast(
-            _local_keys_frame(banded.sparkSession, hot, key_schema)
-        )
-        small = banded.join(big_keys, ["band", "bb"], "left_anti")
-        sa = small.select(
-            "band", "bb", F.col(id_col).alias("id_a"), F.col("sh").alias("sha")
-        )
-        sb = small.select(
-            "band", "bb", F.col(id_col).alias("id_b"), F.col("sh").alias("shb")
-        )
-        pairs_small = (
-            sa.join(sb, ["band", "bb"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn(
-                "hamming", F.bit_count(F.col("sha").bitwiseXOR(F.col("shb")))
-            )
-            .filter(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming")
-        )
-        # oversized buckets: chain+star over the PACKED sketch order
-        # (`sh` already rides the banded frame — no sigs re-join).
-        # Spanning pairs re-attach sketches for exact hamming verify;
-        # the pair count is O(B), so the two joins are trivial.
-        big = banded.join(big_keys, ["band", "bb"])
-        spanning = _chain_star_pairs(big, ["band", "bb"], ["sh", id_col], id_col)
-        sh_a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sha"))
-        sh_b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("shb"))
-        pairs_big = (
-            spanning.join(sh_a, "id_a")
-            .join(sh_b, "id_b")
-            .withColumn(
-                "hamming", F.bit_count(F.col("sha").bitwiseXOR(F.col("shb")))
-            )
-            .filter(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming")
-        )
-        return pairs_small.unionByName(pairs_big).dropDuplicates(
-            ["id_a", "id_b"]
-        )
-    a = banded.select("band", "bb", F.col(id_col).alias("id_a"), F.col("sh").alias("sha"))
-    b = banded.select("band", "bb", F.col(id_col).alias("id_b"), F.col("sh").alias("shb"))
+            intermediates.append(sk)
+    keys = ["band", "bb"]
+    banded, spanning = _hot_split(
+        _packed_bands(sk, [id_col, hash_col], hash_col, bits, bands),
+        keys, id_col, max_bucket_size, (hash_col, None), intermediates,
+    )
     # Verify hamming BEFORE dropDuplicates: bit_count is map-side
     # arithmetic, while dropDuplicates is a shuffle — filtering first
     # shrinks the shuffle from every band collision (skewed-bucket
     # blowup: biased sign bits make some bands huge) down to true
     # near-dup pairs only. hamming is a pure function of the pair, so
     # dedup placement cannot change results.
-    return (
-        a.join(b, ["band", "bb"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "hamming", F.bit_count(F.col("sha").bitwiseXOR(F.col("shb")))
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        .dropDuplicates(["id_a", "id_b"])
+    pairs = _hamming(
+        _self_pairs(banded, keys, id_col, {hash_col: "sh"}), max_hamming
     )
+    if spanning is not None:
+        # spanning pairs re-attach sketches for the same verify; the
+        # pair count is O(B), so the two joins are trivial.
+        pairs = pairs.unionByName(
+            _hamming(_attach(spanning, sk, id_col, hash_col, "sh"), max_hamming)
+        )
+    return pairs.dropDuplicates(["id_a", "id_b"])
 
 
 def duckdb_simhash_near_dups(
@@ -1814,35 +1836,44 @@ def duckdb_simhash_near_dups(
     bands: int = 4,
     max_hamming: int = 3,
 ) -> str:
-    width = bits // bands
+    ham = _duckdb_array_hamming("sha", "shb", bits)
     return f"""
         WITH sh AS (
           SELECT {id_col} AS id, {duckdb_simhash_bits(text_col, bits)} AS sh
           FROM {table}
         ),
-        banded AS (
-          SELECT id, sh, b,
-                 array_to_string(list_transform(
-                   list_slice(sh, b * {width} + 1, (b + 1) * {width}),
-                   x -> x::varchar), '') AS bb
-          FROM sh, unnest(generate_series(0, {bands - 1})) t(b)
-        ),
+        banded AS ({_duckdb_bands("sh", bands, _duckdb_simhash_bb(bits, bands))}),
         cand AS (
           SELECT DISTINCT a.id AS id_a, b2.id AS id_b,
                  a.sh AS sha, b2.sh AS shb
           FROM banded a JOIN banded b2
             ON a.b = b2.b AND a.bb = b2.bb AND a.id < b2.id
         )
-        SELECT id_a, id_b,
-               list_reduce(list_prepend(0,
-                 list_transform(generate_series(1, {bits}),
-                   i -> abs(sha[i] - shb[i]))), (acc, x) -> acc + x) AS hamming
-        FROM cand
-        WHERE list_reduce(list_prepend(0,
-                list_transform(generate_series(1, {bits}),
-                  i -> abs(sha[i] - shb[i]))), (acc, x) -> acc + x)
-              <= {max_hamming}
+        SELECT id_a, id_b, {ham} AS hamming
+        FROM cand WHERE {ham} <= {max_hamming}
     """
+
+
+def _duckdb_simhash_bb(bits: int, bands: int) -> str:
+    """Band b of the SimHash bit array `sh` as a '0'/'1' string — the
+    same contiguous bit blocks `_packed_bands` cuts from the packed
+    long (array-front labels vs the Spark side's packed-MSB labels;
+    bucket sets identical)."""
+    width = bits // bands
+    return (
+        f"array_to_string(list_transform("
+        f"list_slice(sh, b * {width} + 1, (b + 1) * {width}),"
+        f" x -> x::varchar), '')"
+    )
+
+
+def _duckdb_array_hamming(a: str, b: str, bits: int) -> str:
+    """Hamming distance of two `bits`-element 0/1 lists."""
+    return (
+        f"list_reduce(list_prepend(0,"
+        f" list_transform(generate_series(1, {bits}),"
+        f" i -> abs({a}[i] - {b}[i]))), (acc, x) -> acc + x)"
+    )
 
 
 def duckdb_simhash_near_dups_capped(
@@ -1868,67 +1899,23 @@ def duckdb_simhash_near_dups_capped(
     grouping — all that banding semantics use — is identical.
     `plant_n` appends copies of `plant_text` at `plant_offset` (the
     hot bucket the gate plants on the Spark side)."""
-    width = bits // bands
-    plant = ""
-    if plant_n:
-        lit = plant_text.replace("'", "''")
-        plant = (
-            f" UNION ALL SELECT {plant_offset} + s.i AS id, '{lit}' AS t"
-            f" FROM unnest(generate_series(0, {plant_n - 1})) s(i)"
-        )
+    corpus = _duckdb_planted_corpus(
+        table, id_col, text_col, plant_n, plant_offset, plant_text
+    )
     packed = (
         "list_reduce(list_prepend(0::bigint,"
         " list_transform(list_reverse(sh), x -> x::bigint)),"
         " (acc, x) -> acc * 2 + x)"
     )
-    ham = (
-        f"list_reduce(list_prepend(0,"
-        f" list_transform(generate_series(1, {bits}),"
-        f" i -> abs(sha[i] - shb[i]))), (acc, x) -> acc + x)"
-    )
+    ham = _duckdb_array_hamming("sha", "shb", bits)
     return f"""
-        WITH corpus AS (
-          SELECT {id_col} AS id, {text_col} AS t FROM {table}{plant}
-        ),
+        WITH corpus AS ({corpus}),
         sh AS (
           SELECT id, {duckdb_simhash_bits('t', bits)} AS sh FROM corpus
         ),
         pk AS (SELECT id, sh, {packed} AS pk FROM sh),
-        banded AS (
-          SELECT id, sh, pk, b,
-                 array_to_string(list_transform(
-                   list_slice(sh, b * {width} + 1, (b + 1) * {width}),
-                   x -> x::varchar), '') AS bb
-          FROM pk, unnest(generate_series(0, {bands - 1})) t(b)
-        ),
-        big AS (
-          SELECT b, bb FROM banded
-          GROUP BY b, bb HAVING count(*) > {max_bucket_size}
-        ),
-        small_cand AS (
-          SELECT a.id AS id_a, b2.id AS id_b
-          FROM banded a JOIN banded b2
-            ON a.b = b2.b AND a.bb = b2.bb AND a.id < b2.id
-          WHERE NOT EXISTS (
-            SELECT 1 FROM big g WHERE g.b = a.b AND g.bb = a.bb
-          )
-        ),
-        ranked AS (
-          SELECT id, lead(id) OVER w AS nxt, first_value(id) OVER w AS head
-          FROM banded JOIN big USING (b, bb)
-          WINDOW w AS (PARTITION BY b, bb ORDER BY pk, id)
-        ),
-        cand AS (
-          SELECT DISTINCT id_a, id_b FROM (
-            SELECT id_a, id_b FROM small_cand
-            UNION ALL
-            SELECT least(id, nxt), greatest(id, nxt) FROM ranked
-            WHERE nxt IS NOT NULL
-            UNION ALL
-            SELECT least(id, head), greatest(id, head) FROM ranked
-            WHERE id <> head
-          )
-        ),
+        banded AS ({_duckdb_bands("pk", bands, _duckdb_simhash_bb(bits, bands))}),
+        {_duckdb_capped_cand("banded", ["b", "bb"], "pk", max_bucket_size)},
         verified AS (
           SELECT c.id_a, c.id_b, sa.sh AS sha, sb.sh AS shb
           FROM cand c
@@ -1969,34 +1956,34 @@ def simhash_near_dups_incremental(
     incremental's `corpus_sigs`) and the per-batch cost drops to a
     sketch-table scan.
     """
-    assert bands >= max_hamming + 1, "pigeonhole needs bands > max_hamming"
-    assert bits <= 63, "packed-long carry needs bits <= 63"
+    _pigeonhole(bits, bands, max_hamming)
     sh_c = (
         corpus_sketches
         if corpus_sketches is not None
         else _simhash_packed(corpus, id_col, text_col, bits)
     )
     sh_n = _simhash_packed(new_docs, id_col, text_col, bits)
-    banded_c = _simhash_banded(sh_c, id_col, bits, bands).select(
-        "band", "bb", F.col(id_col).alias("corpus_id"), F.col("sh").alias("shc")
-    )
-    banded_n = _simhash_banded(sh_n, id_col, bits, bands).select(
-        "band", "bb", F.col(id_col).alias("new_id"), F.col("sh").alias("shn")
-    )
+
+    def side(sh: DataFrame, label: str, sk_col: str) -> DataFrame:
+        return _packed_bands(sh, [id_col, "sh"], "sh", bits, bands).select(
+            "band", "bb", F.col(id_col).alias(label), F.col("sh").alias(sk_col)
+        )
+
+    new = side(sh_n, "new_id", "shn")
     if broadcast_new:
-        banded_n = F.broadcast(banded_n)
+        new = F.broadcast(new)
     # NULL-SAFE verify filter: `hamming <= h` is null-intolerant, so
     # Catalyst infers isnotnull(shc)/isnotnull(shn) from it and pushes
     # the FULL sketch expression below each side's fan-out repartition
     # onto the single-task parquet scan (job profile: the new side's
     # whole SimHash computed twice, once single-threaded — 1.85 s of a
     # 3.1 s gate). coalesce(…, false) keeps the semantics (null
-    # sketches never pair) with no inferable isnotnull.
+    # sketches never pair) with no inferable isnotnull. The verify
+    # runs BEFORE the dedup shuffle, unlike `_cross_pairs`' id-only
+    # candidates.
     return (
-        banded_c.join(banded_n, ["band", "bb"])
-        .withColumn(
-            "hamming", F.bit_count(F.col("shc").bitwiseXOR(F.col("shn")))
-        )
+        side(sh_c, "corpus_id", "shc").join(new, ["band", "bb"])
+        .withColumn("hamming", F.bit_count(F.col("shc").bitwiseXOR(F.col("shn"))))
         .filter(F.coalesce(F.col("hamming") <= max_hamming, F.lit(False)))
         .select("new_id", "corpus_id", "hamming")
         .dropDuplicates(["new_id", "corpus_id"])
@@ -2015,17 +2002,8 @@ def duckdb_simhash_near_dups_incremental(
     """Twin of simhash_near_dups_incremental: band both sides over the
     same contiguous bit blocks (array-front labels vs the Spark side's
     packed-MSB labels — bucket sets identical), join, exact hamming."""
-    width = bits // bands
-    bb = (
-        f"array_to_string(list_transform("
-        f"list_slice(sh, b * {width} + 1, (b + 1) * {width}),"
-        f" x -> x::varchar), '')"
-    )
-    ham = (
-        f"list_reduce(list_prepend(0,"
-        f" list_transform(generate_series(1, {bits}),"
-        f" i -> abs(bc.sh[i] - bn.sh[i]))), (acc, x) -> acc + x)"
-    )
+    bb = _duckdb_simhash_bb(bits, bands)
+    ham = _duckdb_array_hamming("bc.sh", "bn.sh", bits)
     return f"""
         WITH c AS (
           SELECT {id_col} AS id, {duckdb_simhash_bits(text_col, bits)} AS sh
@@ -2035,14 +2013,8 @@ def duckdb_simhash_near_dups_incremental(
           SELECT {id_col} AS id, {duckdb_simhash_bits(text_col, bits)} AS sh
           FROM ({new_sql})
         ),
-        bc AS (
-          SELECT id, sh, b, {bb} AS bb
-          FROM c, unnest(generate_series(0, {bands - 1})) t(b)
-        ),
-        bn AS (
-          SELECT id, sh, b, {bb} AS bb
-          FROM n, unnest(generate_series(0, {bands - 1})) t(b)
-        )
+        bc AS ({_duckdb_bands("c", bands, bb)}),
+        bn AS ({_duckdb_bands("n", bands, bb)})
         SELECT DISTINCT bn.id AS new_id, bc.id AS corpus_id, {ham} AS hamming
         FROM bc JOIN bn ON bc.b = bn.b AND bc.bb = bn.bb
         WHERE {ham} <= {max_hamming}

@@ -30,6 +30,12 @@ Scale: content bytes dominate row size, so feature extraction selects
 consumers from ever reading the blob column; store media Parquet with a
 small `spark.sql.files.maxPartitionBytes` (blobs compress poorly) and
 partition by modality so per-modality pipelines prune files.
+
+Near-dup pairs (image aHash, audio energy hash, video frame hashes)
+are packed-long sketch builders around the banded-LSH core in
+operators/dedup.py: `media_ahash_near_dups` and `audio_near_dups` run
+its `_packed_near_dups` path (the one SimHash uses); `video_near_dups`
+bands with `_packed_bands` and self-joins per frame position.
 """
 
 from __future__ import annotations
@@ -38,7 +44,12 @@ import hashlib
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
+
+from leann_rs_spark.operators.dedup import (
+    _duckdb_bands, _duckdb_packed_bb, _packed_bands, _packed_near_dups,
+    _pigeonhole, _self_pairs,
+)
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -1175,36 +1186,13 @@ def audio_near_dups(
     the energy-envelope hash — REAL tier only (the hash needs PCM
     decode; the oracle-gated relational twin of this banding is
     x_media_phash_dups, same plan shape). mapInPandas hash pass →
-    the shared banded pigeonhole join (never O(n²))."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("ahash", T.LongType(), True),
-        ]
+    the shared packed-sketch path (`dedup._packed_near_dups`, never
+    O(n²)); bands ≤ max_hamming raise ValueError."""
+    sh = _py_hash_frame(media, id_col, content_col, audio_energy_hash_py)
+    return _packed_near_dups(
+        sh.filter(F.col("ahash").isNotNull()),
+        id_col, "ahash", AHASH_BITS, bands, max_hamming,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                content = (
-                    bytes(r[content_col])
-                    if r[content_col] is not None
-                    else b""
-                )
-                rows.append(
-                    {id_col: r[id_col], "ahash": audio_energy_hash_py(content)}
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in out_schema.fields]
-            )
-
-    sh = (
-        media.select(id_col, content_col)
-        .mapInPandas(run, schema=out_schema)
-        .filter(F.col("ahash").isNotNull())
-    )
-    return _banded_hash_pairs(sh, bands, max_hamming, id_col)
 
 
 ANTIALIAS_TAPS = 63  # windowed-sinc FIR length (odd → linear phase)
@@ -1386,7 +1374,6 @@ def fake_video_frame_hashes(
     lightly edited copy shares all but the touched frame's hash, which
     is the property the frame-aligned banding exists to exploit.
     `n_frames` is an int or a per-row Column (clips vary in length)."""
-    n = AHASH_BITS
     nf = F.lit(n_frames) if isinstance(n_frames, int) else n_frames
     t = media.select(
         F.col(id_col).alias("media_id"),
@@ -1416,55 +1403,14 @@ def fake_video_frame_hashes(
     # 63 sample references — each recopying the multi-KB parent text
     # (measured 20.4 s → 1.9 s cold at sf0.1 for this one binding; the
     # CLAUDE.md single-element-array rule)
+    cols = ["media_id", "frame_index", "n_frames"]
     pix = frames.select(
-        "media_id",
-        "frame_index",
-        "n_frames",
+        *cols,
         F.transform(
-            F.array(F.col("__t").substr(start, flen)),
-            lambda ft: F.when(
-                F.length(ft) > 0,
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(n - 1)),
-                    lambda i: F.ascii(
-                        ft.substr(
-                            (
-                                F.lit(1)
-                                + F.floor(
-                                    i * (F.length(ft) - 1) / F.lit(n - 1)
-                                )
-                            ).cast("int"),
-                            F.lit(1),
-                        )
-                    ),
-                ),
-            ).otherwise(F.array_repeat(F.lit(0), n)),
+            F.array(F.col("__t").substr(start, flen)), _fake_pixels
         )[0].alias("__pix"),
     )
-    stats = pix.select(
-        "media_id",
-        "frame_index",
-        "n_frames",
-        "__pix",
-        F.aggregate(
-            "__pix", F.lit(0).cast("long"), lambda a, x: a + x
-        ).alias("__sum"),
-    )
-    return stats.select(
-        "media_id",
-        "frame_index",
-        "n_frames",
-        F.aggregate(
-            F.transform(
-                "__pix",
-                lambda p: F.when(
-                    p * n > F.col("__sum"), F.lit(1).cast("long")
-                ).otherwise(F.lit(0).cast("long")),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc * 2 + x,
-        ).alias("ahash"),
-    )
+    return _pack_ahash(pix, cols)
 
 
 def video_near_dups(
@@ -1494,6 +1440,7 @@ def video_near_dups(
     "fake": text-slice frame hashes (fake_video_frame_hashes, oracle-
     gated by x_video_near_dups with `n_frames` frames per clip); both
     tiers share every operator from the frame-hash table on."""
+    _pigeonhole(AHASH_BITS, bands, max_hamming)
     if engine == "real":
         fh = video_frame_hashes(media, max_frames)
     else:
@@ -1501,48 +1448,13 @@ def video_near_dups(
     fh = fh.filter(F.col("ahash").isNotNull())
     fh = fh.persist()
     fh.count()  # both self-join sides read it
-    assert bands >= max_hamming + 1, "pigeonhole needs bands > max_hamming"
-    width = AHASH_BITS // bands
-    mask = (1 << width) - 1
-    banded = fh.select(
-        "media_id",
-        "frame_index",
-        "n_frames",
-        "ahash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(
-                            F.col("ahash"), AHASH_BITS - (b + 1) * width
-                        )
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bb"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("e"),
-    ).select(
-        "media_id", "frame_index", "n_frames", "ahash",
-        F.col("e.band"), F.col("e.bb"),
-    )
-    a = banded.select(
-        "frame_index", "band", "bb",
-        F.col("media_id").alias("id_a"),
-        F.col("ahash").alias("ha"),
-        F.col("n_frames").alias("na"),
-    )
-    b = banded.select(
-        "frame_index", "band", "bb",
-        F.col("media_id").alias("id_b"),
-        F.col("ahash").alias("hb"),
-        F.col("n_frames").alias("nb"),
-    )
+    cols = ["media_id", "frame_index", "n_frames", "ahash"]
+    banded = _packed_bands(fh, cols, "ahash", AHASH_BITS, bands)
     matched = (
-        a.join(b, ["frame_index", "band", "bb"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        _self_pairs(
+            banded, ["frame_index", "band", "bb"], "media_id",
+            {"ahash": "h", "n_frames": "n"},
+        )
         .filter(
             F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))) <= max_hamming
         )
@@ -1667,70 +1579,83 @@ def media_ahash(
     corpora). No SQL oracle for the real engine (binary codecs are
     outside DuckDB's surface) — pinned by kernel round-trip tests."""
     if engine == "real":
-        out_schema = T.StructType(
-            [
-                T.StructField(id_col, T.LongType(), False),
-                T.StructField("ahash", T.LongType(), True),
-            ]
-        )
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for _, r in pdf.iterrows():
-                    content = (
-                        bytes(r[content_col])
-                        if r[content_col] is not None
-                        else b""
-                    )
-                    rows.append(
-                        {id_col: r[id_col], "ahash": real_ahash_py(content)}
-                    )
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in out_schema.fields]
-                )
-
-        return media.select(id_col, content_col).mapInPandas(
-            run, schema=out_schema
-        )
-    n = AHASH_BITS
+        return _py_hash_frame(media, id_col, content_col, real_ahash_py)
     t = media.select(
         F.col(id_col), F.decode(F.col(content_col), "UTF-8").alias("__t")
     )
-    # sample position i: 1 + floor(i·(L-1)/(n-1)) ∈ [1, L] — exact for
-    # these magnitudes (quotients are never within an ulp of an integer
-    # unless the division is exact), matching DuckDB's integer //
-    pix = t.select(
-        id_col,
-        F.when(
-            F.length("__t") > 0,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n - 1)),
-                lambda i: F.ascii(
-                    F.col("__t").substr(
-                        (
-                            F.lit(1)
-                            + F.floor(
-                                i * (F.length("__t") - 1) / F.lit(n - 1)
-                            )
-                        ).cast("int"),
-                        F.lit(1),
-                    )
-                ),
-            ),
-        )
-        .otherwise(F.array_repeat(F.lit(0), n))
-        .alias("__pix"),
+    pix = t.select(id_col, _fake_pixels(F.col("__t")).alias("__pix"))
+    return _pack_ahash(pix, [id_col])
+
+
+def _py_hash_frame(
+    media: DataFrame, id_col: str, content_col: str, fn
+) -> DataFrame:
+    """(id_col, ahash BIGINT): the per-row Python hash `fn(bytes) ->
+    int | None` (NULL content hashes as b"") in one Arrow-batched
+    mapInPandas pass — the real-tier sketch of image and audio."""
+    out_schema = T.StructType(
+        [
+            T.StructField(id_col, T.LongType(), False),
+            T.StructField("ahash", T.LongType(), True),
+        ]
     )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for _, r in pdf.iterrows():
+                content = (
+                    bytes(r[content_col])
+                    if r[content_col] is not None
+                    else b""
+                )
+                rows.append({id_col: r[id_col], "ahash": fn(content)})
+            yield pd.DataFrame(
+                rows, columns=[f.name for f in out_schema.fields]
+            )
+
+    return media.select(id_col, content_col).mapInPandas(
+        run, schema=out_schema
+    )
+
+
+def _fake_pixels(t: Column) -> Column:
+    """The fake decode's AHASH_BITS "pixels" of text `t`: the byte at
+    sample position i: 1 + floor(i·(L-1)/(n-1)) ∈ [1, L] — exact for
+    these magnitudes (quotients are never within an ulp of an integer
+    unless the division is exact), matching DuckDB's integer //.
+    Empty (or NULL) text gives all-zero pixels."""
+    n = AHASH_BITS
+    return F.when(
+        F.length(t) > 0,
+        F.transform(
+            F.sequence(F.lit(0), F.lit(n - 1)),
+            lambda i: F.ascii(
+                t.substr(
+                    (
+                        F.lit(1)
+                        + F.floor(i * (F.length(t) - 1) / F.lit(n - 1))
+                    ).cast("int"),
+                    F.lit(1),
+                )
+            ),
+        ),
+    ).otherwise(F.array_repeat(F.lit(0), n))
+
+
+def _pack_ahash(pix: DataFrame, cols: list[str]) -> DataFrame:
+    """(cols…, __pix) → (cols…, ahash): exact-integer mean threshold
+    (pixel·n > Σ pixels), MSB-first packing into one long."""
+    n = AHASH_BITS
     stats = pix.select(
-        id_col,
+        *cols,
         "__pix",
         F.aggregate(
             "__pix", F.lit(0).cast("long"), lambda a, x: a + x
         ).alias("__sum"),
     )
     return stats.select(
-        id_col,
+        *cols,
         F.aggregate(
             F.transform(
                 "__pix",
@@ -1758,62 +1683,26 @@ def media_ahash_near_dups(
     (bands > max_hamming ⇒ a whole band agrees) → equi-join on
     (band, band_bits) → exact bit_count(XOR) verify BEFORE any
     dedup shuffle (the simhash lesson: verify is map-side
-    arithmetic, filtering first shrinks the shuffle to true pairs)."""
+    arithmetic, filtering first shrinks the shuffle to true pairs) —
+    SimHash's own path, `dedup._packed_near_dups`; bands ≤ max_hamming
+    raise ValueError. NULL content hashes to 0 like empty content, so
+    such rows pair at hamming 0 (the fake engine; the real engine
+    yields NULL hashes for undecodable images, which never pair)."""
     sh = media_ahash(media, engine, id_col, content_col)
-    return _banded_hash_pairs(sh, bands, max_hamming, id_col, cache=cache)
-
-
-def _banded_hash_pairs(
-    sh: DataFrame,
-    bands: int,
-    max_hamming: int,
-    id_col: str = "media_id",
-    cache: bool = True,
-) -> DataFrame:
-    """Shared pigeonhole join over ANY 63-bit perceptual hash column
-    `ahash` (image aHash, audio energy hash): bands > max_hamming ⇒
-    some band agrees, equi-join on (band, band_bits), exact
-    bit_count(XOR) verify before the dedup shuffle."""
-    assert bands >= max_hamming + 1, "pigeonhole needs bands > max_hamming"
-    width = AHASH_BITS // bands
-    if cache:
-        sh = sh.persist()
-        sh.count()  # both self-join sides read it
-    mask = (1 << width) - 1
-    banded = sh.select(
-        F.col(id_col),
-        "ahash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(
-                            F.col("ahash"), AHASH_BITS - (b + 1) * width
-                        )
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bb"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("e"),
-    ).select(id_col, "ahash", F.col("e.band"), F.col("e.bb"))
-    a = banded.select(
-        "band", "bb", F.col(id_col).alias("id_a"), F.col("ahash").alias("ha")
-    )
-    b = banded.select(
-        "band", "bb", F.col(id_col).alias("id_b"), F.col("ahash").alias("hb")
-    )
-    return (
-        a.join(b, ["band", "bb"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        .dropDuplicates()
+    if engine == "real":
+        # undecodable images hash to NULL: drop them before banding, or
+        # they all-pair in bucket −1 of every band (`_packed_bands`) —
+        # a quadratic candidate stage. Today Catalyst also infers this
+        # isnotnull from the null-intolerant hamming join condition,
+        # but a coalesce-for-nullability verify (as in the SimHash
+        # incremental form) removes that inference; the explicit
+        # filter does not depend on it. Real engine only: its sketch is
+        # a mapInPandas output, while over the fake engine's projection
+        # (never NULL) Catalyst would push this filter below it and
+        # compute the whole sketch twice.
+        sh = sh.filter(F.col("ahash").isNotNull())
+    return _packed_near_dups(
+        sh, id_col, "ahash", AHASH_BITS, bands, max_hamming, cache
     )
 
 
@@ -1821,35 +1710,44 @@ def duckdb_media_ahash(media_sql: str, id_sql: str = "id") -> str:
     """Twin of media_ahash(engine='fake') over (id, t TEXT) rows —
     identical sample positions (integer //), exact integer mean
     threshold, identical MSB-first packing."""
-    n = AHASH_BITS
     return f"""
         WITH m AS ({media_sql}),
-        pix AS (
-            SELECT {id_sql} AS id,
-                   CASE WHEN length(t) > 0 THEN
+        {_duckdb_ahash_ctes(f"(SELECT {id_sql} AS id, t FROM m)", "id", "t")}
+        SELECT id, {_DUCKDB_AHASH} AS ahash FROM stats
+    """
+
+
+def _duckdb_ahash_ctes(src: str, cols: str, t: str) -> str:
+    """pix / stats CTEs over `src` rows (carrying `cols`): the fake
+    decode's pixels of text `t` and their sum — the `_fake_pixels`
+    twin; `_DUCKDB_AHASH` then packs stats' rows."""
+    n = AHASH_BITS
+    return f"""pix AS (
+            SELECT {cols},
+                   CASE WHEN length({t}) > 0 THEN
                        list_transform(generate_series(0, {n - 1}),
-                           i -> ascii(substr(t,
-                               (1 + (i * (length(t) - 1)) // {n - 1})::int,
+                           i -> ascii(substr({t},
+                               (1 + (i * (length({t}) - 1)) // {n - 1})::int,
                                1)))
                    ELSE list_transform(generate_series(0, {n - 1}), i -> 0)
                    END AS px
-            FROM m
+            FROM {src}
         ),
         stats AS (
-            SELECT id, px,
+            SELECT {cols}, px,
                    list_reduce(list_prepend(0::bigint,
                        list_transform(px, p -> p::bigint)),
                        (a, x) -> a + x) AS s
             FROM pix
-        )
-        SELECT id,
-               list_reduce(list_prepend(0::bigint,
+        )"""
+
+
+# `_pack_ahash` twin over stats' (px, s)
+_DUCKDB_AHASH = f"""list_reduce(list_prepend(0::bigint,
                    list_transform(px,
-                       p -> CASE WHEN p * {n} > s THEN 1::bigint
+                       p -> CASE WHEN p * {AHASH_BITS} > s THEN 1::bigint
                             ELSE 0::bigint END)),
-                   (acc, x) -> acc * 2 + x) AS ahash
-        FROM stats
-    """
+                   (acc, x) -> acc * 2 + x)"""
 
 
 def duckdb_media_ahash_near_dups(
@@ -1858,15 +1756,10 @@ def duckdb_media_ahash_near_dups(
     max_hamming: int = 6,
 ) -> str:
     """Twin of media_ahash_near_dups over the same (id, t) rows."""
-    width = AHASH_BITS // bands
-    mask = (1 << width) - 1
+    bb = _duckdb_packed_bb(AHASH_BITS, bands, "ahash")
     return f"""
         WITH sh AS ({duckdb_media_ahash(media_sql)}),
-        banded AS (
-            SELECT id, ahash, b,
-                   (ahash >> ({AHASH_BITS} - (b + 1) * {width})) & {mask} AS bb
-            FROM sh, unnest(generate_series(0, {bands - 1})) t(b)
-        ),
+        banded AS ({_duckdb_bands("sh", bands, bb)}),
         cand AS (
             SELECT DISTINCT a.id AS id_a, b2.id AS id_b,
                    a.ahash AS ha, b2.ahash AS hb
@@ -1886,7 +1779,6 @@ def duckdb_fake_video_frame_hashes(
     `n_frames_sql` is an expression over those columns (per-row frame
     counts). Same partition slicing (integer //), same fake-signal
     sample positions, same exact-integer mean threshold and packing."""
-    n = AHASH_BITS
     return f"""
         WITH m AS ({media_sql}),
         fr AS (
@@ -1898,31 +1790,10 @@ def duckdb_fake_video_frame_hashes(
                    ) AS ft
             FROM m, unnest(generate_series(0, ({n_frames_sql})::int - 1)) u(fi)
         ),
-        fpix AS (
-            SELECT id, n_frames, fi,
-                   CASE WHEN length(ft) > 0 THEN
-                       list_transform(generate_series(0, {n - 1}),
-                           i -> ascii(substr(ft,
-                               (1 + (i * (length(ft) - 1)) // {n - 1})::int,
-                               1)))
-                   ELSE list_transform(generate_series(0, {n - 1}), i -> 0)
-                   END AS px
-            FROM fr
-        ),
-        fstats AS (
-            SELECT id, n_frames, fi, px,
-                   list_reduce(list_prepend(0::bigint,
-                       list_transform(px, p -> p::bigint)),
-                       (a, x) -> a + x) AS s
-            FROM fpix
-        )
+        {_duckdb_ahash_ctes("fr", "id, n_frames, fi", "ft")}
         SELECT id AS media_id, fi AS frame_index, n_frames,
-               list_reduce(list_prepend(0::bigint,
-                   list_transform(px,
-                       p -> CASE WHEN p * {n} > s THEN 1::bigint
-                            ELSE 0::bigint END)),
-                   (acc, x) -> acc * 2 + x) AS ahash
-        FROM fstats
+               {_DUCKDB_AHASH} AS ahash
+        FROM stats
     """
 
 
@@ -1936,17 +1807,12 @@ def duckdb_video_near_dups(
     """Twin of video_near_dups(engine='fake') over the same (id, t)
     rows: frame-aligned banded pigeonhole, bit_count verify, distinct
     matched positions per pair, shorter-clip fraction gate."""
-    width = AHASH_BITS // bands
-    mask = (1 << width) - 1
+    bb = _duckdb_packed_bb(AHASH_BITS, bands, "ahash")
     return f"""
         WITH vfh AS MATERIALIZED (
             {duckdb_fake_video_frame_hashes(media_sql, n_frames_sql)}
         ),
-        vbanded AS MATERIALIZED (
-            SELECT media_id, frame_index, n_frames, ahash, b,
-                   (ahash >> ({AHASH_BITS} - (b + 1) * {width})) & {mask} AS bb
-            FROM vfh, unnest(generate_series(0, {bands - 1})) t(b)
-        ),
+        vbanded AS MATERIALIZED ({_duckdb_bands("vfh", bands, bb)}),
         vmatched AS (
             SELECT DISTINCT a.media_id AS id_a, b2.media_id AS id_b,
                    a.frame_index, a.n_frames AS na, b2.n_frames AS nb

@@ -1021,9 +1021,11 @@ def test_hot_bucket_cap_bounds_candidates_and_preserves_clusters(spark):
     sigs = _minhash_signatures_bulk(docs, "doc_id", "text", 5, 16).persist()
     sigs.count()
     banded = _band_sigs(sigs, "doc_id", 4, 4)
-    n_uncapped = _banded_candidate_pairs(banded, "doc_id").count()
+    keys = ["band", "bucket"]
+    n_uncapped = _banded_candidate_pairs(banded, keys, "doc_id").count()
+    order = ("__sig", sigs.select("doc_id", F.col("sig").alias("__sig")))
     n_capped = _banded_candidate_pairs(
-        banded, "doc_id", max_bucket_size=50, sigs=sigs
+        banded, keys, "doc_id", max_bucket_size=50, order=order
     ).count()
     assert n_uncapped >= B * (B - 1) // 2          # quadratic without the cap
     assert n_capped <= 2 * (B - 1) + 10            # chain + star + small pairs

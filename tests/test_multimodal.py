@@ -384,6 +384,48 @@ def test_media_ahash_real_engine(spark):
     assert bin(rows[1] ^ rows[2]).count("1") <= 8
 
 
+def _output_rows(df, node):
+    """Collect `df`, then sum numOutputRows over the `node` nodes (e.g.
+    "Generate") of its executed plan, AQE query stages included."""
+    df.collect()
+    total = 0
+
+    def walk(p):
+        nonlocal total
+        name = p.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return walk(p.executedPlan())
+        if name.endswith("QueryStage"):
+            return walk(p.plan())
+        if name == node:
+            total += p.metrics().apply("numOutputRows").value()
+        kids = p.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return total
+
+
+def test_media_ahash_near_dups_real_skips_undecodable(spark):
+    """Undecodable images hash to NULL; they must neither pair nor reach
+    the band explode, where NULL hashes would all share one bucket per
+    band (bands·N²/2 candidates for N undecodable blobs)."""
+    from leann_rs_spark.operators.multimodal import media_ahash_near_dups
+
+    _, blob_a = _gradient_bmp(32, 24)
+    _, blob_b = _gradient_bmp(16, 12)
+    junk = [(10 + i, bytearray(b"junk%d" % i)) for i in range(30)]
+    media = spark.createDataFrame(
+        [(1, bytearray(blob_a)), (2, bytearray(blob_b))] + junk,
+        "media_id long, content binary",
+    )
+    pairs = media_ahash_near_dups(media, engine="real", max_hamming=6, bands=7)
+    # two self-join sides × the 2 decodable images × 7 bands
+    assert _output_rows(pairs, "Generate") == 2 * 2 * 7
+    assert [(r["id_a"], r["id_b"]) for r in pairs.collect()] == [(1, 2)]
+
+
 # --- GIF: pure-Python scan / LZW decode / encode + frame extraction --------
 
 def _rand_gif(n_frames=3, w=14, h=10, n_colors=16, seed=7):

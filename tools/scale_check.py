@@ -583,11 +583,15 @@ def hot_bucket_check(spark, args) -> dict:
         banded = _band_sigs(sigs, "doc_id", 4, 4)
         entry_: dict = {}
         t0 = _time.perf_counter()
-        entry_["cand_uncapped"] = _banded_candidate_pairs(banded, "doc_id").count()
+        keys = ["band", "bucket"]
+        entry_["cand_uncapped"] = _banded_candidate_pairs(
+            banded, keys, "doc_id"
+        ).count()
         entry_["cand_uncapped_s"] = round(_time.perf_counter() - t0, 2)
         t0 = _time.perf_counter()
+        order = ("__sig", sigs.select("doc_id", F.col("sig").alias("__sig")))
         entry_["cand_capped"] = _banded_candidate_pairs(
-            banded, "doc_id", max_bucket_size=200, sigs=sigs
+            banded, keys, "doc_id", max_bucket_size=200, order=order
         ).count()
         entry_["cand_capped_s"] = round(_time.perf_counter() - t0, 2)
         sigs.unpersist()
