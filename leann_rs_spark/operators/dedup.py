@@ -65,6 +65,7 @@ from leann_rs_spark.functions.text import (
     word_ngrams,
 )
 from leann_rs_spark.functions.vector import cosine, dot
+from leann_rs_spark.utils import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -487,7 +488,7 @@ def _hot_split(
         # the exact all-pairs form (anti-join with an empty key set is
         # the identity; the spanning branch is empty), so skip both.
         return banded, None
-    big_keys = F.broadcast(_local_keys_frame(banded.sparkSession, hot, key_schema))
+    big_keys = F.broadcast(local_frame(banded.sparkSession, hot, key_schema))
     order_col, order_frame = order
     big = banded.join(big_keys, keys)
     if order_frame is not None:
@@ -526,22 +527,6 @@ def _banded_candidate_pairs(
     if spanning is not None:
         pairs = pairs.unionByName(spanning)
     return pairs.dropDuplicates(["id_a", "id_b"])
-
-
-def _local_keys_frame(spark, rows: list, schema) -> DataFrame:
-    """Collected hot-bucket keys → a JVM LocalRelation frame (via
-    Arrow/pandas). A plain createDataFrame(rows) is parallelize-backed
-    ('Scan ExistingRDD'): every BroadcastExchange over it re-evaluates
-    the pickled partitions through a Python worker — the guard plans
-    broadcast the key set into several joins, so that roundtrip is
-    paid repeatedly per action. The Arrow path ships the handful of
-    rows once, JVM-side."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        [tuple(r) for r in rows], columns=[f.name for f in schema.fields]
-    )
-    return spark.createDataFrame(pdf, schema)
 
 
 def _chain_star_pairs(

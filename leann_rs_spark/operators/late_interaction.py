@@ -8,39 +8,60 @@ SURVEY §2 Q1-Q3); this is the multi-vector retrieval paradigm
 document token, so partial/term-level matches rank above single-vector
 pooling's averaged-away signal.
 
-Spark-first shape, 100 TB notes:
-- The document side is a TOKEN-LEVEL embedding table. `token_embeddings`
-  builds it as distinct (doc, token) pairs joined to a VOCABULARY-sized
-  embedding table — embedding cost ∝ |vocab| (each distinct token is
-  hashed once), not Σ|doc tokens|. At production scale this table is a
-  persisted artifact (the "token index", same ruling as the IVF/PQ code
-  tables) and the join is broadcast (vocab) or bucketed (corpus).
-- Query vectors are computed ONCE in a broadcast 1-row frame
-  (`crossJoin(broadcast(...))` — the repo's 1-row-stats pattern), never
-  re-evaluated per row; Catalyst does not constant-fold through
-  higher-order-function lambdas.
-- MaxSim is ONE groupBy(doc) with per-query-token max aggregates
-  (map-side combine), then a FIXED-ORDER projection sum m0+m1+…+mk —
-  fixed order keeps the double addition bit-identical to the DuckDB
-  twin (float-sum order is the classic cross-engine hash breaker).
-- Dots are bit-exact cross-engine: the hash embeddings are integer
-  weight sums /1000 then L2-normalized with sequential folds
-  (operators/embedder.py), and `functions/vector.dot` folds in index
-  order — identical IEEE sequences in both engines.
+The document side is a TOKEN-LEVEL embedding table (`token_embeddings`;
+persisted as the "token index" by catalog.build_token_index): distinct
+(doc, token) pairs joined to a VOCABULARY-sized embedding stage, so
+embedding cost ∝ |vocab|, not Σ|doc tokens|.
+
+One MaxSim core serves every batch rung. A rung supplies only a SCORE
+SOURCE; the query frame, the reduction and the rank tail are shared:
+- `_token_rows` validates the batch and `_query_token_vecs` builds the
+  broadcast (query_id, ord, qvec) frame;
+- `_pivot_scores` is the parity-critical reduction: per-query-token
+  maxima pivoted by ordinal under ONE wide exchange on (query_id, doc),
+  fixed-order m0 + coalesce(m_i, 0.0) sum (float-sum order is the
+  classic cross-engine hash breaker), 6-dp round;
+- `search.topk_batch` ranks per query, ties id ASC.
+Score sources: a token-score frame — exact (`_vocab_qtoken_scores`) or
+PQ-ADC (distinct-code lookup sums) — or a (query_id, doc) pair frame
+rescored by `_exact_maxsim_scores`: the refined rung's ADC shortlist,
+the pruned rung's probed-cid candidates (PLAID-style partition pruning,
+`_probed_rows`) and the probe-recall sweep's max-probe candidates. The
+single-query `late_interaction_topk` keeps its own columnar
+TakeOrderedAndProject plan.
+
+The DuckDB twins are built from the same fragments: `_duckdb_token_ctes`
+(dt, vocab, j), `_duckdb_query_ctes` (qt, qv), `_duckdb_take` /
+`_duckdb_routing_ctes` (cbsel, assign), `_duckdb_probe_ctes`,
+`_duckdb_adc_ctes`, `_duckdb_maxsim` (the twin of `_pivot_scores`) and
+`_duckdb_li_rank` / `_duckdb_li_topk`.
+
+Dots are bit-exact cross-engine: the hash embeddings are integer weight
+sums /1000 then L2-normalized with sequential folds
+(operators/embedder.py), and `functions/vector.dot`, `duckdb_dot` and
+`_py_dot` fold in index order — identical IEEE sequences everywhere.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from leann_rs_spark.functions.text import duckdb_tokenize, tokenize
 from leann_rs_spark.functions.vector import dot, duckdb_dot
+from leann_rs_spark.operators.ann import ivf_assign
 from leann_rs_spark.operators.embedder import (
     DUCKDB_NORMALIZE,
-    duckdb_hash_embedding,
     duckdb_raw_embedding,
     hash_embedding,
+    py_hash_embedding,
 )
+from leann_rs_spark.operators.pq import (
+    _duckdb_l2_dist2, _split_subspaces, pq_encode,
+)
+from leann_rs_spark.operators.search import topk_batch
+from leann_rs_spark.utils import local_frame
 
 # Candidate-pair frames above this row count are NOT broadcast into the
 # exact-MaxSim rescore: a (query_id, doc) pair frame is bounded by
@@ -90,12 +111,21 @@ def token_embeddings(
     if cache:
         dt = dt.persist()
         dt.count()
-    vocab = (
-        dt.select("token")
-        .distinct()
-        .withColumn("vec", hash_embedding(F.col("token"), dims))
-    )
+    vocab = _vocab_vecs(dt, dims, "vec")
     return dt.join(vocab, "token").select(id_col, "token", "vec")
+
+
+def _vocab_vecs(tokens: DataFrame, dims: int, name: str) -> DataFrame:
+    """→ (token, <name>): the hash embedding of every distinct token —
+    the vocabulary-sized embedding stage."""
+    return tokens.select("token").distinct().select(
+        "token", hash_embedding(F.col("token"), dims).alias(name)
+    )
+
+
+def _round6(x):
+    """round(x·1e6)/1e6 + 0.0 — the cross-engine 6-dp recipe."""
+    return F.round(x * F.lit(1e6)) / F.lit(1e6) + F.lit(0.0)
 
 
 def late_interaction_topk(
@@ -139,9 +169,7 @@ def late_interaction_topk(
     # interpreted HOF folds drop from N·|q| to |vocab|·|q| and the
     # main side carries (id, token) instead of the 64-double vec.
     # Same aggregate, same values, bit-identical output.
-    vocab = dt.select("token").distinct().select(
-        "token", hash_embedding(F.col("token"), dims).alias("__vv")
-    )
+    vocab = _vocab_vecs(dt, dims, "__vv")
     scores = vocab.crossJoin(F.broadcast(qdf)).select(
         "token",
         *[
@@ -160,17 +188,10 @@ def late_interaction_topk(
             ]
         )
     )
-    total = None
-    for i in range(len(toks)):  # fixed addition order, matches the twin
-        c = F.col(f"m{i}")
-        total = c if total is None else (total + c)
+    # fixed addition order m0 + m1 + …, matches the twin
+    total = sum((F.col(f"m{i}") for i in range(1, len(toks))), F.col("m0"))
     return (
-        scored.select(
-            id_col,
-            (F.round(total * F.lit(1e6)) / F.lit(1e6) + F.lit(0.0)).alias(
-                "score_r"
-            ),
-        )
+        scored.select(id_col, _round6(total).alias("score_r"))
         .orderBy(F.desc("score_r"), F.asc(id_col))
         .limit(k)
     )
@@ -184,43 +205,16 @@ def duckdb_late_interaction_topk(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> str:
-    """Oracle twin: same distinct (doc, token) explode, same
-    vocabulary-sized embedding stage, same single-row query-vector
-    cross join, same fixed-order sum and rounding."""
-    toks = query_tokens(query)
-    if not toks:
-        raise ValueError(f"query {query!r} has no tokens")
-    q_cols = ", ".join(
-        f"{duckdb_hash_embedding(repr(t), dims)} AS q{i}"
-        for i, t in enumerate(toks)
+    """Oracle twin: the batch twin over the one-query batch, re-ranked
+    score_r DESC, id ASC. With one query every per-token maximum is
+    non-NULL, so the batch's coalesce sum is this form's plain
+    fixed-order sum m0 + m1 + …"""
+    batch = duckdb_late_interaction_topk_batch(
+        [(0, query)], k, dims, table, id_col, text_col
     )
-    maxes = ", ".join(
-        f"max({duckdb_dot('vec', f'q{i}')}) AS m{i}" for i in range(len(toks))
-    )
-    total = " + ".join(f"m{i}" for i in range(len(toks)))
     return f"""
-        WITH dt AS (
-            SELECT DISTINCT {id_col}, t AS token
-            FROM {table}, unnest({duckdb_tokenize(text_col)}) u(t)
-        ),
-        vocab AS (
-            SELECT token, {DUCKDB_NORMALIZE} AS vec
-            FROM (
-                SELECT token, {duckdb_raw_embedding("token", dims)} AS raw
-                FROM (SELECT DISTINCT token FROM dt) _v
-            ) _raw
-        ),
-        j AS (
-            SELECT dt.{id_col}, vocab.vec FROM dt JOIN vocab USING (token)
-        ),
-        q AS (SELECT {q_cols}),
-        m AS (
-            SELECT {id_col}, {maxes} FROM j, q GROUP BY {id_col}
-        )
-        SELECT {id_col}, round(({total}) * 1e6) / 1e6 + 0.0 AS score_r
-        FROM m
+        SELECT {id_col}, score_r FROM ({batch})
         ORDER BY score_r DESC, {id_col} ASC
-        LIMIT {k}
     """
 
 
@@ -242,28 +236,7 @@ def _pivot_scores(
     total = F.col("m0")  # every query has >= 1 token, so m0 never null
     for i in range(1, width):
         total = total + F.coalesce(F.col(f"m{i}"), F.lit(0.0))
-    return mx.select(
-        "query_id",
-        id_col,
-        (F.round(total * F.lit(1e6)) / F.lit(1e6) + F.lit(0.0)).alias(
-            "score_r"
-        ),
-    )
-
-
-def _topk_tail(scored: DataFrame, k: int, id_col: str) -> DataFrame:
-    """Per-query windowed top-k over (query_id, id_col, score_r) —
-    ties score_r DESC, id ASC, the repo ordering recipe."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score_r"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return mx.select("query_id", id_col, _round6(total).alias("score_r"))
 
 
 def late_interaction_topk_batch(
@@ -275,61 +248,25 @@ def late_interaction_topk_batch(
 ) -> DataFrame:
     """→ (query_id, id_col, score_r, rank): per-query MaxSim top-k for
     a whole query batch over the PERSISTED token index — the q2-shape
-    serving form of `late_interaction_topk`.
+    serving form of `late_interaction_topk`. The index is scanned ONCE
+    for the batch, so per-query cost amortizes like the reference's
+    batch ANN path (q2_ivf_batch_topk).
 
-    Shape (the one-shuffle plan, pinned by test_plans):
-    - queries tokenize on the driver (a query string is tiny) into
-      (query_id, ord, token) rows; hash-embedding them is one projection
-      over a broadcast-sized frame.
-    - ONE crossJoin(broadcast(query tokens)) over the token index scan,
-      then ONE groupBy(query_id, id_col) whose aggregates pivot the
-      per-ordinal maxima into columns m0..m{W-1} (W = widest query) —
-      map-side combine does the heavy reduction, and the only wide
-      exchange hashes on (query_id, id_col).
-    - score_r = fixed-order m0 + coalesce(m1,0) + … — a query narrower
-      than W has NULL maxima beyond its width, and adding literal 0.0
-      is exact in IEEE, so bit parity with the DuckDB twin holds with
-      no per-query column sets.
-    - per-query top-k is a row_number window over the Q×N aggregated
-      rows (tiny next to the token join).
+    Score source: `_vocab_qtoken_scores`, broadcast-joined on `token`
+    into the (id_col, token) index scan (no `vec` read). The rest is
+    the core: `_pivot_scores` (ONE wide exchange on (query_id, id_col)
+    under map-side combine) and `search.topk_batch` (a partial
+    WindowGroupLimit below the query_id exchange) — pinned by
+    test_batch_plan_one_wide_shuffle_over_token_index.
 
-    At 100 TB the token index scan is the dominant cost and it is read
-    ONCE for the whole batch — per-query cost amortizes exactly like
-    the reference's batch ANN path (q2_ivf_batch_topk).
-
-    Physical shape: ONE crossJoin(broadcast((query_id, ord, qvec)))
-    over the token-index scan feeds the shared ordinal pivot
-    (`_pivot_scores`): per-ordinal maxima reduce under ONE wide
-    exchange on (query_id, id_col) with map-side combine, and the
-    per-query top-k window rides the aggregated rows. A columnar
-    variant (query vectors as Σ|q| dot COLUMNS, one exchange on doc)
-    was measured SLOWER in the bench harness at the 3-query serving
-    batch (4.7 → 6.8 s at sf0.1) — the wide HOF-fold aggregation costs
-    more than the row expansion it avoids — and is kept out."""
-    tok_lists = _tok_lists(queries)
-    spark = token_index.sparkSession
-    width = max(len(t) for _, t in tok_lists)
-    qt = spark.createDataFrame(
-        [
-            (qid, i, t)
-            for qid, toks in tok_lists
-            for i, t in enumerate(toks)
-        ],
-        "query_id int, ord int, token string",
-    )
-    qv = qt.select(
-        "query_id", "ord",
-        hash_embedding(F.col("token"), dims).alias("qvec"),
-    )
-    # Vocabulary-level score precompute (round-10 optimization): the
-    # dot of a token row against a query token depends only on the
-    # TOKEN (vec = hash_embedding(token)), so the interpreted HOF fold
-    # runs |vocab|·Σ|q| times instead of N·Σ|q|, the expansion join is
-    # a BroadcastHashJoin on `token`, and the index scan drops `vec`
-    # (measured 4.6 → 1.6 s at sf0.1; output bit-identical — see
-    # _vocab_qtoken_scores). Everything downstream (ordinal pivot, ONE
-    # wide exchange on (query_id, doc), fixed-order sum, top-k window)
-    # is unchanged.
+    A columnar variant (query vectors as Σ|q| dot COLUMNS, one
+    exchange on doc) was measured SLOWER in the bench harness at the
+    3-query serving batch (4.7 → 6.8 s at sf0.1) — the wide HOF-fold
+    aggregation costs more than the row expansion it avoids — and is
+    kept out."""
+    rows = _token_rows(queries)
+    width = 1 + max(i for _, i, _ in rows)
+    qv = _query_token_vecs(token_index.sparkSession, rows, dims)
     scores = _vocab_qtoken_scores(token_index, qv, dims)
     scored = _pivot_scores(
         token_index.select(id_col, "token").join(
@@ -339,7 +276,7 @@ def late_interaction_topk_batch(
         width,
         id_col,
     )
-    return _topk_tail(scored, k, id_col)
+    return topk_batch(scored, k, id_col=id_col).orderBy("query_id", "rank")
 
 
 def duckdb_late_interaction_topk_batch(
@@ -354,89 +291,23 @@ def duckdb_late_interaction_topk_batch(
     token-index values inline (the artifact path persists exactly this
     frame), same ordinal-pivoted maxima, same fixed-order
     coalesce(…, 0.0) sum, same rounding and tie-break."""
-    tok_lists = _tok_lists(queries)
-    width = max(len(t) for _, t in tok_lists)
-    values = ", ".join(
-        f"({qid}, {i}, {t!r})"
-        for qid, toks in tok_lists
-        for i, t in enumerate(toks)
+    rows = _token_rows(queries)
+    return _duckdb_li_topk(
+        _duckdb_token_ctes(dims, table, id_col, text_col)
+        + _duckdb_query_ctes(rows, dims),
+        _duckdb_maxsim(rows, duckdb_dot("vec", "qvec"), "j, qv", id_col),
+        k,
+        id_col,
     )
-    maxes = ", ".join(
-        f"max(CASE WHEN ord = {i} THEN {duckdb_dot('vec', 'qvec')} END) AS m{i}"
-        for i in range(width)
-    )
-    total = " + ".join(
-        ["m0"]
-        + [f"coalesce(m{i}, CAST(0.0 AS DOUBLE))" for i in range(1, width)]
-    )
-    return f"""
-        WITH dt AS (
-            SELECT DISTINCT {id_col}, t AS token
-            FROM {table}, unnest({duckdb_tokenize(text_col)}) u(t)
-        ),
-        vocab AS (
-            SELECT token, {DUCKDB_NORMALIZE} AS vec
-            FROM (
-                SELECT token, {duckdb_raw_embedding("token", dims)} AS raw
-                FROM (SELECT DISTINCT token FROM dt) _v
-            ) _raw
-        ),
-        j AS (
-            SELECT dt.{id_col}, vocab.vec FROM dt JOIN vocab USING (token)
-        ),
-        qt(query_id, ord, token) AS (VALUES {values}),
-        qv AS (
-            SELECT query_id, ord, {DUCKDB_NORMALIZE} AS qvec
-            FROM (
-                SELECT query_id, ord,
-                       {duckdb_raw_embedding("token", dims)} AS raw
-                FROM qt
-            ) _qr
-        ),
-        m AS (
-            SELECT query_id, {id_col}, {maxes}
-            FROM j, qv GROUP BY query_id, {id_col}
-        ),
-        s AS (
-            SELECT query_id, {id_col},
-                   round(({total}) * 1e6) / 1e6 + 0.0 AS score_r
-            FROM m
-        )
-        SELECT * FROM (
-            SELECT query_id, {id_col}, score_r,
-                   CAST(row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY score_r DESC, {id_col} ASC
-                   ) AS INT) AS rank
-            FROM s
-        ) WHERE rank <= {k}
-        ORDER BY query_id, rank
-    """
 
 
 def token_subcodebooks(token_index: DataFrame, m: int = 8, k_cb: int = 16):
     """Deterministic take-policy PQ codebook over the token index's
-    VOCABULARY: sub-centroid j of subspace i is the i-th slice of the
-    j-th token vector in lexicographic token order (tokens are
-    [a-z0-9]+, so Spark's binary string order ≡ DuckDB's) — the
-    oracle rebuilds it from the table alone, like
-    pq.take_subcodebooks. KB-sized Python nested list → plan
-    literals."""
-    rows = (
-        token_index.select("token", "vec")
-        .distinct()
-        .orderBy("token")
-        .limit(k_cb)
-        .collect()
-    )
-    dims = len(rows[0]["vec"])
-    if dims % m:
-        raise ValueError(f"dims={dims} not divisible by m={m}")
-    d = dims // m
-    return [
-        [[float(x) for x in r["vec"][i * d : (i + 1) * d]] for r in rows]
-        for i in range(m)
-    ]
+    VOCABULARY: sub-centroid j of subspace i is the i-th slice of
+    `token_take_centroids`' j-th vector, so the oracle rebuilds it from
+    the table alone, like pq.take_subcodebooks. KB-sized Python nested
+    list → plan literals."""
+    return _split_subspaces(token_take_centroids(token_index, k_cb), m)
 
 
 def pq_token_codes(
@@ -456,8 +327,6 @@ def pq_token_codes(
     FASTER (0.6 s vs 4.3 s on 112k token rows at sf0.1; the verdict
     flips from the 5-20k-row embedding tables where Arrow transfer
     dominates)."""
-    from leann_rs_spark.operators.pq import pq_encode
-
     return pq_encode(
         token_index, codebook, id_col=id_col, vec_col="vec", kernel=True
     ).select(id_col, "code")
@@ -476,40 +345,30 @@ def late_interaction_topk_batch_pq(
     `late_interaction_topk_batch` (ColBERTv2's compressed-index idea
     re-expressed relationally).
 
-    ADC shape: each query token's dot against every sub-centroid is a
-    DRIVER-side lookup table (|q_tokens|·M·K doubles, computed with
-    py_hash_embedding + index-order folds — bit-exact with the SQL
-    twin's sub-dots), carried as a nested-array column on the
-    broadcast query frame; scoring a token row is M array lookups
-    summed in subspace order (F.aggregate over a sequence — the same
-    m-ascending fold the twin's `list(sd ORDER BY m)` reduce runs).
-    Everything downstream (ordinal-pivoted maxima, ONE wide exchange
-    on (query_id, doc), fixed-order coalesce sum, 6-dp round,
-    windowed top-k) is the exact batch plan."""
-    from leann_rs_spark.operators.embedder import py_hash_embedding
-
-    tok_lists = _tok_lists(queries)
-    width = max(len(t) for _, t in tok_lists)
+    Score source: each query token's dot against every sub-centroid is
+    a DRIVER-side lookup table (|q_tokens|·M·K `_py_dot`s, bit-exact
+    with the twin's sub-dots) on the broadcast query frame; a code's
+    score is M lookups summed in subspace order (the m-ascending fold
+    of the twin's `list(sd ORDER BY m)` reduce). Then the shared
+    core."""
+    rows = _token_rows(queries)
+    width = 1 + max(i for _, i, _ in rows)
     m = len(codebook)
     d = len(codebook[0][0])
-    rows = []
-    for qid, toks in tok_lists:
-        for i, t in enumerate(toks):
-            q = py_hash_embedding(t, dims)
-            lut = []
-            for mi in range(m):
-                qs = q[mi * d : (mi + 1) * d]
-                row = []
-                for cv in codebook[mi]:
-                    acc = 0.0  # index-order fold, = dot()/duckdb_dot
-                    for x, y in zip(qs, cv):
-                        acc += x * y
-                    row.append(acc)
-                lut.append(row)
-            rows.append((qid, i, lut))
-    spark = codes.sparkSession
-    qv = spark.createDataFrame(
-        rows, "query_id int, ord int, lut array<array<double>>"
+    luts = []
+    for qid, i, t in rows:
+        q = py_hash_embedding(t, dims)
+        lut = [
+            [_py_dot(q[mi * d : (mi + 1) * d], cv) for cv in codebook[mi]]
+            for mi in range(m)
+        ]
+        luts.append((qid, i, lut))
+    qv = local_frame(
+        codes.sparkSession,
+        luts,
+        T.StructType.fromDDL(
+            "query_id int, ord int, lut array<array<double>>"
+        ),
     )
     adc = F.aggregate(
         F.sequence(F.lit(0), F.lit(m - 1)),
@@ -540,7 +399,7 @@ def late_interaction_topk_batch_pq(
         width,
         id_col,
     )
-    return _topk_tail(scored, k, id_col)
+    return topk_batch(scored, k, id_col=id_col).orderBy("query_id", "rank")
 
 
 def duckdb_late_interaction_topk_batch_pq(
@@ -553,113 +412,18 @@ def duckdb_late_interaction_topk_batch_pq(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> str:
-    """Oracle twin of the quantized batch: same lexicographic take
-    codebook, same argmin encode (dist fold ≡ pq's proven pair, ties
-    cid ASC), ADC as per-subspace dots summed in m order (list(sd
-    ORDER BY m) reduce ≡ the Spark LUT fold), then the exact batch
-    twin's pivot/sum/rank tail."""
-    from leann_rs_spark.operators.pq import _duckdb_l2_dist2
-
-    tok_lists = _tok_lists(queries)
-    width = max(len(t) for _, t in tok_lists)
-    d = dims // m
-    values = ", ".join(
-        f"({qid}, {i}, {t!r})"
-        for qid, toks in tok_lists
-        for i, t in enumerate(toks)
+    """Oracle twin of the quantized batch: the ADC token scores
+    (`_duckdb_adc_ctes`) through the exact batch twin's pivot/sum/rank
+    tail."""
+    rows = _token_rows(queries)
+    return _duckdb_li_topk(
+        _duckdb_token_ctes(dims, table, id_col, text_col)
+        + _duckdb_query_ctes(rows, dims)
+        + _duckdb_adc_ctes(m, k_cb, dims, id_col),
+        _duckdb_maxsim(rows, "adc", "pairadc", id_col),
+        k,
+        id_col,
     )
-    dist = _duckdb_l2_dist2("s.sub", "cb.cv", d)
-    qsub = f"q.qvec[t.m * {d} + 1 : (t.m + 1) * {d}]"
-    maxes = ", ".join(
-        f"max(CASE WHEN ord = {i} THEN adc END) AS m{i}"
-        for i in range(width)
-    )
-    total = " + ".join(
-        ["m0"]
-        + [f"coalesce(m{i}, CAST(0.0 AS DOUBLE))" for i in range(1, width)]
-    )
-    return f"""
-        WITH dt AS (
-            SELECT DISTINCT {id_col}, t AS token
-            FROM {table}, unnest({duckdb_tokenize(text_col)}) u(t)
-        ),
-        vocab AS MATERIALIZED (
-            SELECT token, {DUCKDB_NORMALIZE} AS vec
-            FROM (
-                SELECT token, {duckdb_raw_embedding("token", dims)} AS raw
-                FROM (SELECT DISTINCT token FROM dt) _v
-            ) _raw
-        ),
-        j AS (
-            SELECT dt.{id_col}, dt.token, vocab.vec
-            FROM dt JOIN vocab USING (token)
-        ),
-        cbsel AS (
-            SELECT row_number() OVER (ORDER BY token ASC) - 1 AS cid, vec
-            FROM vocab ORDER BY token ASC LIMIT {k_cb}
-        ),
-        cbrows AS MATERIALIZED (
-            SELECT mm.i - 1 AS m, cid,
-                   vec[(mm.i - 1) * {d} + 1 : mm.i * {d}] AS cv
-            FROM cbsel, unnest(generate_series(1, {m})) mm(i)
-        ),
-        subs AS (
-            SELECT {id_col}, token, mm.i - 1 AS m,
-                   vec[(mm.i - 1) * {d} + 1 : mm.i * {d}] AS sub
-            FROM j, unnest(generate_series(1, {m})) mm(i)
-        ),
-        tcodes AS MATERIALIZED (
-            SELECT {id_col}, token, m, cid FROM (
-                SELECT s.{id_col}, s.token, s.m, cb.cid,
-                       row_number() OVER (
-                           PARTITION BY s.{id_col}, s.token, s.m
-                           ORDER BY {dist} ASC, cb.cid ASC
-                       ) AS rn
-                FROM subs s JOIN cbrows cb ON cb.m = s.m
-            ) WHERE rn = 1
-        ),
-        qt(query_id, ord, token) AS (VALUES {values}),
-        qv AS (
-            SELECT query_id, ord, {DUCKDB_NORMALIZE} AS qvec
-            FROM (
-                SELECT query_id, ord,
-                       {duckdb_raw_embedding("token", dims)} AS raw
-                FROM qt
-            ) _qr
-        ),
-        pairsub AS (
-            SELECT q.query_id, q.ord, t.{id_col}, t.token, t.m,
-                   {duckdb_dot(qsub, "cb.cv")} AS sd
-            FROM tcodes t JOIN cbrows cb ON cb.m = t.m AND cb.cid = t.cid,
-                 qv q
-        ),
-        pairadc AS (
-            SELECT query_id, ord, {id_col}, token,
-                   list_reduce(
-                       list_prepend(CAST(0.0 AS DOUBLE),
-                                    list(sd ORDER BY m)),
-                       (a, x) -> a + x) AS adc
-            FROM pairsub GROUP BY query_id, ord, {id_col}, token
-        ),
-        mx AS (
-            SELECT query_id, {id_col}, {maxes}
-            FROM pairadc GROUP BY query_id, {id_col}
-        ),
-        s AS (
-            SELECT query_id, {id_col},
-                   round(({total}) * 1e6) / 1e6 + 0.0 AS score_r
-            FROM mx
-        )
-        SELECT * FROM (
-            SELECT query_id, {id_col}, score_r,
-                   CAST(row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY score_r DESC, {id_col} ASC
-                   ) AS INT) AS rank
-            FROM s
-        ) WHERE rank <= {k}
-        ORDER BY query_id, rank
-    """
 
 
 def _vocab_qtoken_scores(
@@ -688,25 +452,56 @@ def _vocab_qtoken_scores(
     wordpiece vocab), so it broadcasts; the expansion join becomes a
     BroadcastHashJoin on `token` instead of a crossJoin carrying
     vectors."""
-    vocab = token_index.select("token").distinct().select(
-        "token", hash_embedding(F.col("token"), dims).alias("__vv")
-    )
+    vocab = _vocab_vecs(token_index, dims, "__vv")
     return vocab.crossJoin(F.broadcast(qv)).select(
         "token", "query_id", "ord",
         dot(F.col("__vv"), F.col("qvec")).alias("__s"),
     )
 
 
-def _tok_lists(queries: list[tuple[int, str]]) -> list[tuple[int, list[str]]]:
-    """Tokenize a query batch driver-side, raising on empty queries —
-    the shared validation of every batch form."""
-    out: list[tuple[int, list[str]]] = []
+def _token_rows(queries: list[tuple[int, str]]) -> list[tuple[int, int, str]]:
+    """Tokenize a query batch driver-side into (query_id, ord, token)
+    rows — the shared validation of every batch form, run before any
+    job. Raises ValueError on an empty batch, on a repeated query_id
+    (its queries' tokens would merge into one MaxSim sum) and on a
+    query with no tokens."""
+    if not queries:
+        raise ValueError("empty query batch")
+    ids = [qid for qid, _ in queries]
+    if len(set(ids)) != len(ids):
+        dup = sorted({qid for qid in ids if ids.count(qid) > 1})
+        raise ValueError(f"duplicate query_id(s) {dup} in the batch")
+    rows: list[tuple[int, int, str]] = []
     for qid, q in queries:
         toks = query_tokens(q)
         if not toks:
             raise ValueError(f"query {q!r} has no tokens")
-        out.append((qid, toks))
-    return out
+        rows += [(qid, i, t) for i, t in enumerate(toks)]
+    return rows
+
+
+def _query_token_vecs(
+    spark, rows: list[tuple[int, int, str]], dims: int
+) -> DataFrame:
+    """→ (query_id, ord, qvec): the batch's query-token vectors — the
+    `_token_rows` as a LocalTableScan, hash-embedded in one
+    projection."""
+    qt = local_frame(
+        spark, rows, T.StructType.fromDDL("query_id int, ord int, token string")
+    )
+    return qt.select(
+        "query_id", "ord", hash_embedding(F.col("token"), dims).alias("qvec")
+    )
+
+
+def _py_dot(a: list[float], b: list[float]) -> float:
+    """Index-order fold over Python floats — the same IEEE sequence as
+    functions/vector.dot and duckdb_dot, so driver-side scores (ADC
+    lookup tables, probe ranks) are bit-exact with the SQL twins'."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
 
 
 def _exact_maxsim_scores(
@@ -718,11 +513,9 @@ def _exact_maxsim_scores(
     pair_rows: int | None = None,
 ) -> DataFrame:
     """→ (query_id, id_col, score_r): exact MaxSim restricted to a
-    (query_id, id_col) candidate-pair frame. The pair frame joins into
-    the token index first, so only candidate docs' token rows flow
-    into the per-query-token aggregation; the ordinal-pivoted maxima,
-    ONE wide exchange on (query_id, doc), and fixed-order coalesce sum
-    + 6-dp round are `late_interaction_topk_batch`'s exact plan.
+    (query_id, id_col) candidate-pair frame — the pair-frame score
+    source. The pair frame joins into the token index first, so only
+    candidate docs' token rows reach `_pivot_scores`.
 
     `pair_rows` size-guards the pair join's physical form: None means
     the CALLER proves the frame bounded by construction (the refined
@@ -730,22 +523,13 @@ def _exact_maxsim_scores(
     measured count ≤ PAIR_BROADCAST_ROW_LIMIT broadcasts; above the
     limit the join runs as a plain shuffle on `id_col` — same result,
     no broadcast OOM hazard when routing fails to prune."""
-    tok_lists = _tok_lists(queries)
-    width = max(len(t) for _, t in tok_lists)
-    spark = token_index.sparkSession
-    qt = spark.createDataFrame(
-        [(qid, i, t) for qid, toks in tok_lists for i, t in enumerate(toks)],
-        "query_id int, ord int, token string",
-    )
-    qv = qt.select(
-        "query_id", "ord", hash_embedding(F.col("token"), dims).alias("qvec")
-    )
+    rows = _token_rows(queries)
+    width = 1 + max(i for _, i, _ in rows)
+    qv = _query_token_vecs(token_index.sparkSession, rows, dims)
     # pair join first (pruning — only candidate docs survive), THEN
     # the query-token join rides the already-pruned rows
-    if pair_rows is None or pair_rows <= PAIR_BROADCAST_ROW_LIMIT:
-        pair_side = F.broadcast(pairs)
-    else:
-        pair_side = pairs
+    bounded = pair_rows is None or pair_rows <= PAIR_BROADCAST_ROW_LIMIT
+    pair_side = F.broadcast(pairs) if bounded else pairs
     # NOTE (round-10 optimization): this rescore deliberately KEEPS the
     # per-row dot instead of the _vocab_qtoken_scores precompute the
     # full-scan forms use — the pair frame bounds the candidate rows by
@@ -759,28 +543,6 @@ def _exact_maxsim_scores(
         pruned.join(F.broadcast(qv), "query_id"),
         dot(F.col("vec"), F.col("qvec")),
         width,
-        id_col,
-    )
-
-
-def _exact_maxsim_pairs(
-    token_index: DataFrame,
-    pairs: DataFrame,
-    queries: list[tuple[int, str]],
-    k: int,
-    dims: int,
-    id_col: str,
-    pair_rows: int | None = None,
-) -> DataFrame:
-    """`_exact_maxsim_scores` + the per-query windowed top-k tail —
-    the rescore shared by the refined (ADC shortlist) and pruned
-    (centroid-routed) serving forms. `pair_rows` is the broadcast
-    size-guard (see `_exact_maxsim_scores`)."""
-    return _topk_tail(
-        _exact_maxsim_scores(
-            token_index, pairs, queries, dims, id_col, pair_rows=pair_rows
-        ),
-        k,
         id_col,
     )
 
@@ -811,9 +573,10 @@ def late_interaction_topk_batch_refined(
     shortlist = late_interaction_topk_batch_pq(
         codes, codebook, queries, k=refine * k, dims=dims, id_col=id_col
     ).select("query_id", id_col)
-    return _exact_maxsim_pairs(
-        token_index, shortlist, queries, k, dims, id_col
+    scored = _exact_maxsim_scores(
+        token_index, shortlist, queries, dims, id_col
     )
+    return topk_batch(scored, k, id_col=id_col).orderBy("query_id", "rank")
 
 
 def token_take_centroids(token_index: DataFrame, c: int = 16) -> list[list[float]]:
@@ -845,12 +608,10 @@ def assign_token_cids(
     pair). cid is a function of the token alone (the vec is), so the
     routed table partitions cleanly by cid and a frozen codebook keeps
     appends consistent (the IVF append ruling)."""
-    from leann_rs_spark.operators.ann import ivf_assign
-
-    spark = token_index.sparkSession
-    cent_df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(centroids)],
-        "centroid_id int, centroid_vec array<double>",
+    cent_df = local_frame(
+        token_index.sparkSession,
+        list(enumerate(centroids)),
+        T.StructType.fromDDL("centroid_id int, centroid_vec array<double>"),
     )
     # validate: the r8 broadcast-path bug was exactly this call site
     # keying by id_col alone — one extra count aggregate per (one-time)
@@ -876,38 +637,16 @@ def probe_query_cid_ranks(
     `py_hash_embedding` vectors — bit-identical to the SQL twin's
     row_number(ORDER BY dot DESC, cid ASC), the same parity argument
     as the ADC lookup tables. nprobe-probing = `rank <= nprobe`."""
-    from leann_rs_spark.operators.embedder import py_hash_embedding
-
     best: dict[tuple[int, int], int] = {}
-    for qid, toks in _tok_lists(queries):
-        for t in toks:
-            q = py_hash_embedding(t, dims)
-            scored = []
-            for cid, cv in enumerate(centroids):
-                acc = 0.0  # index-order fold, = dot()/duckdb_dot
-                for x, y in zip(q, cv):
-                    acc += x * y
-                scored.append((-acc, cid))
-            for rank, (_, cid) in enumerate(sorted(scored), 1):
-                key = (qid, cid)
-                best[key] = min(best.get(key, 1 << 30), rank)
+    for qid, _, t in _token_rows(queries):
+        q = py_hash_embedding(t, dims)
+        scored = sorted(
+            (-_py_dot(q, cv), cid) for cid, cv in enumerate(centroids)
+        )
+        for rank, (_, cid) in enumerate(scored, 1):
+            key = (qid, cid)
+            best[key] = min(best.get(key, 1 << 30), rank)
     return sorted((qid, cid, rn) for (qid, cid), rn in best.items())
-
-
-def probe_query_cids(
-    queries: list[tuple[int, str]],
-    centroids: list[list[float]],
-    nprobe: int,
-    dims: int = 64,
-) -> list[tuple[int, int]]:
-    """Sorted distinct (query_id, cid) rows probed at `nprobe` — each
-    query token's top-nprobe centroids, unioned per query (see
-    `probe_query_cid_ranks`)."""
-    return sorted(
-        (qid, cid)
-        for qid, cid, rn in probe_query_cid_ranks(queries, centroids, dims)
-        if rn <= nprobe
-    )
 
 
 def late_interaction_topk_batch_pruned(
@@ -921,43 +660,49 @@ def late_interaction_topk_batch_pruned(
 ) -> DataFrame:
     """→ (query_id, id_col, score_r, rank): centroid-routed MaxSim —
     the PLAID idea (Santhanam et al., "PLAID: An Efficient Engine for
-    Late Interaction Retrieval", CIKM 2022) re-expressed relationally.
-    Candidate generation never scans the full token index: each query
-    token probes its nprobe nearest routing centroids (driver-side —
-    the codebook is KB-sized), and ONLY token-index partitions whose
-    `cid` is probed are read (the artifact is partitionBy("cid"), so
-    the isin filter is PARTITION pruning — pinned by test). Candidate
-    docs = docs owning ≥1 token in a probed centroid of that query;
-    exact MaxSim then rescores only those (query, doc) pairs via the
-    shared broadcast-pair tail.
+    Late Interaction Retrieval", CIKM 2022) re-expressed relationally,
+    the late-interaction IVF. Each query token probes its nprobe
+    nearest routing centroids driver-side (`probe_query_cid_ranks`; the
+    codebook is KB-sized), and only probed `cid` partitions of the
+    partitionBy("cid") artifact are read (`_probed_rows`, pinned by
+    test): candidate-generation scan bytes drop to nprobe/C. Candidate
+    docs own ≥1 token in a probed centroid of that query, and
+    `_exact_maxsim_scores` rescores only those (query, doc) pairs.
 
-    At 100 TB this is the late-interaction IVF: scan bytes for
-    candidate generation drop to nprobe/C of the index (directory-
-    -level pruning, no file even opened), and the rescore is bounded
-    by candidate docs' token rows. The candidate-pair frame is
-    materialized ONCE (eager localCheckpoint — the count is needed
-    anyway for the broadcast size-guard, and the rescore then reads
-    the checkpointed rows instead of re-running candidate
-    generation); its measured row count picks the rescore join's
-    physical form (broadcast ≤ PAIR_BROADCAST_ROW_LIMIT, else plain
-    shuffle on the doc id — routing that fails to prune must degrade
-    to a slow query, not an OOM). Expects `token_index` to carry the
-    `cid` column (catalog.build_token_index(n_centroids=...))."""
-    probed = probe_query_cids(queries, centroids, nprobe, dims)
-    spark = token_index.sparkSession
-    probe = spark.createDataFrame(probed, "query_id int, cid int")
-    global_cids = sorted({cid for _, cid in probed})
+    The pair frame is materialized ONCE (eager localCheckpoint); its
+    count picks the rescore join's physical form (broadcast ≤
+    PAIR_BROADCAST_ROW_LIMIT, else a shuffle on the doc id — routing
+    that fails to prune degrades to a slow query, not an OOM). Expects
+    the `cid` column (catalog.build_token_index(n_centroids=...))."""
+    probed = [
+        (qid, cid)
+        for qid, cid, rn in probe_query_cid_ranks(queries, centroids, dims)
+        if rn <= nprobe
+    ]
     cand = (
-        token_index.filter(F.col("cid").isin(global_cids))
-        .join(F.broadcast(probe), "cid")
+        _probed_rows(token_index, probed, "query_id int, cid int")
         .select("query_id", id_col)
         .distinct()
         .localCheckpoint(eager=True)
     )
-    return _exact_maxsim_pairs(
-        token_index.select(id_col, "token", "vec"), cand, queries,
-        k, dims, id_col, pair_rows=cand.count(),
+    scored = _exact_maxsim_scores(
+        token_index.select(id_col, "token", "vec"), cand, queries, dims,
+        id_col, pair_rows=cand.count(),
     )
+    return topk_batch(scored, k, id_col=id_col).orderBy("query_id", "rank")
+
+
+def _probed_rows(token_index: DataFrame, probe: list, ddl: str) -> DataFrame:
+    """Token rows joined to the driver-side (query_id, cid, ...) probe
+    rows. The `cid` isin filter reads only probed partitions of a
+    partitionBy("cid") artifact (PLAID-style partition pruning); the
+    probe rows broadcast as a LocalTableScan."""
+    probe_df = local_frame(
+        token_index.sparkSession, probe, T.StructType.fromDDL(ddl)
+    )
+    return token_index.filter(
+        F.col("cid").isin(sorted({r[1] for r in probe}))
+    ).join(F.broadcast(probe_df), "cid")
 
 
 def duckdb_late_interaction_topk_batch_pruned(
@@ -971,104 +716,19 @@ def duckdb_late_interaction_topk_batch_pruned(
     text_col: str = "text",
 ) -> str:
     """Oracle twin of the centroid-routed batch: same lexicographic
-    take centroids, same max-inner-product routing (vocab-level argmax
-    rn=1, query-token top-nprobe rn<=nprobe, both ties cid ASC), same
-    distinct (query, doc) candidate set, then the exact twin's MaxSim
-    restricted to candidates."""
-    tok_lists = _tok_lists(queries)
-    width = max(len(t) for _, t in tok_lists)
-    values = ", ".join(
-        f"({qid}, {i}, {t!r})"
-        for qid, toks in tok_lists
-        for i, t in enumerate(toks)
+    take centroids and max-inner-product routing (`_duckdb_routing_ctes`),
+    same (query, doc) candidates at `nprobe` (`_duckdb_probe_ctes`),
+    then the exact twin's MaxSim restricted to candidates."""
+    rows = _token_rows(queries)
+    return _duckdb_li_topk(
+        _duckdb_token_ctes(dims, table, id_col, text_col)
+        + _duckdb_routing_ctes(c)
+        + _duckdb_query_ctes(rows, dims)
+        + _duckdb_probe_ctes(nprobe, id_col),
+        _duckdb_exact_maxsim(rows, "cand", id_col),
+        k,
+        id_col,
     )
-    maxes = ", ".join(
-        f"max(CASE WHEN ord = {i} THEN {duckdb_dot('j.vec', 'q.qvec')} END)"
-        f" AS m{i}"
-        for i in range(width)
-    )
-    total = " + ".join(
-        ["m0"]
-        + [f"coalesce(m{i}, CAST(0.0 AS DOUBLE))" for i in range(1, width)]
-    )
-    return f"""
-        WITH dt AS (
-            SELECT DISTINCT {id_col}, t AS token
-            FROM {table}, unnest({duckdb_tokenize(text_col)}) u(t)
-        ),
-        vocab AS MATERIALIZED (
-            SELECT token, {DUCKDB_NORMALIZE} AS vec
-            FROM (
-                SELECT token, {duckdb_raw_embedding("token", dims)} AS raw
-                FROM (SELECT DISTINCT token FROM dt) _v
-            ) _raw
-        ),
-        j AS MATERIALIZED (
-            SELECT dt.{id_col}, dt.token, vocab.vec
-            FROM dt JOIN vocab USING (token)
-        ),
-        cbsel AS MATERIALIZED (
-            SELECT row_number() OVER (ORDER BY token ASC) - 1 AS cid, vec
-            FROM vocab ORDER BY token ASC LIMIT {c}
-        ),
-        assign AS MATERIALIZED (
-            SELECT token, cid FROM (
-                SELECT v.token, cb.cid,
-                       row_number() OVER (
-                           PARTITION BY v.token
-                           ORDER BY {duckdb_dot('v.vec', 'cb.vec')} DESC,
-                                    cb.cid ASC
-                       ) AS rn
-                FROM vocab v, cbsel cb
-            ) WHERE rn = 1
-        ),
-        qt(query_id, ord, token) AS (VALUES {values}),
-        qv AS MATERIALIZED (
-            SELECT query_id, ord, {DUCKDB_NORMALIZE} AS qvec
-            FROM (
-                SELECT query_id, ord,
-                       {duckdb_raw_embedding("token", dims)} AS raw
-                FROM qt
-            ) _qr
-        ),
-        probe AS (
-            SELECT DISTINCT query_id, cid FROM (
-                SELECT q.query_id, q.ord, cb.cid,
-                       row_number() OVER (
-                           PARTITION BY q.query_id, q.ord
-                           ORDER BY {duckdb_dot('q.qvec', 'cb.vec')} DESC,
-                                    cb.cid ASC
-                       ) AS rn
-                FROM qv q, cbsel cb
-            ) WHERE rn <= {nprobe}
-        ),
-        cand AS MATERIALIZED (
-            SELECT DISTINCT p.query_id, j.{id_col}
-            FROM j JOIN assign USING (token)
-            JOIN probe p ON p.cid = assign.cid
-        ),
-        rmx AS (
-            SELECT cand.query_id, j.{id_col}, {maxes}
-            FROM j
-            JOIN cand ON cand.{id_col} = j.{id_col}
-            JOIN qv q ON q.query_id = cand.query_id
-            GROUP BY cand.query_id, j.{id_col}
-        ),
-        rs AS (
-            SELECT query_id, {id_col},
-                   round(({total}) * 1e6) / 1e6 + 0.0 AS score_r
-            FROM rmx
-        )
-        SELECT * FROM (
-            SELECT query_id, {id_col}, score_r,
-                   CAST(row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY score_r DESC, {id_col} ASC
-                   ) AS INT) AS rank
-            FROM rs
-        ) WHERE rank <= {k}
-        ORDER BY query_id, rank
-    """
 
 
 def li_probe_recall_curve(
@@ -1086,12 +746,13 @@ def li_probe_recall_curve(
     and the candidate count it costs, per probe width. The
     x_ivf_recall analog for the multi-vector rung.
 
-    ONE job per axis, never a per-sweep-point rerun (the repo's
-    sweep-explode lesson): exact scores are nprobe-INDEPENDENT (probing
-    only changes which pairs are candidates), so candidates at
-    max(nprobes) are rescored ONCE with each pair's best probe rank
-    riding along, then every sweep point is a filter + one window over
-    the same frame. Ground truth is one exact batch run.
+    ONE job per axis, never a per-sweep-point rerun: exact scores are
+    nprobe-INDEPENDENT, so candidates at max(nprobes) are rescored
+    ONCE with each pair's best probe rank riding along, then every
+    sweep point is a filter + one window over the same frame. Ground
+    truth is one exact batch run, and recall is matched / |truth|
+    (micro-averaged, as ann.ivf_recall_curve): an index with fewer
+    than k docs still reaches 1.0 at a covering probe.
 
     `intermediates`: the three persisted frames (candidates, sweep,
     exact truth) are appended so a long-lived session can unpersist
@@ -1102,36 +763,26 @@ def li_probe_recall_curve(
     leak session-lifetime cache entries (ADVICE r7)."""
     nprobes = sorted(nprobes or [1, 2, 4])
     maxp = nprobes[-1]
-    nq = len(queries)
-    spark = token_index.sparkSession
     ranks = [
         r
         for r in probe_query_cid_ranks(queries, centroids, dims)
         if r[2] <= maxp
     ]
-    rank_df = spark.createDataFrame(
-        ranks, "query_id int, cid int, min_rn int"
-    )
-    global_cids = sorted({cid for _, cid, _ in ranks})
     plain = token_index.select(id_col, "token", "vec")
     cand = (
-        token_index.filter(F.col("cid").isin(global_cids))
-        .join(F.broadcast(rank_df), "cid")
+        _probed_rows(token_index, ranks, "query_id int, cid int, min_rn int")
         .groupBy("query_id", id_col)
         .agg(F.min("min_rn").alias("cand_rn"))
         .persist()
     )
-    # multi-consumer boundary (pairs input + rank join); the measured
-    # count also drives the broadcast size-guard on BOTH candidate
-    # joins below — an unpruning codebook makes cand Q×corpus-sized
-    # exact ground truth shares no lineage with the candidate/sweep
-    # frames, so its materialization runs on a background thread
-    # (guide §2.6 overlap): the vocab-score and batch-MaxSim jobs
-    # back-fill executors idled by the two persist barriers below
-    # (FIFO scheduling). The count is the mandatory materialize-before-
-    # consumers step; `matched` blocks on the future before reading.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # cand is a multi-consumer boundary (pairs input + rank join); its
+    # measured count drives the broadcast size-guard on BOTH candidate
+    # joins below — an unpruning codebook makes cand Q×corpus-sized.
+    # The exact truth shares no lineage with the candidate/sweep frames,
+    # so its materializing count runs on a background thread (guide
+    # §2.6 overlap): its jobs back-fill executors idled by the two
+    # persist barriers below (FIFO scheduling). Its row count is the
+    # recall denominator.
     truth = (
         late_interaction_topk_batch(
             plain, queries, k=k, dims=dims, id_col=id_col
@@ -1162,9 +813,7 @@ def li_probe_recall_curve(
         sw.count()  # consumed by the ranked top-k AND the candidate count
         if intermediates is not None:
             intermediates.extend([sw, truth])
-        truth_fut.result()
-    from pyspark.sql import Window
-
+        n_truth = truth_fut.result()
     w = Window.partitionBy("nprobe", "query_id").orderBy(
         F.desc("score_r"), F.asc(id_col)
     )
@@ -1176,14 +825,9 @@ def li_probe_recall_curve(
         .agg(F.count("*").alias("matched"))
     )
     ncand = sw.groupBy("nprobe").agg(F.count("*").alias("n_candidates"))
-    recall = (
-        F.round(
-            (F.coalesce(F.col("matched"), F.lit(0)).cast("double")
-             / F.lit(float(k * nq)))
-            * F.lit(1e6)
-        )
-        / F.lit(1e6)
-        + F.lit(0.0)
+    recall = _round6(
+        F.coalesce(F.col("matched"), F.lit(0)).cast("double")
+        / F.lit(float(n_truth))
     )
     curve = (
         ncand.join(matched, "nprobe", "left")
@@ -1195,7 +839,7 @@ def li_probe_recall_curve(
         cand.unpersist()
         sw.unpersist()
         truth.unpersist()
-        return spark.createDataFrame(rows, curve.schema)
+        return local_frame(token_index.sparkSession, rows, curve.schema)
     return curve
 
 
@@ -1212,139 +856,46 @@ def duckdb_li_probe_recall_curve(
     """Oracle twin of `li_probe_recall_curve`: same lexicographic take
     centroids, per-(query, centroid) best rank, candidates at
     max(nprobe) rescored once, sweep points as filters over ONE
-    scored frame, truth = the exact batch twin at k."""
+    scored frame, truth = the exact batch twin at k, recall =
+    matched / |truth|."""
     nprobes = sorted(nprobes or [1, 2, 4])
-    maxp = nprobes[-1]
-    nq = len(queries)
-    tok_lists = _tok_lists(queries)
-    width = max(len(t) for _, t in tok_lists)
-    values = ", ".join(
-        f"({qid}, {i}, {t!r})"
-        for qid, toks in tok_lists
-        for i, t in enumerate(toks)
-    )
+    rows = _token_rows(queries)
+    exact = _duckdb_maxsim(rows, duckdb_dot("vec", "qvec"), "j, qv", id_col)
+    rescored = _duckdb_exact_maxsim(rows, "cand", id_col)
     probe_vals = ", ".join(f"({p})" for p in nprobes)
-    maxes = ", ".join(
-        f"max(CASE WHEN ord = {i} THEN {duckdb_dot('j.vec', 'q.qvec')} END)"
-        f" AS m{i}"
-        for i in range(width)
-    )
-    total = " + ".join(
-        ["m0"]
-        + [f"coalesce(m{i}, CAST(0.0 AS DOUBLE))" for i in range(1, width)]
-    )
-    return f"""
-        WITH dt AS (
-            SELECT DISTINCT {id_col}, t AS token
-            FROM {table}, unnest({duckdb_tokenize(text_col)}) u(t)
-        ),
-        vocab AS MATERIALIZED (
-            SELECT token, {DUCKDB_NORMALIZE} AS vec
-            FROM (
-                SELECT token, {duckdb_raw_embedding("token", dims)} AS raw
-                FROM (SELECT DISTINCT token FROM dt) _v
-            ) _raw
-        ),
-        j AS MATERIALIZED (
-            SELECT dt.{id_col}, dt.token, vocab.vec
-            FROM dt JOIN vocab USING (token)
-        ),
-        cbsel AS MATERIALIZED (
-            SELECT row_number() OVER (ORDER BY token ASC) - 1 AS cid, vec
-            FROM vocab ORDER BY token ASC LIMIT {c}
-        ),
-        assign AS MATERIALIZED (
-            SELECT token, cid FROM (
-                SELECT v.token, cb.cid,
-                       row_number() OVER (
-                           PARTITION BY v.token
-                           ORDER BY {duckdb_dot('v.vec', 'cb.vec')} DESC,
-                                    cb.cid ASC
-                       ) AS rn
-                FROM vocab v, cbsel cb
-            ) WHERE rn = 1
-        ),
-        qt(query_id, ord, token) AS (VALUES {values}),
-        qv AS MATERIALIZED (
-            SELECT query_id, ord, {DUCKDB_NORMALIZE} AS qvec
-            FROM (
-                SELECT query_id, ord,
-                       {duckdb_raw_embedding("token", dims)} AS raw
-                FROM qt
-            ) _qr
-        ),
-        proberank AS (
-            SELECT query_id, cid, min(rn) AS min_rn FROM (
-                SELECT q.query_id, q.ord, cb.cid,
-                       row_number() OVER (
-                           PARTITION BY q.query_id, q.ord
-                           ORDER BY {duckdb_dot('q.qvec', 'cb.vec')} DESC,
-                                    cb.cid ASC
-                       ) AS rn
-                FROM qv q, cbsel cb
-            ) GROUP BY query_id, cid
-        ),
-        cand AS MATERIALIZED (
-            SELECT p.query_id, j.{id_col}, min(p.min_rn) AS cand_rn
-            FROM j JOIN assign USING (token)
-            JOIN proberank p ON p.cid = assign.cid AND p.min_rn <= {maxp}
-            GROUP BY p.query_id, j.{id_col}
-        ),
-        scored AS MATERIALIZED (
-            SELECT rmx.query_id, rmx.{id_col},
-                   round(({total}) * 1e6) / 1e6 + 0.0 AS score_r
-            FROM (
-                SELECT cand.query_id, j.{id_col}, {maxes}
-                FROM j
-                JOIN cand ON cand.{id_col} = j.{id_col}
-                JOIN qv q ON q.query_id = cand.query_id
-                GROUP BY cand.query_id, j.{id_col}
-            ) rmx
-        ),
-        sw AS MATERIALIZED (
-            SELECT pr.np AS nprobe, s.query_id, s.{id_col}, s.score_r
-            FROM scored s
+    ctes = (
+        _duckdb_token_ctes(dims, table, id_col, text_col)
+        + _duckdb_routing_ctes(c)
+        + _duckdb_query_ctes(rows, dims)
+        + _duckdb_probe_ctes(nprobes[-1], id_col)
+        + [
+            f"""sw AS MATERIALIZED (
+            SELECT pr.np AS nprobe, s.query_id, s.{id_col}, s.score_r,
+                   row_number() OVER (
+                       PARTITION BY pr.np, s.query_id
+                       ORDER BY s.score_r DESC, s.{id_col} ASC
+                   ) AS rk
+            FROM ({rescored}) s
             JOIN cand USING (query_id, {id_col})
             JOIN (VALUES {probe_vals}) pr(np) ON cand.cand_rn <= pr.np
-        ),
-        truth AS MATERIALIZED (
-            SELECT query_id, {id_col} FROM (
-                SELECT m.query_id, m.{id_col},
-                       row_number() OVER (
-                           PARTITION BY m.query_id
-                           ORDER BY round(({total}) * 1e6) / 1e6 + 0.0 DESC,
-                                    m.{id_col} ASC
-                       ) AS rank
-                FROM (
-                    SELECT q.query_id, j.{id_col}, {maxes}
-                    FROM j, qv q
-                    GROUP BY q.query_id, j.{id_col}
-                ) m
-            ) WHERE rank <= {k}
-        ),
-        topk AS (
-            SELECT nprobe, query_id, {id_col} FROM (
-                SELECT nprobe, query_id, {id_col},
-                       row_number() OVER (
-                           PARTITION BY nprobe, query_id
-                           ORDER BY score_r DESC, {id_col} ASC
-                       ) AS rk
-                FROM sw
-            ) WHERE rk <= {k}
-        ),
-        m AS (
-            SELECT nprobe, count(*) AS matched
-            FROM topk JOIN truth USING (query_id, {id_col})
-            GROUP BY nprobe
-        ),
-        nc AS (
-            SELECT nprobe, count(*) AS n_candidates FROM sw GROUP BY nprobe
-        )
-        SELECT nc.nprobe, nc.n_candidates,
-               round((CAST(coalesce(m.matched, 0) AS DOUBLE)
-                      / {float(k * nq)!r}) * 1e6) / 1e6 + 0.0 AS recall_r
-        FROM nc LEFT JOIN m USING (nprobe)
-        ORDER BY nc.nprobe
+        )""",
+            f"""truth AS MATERIALIZED (
+            SELECT query_id, {id_col}
+            FROM ({_duckdb_li_rank(exact, k, id_col)})
+        )""",
+        ]
+    )
+    # count(t.query_id) counts the top-k rows found in the truth
+    return f"""
+        WITH {", ".join(ctes)}
+        SELECT sw.nprobe, count(*) AS n_candidates,
+               round((CAST(count(t.query_id) AS DOUBLE)
+                      / (SELECT count(*) FROM truth)) * 1e6) / 1e6 + 0.0
+                   AS recall_r
+        FROM sw LEFT JOIN truth t
+          ON sw.rk <= {k} AND t.query_id = sw.query_id
+             AND t.{id_col} = sw.{id_col}
+        GROUP BY sw.nprobe ORDER BY sw.nprobe
     """
 
 
@@ -1359,33 +910,10 @@ def duckdb_token_cid_balance(
     the lexicographic take centroids and the vocab-level argmax
     assignment (ties cid ASC — the proven pair), join to the distinct
     (doc, token) table, GROUP BY cid."""
+    ctes = _duckdb_token_ctes(dims, table, id_col, text_col)
+    ctes += _duckdb_routing_ctes(c)
     return f"""
-        WITH dt AS (
-            SELECT DISTINCT {id_col}, t AS token
-            FROM {table}, unnest({duckdb_tokenize(text_col)}) u(t)
-        ),
-        vocab AS MATERIALIZED (
-            SELECT token, {DUCKDB_NORMALIZE} AS vec
-            FROM (
-                SELECT token, {duckdb_raw_embedding("token", dims)} AS raw
-                FROM (SELECT DISTINCT token FROM dt) _v
-            ) _raw
-        ),
-        cbsel AS MATERIALIZED (
-            SELECT row_number() OVER (ORDER BY token ASC) - 1 AS cid, vec
-            FROM vocab ORDER BY token ASC LIMIT {c}
-        ),
-        assign AS (
-            SELECT token, cid FROM (
-                SELECT v.token, cb.cid,
-                       row_number() OVER (
-                           PARTITION BY v.token
-                           ORDER BY {duckdb_dot('v.vec', 'cb.vec')} DESC,
-                                    cb.cid ASC
-                       ) AS rn
-                FROM vocab v, cbsel cb
-            ) WHERE rn = 1
-        )
+        WITH {", ".join(ctes)}
         SELECT CAST(cid AS INTEGER) AS cid, count(*) AS n_rows,
                count(DISTINCT token) AS n_tokens
         FROM dt JOIN assign USING (token)
@@ -1405,22 +933,201 @@ def duckdb_late_interaction_topk_batch_refined(
     text_col: str = "text",
 ) -> str:
     """Oracle twin of the refined two-pass: the quantized twin's
-    ranking at refine·k becomes the shortlist CTE; the exact twin's
-    MaxSim runs restricted to shortlisted (query, doc) pairs."""
-    adc = duckdb_late_interaction_topk_batch_pq(
-        queries, k=refine * k, dims=dims, m=m, k_cb=k_cb,
-        table=table, id_col=id_col, text_col=text_col,
+    ranking at refine·k becomes the `short` CTE over the same token,
+    query and ADC CTEs; the exact twin's MaxSim runs restricted to
+    shortlisted (query, doc) pairs."""
+    rows = _token_rows(queries)
+    adc = _duckdb_maxsim(rows, "adc", "pairadc", id_col)
+    short = f"""short AS (
+            SELECT query_id, {id_col}
+            FROM ({_duckdb_li_rank(adc, refine * k, id_col)})
+        )"""
+    return _duckdb_li_topk(
+        _duckdb_token_ctes(dims, table, id_col, text_col)
+        + _duckdb_query_ctes(rows, dims)
+        + _duckdb_adc_ctes(m, k_cb, dims, id_col)
+        + [short],
+        _duckdb_exact_maxsim(rows, "short", id_col),
+        k,
+        id_col,
     )
-    tok_lists = _tok_lists(queries)
-    width = max(len(t) for _, t in tok_lists)
-    values = ", ".join(
-        f"({qid}, {i}, {t!r})"
-        for qid, toks in tok_lists
-        for i, t in enumerate(toks)
+
+
+
+# ---------------------------------------------------------------------------
+# The twins' shared CTE fragments
+# ---------------------------------------------------------------------------
+
+
+def _duckdb_token_ctes(
+    dims: int, table: str, id_col: str, text_col: str
+) -> list[str]:
+    """dt / vocab / j(id_col, token, vec): the token index recomputed
+    inline — distinct (doc, token) pairs joined to a vocabulary-sized
+    embedding stage (`token_embeddings`)."""
+    return [
+        f"""dt AS (
+            SELECT DISTINCT {id_col}, t AS token
+            FROM {table}, unnest({duckdb_tokenize(text_col)}) u(t)
+        )""",
+        f"""vocab AS MATERIALIZED (
+            SELECT token, {DUCKDB_NORMALIZE} AS vec
+            FROM (
+                SELECT token, {duckdb_raw_embedding("token", dims)} AS raw
+                FROM (SELECT DISTINCT token FROM dt) _v
+            ) _raw
+        )""",
+        f"""j AS (
+            SELECT dt.{id_col}, dt.token, vocab.vec
+            FROM dt JOIN vocab USING (token)
+        )""",
+    ]
+
+
+def _duckdb_query_ctes(
+    rows: list[tuple[int, int, str]], dims: int
+) -> list[str]:
+    """qt / qv(query_id, ord, qvec): the twin of `_query_token_vecs`."""
+    values = ", ".join(f"({qid}, {i}, {t!r})" for qid, i, t in rows)
+    return [
+        f"qt(query_id, ord, token) AS (VALUES {values})",
+        f"""qv AS MATERIALIZED (
+            SELECT query_id, ord, {DUCKDB_NORMALIZE} AS qvec
+            FROM (
+                SELECT query_id, ord,
+                       {duckdb_raw_embedding("token", dims)} AS raw
+                FROM qt
+            ) _qr
+        )""",
+    ]
+
+
+def _duckdb_take(n: int) -> str:
+    """cbsel(cid, vec): the first n vocabulary vectors in token order —
+    `token_take_centroids`' rows."""
+    return f"""cbsel AS MATERIALIZED (
+            SELECT row_number() OVER (ORDER BY token ASC) - 1 AS cid, vec
+            FROM vocab ORDER BY token ASC LIMIT {n}
+        )"""
+
+
+def _duckdb_routing_ctes(c: int) -> list[str]:
+    """cbsel / assign(token, cid): the c take centroids and the
+    vocab-level max-inner-product routing, ties cid ASC
+    (`assign_token_cids`)."""
+    return [
+        _duckdb_take(c),
+        f"""assign AS (
+            SELECT token, cid FROM (
+                SELECT v.token, cb.cid,
+                       row_number() OVER (
+                           PARTITION BY v.token
+                           ORDER BY {duckdb_dot('v.vec', 'cb.vec')} DESC,
+                                    cb.cid ASC
+                       ) AS rn
+                FROM vocab v, cbsel cb
+            ) WHERE rn = 1
+        )""",
+    ]
+
+
+def _duckdb_probe_ctes(maxp: int, id_col: str) -> list[str]:
+    """proberank(query_id, cid, min_rn) — the twin of
+    `probe_query_cid_ranks` — and cand(query_id, id_col, cand_rn): the
+    docs owning a token routed to a centroid probed at `maxp`, with
+    the best probe rank that reaches them."""
+    return [
+        f"""proberank AS (
+            SELECT query_id, cid, min(rn) AS min_rn FROM (
+                SELECT q.query_id, cb.cid,
+                       row_number() OVER (
+                           PARTITION BY q.query_id, q.ord
+                           ORDER BY {duckdb_dot('q.qvec', 'cb.vec')} DESC,
+                                    cb.cid ASC
+                       ) AS rn
+                FROM qv q, cbsel cb
+            ) GROUP BY query_id, cid
+        )""",
+        f"""cand AS MATERIALIZED (
+            SELECT p.query_id, j.{id_col}, min(p.min_rn) AS cand_rn
+            FROM j JOIN assign USING (token)
+            JOIN proberank p ON p.cid = assign.cid AND p.min_rn <= {maxp}
+            GROUP BY p.query_id, j.{id_col}
+        )""",
+    ]
+
+
+def _duckdb_adc_ctes(m: int, k_cb: int, dims: int, id_col: str) -> list[str]:
+    """cbsel … pairadc(query_id, ord, id_col, token, adc): the quantized
+    twin's token scores — the k_cb take codebook, argmin encode (dist
+    fold ≡ pq's proven pair, ties cid ASC), ADC as per-subspace dots
+    summed in m order (list(sd ORDER BY m) reduce ≡ the Spark LUT
+    fold)."""
+    d = dims // m
+    dist = _duckdb_l2_dist2("s.sub", "cb.cv", d)
+    qsub = f"q.qvec[t.m * {d} + 1 : (t.m + 1) * {d}]"
+    return [
+        _duckdb_take(k_cb),
+        f"""cbrows AS MATERIALIZED (
+            SELECT mm.i - 1 AS m, cid,
+                   vec[(mm.i - 1) * {d} + 1 : mm.i * {d}] AS cv
+            FROM cbsel, unnest(generate_series(1, {m})) mm(i)
+        )""",
+        f"""subs AS (
+            SELECT {id_col}, token, mm.i - 1 AS m,
+                   vec[(mm.i - 1) * {d} + 1 : mm.i * {d}] AS sub
+            FROM j, unnest(generate_series(1, {m})) mm(i)
+        )""",
+        f"""tcodes AS MATERIALIZED (
+            SELECT {id_col}, token, m, cid FROM (
+                SELECT s.{id_col}, s.token, s.m, cb.cid,
+                       row_number() OVER (
+                           PARTITION BY s.{id_col}, s.token, s.m
+                           ORDER BY {dist} ASC, cb.cid ASC
+                       ) AS rn
+                FROM subs s JOIN cbrows cb ON cb.m = s.m
+            ) WHERE rn = 1
+        )""",
+        f"""pairsub AS (
+            SELECT q.query_id, q.ord, t.{id_col}, t.token, t.m,
+                   {duckdb_dot(qsub, "cb.cv")} AS sd
+            FROM tcodes t JOIN cbrows cb ON cb.m = t.m AND cb.cid = t.cid,
+                 qv q
+        )""",
+        f"""pairadc AS (
+            SELECT query_id, ord, {id_col}, token,
+                   list_reduce(
+                       list_prepend(CAST(0.0 AS DOUBLE),
+                                    list(sd ORDER BY m)),
+                       (a, x) -> a + x) AS adc
+            FROM pairsub GROUP BY query_id, ord, {id_col}, token
+        )""",
+    ]
+
+
+def _duckdb_exact_maxsim(
+    rows: list[tuple[int, int, str]], pairs: str, id_col: str
+) -> str:
+    """The twin of `_exact_maxsim_scores`: exact MaxSim over the token
+    rows of the docs in the `pairs` CTE (query_id, id_col, ...)."""
+    return _duckdb_maxsim(
+        rows,
+        duckdb_dot("vec", "qvec"),
+        f"j JOIN {pairs} USING ({id_col}) JOIN qv USING (query_id)",
+        id_col,
     )
+
+
+def _duckdb_maxsim(
+    rows: list[tuple[int, int, str]], score: str, source: str, id_col: str
+) -> str:
+    """SELECT (query_id, id_col, score_r): the twin of `_pivot_scores` —
+    maxima of the SQL `score` per query-token ordinal over the FROM
+    item `source`, fixed-order m0 + coalesce(m_i, 0.0) sum, 6-dp
+    round(x·1e6)/1e6 + 0.0."""
+    width = 1 + max(i for _, i, _ in rows)
     maxes = ", ".join(
-        f"max(CASE WHEN ord = {i} THEN {duckdb_dot('vec', 'qvec')} END)"
-        f" AS m{i}"
+        f"max(CASE WHEN ord = {i} THEN {score} END) AS m{i}"
         for i in range(width)
     )
     total = " + ".join(
@@ -1428,52 +1135,33 @@ def duckdb_late_interaction_topk_batch_refined(
         + [f"coalesce(m{i}, CAST(0.0 AS DOUBLE))" for i in range(1, width)]
     )
     return f"""
-        WITH short AS (
-            SELECT query_id, {id_col} FROM ({adc})
-        ),
-        rdt AS (
-            SELECT DISTINCT {id_col}, t AS token
-            FROM {table}, unnest({duckdb_tokenize(text_col)}) u(t)
-        ),
-        rvocab AS (
-            SELECT token, {DUCKDB_NORMALIZE} AS vec
-            FROM (
-                SELECT token, {duckdb_raw_embedding("token", dims)} AS raw
-                FROM (SELECT DISTINCT token FROM rdt) _v
-            ) _raw
-        ),
-        rj AS (
-            SELECT rdt.{id_col}, rvocab.vec FROM rdt
-            JOIN rvocab USING (token)
-        ),
-        rqt(query_id, ord, token) AS (VALUES {values}),
-        rqv AS (
-            SELECT query_id, ord, {DUCKDB_NORMALIZE} AS qvec
-            FROM (
-                SELECT query_id, ord,
-                       {duckdb_raw_embedding("token", dims)} AS raw
-                FROM rqt
-            ) _qr
-        ),
-        rmx AS (
-            SELECT q.query_id, rj.{id_col}, {maxes}
-            FROM rj
-            JOIN short ON short.{id_col} = rj.{id_col}
-            JOIN rqv q ON q.query_id = short.query_id
-            GROUP BY q.query_id, rj.{id_col}
-        ),
-        rs AS (
             SELECT query_id, {id_col},
                    round(({total}) * 1e6) / 1e6 + 0.0 AS score_r
-            FROM rmx
-        )
-        SELECT * FROM (
-            SELECT query_id, {id_col}, score_r,
-                   CAST(row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY score_r DESC, {id_col} ASC
-                   ) AS INT) AS rank
-            FROM rs
-        ) WHERE rank <= {k}
+            FROM (
+                SELECT query_id, {id_col}, {maxes}
+                FROM {source} GROUP BY query_id, {id_col}
+            ) mx"""
+
+
+def _duckdb_li_rank(scored: str, k: int, id_col: str) -> str:
+    """The per-query top-k of a (query_id, id_col, score_r) SELECT —
+    ties id ASC, rank INT like Spark's row_number."""
+    return f"""
+            SELECT * FROM (
+                SELECT query_id, {id_col}, score_r,
+                       CAST(row_number() OVER (
+                           PARTITION BY query_id
+                           ORDER BY score_r DESC, {id_col} ASC
+                       ) AS INT) AS rank
+                FROM ({scored})
+            ) WHERE rank <= {k}"""
+
+
+def _duckdb_li_topk(ctes: list[str], scored: str, k: int, id_col: str) -> str:
+    """A batch twin's statement: the `ctes`, then `scored` ranked per
+    query → (query_id, id_col, score_r, rank), ordered."""
+    return f"""
+        WITH {", ".join(ctes)}
+        {_duckdb_li_rank(scored, k, id_col)}
         ORDER BY query_id, rank
     """

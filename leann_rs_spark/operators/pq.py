@@ -82,12 +82,20 @@ def take_subcodebooks(
         vectors.filter(F.col(id_col) < k).select(id_col, vec_col).collect(),
         key=lambda r: r[id_col],
     )
-    dims = len(rows[0][vec_col])
+    return _split_subspaces([r[vec_col] for r in rows], m)
+
+
+def _split_subspaces(vecs: list, m: int) -> Codebook:
+    """The take policy's codebook from its chosen vectors, in order:
+    sub-centroid j of subspace i is the i-th of m equal slices of
+    vector j. Raises ValueError when the dimension is not divisible
+    by m."""
+    dims = len(vecs[0])
     if dims % m:
         raise ValueError(f"dims={dims} not divisible by m={m}")
     d = dims // m
     return [
-        [[float(x) for x in r[vec_col][i * d : (i + 1) * d]] for r in rows]
+        [[float(x) for x in v[i * d : (i + 1) * d]] for v in vecs]
         for i in range(m)
     ]
 

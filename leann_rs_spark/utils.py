@@ -1,4 +1,5 @@
-"""Shared utilities: deterministic dense id assignment at scale.
+"""Shared utilities: deterministic dense id assignment at scale, and
+driver-side rows as JVM-local frames (`local_frame`).
 
 The reference threads a driver-side sequential u64 counter through its
 chunkers (/root/reference/src/cli/build.rs:286-298,
@@ -73,3 +74,19 @@ def with_dense_index(
             yield out
 
     return parted.mapInPandas(assign, schema=out_schema)
+
+
+def local_frame(spark, rows: list, schema: T.StructType) -> DataFrame:
+    """Driver-side rows → a JVM LocalRelation frame (via Arrow/pandas).
+    A plain createDataFrame(rows) is parallelize-backed ('Scan
+    ExistingRDD'): every job and BroadcastExchange over it re-evaluates
+    the pickled partitions through a Python worker, so a frame that is
+    broadcast into several joins pays that roundtrip repeatedly per
+    action. The Arrow path ships the rows once, JVM-side, and plans a
+    LocalTableScan (exact for doubles, incl. -0.0 and 5e-324, and for
+    nested arrays). An empty `rows` falls back to the parallelize
+    path."""
+    pdf = pd.DataFrame(
+        [tuple(r) for r in rows], columns=[f.name for f in schema.fields]
+    )
+    return spark.createDataFrame(pdf, schema)

@@ -194,6 +194,20 @@ def test_batch_rejects_tokenless_query(spark):
     tok = token_embeddings(docs, dims=8, cache=False)
     with pytest.raises(ValueError, match="no tokens"):
         late_interaction_topk_batch(tok, [(0, "a ! ?")], k=2, dims=8)
+    # an empty batch and a repeated query_id (whose tokens would merge
+    # into one MaxSim sum) raise before any job runs
+    sc = spark.sparkContext
+    sc.setJobGroup("li-batch-precheck", "li-batch-precheck")
+    try:
+        with pytest.raises(ValueError, match="empty query batch"):
+            late_interaction_topk_batch(tok, [], k=2, dims=8)
+        with pytest.raises(ValueError, match="duplicate query_id"):
+            late_interaction_topk_batch(
+                tok, [(0, "merge sort"), (0, "hash join")], k=2, dims=8
+            )
+    finally:
+        sc.setJobGroup(None, None)
+    assert not sc.statusTracker().getJobIdsForGroup("li-batch-precheck")
 
 
 def test_token_index_catalog_roundtrip(spark, tmp_path):
@@ -555,6 +569,24 @@ def test_li_probe_recall_curve_monotone_and_saturating(spark):
     assert recalls == sorted(recalls) and cands == sorted(cands)
     assert recalls[-1] == 1.0  # covering probe == exact
     tok.unpersist()
+
+    # k > N: recall divides by the truth rows (3 per query here), not
+    # k·|queries|, so the covering probe still reaches 1.0
+    small = spark.createDataFrame(
+        [
+            (1, "merge sort algorithms"),
+            (2, "hash join keys"),
+            (3, "window state"),
+        ],
+        "doc_id long, text string",
+    )
+    stok = token_embeddings(small, dims=32, cache=False)
+    scents = token_take_centroids(stok, c=4)
+    rows = li_probe_recall_curve(
+        assign_token_cids(stok, scents), scents,
+        [(0, "merge sort"), (1, "hash join")], k=5, nprobes=[1, 4], dims=32,
+    ).collect()
+    assert rows[-1]["nprobe"] == 4 and rows[-1]["recall_r"] == 1.0
 
 
 def test_compact_token_index_preserves_rows_and_layout(spark, tmp_path):

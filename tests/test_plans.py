@@ -647,3 +647,49 @@ def test_batch_search_prunes_partitions_in_jvm(spark):
     ), plan
     for node in _PY_NODES:
         assert node not in plan, node
+
+
+def test_li_batch_pq_pruned_plans_scan_no_python_rdd(spark, tmp_path):
+    """The batch, PQ and pruned late-interaction forms over a token
+    index build their driver-side frames (query tokens, ADC lookup
+    table, probe rows) as LocalTableScans: no `Scan ExistingRDD` of
+    Python rows in the executed plan. The pruned form's one
+    ExistingRDD is its candidate-pair localCheckpoint (JVM rows)."""
+    from leann_rs_spark.catalog import build_token_index, load_token_index
+    from leann_rs_spark.operators.late_interaction import (
+        late_interaction_topk_batch,
+        late_interaction_topk_batch_pq,
+        late_interaction_topk_batch_pruned,
+        pq_token_codes,
+        token_subcodebooks,
+    )
+
+    wh = str(tmp_path / "wh")
+    docs = spark.createDataFrame(
+        [(1, "merge sort external"), (2, "hash join keys"), (3, "window state")],
+        "doc_id long, text string",
+    )
+    build_token_index(spark, wh, "tok", docs, dims=8, n_centroids=4)
+    tok, info = load_token_index(spark, wh, "tok")
+    queries = [(0, "merge sort"), (1, "hash join")]
+    cb = token_subcodebooks(tok, m=2, k_cb=4)
+    forms = {
+        "batch": late_interaction_topk_batch(tok, queries, k=2, dims=8),
+        "pq": late_interaction_topk_batch_pq(
+            pq_token_codes(tok, cb), cb, queries, k=2, dims=8
+        ),
+        "pruned": late_interaction_topk_batch_pruned(
+            tok, info["centroids"], queries, k=2, nprobe=2, dims=8
+        ),
+    }
+    for form, df in forms.items():
+        plan = plan_of(df)
+        rdd_scans = [
+            ln for ln in plan.splitlines()
+            if ln.startswith("Arguments:") and "ExistingRDD" in ln
+        ]
+        if form == "pruned":
+            assert len(rdd_scans) == 1, plan
+            assert "at localCheckpoint" in rdd_scans[0], plan
+        else:
+            assert "ExistingRDD" not in plan, (form, plan)
