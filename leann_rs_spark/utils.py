@@ -84,8 +84,17 @@ def local_frame(spark, rows: list, schema: T.StructType) -> DataFrame:
     broadcast into several joins pays that roundtrip repeatedly per
     action. The Arrow path ships the rows once, JVM-side, and plans a
     LocalTableScan (exact for doubles, incl. -0.0 and 5e-324, and for
-    nested arrays). An empty `rows` falls back to the parallelize
-    path."""
+    nested arrays). pyspark's Arrow path rejects an empty pandas frame
+    and would fall back to parallelize, so an empty `rows` builds the
+    empty LocalRelation JVM-side instead."""
+    if not rows:
+        jss = spark._jsparkSession
+        return DataFrame(
+            jss.createDataFrame(
+                spark._jvm.java.util.ArrayList(), jss.parseDataType(schema.json())
+            ),
+            spark,
+        )
     pdf = pd.DataFrame(
         [tuple(r) for r in rows], columns=[f.name for f in schema.fields]
     )

@@ -693,3 +693,33 @@ def test_li_batch_pq_pruned_plans_scan_no_python_rdd(spark, tmp_path):
             assert "at localCheckpoint" in rdd_scans[0], plan
         else:
             assert "ExistingRDD" not in plan, (form, plan)
+
+
+def test_curve_gate_plans_local_table_scan(spark):
+    """A sweep gate's collected curve comes back as a LocalTableScan,
+    not a `Scan ExistingRDD` of pickled rows."""
+    import __spark_entry__ as entry
+
+    df = entry.x_ivf_recall(spark, "/root/testdata/sf0.001")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+
+
+def test_local_frame_empty_rows_plans_local_table_scan(spark):
+    """An empty `rows` keeps the JVM-local form (the frame the pruned
+    late-interaction rung broadcasts at nprobe=0)."""
+    from pyspark.sql import types as T
+
+    from leann_rs_spark.utils import local_frame
+
+    schema = T.StructType([
+        T.StructField("query_id", T.IntegerType(), False),
+        T.StructField("cid", T.IntegerType(), True),
+    ])
+    df = local_frame(spark, [], schema)
+    plan = plan_of(df)
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+    assert df.schema == schema
+    assert df.count() == 0

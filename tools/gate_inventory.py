@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Regenerate SURVEY.md §12 (gate inventory) from queries() order and
-each gate's first docstring line. Run after rotation so the table
-matches the committed driver-coverage ordering.
+each gate's first docstring line. Run after adding a gate or editing
+a gate's docstring.
 
     python3 tools/gate_inventory.py          # rewrite SURVEY.md in place
     python3 tools/gate_inventory.py --print  # stdout only
@@ -25,10 +25,8 @@ def build_table() -> str:
         f"## 12. Gate inventory ({len(qs)} oracle gates)",
         "",
         "Every entry has BOTH a `queries()` callable and a full-value",
-        "`oracle_sql()` twin (zero rows-only checks). Order = the committed",
-        "driver-coverage rotation (tools/rotate_gates.py): never-driver-checked",
-        "gates first, then code-stale (implementation changed since the gate's",
-        "last driver row), then ascending by most recent CORRECTNESS round.",
+        "`oracle_sql()` twin (zero rows-only checks). Order = `queries()`",
+        "order, which is frozen (new gates append at the end).",
         "First line of each gate's docstring (table generated by",
         "tools/gate_inventory.py):",
         "",

@@ -23,6 +23,14 @@ signals the round reviews look for:
   readers).
 - take_ordered:   TakeOrderedAndProject present (the top-k gates'
   expected physical form).
+- python_scan:    `Scan ExistingRDD` nodes over Python rows (a
+  spark.createDataFrame(<list>) frame, re-read by a Python worker in
+  every job over it; `utils.local_frame` plans a LocalTableScan
+  instead). Counted on the formatted plan, whose Arguments line names
+  the RDD: one made `at localCheckpoint` holds JVM rows and is not
+  counted.
+- object_hash_agg: ObjectHashAggregate nodes (exact percentile,
+  collect_list, …) — they disable whole-stage codegen for their stage.
 
 Emits one JSON object {gate: {...}, _summary: {...}} on stdout.
 Usage: python3 tools/plan_audit.py [--sf /root/testdata/sf0.001]
@@ -42,7 +50,15 @@ sys.path.insert(
 )
 
 
-def audit_plan(plan: str) -> dict:
+def python_scans(formatted: str) -> int:
+    return sum(
+        1 for ln in formatted.splitlines()
+        if ln.startswith("Arguments:") and "ExistingRDD" in ln
+        and "at localCheckpoint" not in ln
+    )
+
+
+def audit_plan(plan: str, formatted: str) -> dict:
     return {
         "python_batch": plan.count("BatchEvalPython"),
         "python_arrow": (
@@ -59,7 +75,15 @@ def audit_plan(plan: str) -> dict:
         - plan.count("PushedFilters: []"),
         "take_ordered": plan.count("TakeOrderedAndProject") > 0,
         "bnl_joins": plan.count("BroadcastNestedLoopJoin"),
+        "python_scan": python_scans(formatted),
+        "object_hash_agg": plan.count("ObjectHashAggregate"),
     }
+
+
+def gates_with(out: dict, field: str) -> list[str]:
+    return sorted(
+        k for k, v in out.items() if k != "_summary" and v.get(field, 0) > 0
+    )
 
 
 def main() -> None:
@@ -78,29 +102,24 @@ def main() -> None:
     for name in names:
         try:
             df = qs[name](spark, args.sf)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            qe = df._jdf.queryExecution()
+            plan = qe.executedPlan().toString()
+            formatted = spark._jvm.PythonSQLUtils.explainString(qe, "formatted")
         except Exception as exc:  # fixture/environment failures recorded
             print(f"# {name}: ERROR {exc}", file=sys.stderr)
             out[name] = {"error": str(exc)[:200]}
             continue
-        out[name] = audit_plan(plan)
+        out[name] = audit_plan(plan, formatted)
         print(f"# {name}: {out[name]}", file=sys.stderr)
     ok = [v for v in out.values() if "error" not in v]
     out["_summary"] = {
         "n_gates": len(ok),
         "n_errors": len(out) - len(ok),
-        "gates_with_python_batch": sorted(
-            k for k, v in out.items()
-            if k != "_summary" and v.get("python_batch", 0) > 0
-        ),
-        "gates_with_cartesian": sorted(
-            k for k, v in out.items()
-            if k != "_summary" and v.get("cartesian", 0) > 0
-        ),
-        "gates_with_arrow": sorted(
-            k for k, v in out.items()
-            if k != "_summary" and v.get("python_arrow", 0) > 0
-        ),
+        "gates_with_python_batch": gates_with(out, "python_batch"),
+        "gates_with_cartesian": gates_with(out, "cartesian"),
+        "gates_with_arrow": gates_with(out, "python_arrow"),
+        "gates_with_python_scan": gates_with(out, "python_scan"),
+        "gates_with_object_hash_agg": gates_with(out, "object_hash_agg"),
         "total_exchanges": sum(v.get("exchanges", 0) for v in ok),
     }
     print(json.dumps(out))
