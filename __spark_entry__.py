@@ -18,6 +18,7 @@ import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from leann_rs_spark.functions.vector import duckdb_cosine, duckdb_dot
 from leann_rs_spark.operators.filter_dsl import (
@@ -1101,8 +1102,9 @@ def r1_rag_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R1/R4: batch RAG over a table of questions with the simulated LLM
     (the reference's own no-network provider, src/llm/simulated.rs)."""
     docs = _docs(spark, sf_dir)
-    questions = spark.createDataFrame(
-        _RAG_QUESTIONS, "question_id long, question string"
+    questions = local_frame(
+        spark, _RAG_QUESTIONS,
+        StructType.fromDDL("question_id long, question string"),
     )
     emb = embed_documents(_fan(docs), dims=_EMBED_DIMS, id_col="doc_id").select("doc_id", "embedding")
     return rag_batch(

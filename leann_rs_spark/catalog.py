@@ -39,7 +39,13 @@ import shutil
 from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from leann_rs_spark.operators.bm25 import build_bm25_index, score_query
 from leann_rs_spark.operators.chunker import chunk_documents
@@ -47,7 +53,7 @@ from leann_rs_spark.operators.embedder import embed_documents
 from leann_rs_spark.operators.filter_dsl import compile_spark, parse as parse_filter
 from leann_rs_spark.operators.hybrid import hybrid_rerank, use_hybrid
 from leann_rs_spark.operators.search import exact_search
-from leann_rs_spark.utils import with_dense_index
+from leann_rs_spark.utils import local_frame, with_dense_index
 
 META_VERSION = "1.0"  # mirrors IndexMeta.version (meta.rs:10-12)
 
@@ -115,10 +121,32 @@ def save_meta(warehouse: str, name: str, meta: IndexMeta) -> None:
         json.dump(asdict(meta), f, indent=2)
 
 
-# table path -> (meta.json stamp, schema). Schemas only: appends add
-# files and compact_ivf_index swaps them without a meta save, so file
-# listings (and the DataFrames that hold them) must be taken per read.
-_SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
+@dataclass
+class _IndexVersion:
+    """Values derived once per index version: table schemas, the BM25
+    corpus stats (n_docs, Σ doc_len) and the PQ codebook. Values only —
+    never a DataFrame or a file listing: compact_ivf_index swaps files
+    without a meta save (the values stay valid, a listing would not),
+    so listings are taken per read."""
+
+    stamp: tuple[int, int]  # meta.json (mtime_ns, size)
+    schemas: dict[str, StructType] = field(default_factory=dict)
+    bm25_stats: tuple[int, int] | None = None
+    pq_codebook: list | None = None
+
+
+# index base path -> its current version; a new meta.json stamp (build,
+# append, IVF build/refresh, prune) starts a fresh one
+_VERSIONS: dict[str, _IndexVersion] = {}
+
+
+def _version(base: str) -> _IndexVersion:
+    st = os.stat(os.path.join(base, "meta.json"))
+    stamp = (st.st_mtime_ns, st.st_size)
+    v = _VERSIONS.get(base)
+    if v is None or v.stamp != stamp:
+        v = _VERSIONS[base] = _IndexVersion(stamp)
+    return v
 
 
 def _read(
@@ -129,29 +157,72 @@ def _read(
 ) -> DataFrame:
     """Read one table of the index at `base` with no Spark job of its
     own. A schema-less `spark.read.parquet` runs a one-task schema
-    inference job per call; here the schema is inferred once per (table,
-    meta.json mtime_ns and size) and passed in. `partitions=(col,
-    values)` reads only the existing `<col>=<value>` directories (with
-    basePath, so `col` is kept): past 32 directories Spark lists a table
-    with a parallel job, even when a filter then prunes it to a few. No
-    existing directory → an empty frame with the table's schema."""
+    inference job per call; here the schema is inferred once per index
+    version and passed in. `partitions=(col, values)` reads only the
+    existing `<col>=<value>` directories (with basePath, so `col` is
+    kept): past 32 directories Spark lists a table with a parallel job,
+    even when a filter then prunes it to a few. No existing directory →
+    an empty frame with the table's schema."""
     path = f"{base}/{table}"
-    st = os.stat(os.path.join(base, "meta.json"))
-    stamp = (st.st_mtime_ns, st.st_size)
-    hit = _SCHEMAS.get(path)
-    if hit is None or hit[0] != stamp:
-        hit = _SCHEMAS[path] = (stamp, spark.read.parquet(path).schema)
-    reader = spark.read.schema(hit[1])
+    schemas = _version(base).schemas
+    if table not in schemas:
+        schemas[table] = spark.read.parquet(path).schema
+    schema = schemas[table]
+    reader = spark.read.schema(schema)
     if partitions is None:
         return reader.parquet(path)
     col, values = partitions
     dirs = [f"{path}/{col}={v}" for v in values]
     dirs = [d for d in dirs if os.path.isdir(d)]
     if not dirs:
-        return spark.range(0).select(
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in hit[1]]
-        )
+        return _empty(spark, schema)
     return reader.option("basePath", path).parquet(*dirs)
+
+
+def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
+    )
+
+
+def _bm25_stats(spark: SparkSession, base: str) -> tuple[int, int]:
+    """(n_docs, Σ doc_len) of the index's `bm25_docstats`: one aggregate
+    job per index version, where scoring each request against the table
+    ran it (with its shuffle and broadcast) per request."""
+    v = _version(base)
+    if v.bm25_stats is None:
+        r = _read(spark, base, "bm25_docstats").agg(
+            F.count("*"), F.sum("doc_len")
+        ).head()
+        v.bm25_stats = (int(r[0]), int(r[1] or 0))
+    return v.bm25_stats
+
+
+def _pq_codebook(spark: SparkSession, base: str) -> list:
+    """The index's PQ codebook, collected once per index version."""
+    from leann_rs_spark.operators.pq import codebook_from_rows
+
+    v = _version(base)
+    if v.pq_codebook is None:
+        v.pq_codebook = codebook_from_rows(
+            _read(spark, base, "pq_codebook").collect()
+        )
+    return v.pq_codebook
+
+
+def _write_passages(chunks: DataFrame, path: str, mode: str, start: int) -> None:
+    """Number the chunks densely from `start` in (doc_id, chunk_index)
+    order and write them; the dense-id persists are released once the
+    write has consumed them."""
+    held: list = []
+    try:
+        with_dense_index(
+            chunks, ["doc_id", "chunk_index"], "idx", start=start,
+            intermediates=held,
+        ).write.mode(mode).parquet(path)
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 def build_index(
@@ -205,8 +276,7 @@ def build_index(
     chunks = chunk_documents(
         docs, strategy=strategy, chunk_size=chunk_size, chunk_overlap=chunk_overlap
     )
-    passages = with_dense_index(chunks, ["doc_id", "chunk_index"], "idx")
-    passages.write.mode("overwrite").parquet(f"{base}/passages")
+    _write_passages(chunks, f"{base}/passages", "overwrite", 0)
 
     passages = spark.read.parquet(f"{base}/passages")
     if provider is not None:
@@ -364,10 +434,7 @@ def append_to_index(
         chunk_size=meta.chunk_size,
         chunk_overlap=meta.chunk_overlap,
     )
-    passages = with_dense_index(
-        chunks, ["doc_id", "chunk_index"], "idx", start=meta.passage_count
-    )
-    passages.write.mode("append").parquet(f"{base}/passages")
+    _write_passages(chunks, f"{base}/passages", "append", meta.passage_count)
     # read back ONLY the appended rows (idx >= old passage_count — a
     # min/max row-group prune on the scan): the embed and BM25 stages
     # below would otherwise re-run the Python chunker + dense-id sort,
@@ -488,10 +555,13 @@ def list_indexes(spark: SparkSession, warehouse: str) -> DataFrame:
                         m.is_pruned,
                     )
                 )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
-        "name string, backend string, embedding_mode string, "
-        "dimensions int, passage_count bigint, is_pruned boolean",
+        StructType.fromDDL(
+            "name string, backend string, embedding_mode string, "
+            "dimensions int, passage_count bigint, is_pruned boolean"
+        ),
     )
 
 
@@ -551,6 +621,14 @@ def prune_index(warehouse: str, name: str) -> IndexMeta:
     return meta
 
 
+_POSTINGS_SCHEMA = StructType([
+    StructField("idx", LongType()),
+    StructField("term", StringType()),
+    StructField("tf", LongType()),
+    StructField("term_bucket", IntegerType()),
+])
+
+
 def _read_postings(spark: SparkSession, base: str, query: str) -> DataFrame:
     """The BM25 postings of the query's terms. All rows of a term share
     one term_bucket, so reading only the query terms' bucket directories
@@ -558,6 +636,12 @@ def _read_postings(spark: SparkSession, base: str, query: str) -> DataFrame:
     rows are complete: df counts stay exact."""
     from leann_rs_spark.operators.bm25 import tokenize_py
 
+    if not any(
+        d.startswith("term_bucket=") for d in os.listdir(f"{base}/bm25_postings")
+    ):
+        # a corpus without a single token wrote no postings file to
+        # infer the schema from
+        return _empty(spark, _POSTINGS_SCHEMA)
     buckets = sorted({py_term_bucket(t) for t in tokenize_py(query)})
     return _read(spark, base, "bm25_postings", ("term_bucket", buckets))
 
@@ -587,6 +671,21 @@ def _embeddings_for_search(
             id_col="idx",
         ).select("idx", "embedding")
     return _read(spark, base, "embeddings")
+
+
+def _assemble(hits: DataFrame, passages: DataFrame, k: int) -> DataFrame:
+    """The ≤k hits joined to their passages, (score DESC, idx ASC). The
+    sort is a top-k (TakeOrderedAndProject: a heap per scan task, merged
+    by the one job that runs the scan); a global orderBy would plan a
+    range-partition Exchange whose bound-sampling job re-runs the
+    passages scan below it."""
+    return (
+        F.broadcast(hits)
+        .join(passages, "idx")
+        .select("idx", "score", "doc_id", "source", "text")
+        .orderBy(F.col("score").desc(), F.col("idx").asc())
+        .limit(k)
+    )
 
 
 def search_index(
@@ -651,7 +750,10 @@ def search_index(
             postings0 = _read_postings(spark, base, query)
             docstats0 = _read(spark, base, "bm25_docstats")
             termstats0 = postings0.groupBy("term").agg(F.count("*").alias("df"))
-            scored0 = score_query(postings0, docstats0, termstats0, query, id_col="idx")
+            scored0 = score_query(
+                postings0, docstats0, termstats0, query, id_col="idx",
+                corpus_stats=_bm25_stats(spark, base),
+            )
             top5 = (
                 scored0.filter(F.col("score") > 0.0)
                 .orderBy(F.round(F.col("score"), 6).desc(), F.col("idx").asc())
@@ -660,7 +762,9 @@ def search_index(
             texts = F.broadcast(top5.select("idx")).join(passages_all, "idx")
             # ≤5 mined terms collected driver-side — the reference's
             # expand_from_passages is likewise a driver-side step over
-            # the 5 passage strings (query.rs:128-164)
+            # the 5 passage strings (query.rs:128-164). The collect
+            # stays: the expanded query's vector and its term_bucket
+            # directories are driver-side inputs of the search plan.
             mined = expansion_terms(texts, query, max_terms=5).collect()
             new_terms = [r["term"] for r in mined]
             if new_terms:
@@ -695,11 +799,17 @@ def search_index(
     if hybrid:
         postings = _read_postings(spark, base, search_query)
         docstats = _read(spark, base, "bm25_docstats")
-        termstats = postings.groupBy("term").agg(F.count("*").alias("df"))
         if filter_str:
+            # the corpus is the filtered docs: df, N and avg_doc_len are
+            # theirs, computed per request
             keep = passages.select("idx")
             postings = postings.join(keep, "idx", "left_semi")
             docstats = docstats.join(keep, "idx", "left_semi")
+            stats, n_docs = None, docstats
+        else:
+            stats = _bm25_stats(spark, base)
+            n_docs = stats[0]
+        termstats = postings.groupBy("term").agg(F.count("*").alias("df"))
         # the EXPANDED query drives the BM25 side (search.rs:204, the
         # opts.with_hybrid(search_query) call). Not persisted: its three
         # consumers (candidate join, min/max stats, top-k cut) sit in
@@ -707,7 +817,8 @@ def search_index(
         # persist would pin a cached frame per request in a long-lived
         # server.
         scored = score_query(
-            postings, docstats, termstats, search_query, id_col="idx"
+            postings, docstats, termstats, search_query, id_col="idx",
+            corpus_stats=stats,
         )
         # candidate cut on the 6dp-rounded score (cross-engine
         # determinism; sub-1e-6 reorderings are fp noise) — the same
@@ -721,7 +832,7 @@ def search_index(
             vec_hits.withColumnRenamed("idx", "doc_id"),
             scored.withColumnRenamed("idx", "doc_id"),
             bm25_top.withColumnRenamed("idx", "doc_id"),
-            docstats,
+            n_docs,
             alpha=hybrid_alpha,
         )
         hits = (
@@ -732,12 +843,7 @@ def search_index(
     else:
         hits = vec_hits.orderBy(F.col("score").desc(), F.col("idx").asc()).limit(k)
 
-    return (
-        F.broadcast(hits)
-        .join(passages, "idx")
-        .select("idx", "score", "doc_id", "source", "text")
-        .orderBy(F.col("score").desc(), F.col("idx").asc())
-    )
+    return _assemble(hits, passages, k)
 
 
 # ---------------------------------------------------------------------------
@@ -843,9 +949,10 @@ def build_ivf_index(
                 pq_encode_col(F.col("embedding"), cb), pq_m, bits
             ),
         )
-        spark.createDataFrame(
+        local_frame(
+            spark,
             codebook_to_rows(cb),
-            schema="m int, cid int, cv array<double>",
+            StructType.fromDDL("m int, cid int, cv array<double>"),
         ).write.mode("overwrite").parquet(f"{base}/pq_codebook")
         meta.extra["pq_m"] = pq_m
         meta.extra["pq_k"] = pq_k
@@ -1096,7 +1203,8 @@ def refresh_ivf_index(
         for i in range(len(N)):
             if i not in label_of:
                 label_of[i] = next(free)
-        relabeled = spark.createDataFrame(
+        cents = local_frame(
+            spark,
             [
                 (label_of[i], list(r["centroid_vec"]))
                 for i, r in enumerate(new_cent_rows)
@@ -1105,7 +1213,6 @@ def refresh_ivf_index(
             # would perturb assignment scores against the oracle
             cents.select("centroid_id", "centroid_vec").schema,
         )
-        cents = relabeled
     # re-assign FROM THE LAYOUT (it already carries embedding + any pq
     # code), tagging each row with its current partition; extras are
     # functionally dependent on idx, so the uniqueness contract holds
@@ -1212,16 +1319,11 @@ def search_ivf_index(
     probe = ivf_probe_ids(_read(spark, base, "ivf_centroids"), qv, nprobe)
     probed = _read(spark, base, "ivf", ("cluster_id", probe))
     if use_pq:
-        from leann_rs_spark.operators.pq import (
-            codebook_from_rows,
-            pq_bits,
-            pq_search,
-            pq_unpack_col,
-        )
+        from leann_rs_spark.operators.pq import pq_bits, pq_search, pq_unpack_col
 
         m = int(meta.extra["pq_m"])
         bits = pq_bits(int(meta.extra["pq_k"]))
-        cb = codebook_from_rows(_read(spark, base, "pq_codebook").collect())
+        cb = _pq_codebook(spark, base)
         codes = probed.select(
             "idx", pq_unpack_col(F.col("code"), m, bits).alias("code")
         )
@@ -1230,12 +1332,7 @@ def search_ivf_index(
     else:
         hits = exact_search(probed, qv, k, "idx")
     passages = _read(spark, base, "passages")
-    return (
-        F.broadcast(hits)
-        .join(passages, "idx")
-        .select("idx", "score", "doc_id", "source", "text")
-        .orderBy(F.col("score").desc(), F.col("idx").asc())
-    )
+    return _assemble(hits, passages, k)
 
 
 def build_token_index(

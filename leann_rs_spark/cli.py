@@ -228,8 +228,11 @@ def _make_answerer(spark, warehouse: str, name: str, top_k: int, llm=None):
     """One-question RAG closure over DataFrames loaded ONCE — the REPL
     reuses the loaded passages/embeddings across turns, like the
     reference's long-lived IndexSearcher."""
+    from pyspark.sql.types import StructType
+
     from leann_rs_spark.catalog import load_meta
     from leann_rs_spark.operators.rag import rag_batch
+    from leann_rs_spark.utils import local_frame
 
     meta = load_meta(warehouse, name)
     base = f"{warehouse}/{name}"
@@ -237,8 +240,9 @@ def _make_answerer(spark, warehouse: str, name: str, top_k: int, llm=None):
     emb = spark.read.parquet(f"{base}/embeddings")
 
     def answer(question: str) -> str:
-        questions = spark.createDataFrame(
-            [(0, question)], "question_id long, question string"
+        questions = local_frame(
+            spark, [(0, question)],
+            StructType.fromDDL("question_id long, question string"),
         )
         row = rag_batch(
             questions, passages, emb, k=top_k, dims=meta.dimensions, llm=llm

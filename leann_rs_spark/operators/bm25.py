@@ -25,7 +25,10 @@ the postings scan (pushed to Parquet; partition postings by a term hash
 bucket at 100 TB so pruning skips files), and everything after the scan
 touches only rows for the query's terms. The query's term counts ride
 in the plan as a literal map Column (`_query_weights`), so scoring runs
-no Python worker.
+no Python worker. The corpus stats N and avg_doc_len are constant for
+a persisted index: a caller that holds them (catalog memoizes them per
+index version) passes them to `score_query` as literals; otherwise
+they are a keyless aggregate over docstats inside the scoring plan.
 """
 
 from __future__ import annotations
@@ -98,10 +101,21 @@ def score_query(
     id_col: str = "doc_id",
     k1: float = K1,
     b: float = B,
+    *,
+    corpus_stats: tuple[int, int] | None = None,
 ) -> DataFrame:
     """BM25 scores for every document matching ≥1 query term
     (docs matching none implicitly score 0, as in score_query's
     zero-initialized vector, src/index/bm25.rs:77-106).
+
+    Corpus N and avg_doc_len come from `corpus_stats` = (n_docs,
+    Σ doc_len) when the caller holds them (a persisted index's stats
+    are constant per index version, catalog._bm25_stats): they enter
+    the plan as literals, bit-identical to the aggregate (Σ/N is the
+    same IEEE division). Without them, a keyless aggregate over
+    `docstats` is cross-joined into the term table — no eager driver
+    action, but the aggregate runs (with its shuffle and broadcast) in
+    every job that scores.
 
     Returns (id_col, score DOUBLE).
     """
@@ -110,19 +124,27 @@ def score_query(
         return postings.select(id_col).limit(0).withColumn("score", F.lit(0.0))
     terms, qtf = _query_weights(qtokens)
 
-    # Corpus N / avg_doc_len folded in as a broadcast 1-row aggregate —
-    # no eager driver action; the whole score is ONE Spark job (the same
-    # shape hybrid_rerank uses for its num_docs count).
-    stats = docstats.agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.coalesce(
-            F.sum("doc_len").cast("double") / F.count("*").cast("double"),
-            F.lit(1.0),
-        ).alias("avg_len"),
-    )
+    if corpus_stats is None:
+        termstats = termstats.crossJoin(
+            F.broadcast(
+                docstats.agg(
+                    F.count("*").cast("double").alias("n_docs"),
+                    F.coalesce(
+                        F.sum("doc_len").cast("double")
+                        / F.count("*").cast("double"),
+                        F.lit(1.0),
+                    ).alias("avg_len"),
+                )
+            )
+        )
+        n_docs, avg_len = F.col("n_docs"), F.col("avg_len")
+    else:
+        n, total = corpus_stats
+        n_docs = F.lit(float(n))
+        avg_len = F.lit(float(total) / float(n) if n else 1.0)
 
     idf = F.log(
-        (F.col("n_docs") - F.col("df") + F.lit(0.5))
+        (n_docs - F.col("df") + F.lit(0.5))
         / (F.col("df") + F.lit(0.5))
         + F.lit(1.0)
     )
@@ -137,12 +159,9 @@ def score_query(
         / (F.col("tf").cast("double") + F.lit(k1) * norm)
     )
 
-    # termstats is vocabulary-sized; cross-joining the 1-row stats keeps
-    # it broadcastable and carries avg_len to every scored row for free.
-    terms_b = (
-        termstats.crossJoin(F.broadcast(stats))
-        .select("term", idf.alias("idf"), "avg_len")
-    )
+    # termstats is vocabulary-sized and broadcastable; it carries idf and
+    # avg_len to every scored row.
+    terms_b = termstats.select("term", idf.alias("idf"), avg_len.alias("avg_len"))
     return (
         relevant.join(F.broadcast(terms_b), "term")
         .join(docstats, id_col)

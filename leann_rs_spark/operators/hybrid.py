@@ -51,9 +51,10 @@ def hybrid_rerank(
     bm25_scored: (id_col, score) — BM25 scores for every matching doc
     bm25_top: (id_col,) — BM25 top-fetch_k candidate ids
     num_docs: corpus size (to account for implicit 0.0 BM25 scores) —
-        either an int, or the corpus DataFrame itself, in which case
-        its count is folded into the same Spark job as a broadcast
-        1-row aggregate instead of a separate eager .count() action
+        an int when the caller holds it (catalog keeps it per index
+        version: a literal, no job), or the corpus DataFrame itself,
+        whose count becomes a keyless aggregate broadcast into this
+        plan, re-run by every job over it (no eager .count() action)
 
     The candidate table (≤ 2×fetch_k rows) needs its own min/max for
     the vector normalization. Its subtree holds the full vector top-k

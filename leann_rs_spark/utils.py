@@ -31,9 +31,16 @@ def with_dense_index(
     idx_col: str = "idx",
     start: int = 0,
     num_partitions: int | None = None,
+    intermediates: list | None = None,
 ) -> DataFrame:
     """Add a dense 0-based (or `start`-based) BIGINT index following the
-    total order of `order_cols`, without a global single-task window."""
+    total order of `order_cols`, without a global single-task window.
+
+    `intermediates`: a caller-owned list that receives the two frames
+    this call persists (the input and its range-partitioned form). The
+    result is lazy, so they cannot be released here; a long-lived
+    driver should unpersist them once the result is written, or every
+    call pins two more cached RDDs."""
     np_ = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     # repartitionByRange runs a SAMPLING pass over the input to pick
     # range bounds, then the real pass — an expensive upstream (the
@@ -46,6 +53,8 @@ def with_dense_index(
         .withColumn("__pid", F.spark_partition_id())
     )
     parted = parted.persist()
+    if intermediates is not None:
+        intermediates += [df, parted]
     counts = {
         r["__pid"]: r["cnt"]
         for r in parted.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()

@@ -15,7 +15,9 @@ into a post-scan filter, or a heap top-k into a full sort, fails CI:
 
 import contextlib
 import io
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from leann_rs_spark.operators.filter_dsl import compile_spark, parse
@@ -723,3 +725,167 @@ def test_local_frame_empty_rows_plans_local_table_scan(spark):
     assert "LocalTableScan" in plan, plan
     assert df.schema == schema
     assert df.count() == 0
+
+
+# ---------------------------------------------------------------------------
+# Warm serve requests: values held per index version, ≤k-row final sort
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def serve_wh(spark, tmp_path_factory):
+    from conftest import SF_SMOKE
+    from leann_rs_spark import catalog
+
+    wh = str(tmp_path_factory.mktemp("serve_plans"))
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").filter(
+        F.col("doc_id") < 40
+    )
+    catalog.build_index(
+        spark, wh, "ix", docs, chunk_size=16, chunk_overlap=4, dims=32
+    )
+    catalog.build_ivf_index(
+        spark, wh, "ix", n_centroids=8, centroids="take", pq_m=8, pq_k=8
+    )
+    return wh
+
+
+_SERVE_KW = {
+    "flat": {"hybrid": False},
+    "hybrid": {"hybrid": True},
+    "expand": {"hybrid": True, "expand": True},
+    "ivf": {"nprobe": 4},
+    "ivfpq": {"nprobe": 4, "use_pq": True},
+}
+
+
+def _warm_action_plans(spark, monkeypatch, wh: str, kind: str) -> list[str]:
+    """The executed plan of every action a warm request runs: the
+    request runs once cold, then again with DataFrame.collect (which
+    head() and take() go through) recording each plan."""
+    from leann_rs_spark import catalog
+
+    search = catalog.search_ivf_index if kind.startswith("ivf") else catalog.search_index
+    search(spark, wh, "ix", "spark join", k=5, **_SERVE_KW[kind]).collect()
+    plans: list[str] = []
+    frame = type(spark.range(0))  # the session's DataFrame class
+    collect = frame.collect
+
+    def recording(self):
+        rows = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    with monkeypatch.context() as m:
+        m.setattr(frame, "collect", recording)
+        assert search(spark, wh, "ix", "spark join", k=5, **_SERVE_KW[kind]).collect()
+    return plans
+
+
+def _depth(line: str) -> int:
+    m = re.search(r"[\w*]", line)
+    return m.start() if m else 0
+
+
+def _keyless_aggs_over_docstats(plan: str) -> list[str]:
+    """Keyless HashAggregates whose input is a scan of `bm25_docstats`
+    (the only table with a doc_len column) with no join in between."""
+    lines = plan.splitlines()
+    found = []
+    for i, line in enumerate(lines):
+        if "HashAggregate(keys=[]" not in line:
+            continue
+        sub = []
+        for below in lines[i + 1:]:
+            if _depth(below) <= _depth(line):
+                break
+            sub.append(below)
+        if any("FileScan" in s and "doc_len" in s for s in sub) and not any(
+            "Join" in s for s in sub
+        ):
+            found.append(line)
+    return found
+
+
+@pytest.mark.parametrize("kind", ["hybrid", "expand"])
+def test_warm_bm25_requests_aggregate_no_docstats(spark, monkeypatch, serve_wh, kind):
+    """BM25 corpus N and avg_doc_len (and hybrid_rerank's n_docs) are
+    held per index version: a warm request runs no keyless aggregate
+    over the docstats scan."""
+    plans = _warm_action_plans(spark, monkeypatch, serve_wh, kind)
+    assert any("doc_len" in p for p in plans)  # still joined for doc_len
+    for plan in plans:
+        assert not _keyless_aggs_over_docstats(plan), plan
+
+
+@pytest.mark.parametrize("kind", ["flat", "ivf", "ivfpq"])
+def test_warm_search_final_sort_plans_no_range_partitioning(
+    spark, monkeypatch, serve_wh, kind
+):
+    """The ≤k-row final sort is a top-k over the hits ⋈ passages scan:
+    no range-partition Exchange, whose bound-sampling job would re-run
+    that scan."""
+    plans = _warm_action_plans(spark, monkeypatch, serve_wh, kind)
+    root = plans[-1].split("== Initial Plan ==\n")[1].lstrip()
+    assert root.startswith("TakeOrderedAndProject"), plans[-1]
+    for plan in plans:
+        assert "rangepartitioning" not in plan, plan
+
+
+def test_warm_ivfpq_request_scans_no_codebook(spark, monkeypatch, serve_wh):
+    """The PQ codebook is held per index version: a warm IVF-PQ request
+    reads no `pq_codebook` (m, cid, cv) scan."""
+    plans = _warm_action_plans(spark, monkeypatch, serve_wh, "ivfpq")
+    assert plans
+    for plan in plans:
+        scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+        assert not [s for s in scans if re.search(r"\bcv#", s)], plan
+
+
+# Gates whose sf0.001 plan still scans Python rows (tools/plan_audit.py
+# `python_scan`), each with where its rows come from. An entry must go
+# once its gate plans a LocalTableScan.
+PYTHON_SCAN_ALLOWED = {
+    "x_analyze_report": "report.corpus_report returns its ~20 collected "
+    "metric rows through spark.createDataFrame",
+    "x_bpe_merges": "the gate returns bpe_train's collected merge list "
+    "through spark.createDataFrame",
+    "x_budget_select": "sampling.budget_select joins its driver-side "
+    "per-shard base offsets (__shard, __base) as a createDataFrame frame",
+    "x_concat_chunk": "sampling.concat_chunk joins its driver-side "
+    "per-shard token offsets (_shard, _base) as a createDataFrame frame",
+    "x_curriculum_blocks": "ends in sampling.concat_chunk: the same "
+    "(_shard, _base) offsets frame",
+    "x_kcenter_sample": "clustering.kcenter_sample returns the picks of "
+    "its driver loop through spark.createDataFrame",
+    "x_mmr_rerank": "search.mmr_search returns the picks of its driver "
+    "loop through spark.createDataFrame",
+}
+
+
+@pytest.mark.parametrize("gate", ["r1_rag_batch", *PYTHON_SCAN_ALLOWED])
+def test_python_row_scans_only_in_allow_listed_gates(spark, gate):
+    """r1_rag_batch (the `ask` request's operator) builds its question
+    frame with utils.local_frame: no Python-row `Scan ExistingRDD`. The
+    allow-listed gates still scan one."""
+    import __spark_entry__ as entry
+    from conftest import SF_SMOKE
+    from tools.plan_audit import python_scans
+
+    jsc = spark.sparkContext._jsc
+    held = set(jsc.getPersistentRDDs().keys())
+    try:
+        df = entry.queries()[gate](spark, SF_SMOKE)
+        formatted = spark._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+    finally:
+        # the gates persist and checkpoint; leave no cached RDD behind
+        # for the later leak checks of this session
+        spark.catalog.clearCache()
+        for rid, rdd in jsc.getPersistentRDDs().items():
+            if rid not in held:
+                rdd.unpersist()
+    if gate in PYTHON_SCAN_ALLOWED:
+        assert python_scans(formatted) > 0, gate
+    else:
+        assert python_scans(formatted) == 0, formatted

@@ -1,6 +1,7 @@
 """The serve path's index reads: partition-path reads of the BM25
-postings and the IVF layout, memoized table schemas, and a request
-loop that leaves no cached frame behind.
+postings and the IVF layout, the values held per index version (table
+schemas, BM25 corpus stats, PQ codebook), and a request loop that
+leaves no cached frame behind.
 
 Every degenerate read (no bucket directory for any query term, no
 query term at all, nprobe > C, files swapped by compaction) is checked
@@ -17,7 +18,9 @@ from leann_rs_spark import catalog
 from leann_rs_spark.functions.vector import duckdb_dot
 from leann_rs_spark.operators.bm25 import duckdb_bm25_scored, tokenize_py
 from leann_rs_spark.operators.embedder import py_hash_embedding
+from leann_rs_spark.operators.filter_dsl import compile_duckdb, parse
 from leann_rs_spark.operators.hybrid import duckdb_hybrid_rerank
+from leann_rs_spark.operators.pq import _duckdb_pq_common
 from leann_rs_spark.operators.query_expansion import duckdb_expansion_terms
 from leann_rs_spark.serving import IndexService
 from conftest import SF_SMOKE
@@ -50,14 +53,21 @@ def index(spark, docs, warehouse):
     return f"{warehouse}/ix"
 
 
-def _duck(base: str) -> duckdb.DuckDBPyConnection:
+def _duck(base: str, where: str = "TRUE") -> duckdb.DuckDBPyConnection:
+    """The index's tables in DuckDB; `where` keeps the passages (and
+    their embeddings) a metadata filter keeps."""
     con = duckdb.connect()
     con.execute(
-        f"CREATE TABLE passages AS SELECT * FROM read_parquet('{base}/passages/*.parquet')"
+        f"CREATE TABLE passages AS SELECT * FROM "
+        f"read_parquet('{base}/passages/*.parquet') WHERE {where}"
     )
     con.execute(
-        f"CREATE TABLE embeddings AS SELECT * FROM read_parquet('{base}/embeddings/*.parquet')"
+        f"CREATE TABLE embeddings AS SELECT * FROM "
+        f"read_parquet('{base}/embeddings/*.parquet') "
+        "WHERE idx IN (SELECT idx FROM passages)"
     )
+    if not os.path.isdir(f"{base}/ivf"):
+        return con
     con.execute(
         f"CREATE TABLE ivf AS SELECT idx, cluster_id, embedding FROM "
         f"read_parquet('{base}/ivf/*/*.parquet', hive_partitioning = true)"
@@ -124,6 +134,23 @@ def _ivf(con, query: str, nprobe: int) -> list[tuple]:
                 LIMIT {nprobe})
             ORDER BY score DESC, idx ASC LIMIT {K}"""
     ).fetchall()
+
+
+def _pq_adc(con, query: str, m: int, n_codebook: int) -> list[tuple]:
+    """ADC-only top-k over every row, take-policy sub-codebooks."""
+    qv = _vec(py_hash_embedding(query, DIMS))
+    common = _duckdb_pq_common(m, n_codebook, DIMS // m, "embeddings", "idx", "embedding")
+    return con.execute(
+        f"""WITH {common}
+            SELECT idx, {duckdb_dot(qv, 'rv')} AS score FROM recon
+            ORDER BY score DESC, idx ASC LIMIT {K}"""
+    ).fetchall()
+
+
+def _assert_same(got, want) -> None:
+    assert [r["idx"] for r in got] == [r[0] for r in want]
+    for r, (_, score) in zip(got, want):
+        assert r["score"] == pytest.approx(score, rel=1e-9, abs=1e-12)
 
 
 def _missing_bucket_query(base: str) -> str:
@@ -193,9 +220,7 @@ def test_degenerate_reads_match_duckdb(spark, docs, warehouse, index, case):
         con = _duck(f"{wh}/cmp")
         want = _ivf(con, query, 1)
     con.close()
-    assert [r["idx"] for r in got] == [r[0] for r in want]
-    for r, (_, score) in zip(got, want):
-        assert r["score"] == pytest.approx(score, rel=1e-9, abs=1e-12)
+    _assert_same(got, want)
 
 
 def test_hybrid_requests_leave_no_cached_frames(spark, index, warehouse):
@@ -206,6 +231,22 @@ def test_hybrid_requests_leave_no_cached_frames(spark, index, warehouse):
     before = len(sc._jsc.getPersistentRDDs())
     for q in ("alpha beta", "spark filter", "gamma", "delta data", "zq1 zq2"):
         assert svc.search(q, top_k=K, hybrid=True)
+    assert len(sc._jsc.getPersistentRDDs()) == before
+
+
+def test_build_and_append_leave_no_cached_frames(spark, docs, warehouse):
+    """The dense-id persists of the passages write are released once
+    the write has consumed them."""
+    sc = spark.sparkContext
+    before = len(sc._jsc.getPersistentRDDs())
+    catalog.build_index(
+        spark, warehouse, "nocache", docs.filter(F.col("doc_id") < 10),
+        chunk_size=16, chunk_overlap=4, dims=DIMS,
+    )
+    catalog.append_to_index(
+        spark, warehouse, "nocache",
+        docs.filter((F.col("doc_id") >= 10) & (F.col("doc_id") < 20)),
+    )
     assert len(sc._jsc.getPersistentRDDs()) == before
 
 
@@ -235,3 +276,88 @@ def test_append_saves_meta_after_ivf_layout(spark, docs, warehouse, monkeypatch)
     assert catalog.load_meta(warehouse, "crash").passage_count == before
     with pytest.raises(ValueError, match="orphaned passages"):
         catalog.append_to_index(spark, warehouse, "crash", more)
+
+
+MEMO_QUERY = "spark join"
+
+
+def test_index_version_values_refresh_on_append_and_rebuild(spark, docs, warehouse):
+    """The BM25 corpus stats and the PQ codebook held for an index
+    version are dropped with it: hybrid, expand and ADC-only IVF-PQ
+    answers match DuckDB after an append to an index already searched
+    (N and avg_doc_len change) and after a rebuild under the same name
+    over other documents (a new codebook too)."""
+    wh, base = warehouse, f"{warehouse}/memo"
+
+    def build(lo: int, hi: int) -> None:
+        catalog.build_index(
+            spark, wh, "memo",
+            docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)),
+            chunk_size=16, chunk_overlap=4, dims=DIMS,
+        )
+        catalog.build_ivf_index(
+            spark, wh, "memo", n_centroids=C, centroids="take", pq_m=8, pq_k=8
+        )
+
+    def check() -> None:
+        con = _duck(base)
+        for expand in (False, True):
+            got = catalog.search_index(
+                spark, wh, "memo", MEMO_QUERY, k=K, hybrid=True, expand=expand
+            ).collect()
+            q = _expanded(con, MEMO_QUERY) if expand else MEMO_QUERY
+            _assert_same(got, _hybrid(con, q))
+        got = catalog.search_ivf_index(
+            spark, wh, "memo", MEMO_QUERY, k=K, nprobe=C, use_pq=True, refine=0
+        ).collect()
+        _assert_same(got, _pq_adc(con, MEMO_QUERY, 8, 8))
+        con.close()
+
+    build(0, 10)
+    check()
+    catalog.append_to_index(
+        spark, wh, "memo",
+        docs.filter((F.col("doc_id") >= 10) & (F.col("doc_id") < 20)),
+    )
+    check()
+    build(20, 30)
+    check()
+
+
+def test_filtered_hybrid_scores_against_filtered_docs(spark, index, warehouse):
+    """With a metadata filter the BM25 corpus is the filtered passages:
+    N and avg_doc_len are theirs, not the index version's held stats."""
+    flt = "doc_id<15"
+    catalog.search_index(spark, warehouse, "ix", MEMO_QUERY, k=K, hybrid=True).collect()
+    got = catalog.search_index(
+        spark, warehouse, "ix", MEMO_QUERY, k=K, hybrid=True, filter_str=flt
+    ).collect()
+    con = _duck(index, compile_duckdb(parse(flt)))
+    want = _hybrid(con, MEMO_QUERY)
+    con.close()
+    assert got
+    _assert_same(got, want)
+
+
+def test_tokenless_corpus_hybrid_and_expand(spark, warehouse):
+    """Passages that all tokenize to nothing: n_docs > 0 and
+    Σ doc_len = 0, so avg_doc_len is 0 and no posting exists."""
+    docs = spark.createDataFrame(
+        [(i, f"src{i}", "a b ! c ? d e") for i in range(6)],
+        "doc_id long, source string, text string",
+    )
+    catalog.build_index(
+        spark, warehouse, "blank", docs, chunk_size=16, chunk_overlap=4, dims=DIMS
+    )
+    base = f"{warehouse}/blank"
+    con = _duck(base)
+    n, total = con.execute(
+        f"SELECT count(*), sum(doc_len) FROM read_parquet('{base}/bm25_docstats/*.parquet')"
+    ).fetchone()
+    assert n > 0 and total == 0
+    for expand in (False, True):
+        got = catalog.search_index(
+            spark, warehouse, "blank", MEMO_QUERY, k=K, hybrid=True, expand=expand
+        ).collect()
+        _assert_same(got, _hybrid(con, MEMO_QUERY))
+    con.close()
