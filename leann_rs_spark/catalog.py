@@ -6,10 +6,23 @@ meta (/root/reference/src/index/builder.rs:100-114, locate.rs:11-36,
 meta.rs:8-43). Here an index is a warehouse prefix of Parquet tables
 plus the same JSON meta:
 
-    <warehouse>/<name>/passages/        (idx, doc_id, source, chunk_*, text)
-    <warehouse>/<name>/embeddings/      (idx, embedding ARRAY<DOUBLE>)
-    <warehouse>/<name>/bm25_{postings,docstats,termstats}/   (optional)
+    <warehouse>/<name>/passages/      (idx, doc_id, source, chunk_*, text)
+    <warehouse>/<name>/embeddings/    (idx, embedding ARRAY<DOUBLE>)
+    <warehouse>/<name>/bm25_{postings,docstats}/   (optional)
     <warehouse>/<name>/meta.json
+  and the optional artifacts, each behind one guard (`_artifact`):
+    ivf/cluster_id=*/ (idx, embedding[, code]), ivf_centroids/
+      [, pq_codebook/]                           build_ivf_index
+    token_index/[cid=*/] (id, token, vec)        build_token_index
+    minhash_sigs/ (id, sig ARRAY<BIGINT>)        build_minhash_index
+
+Compaction (`_compact`) and IVF refresh replace a table by writing a
+sibling directory and swapping it in with two renames, `live →
+live__old` then `tmp → live`; `_recover_swap` heals a crash between
+them (restores a lone `__old`, drops one beside a live table). Writers
+heal the tables they touch on entry — an append into a missing `live`
+would start a table holding only its batch. Readers never heal: one
+that restored `__old` mid-compaction would fail its second rename.
 
 The offset map, ids.txt, and graph artifact all disappear: Parquet
 predicate pushdown replaces the point-seek, the dense `idx` column
@@ -53,6 +66,7 @@ from leann_rs_spark.operators.embedder import embed_documents
 from leann_rs_spark.operators.filter_dsl import compile_spark, parse as parse_filter
 from leann_rs_spark.operators.hybrid import hybrid_rerank, use_hybrid
 from leann_rs_spark.operators.search import exact_search
+from leann_rs_spark.sources.warehouse import _recover_swap, _swap_in
 from leann_rs_spark.utils import local_frame, with_dense_index
 
 META_VERSION = "1.0"  # mirrors IndexMeta.version (meta.rs:10-12)
@@ -125,7 +139,7 @@ def save_meta(warehouse: str, name: str, meta: IndexMeta) -> None:
 class _IndexVersion:
     """Values derived once per index version: table schemas, the BM25
     corpus stats (n_docs, Σ doc_len) and the PQ codebook. Values only —
-    never a DataFrame or a file listing: compact_ivf_index swaps files
+    never a DataFrame or a file listing: a compaction swaps files
     without a meta save (the values stay valid, a listing would not),
     so listings are taken per read."""
 
@@ -225,6 +239,133 @@ def _write_passages(chunks: DataFrame, path: str, mode: str, start: int) -> None
             df.unpersist()
 
 
+def _embed_passages(
+    passages: DataFrame, dims: int, template: str | None, provider=None
+) -> DataFrame:
+    """(idx, embedding) of the passages: through the provider's hardened
+    `embed_pandas` slot when one is given, else the native
+    hash-expression embedder."""
+    if provider is not None:
+        from leann_rs_spark.operators.embedder import embed_pandas
+
+        emb = embed_pandas(
+            passages.select("idx", "text"), provider, prompt_template=template
+        )
+    else:
+        emb = embed_documents(
+            passages.select("idx", "text"),
+            dims=dims,
+            prompt_template=template,
+            id_col="idx",
+        )
+    return emb.select("idx", "embedding")
+
+
+def _query_vector(
+    meta: IndexMeta,
+    query: str,
+    provider=None,
+    hint: str = "pass query_provider= (the same provider used at build time)",
+) -> list[float]:
+    """The query embedded as the index's passages were: the query
+    template prefixed (the reference's embed_with_template is
+    format!("{}{}", template, text), src/embedding/mod.rs:126-143), then
+    the build-time provider or the hash embedder. A provider-built
+    index searched without its provider raises, `hint` saying what to
+    do: the reference reconstructs the provider FROM meta
+    (search.rs:100-117), and a hash query vector scores garbage."""
+    from leann_rs_spark.operators.embedder import py_hash_embedding
+
+    check_embedding_model(meta, strict=False)
+    if meta.embedding_mode != "hash" and provider is None:
+        raise ValueError(
+            f"index built with embedding_mode={meta.embedding_mode!r}; {hint}"
+        )
+    qtext = (meta.query_prompt_template or "") + query
+    if provider is not None:
+        return [float(x) for x in provider.embed([qtext])[0]]
+    return py_hash_embedding(qtext, meta.dimensions)
+
+
+# artifact kind -> its tables; its meta section is
+# meta.extra[f"{kind}_index"], except the IVF layout's keys, which sit
+# in meta.extra itself behind meta.backend == "ivf"
+_ARTIFACT_TABLES = {
+    "ivf": ("ivf", "ivf_centroids"),
+    "token": ("token_index",),
+    "minhash": ("minhash_sigs",),
+}
+
+
+def _artifact(
+    warehouse: str, name: str, kind: str, *, write: bool = False
+) -> tuple[str, IndexMeta, dict]:
+    """(base, meta, info) of index `name`'s `kind` artifact, info being
+    its meta section; ValueError if the index has none. `write=True`
+    (writers only) first heals the artifact's tables from a crashed
+    swap."""
+    base = _index_dir(warehouse, name)
+    meta = load_meta(warehouse, name)
+    if kind == "ivf":
+        if meta.backend != "ivf":
+            raise ValueError(
+                f"index {name!r} has no IVF layout (backend={meta.backend})"
+            )
+        info = meta.extra
+    else:
+        info = meta.extra.get(f"{kind}_index")
+        if not info:
+            raise ValueError(
+                f"index {name!r} has no {kind} index — run build_{kind}_index"
+            )
+    if write:
+        for table in _ARTIFACT_TABLES[kind]:
+            _recover_swap(f"{base}/{table}")
+    return base, meta, info
+
+
+def _replace(path: str, op: str, write) -> None:
+    """Replace the table at `path`: `write(tmp)` fills the sibling
+    `<path>__<op>` (dropping a crashed run's leftover first), which is
+    then swapped in."""
+    tmp = f"{path}__{op}"
+    if os.path.isdir(tmp):
+        shutil.rmtree(tmp)
+    write(tmp)
+    _swap_in(path, tmp)
+
+
+def _compact(
+    spark: SparkSession, path: str, n_out: int, partition_col: str | None = None
+) -> int:
+    """Rewrite the healed table at `path` as `n_out` files — one per
+    directory when hash-partitioned on and written partitionBy
+    `partition_col` — so the files each append added are merged (the
+    Delta OPTIMIZE / FAISS index-merge analog). Row set, schema and
+    layout are unchanged. Returns the .parquet file count before."""
+    n_files = sum(
+        f.endswith(".parquet") for _, _, files in os.walk(path) for f in files
+    )
+    df = spark.read.parquet(path)
+    if partition_col is None:
+        write = df.repartition(n_out).write.parquet
+    else:
+        write = df.repartition(n_out, partition_col).write.partitionBy(
+            partition_col
+        ).parquet
+    _replace(path, "compacting", write)
+    return n_files
+
+
+def _files_for(rows: int) -> int:
+    """Files of an unpartitioned compaction: ~1M rows (~100 MB of token
+    rows at dims 32-64, ~150 MB of 16-hash signatures) per file, near
+    spark.sql.files.maxPartitionBytes, so the compacted scan still
+    splits across executors (SCALE: one ~300 MB token file at 10× gave
+    3 input splits and 40 s serving vs ~24 s fragmented)."""
+    return max(1, -(-int(rows) // 1_000_000))
+
+
 def build_index(
     spark: SparkSession,
     warehouse: str,
@@ -280,22 +421,12 @@ def build_index(
 
     passages = spark.read.parquet(f"{base}/passages")
     if provider is not None:
-        from leann_rs_spark.operators.embedder import embed_pandas, probe_dimensions
+        from leann_rs_spark.operators.embedder import probe_dimensions
 
         dims = probe_dimensions(provider)
-        emb = embed_pandas(
-            passages.select("idx", "text"),
-            provider,
-            prompt_template=doc_prompt_template,
-        ).select("idx", "embedding")
-    else:
-        emb = embed_documents(
-            passages.select("idx", "text"),
-            dims=dims,
-            prompt_template=doc_prompt_template,
-            id_col="idx",
-        ).select("idx", "embedding")
-    emb.write.mode("overwrite").parquet(f"{base}/embeddings")
+    _embed_passages(passages, dims, doc_prompt_template, provider).write.mode(
+        "overwrite"
+    ).parquet(f"{base}/embeddings")
 
     if with_bm25:
         _write_bm25(passages, base, mode="overwrite")
@@ -310,15 +441,11 @@ def build_index(
         extra={"bm25": with_bm25},
     )
     if embedding_model is not None:
-        from dataclasses import asdict as _asdict
-
         # resolved registry config travels with the index; the model
         # NAME lands in meta.embedding_model only on the provider path
         # (hash mode keeps its "hash-v2" version pin for
         # check_embedding_model)
-        meta.extra["model_config"] = {
-            "model": embedding_model, **_asdict(cfg)
-        }
+        meta.extra["model_config"] = {"model": embedding_model, **asdict(cfg)}
     if provider is not None:
         meta.embedding_mode = embedding_mode if embedding_mode != "hash" else "custom"
         meta.embedding_model = embedding_model or type(provider).__name__
@@ -404,6 +531,8 @@ def append_to_index(
         )
     check_embedding_model(meta, strict=True)
     base = _index_dir(warehouse, name)
+    if meta.backend == "ivf" and not meta.is_pruned:
+        _artifact(warehouse, name, "ivf", write=True)  # heal, before any write
     # Orphan detection: a prior append that crashed after writing
     # passages but before save_meta leaves rows with idx >=
     # meta.passage_count. This batch's dense ids would COLLIDE with
@@ -445,22 +574,9 @@ def append_to_index(
     added = passages.count()
 
     if not meta.is_pruned:
-        if provider is not None:
-            from leann_rs_spark.operators.embedder import embed_pandas
-
-            emb = embed_pandas(
-                passages.select("idx", "text"),
-                provider,
-                prompt_template=meta.doc_prompt_template,
-            ).select("idx", "embedding")
-        else:
-            emb = embed_documents(
-                passages.select("idx", "text"),
-                dims=meta.dimensions,
-                prompt_template=meta.doc_prompt_template,
-                id_col="idx",
-            ).select("idx", "embedding")
-        emb.write.mode("append").parquet(f"{base}/embeddings")
+        _embed_passages(
+            passages, meta.dimensions, meta.doc_prompt_template, provider
+        ).write.mode("append").parquet(f"{base}/embeddings")
 
     if meta.extra.get("bm25"):
         _write_bm25(passages, base, mode="append")
@@ -485,37 +601,14 @@ def append_to_index(
             # the rebuild result (first-n rows are append-invariant),
             # for "kmeans" the codebook simply does not drift with the
             # batch — pass ivf_append="rebuild" to re-learn it.
-            from leann_rs_spark.operators.ann import ivf_assign
-
-            cents = spark.read.parquet(f"{base}/ivf_centroids")
-            new_emb = spark.read.parquet(f"{base}/embeddings").filter(
-                F.col("idx") >= old_count
+            _write_ivf(
+                spark.read.parquet(f"{base}/embeddings").filter(
+                    F.col("idx") >= old_count
+                ),
+                spark.read.parquet(f"{base}/ivf_centroids"),
+                None if pq_m is None else _pq_codebook(spark, base),
+                meta, base, "append",
             )
-            assigned = ivf_assign(new_emb, cents, id_col="idx")
-            if pq_m is not None:
-                from leann_rs_spark.operators.pq import (
-                    codebook_from_rows,
-                    pq_bits,
-                    pq_encode_col,
-                    pq_pack_col,
-                )
-
-                cb = codebook_from_rows(
-                    spark.read.parquet(f"{base}/pq_codebook").collect()
-                )
-                bits = pq_bits(int(meta.extra.get("pq_k", 16)))
-                assigned = assigned.withColumn(
-                    "code",
-                    pq_pack_col(
-                        pq_encode_col(F.col("embedding"), cb),
-                        int(pq_m),
-                        bits,
-                    ),
-                )
-            n_centroids = int(meta.extra.get("ivf_centroids", 16))
-            assigned.repartition(n_centroids, "cluster_id").write.mode(
-                "append"
-            ).partitionBy("cluster_id").parquet(f"{base}/ivf")
         else:
             meta = build_ivf_index(
                 spark, warehouse, name,
@@ -595,26 +688,19 @@ def prune_index(warehouse: str, name: str) -> IndexMeta:
     """S14: drop the embeddings table, flag meta (src/cli/prune.rs:17-79,
     src/index/embeddings.rs:162-168). Search falls back to recompute."""
     meta = load_meta(warehouse, name)
-    emb_dir = os.path.join(_index_dir(warehouse, name), "embeddings")
-    if os.path.isdir(emb_dir):
-        shutil.rmtree(emb_dir)
+    base = _index_dir(warehouse, name)
     meta.is_pruned = True
     # the IVF layout embeds its own vector copies; dropping the source
     # embeddings means it can no longer be rebuilt (or appended to), so
-    # drop it too and fall back to the exact/recompute read path
-    ivf_dir = os.path.join(_index_dir(warehouse, name), "ivf")
-    if os.path.isdir(ivf_dir):
-        shutil.rmtree(ivf_dir)
-        cdir = os.path.join(_index_dir(warehouse, name), "ivf_centroids")
-        if os.path.isdir(cdir):
-            shutil.rmtree(cdir)
+    # drop it too and fall back to the exact/recompute read path. PQ
+    # codes live inside the layout — a surviving pq_m in meta would pass
+    # search_ivf_index's use_pq guard and die on the missing path
+    # later — so the codebook goes too
+    if os.path.isdir(f"{base}/ivf"):
         meta.backend = "exact"
-    # PQ codes live inside the ivf layout — with it gone, a surviving
-    # pq_m in meta would pass search_ivf_index's use_pq guard and die
-    # on the missing path later; drop the codebook artifact too
-    pq_dir = os.path.join(_index_dir(warehouse, name), "pq_codebook")
-    if os.path.isdir(pq_dir):
-        shutil.rmtree(pq_dir)
+    for table in ("embeddings", "ivf", "ivf_centroids", "pq_codebook"):
+        if os.path.isdir(f"{base}/{table}"):
+            shutil.rmtree(f"{base}/{table}")
     meta.extra.pop("pq_m", None)
     meta.extra.pop("pq_k", None)
     save_meta(warehouse, name, meta)
@@ -646,39 +732,48 @@ def _read_postings(spark: SparkSession, base: str, query: str) -> DataFrame:
     return _read(spark, base, "bm25_postings", ("term_bucket", buckets))
 
 
-def _embeddings_for_search(
-    spark: SparkSession, base: str, meta: IndexMeta, passages: DataFrame,
-    provider=None,
-) -> DataFrame:
-    if meta.is_pruned:
-        # Recompute plan (src/index/recompute.rs:52-123): re-embed at
-        # query time. Native-expression embedding keeps this JVM-side;
-        # provider-built indexes recompute through the embed_pandas
-        # slot with the same provider (recompute.rs:85-93's batched
-        # provider calls).
-        if provider is not None:
-            from leann_rs_spark.operators.embedder import embed_pandas
-
-            return embed_pandas(
-                passages.select("idx", "text"),
-                provider,
-                prompt_template=meta.doc_prompt_template,
-            ).select("idx", "embedding")
-        return embed_documents(
-            passages.select("idx", "text"),
-            dims=meta.dimensions,
-            prompt_template=meta.doc_prompt_template,
-            id_col="idx",
-        ).select("idx", "embedding")
-    return _read(spark, base, "embeddings")
+def _bm25(
+    spark: SparkSession, base: str, query: str, n: int,
+    keep: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame, int | DataFrame]:
+    """BM25 of `query` over the persisted postings → (scored, its top n
+    with score > 0, n_docs). `keep` (idx) restricts the corpus to those
+    docs: df, N and avg_doc_len are then theirs, computed per request,
+    and n_docs is their docstats frame. The top-n cut ranks the
+    6dp-rounded score (BM25 term sums are order-sensitive in the last
+    ulp across engines; the rounded rank is the one the DuckDB twins
+    use). `scored` is not persisted: its consumers (candidate join,
+    min/max stats, top-n cut) sit in one plan that reuses the scoring
+    exchange, and a per-request persist would pin a cached frame per
+    request in a long-lived server."""
+    postings = _read_postings(spark, base, query)
+    docstats = _read(spark, base, "bm25_docstats")
+    if keep is not None:
+        postings = postings.join(keep, "idx", "left_semi")
+        docstats = docstats.join(keep, "idx", "left_semi")
+        stats, n_docs = None, docstats
+    else:
+        stats = _bm25_stats(spark, base)
+        n_docs = stats[0]
+    termstats = postings.groupBy("term").agg(F.count("*").alias("df"))
+    scored = score_query(
+        postings, docstats, termstats, query, id_col="idx", corpus_stats=stats
+    )
+    top = (
+        scored.filter(F.col("score") > 0.0)
+        .orderBy(F.round(F.col("score"), 6).desc(), F.col("idx").asc())
+        .limit(n)
+    )
+    return scored, top, n_docs
 
 
 def _assemble(hits: DataFrame, passages: DataFrame, k: int) -> DataFrame:
-    """The ≤k hits joined to their passages, (score DESC, idx ASC). The
-    sort is a top-k (TakeOrderedAndProject: a heap per scan task, merged
-    by the one job that runs the scan); a global orderBy would plan a
-    range-partition Exchange whose bound-sampling job re-runs the
-    passages scan below it."""
+    """The top k of the hits joined to their passages, (score DESC, idx
+    ASC); every hit must have a passage. The sort is a top-k
+    (TakeOrderedAndProject: a heap per scan task, merged by the one job
+    that runs the scan); a global orderBy would plan a range-partition
+    Exchange whose bound-sampling job re-runs the passages scan below
+    it."""
     return (
         F.broadcast(hits)
         .join(passages, "idx")
@@ -718,17 +813,11 @@ def search_index(
     append them; the EXPANDED query then drives both the vector
     embedding and the hybrid BM25 side, as in the reference.
     """
-    from leann_rs_spark.operators.embedder import HashEmbedder, py_hash_embedding
-
     meta = load_meta(warehouse, name)
-    check_embedding_model(meta, strict=False)
     base = _index_dir(warehouse, name)
-    passages_all = _read(spark, base, "passages")
-    passages = passages_all
-
+    passages = passages_all = _read(spark, base, "passages")
     if filter_str:
-        pred: Column | None = compile_spark(parse_filter(filter_str))
-        passages = passages.filter(pred)
+        passages = passages.filter(compile_spark(parse_filter(filter_str)))
 
     if hybrid is None:
         hybrid = use_hybrid(query, auto_hybrid=True)  # Q15 gate
@@ -743,22 +832,8 @@ def search_index(
         if should_expand(query):
             # BM25 over the persisted postings with the ORIGINAL query
             # (no metadata filter — the reference's bm25_search scans
-            # all passages, search.rs:174). Candidate selection on the
-            # 6dp-rounded score: BM25 term sums are order-sensitive in
-            # the last ulp across engines, and the rounded rank keeps
-            # the mined-term set oracle-reproducible.
-            postings0 = _read_postings(spark, base, query)
-            docstats0 = _read(spark, base, "bm25_docstats")
-            termstats0 = postings0.groupBy("term").agg(F.count("*").alias("df"))
-            scored0 = score_query(
-                postings0, docstats0, termstats0, query, id_col="idx",
-                corpus_stats=_bm25_stats(spark, base),
-            )
-            top5 = (
-                scored0.filter(F.col("score") > 0.0)
-                .orderBy(F.round(F.col("score"), 6).desc(), F.col("idx").asc())
-                .limit(5)
-            )
+            # all passages, search.rs:174)
+            _, top5, _ = _bm25(spark, base, query, 5)
             texts = F.broadcast(top5.select("idx")).join(passages_all, "idx")
             # ≤5 mined terms collected driver-side — the reference's
             # expand_from_passages is likewise a driver-side step over
@@ -770,24 +845,17 @@ def search_index(
             if new_terms:
                 search_query = f"{query} {' '.join(new_terms)}"
 
-    # prefix concatenation — the reference's embed_with_template is
-    # format!("{}{}", template, text) (src/embedding/mod.rs:126-143),
-    # matching the doc-side with_prompt_template
-    qtext = (meta.query_prompt_template or "") + search_query
-    if meta.embedding_mode != "hash" and query_provider is None:
-        # the reference reconstructs the provider FROM meta before
-        # searching (search.rs:100-117); a provider-built index
-        # searched with the hash query embedder scores garbage
-        raise ValueError(
-            f"index built with embedding_mode={meta.embedding_mode!r}; "
-            "pass query_provider= (the same provider used at build time)"
+    qv = _query_vector(meta, search_query, query_provider)
+    if meta.is_pruned:
+        # Recompute plan (src/index/recompute.rs:52-123): re-embed at
+        # query time — JVM-side for the native expression embedder, and
+        # through the same provider for a provider-built index
+        # (recompute.rs:85-93's batched provider calls)
+        emb = _embed_passages(
+            passages, meta.dimensions, meta.doc_prompt_template, query_provider
         )
-    if query_provider is not None:
-        qv = [float(x) for x in query_provider.embed([qtext])[0]]
     else:
-        qv = py_hash_embedding(qtext, meta.dimensions)
-
-    emb = _embeddings_for_search(spark, base, meta, passages, provider=query_provider)
+        emb = _read(spark, base, "embeddings")
     if filter_str:
         # pushdown before scoring (src/index/recompute.rs:66-79): keep
         # only embeddings whose passage survived the filter
@@ -797,36 +865,12 @@ def search_index(
     vec_hits = exact_search(emb, qv, k=fetch_k, id_col="idx", metric="ip")
 
     if hybrid:
-        postings = _read_postings(spark, base, search_query)
-        docstats = _read(spark, base, "bm25_docstats")
-        if filter_str:
-            # the corpus is the filtered docs: df, N and avg_doc_len are
-            # theirs, computed per request
-            keep = passages.select("idx")
-            postings = postings.join(keep, "idx", "left_semi")
-            docstats = docstats.join(keep, "idx", "left_semi")
-            stats, n_docs = None, docstats
-        else:
-            stats = _bm25_stats(spark, base)
-            n_docs = stats[0]
-        termstats = postings.groupBy("term").agg(F.count("*").alias("df"))
         # the EXPANDED query drives the BM25 side (search.rs:204, the
-        # opts.with_hybrid(search_query) call). Not persisted: its three
-        # consumers (candidate join, min/max stats, top-k cut) sit in
-        # one plan that reuses the scoring exchange, and a per-request
-        # persist would pin a cached frame per request in a long-lived
-        # server.
-        scored = score_query(
-            postings, docstats, termstats, search_query, id_col="idx",
-            corpus_stats=stats,
-        )
-        # candidate cut on the 6dp-rounded score (cross-engine
-        # determinism; sub-1e-6 reorderings are fp noise) — the same
-        # rank the duckdb_hybrid_rerank twin uses
-        bm25_top = (
-            scored.filter(F.col("score") > 0.0)
-            .orderBy(F.round(F.col("score"), 6).desc(), F.col("idx").asc())
-            .limit(fetch_k)
+        # opts.with_hybrid(search_query) call); filtered, the corpus is
+        # the filtered docs
+        scored, bm25_top, n_docs = _bm25(
+            spark, base, search_query, fetch_k,
+            passages.select("idx") if filter_str else None,
         )
         combined = hybrid_rerank(
             vec_hits.withColumnRenamed("idx", "doc_id"),
@@ -835,14 +879,14 @@ def search_index(
             n_docs,
             alpha=hybrid_alpha,
         )
-        hits = (
-            combined.select(F.col("doc_id").alias("idx"), F.col("combined").alias("score"))
-            .orderBy(F.col("score").desc(), F.col("idx").asc())
-            .limit(k)
+        hits = combined.select(
+            F.col("doc_id").alias("idx"), F.col("combined").alias("score")
         )
     else:
-        hits = vec_hits.orderBy(F.col("score").desc(), F.col("idx").asc()).limit(k)
-
+        hits = vec_hits
+    # every hit is a row of `passages` — its own embeddings and postings
+    # score it, semi-joined to it when filtered — so _assemble's top-k
+    # is the one cut
     return _assemble(hits, passages, k)
 
 
@@ -904,32 +948,18 @@ def build_ivf_index(
     Layout: <base>/ivf/cluster_id=<c>/*.parquet + <base>/ivf_centroids/
     [+ <base>/pq_codebook/ when pq_m is set].
     """
-    from leann_rs_spark.operators.ann import (
-        ivf_assign,
-        kmeans_centroids,
-        take_centroids,
-    )
-
     base = _index_dir(warehouse, name)
     meta = load_meta(warehouse, name)
     emb = spark.read.parquet(f"{base}/embeddings")
     if n_centroids is None:
         # size the codebook to the corpus (see suggest_ivf_centroids)
         n_centroids = suggest_ivf_centroids(meta.passage_count)
-    if centroids == "kmeans":
-        cents = kmeans_centroids(emb, n_centroids, id_col="idx", seed=seed)
-    elif centroids == "take":
-        cents = take_centroids(emb, n_centroids, id_col="idx")
-    else:
-        raise ValueError(f"unknown centroid policy {centroids!r}")
-    assigned = ivf_assign(emb, cents, id_col="idx")
+    cents = _centroids(emb, centroids, n_centroids, seed)
+    cb = None
     if pq_m is not None:
         from leann_rs_spark.operators.pq import (
             codebook_to_rows,
             kmeans_subcodebooks,
-            pq_bits,
-            pq_encode_col,
-            pq_pack_col,
             take_subcodebooks,
         )
 
@@ -937,18 +967,6 @@ def build_ivf_index(
             cb = kmeans_subcodebooks(emb, m=pq_m, k=pq_k, seed=seed)
         else:
             cb = take_subcodebooks(emb, m=pq_m, k=pq_k, id_col="idx")
-        bits = pq_bits(pq_k)
-        # expression encode, deliberately: the numpy-kernel form
-        # (pq_encode(kernel=True), bit-identical) measured 2.5x SLOWER
-        # here — Arrow transfer of the vector column dominates while
-        # the interpreted HOF runs at ~10 µs/row across cores. Measured
-        # at 5k and 20k rows, both directions (SURVEY round-4 log).
-        assigned = assigned.withColumn(
-            "code",
-            pq_pack_col(
-                pq_encode_col(F.col("embedding"), cb), pq_m, bits
-            ),
-        )
         local_frame(
             spark,
             codebook_to_rows(cb),
@@ -963,15 +981,10 @@ def build_ivf_index(
         cb_dir = f"{base}/pq_codebook"
         if os.path.isdir(cb_dir):
             shutil.rmtree(cb_dir)
-    # shuffle on the partition column before the partitioned write
-    # (same shape as the postings write): one task per cluster
-    # directory instead of every task writing a file into every one
-    assigned.repartition(n_centroids, "cluster_id").write.mode(
-        "overwrite"
-    ).partitionBy("cluster_id").parquet(f"{base}/ivf")
+    meta.extra["ivf_centroids"] = n_centroids
+    _write_ivf(emb, cents, cb, meta, base, "overwrite")
     cents.write.mode("overwrite").parquet(f"{base}/ivf_centroids")
     meta.backend = "ivf"
-    meta.extra["ivf_centroids"] = n_centroids
     meta.extra["ivf_policy"] = centroids
     meta.extra["ivf_seed"] = seed
     # the layout's birth size: ivf_drift_report splits occupancy into
@@ -981,10 +994,58 @@ def build_ivf_index(
     return meta
 
 
+def _centroids(
+    emb: DataFrame, policy: str, n_centroids: int, seed: int
+) -> DataFrame:
+    """The coarse IVF codebook of `emb` under `policy` ("kmeans" or
+    "take", see build_ivf_index)."""
+    from leann_rs_spark.operators.ann import kmeans_centroids, take_centroids
+
+    if policy == "kmeans":
+        return kmeans_centroids(emb, n_centroids, id_col="idx", seed=seed)
+    if policy == "take":
+        return take_centroids(emb, n_centroids, id_col="idx")
+    raise ValueError(f"unknown centroid policy {policy!r}")
+
+
+def _write_ivf(
+    emb: DataFrame, cents: DataFrame, cb: list | None, meta: IndexMeta,
+    base: str, mode: str,
+) -> None:
+    """Write `emb`'s rows into the IVF layout: each row's nearest
+    centroid as cluster_id and, given the PQ codebook `cb`, its packed
+    code (meta's pq_m / pq_k). The one encoder of build and
+    incremental append, so both lay rows out identically."""
+    from leann_rs_spark.operators.ann import ivf_assign
+
+    rows = ivf_assign(emb, cents, id_col="idx")
+    if cb is not None:
+        from leann_rs_spark.operators.pq import pq_bits, pq_encode_col, pq_pack_col
+
+        # expression encode, deliberately: the numpy-kernel form
+        # (pq_encode(kernel=True), bit-identical) measured 2.5x SLOWER
+        # here — Arrow transfer of the vector column dominates while
+        # the interpreted HOF runs at ~10 µs/row across cores. Measured
+        # at 5k and 20k rows, both directions (SURVEY round-4 log).
+        bits = pq_bits(int(meta.extra.get("pq_k", 16)))
+        rows = rows.withColumn(
+            "code",
+            pq_pack_col(
+                pq_encode_col(F.col("embedding"), cb),
+                int(meta.extra["pq_m"]),
+                bits,
+            ),
+        )
+    # shuffle on the partition column before the partitioned write
+    # (same shape as the postings write): one task per cluster
+    # directory instead of every task writing a file into every one
+    rows.repartition(
+        int(meta.extra.get("ivf_centroids", 16)), "cluster_id"
+    ).write.mode(mode).partitionBy("cluster_id").parquet(f"{base}/ivf")
+
+
 def ivf_drift_report(
-    spark: SparkSession,
-    warehouse: str,
-    name: str,
+    spark: SparkSession, warehouse: str, name: str
 ) -> DataFrame:
     """Monitoring for the frozen-codebook append path: per-cluster
     occupancy split into rows present when the layout was derived
@@ -1000,12 +1061,7 @@ def ivf_drift_report(
     drift_ratio) — shares are of their own era's total; drift_ratio is
     NULL for clusters with no built mass (new-territory clusters, the
     strongest rebuild signal of all)."""
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    if meta.backend != "ivf":
-        raise ValueError(
-            f"index {name!r} has no IVF layout (backend={meta.backend})"
-        )
+    base, meta, _ = _artifact(warehouse, name, "ivf")
     built = int(meta.extra.get("ivf_built_count", meta.passage_count))
     ivf = spark.read.parquet(f"{base}/ivf")
     per = ivf.groupBy("cluster_id").agg(
@@ -1015,22 +1071,18 @@ def ivf_drift_report(
     tot = per.agg(
         F.sum("n_built").alias("__tb"), F.sum("n_appended").alias("__ta")
     )
+    built_share = F.col("n_built") / F.greatest("__tb", F.lit(1))
+    appended_share = F.col("n_appended") / F.greatest("__ta", F.lit(1))
     return (
         per.crossJoin(F.broadcast(tot))
         .select(
             "cluster_id",
             "n_built",
             "n_appended",
-            (F.col("n_built") / F.greatest("__tb", F.lit(1))).alias(
-                "built_share"
-            ),
-            (F.col("n_appended") / F.greatest("__ta", F.lit(1))).alias(
-                "appended_share"
-            ),
+            built_share.alias("built_share"),
+            appended_share.alias("appended_share"),
             F.when(
-                F.col("n_built") > 0,
-                (F.col("n_appended") / F.greatest("__ta", F.lit(1)))
-                / (F.col("n_built") / F.greatest("__tb", F.lit(1))),
+                F.col("n_built") > 0, appended_share / built_share
             ).alias("drift_ratio"),
         )
         .orderBy("cluster_id")
@@ -1038,46 +1090,15 @@ def ivf_drift_report(
 
 
 def compact_ivf_index(
-    spark: SparkSession,
-    warehouse: str,
-    name: str,
+    spark: SparkSession, warehouse: str, name: str
 ) -> int:
-    """Rewrite the IVF layout so each cluster directory holds one file
-    — the maintenance pass that pairs with incremental append (every
-    `append_to_index` adds up to one file per touched cluster, and
-    after N appends a probe reads N small files per cluster instead of
-    one row-group-pruned scan; the Delta OPTIMIZE / FAISS index-merge
-    analog). Row set, schema, and search results are unchanged —
-    pinned by tests.
-
-    Writes to a sibling directory and swaps, so a crash mid-compact
-    leaves the live layout intact. Returns the number of files before
-    compaction."""
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    if meta.backend != "ivf":
-        raise ValueError(
-            f"index {name!r} has no IVF layout (backend={meta.backend})"
-        )
-    from leann_rs_spark.sources.warehouse import _recover_swap, _swap_in
-
-    ivf_dir = f"{base}/ivf"
-    _recover_swap(ivf_dir)  # heal a crash window from a previous compact
-    n_files = sum(
-        1
-        for root, _, files in os.walk(ivf_dir)
-        for f in files
-        if f.endswith(".parquet")
-    )
+    """`_compact` the IVF layout to one file per cluster directory:
+    every incremental `append_to_index` adds up to one file per touched
+    cluster, and after N appends a probe reads N small files per
+    cluster. Returns the number of files before compaction."""
+    base, meta, _ = _artifact(warehouse, name, "ivf", write=True)
     n_centroids = int(meta.extra.get("ivf_centroids", 16))
-    tmp = f"{base}/ivf__compacting"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)  # leftover from a crashed compact
-    spark.read.parquet(ivf_dir).repartition(
-        n_centroids, "cluster_id"
-    ).write.partitionBy("cluster_id").parquet(tmp)
-    _swap_in(ivf_dir, tmp)
-    return n_files
+    return _compact(spark, f"{base}/ivf", n_centroids, "cluster_id")
 
 
 def refresh_ivf_index(
@@ -1123,23 +1144,11 @@ def refresh_ivf_index(
     Returns {total_rows, moved_rows, moved_fraction,
     affected_clusters, n_centroids}.
     """
-    from leann_rs_spark.operators.ann import (
-        ivf_assign,
-        kmeans_centroids,
-        take_centroids,
-    )
-    from leann_rs_spark.sources.warehouse import _recover_swap, _swap_in
+    from leann_rs_spark.operators.ann import ivf_assign, lloyd_refine_centroids
 
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    if meta.backend != "ivf":
-        raise ValueError(
-            f"index {name!r} has no IVF layout (backend={meta.backend})"
-        )
+    base, meta, _ = _artifact(warehouse, name, "ivf", write=True)
     ivf_dir = f"{base}/ivf"
     cents_dir = f"{base}/ivf_centroids"
-    _recover_swap(ivf_dir)
-    _recover_swap(cents_dir)
     policy = meta.extra.get("ivf_policy", "take")
     if n_centroids is None:
         n_centroids = int(meta.extra.get("ivf_centroids", 16))
@@ -1156,15 +1165,11 @@ def refresh_ivf_index(
         # geometry actually drifted — a cold re-learn lands in a
         # different local optimum with permuted labels and moved 63%
         # of rows after a 3% append (measured, SCALE ivf_refresh).
-        from leann_rs_spark.operators.ann import lloyd_refine_centroids
-
         cents = lloyd_refine_centroids(
             emb, old_cents_df, id_col="idx", iters=3
         )
-    elif policy == "kmeans":
-        cents = kmeans_centroids(emb, n_centroids, id_col="idx", seed=seed)
     else:
-        cents = take_centroids(emb, n_centroids, id_col="idx")
+        cents = _centroids(emb, policy, n_centroids, seed)
     # LABEL ALIGNMENT (cold paths only — warm start already preserves
     # labels): a re-learned kmeans codebook permutes cluster ids
     # arbitrarily, so without alignment ~every row "moves" and the
@@ -1235,10 +1240,8 @@ def refresh_ivf_index(
         .distinct()
         .collect()
     )
-    if affected:
-        tmp = f"{base}/ivf__refreshing"
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)  # leftover from a crashed refresh
+
+    def write_layout(tmp: str) -> None:
         (
             assigned.filter(F.col("cluster_id").isin(affected))
             .drop("__old")
@@ -1257,13 +1260,11 @@ def refresh_ivf_index(
                         os.path.join(ivf_dir, d, fname),
                         os.path.join(tmp, d, fname),
                     )
-        _swap_in(ivf_dir, tmp)
+
+    if affected:
+        _replace(ivf_dir, "refreshing", write_layout)
     assigned.unpersist()
-    ctmp = f"{base}/ivf_centroids__refreshing"
-    if os.path.isdir(ctmp):
-        shutil.rmtree(ctmp)
-    cents.write.parquet(ctmp)
-    _swap_in(cents_dir, ctmp)
+    _replace(cents_dir, "refreshing", cents.write.parquet)
     meta.extra["ivf_centroids"] = n_centroids
     meta.extra["ivf_seed"] = seed
     meta.extra["ivf_built_count"] = meta.passage_count
@@ -1300,22 +1301,17 @@ def search_ivf_index(
     against the embeddings table. The 100 TB read path: scan bytes =
     (nprobe/C)·N·8 plus refine·k point reads."""
     from leann_rs_spark.operators.ann import ivf_probe_ids
-    from leann_rs_spark.operators.embedder import py_hash_embedding
 
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    if meta.backend != "ivf":
-        raise ValueError(f"index {name!r} has no IVF layout (backend={meta.backend})")
+    base, meta, _ = _artifact(warehouse, name, "ivf")
     if use_pq and "pq_m" not in meta.extra:
         raise ValueError(
             f"index {name!r} has no PQ codes — rebuild with "
             f"build_ivf_index(pq_m=...)"
         )
-    # prefix concatenation, identical to search_index (and the
-    # reference's embed_with_template, src/embedding/mod.rs:126-143) —
-    # both paths must embed the identical query vector for a given index
-    qtext = (meta.query_prompt_template or "") + query
-    qv = py_hash_embedding(qtext, meta.dimensions)
+    qv = _query_vector(
+        meta, query, hint="search_ivf_index embeds queries with the hash "
+        "embedder only; search it with search_index(query_provider=…)",
+    )
     probe = ivf_probe_ids(_read(spark, base, "ivf_centroids"), qv, nprobe)
     probed = _read(spark, base, "ivf", ("cluster_id", probe))
     if use_pq:
@@ -1420,14 +1416,41 @@ def build_token_index(
         tok.unpersist()
     else:
         tok.write.mode("overwrite").parquet(f"{base}/token_index")
+    return _record_artifact(spark, warehouse, name, "token", info, dims)
+
+
+def _record_artifact(
+    spark: SparkSession, warehouse: str, name: str, kind: str, info: dict,
+    dims: int,
+) -> IndexMeta:
+    """Count a freshly written `kind` artifact's rows into `info` and
+    save it as the index's meta section; a standalone artifact (no
+    index under `name` yet) starts its own meta."""
     try:
         meta = load_meta(warehouse, name)
     except FileNotFoundError:
-        meta = IndexMeta(backend="token", dimensions=dims)
-    info["rows"] = spark.read.parquet(f"{base}/token_index").count()
-    meta.extra["token_index"] = info
+        meta = IndexMeta(backend=kind, dimensions=dims)
+    table = _ARTIFACT_TABLES[kind][0]
+    info["rows"] = spark.read.parquet(
+        f"{_index_dir(warehouse, name)}/{table}"
+    ).count()
+    meta.extra[f"{kind}_index"] = info
     save_meta(warehouse, name, meta)
     return meta
+
+
+def _append_rows(df: DataFrame, path: str, partition_col: str | None = None) -> int:
+    """Append `df` to the table at `path` (partitionBy `partition_col`
+    when given) and return its row count; `df` is persisted across the
+    count and the append sink, its two consumers."""
+    df = df.persist()
+    n = df.count()
+    w = df.write.mode("append")
+    if partition_col is not None:
+        w = w.partitionBy(partition_col)
+    w.parquet(path)
+    df.unpersist()
+    return n
 
 
 # Token-index embedding models whose vectors are CORPUS-INDEPENDENT —
@@ -1472,13 +1495,7 @@ def append_to_token_index(
         token_embeddings,
     )
 
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    info = meta.extra.get("token_index")
-    if not info:
-        raise ValueError(
-            f"index {name!r} has no token index — run build_token_index"
-        )
+    base, meta, info = _artifact(warehouse, name, "token", write=True)
     model = info.get("model", "hash")
     if model not in TOKEN_MODELS_APPENDABLE:
         raise ValueError(
@@ -1495,73 +1512,30 @@ def append_to_token_index(
         dims=info["dims"],
         cache=False,
     )
-    if "centroids" in info:
+    routed = "centroids" in info
+    if routed:
         tok = assign_token_cids(
             tok, info["centroids"], id_col=info["id_col"]
         )
-    tok = tok.persist()  # count + append sink both consume it
-    n_new = tok.count()
-    w = tok.write.mode("append")
-    if "centroids" in info:
-        w = w.partitionBy("cid")
-    w.parquet(f"{base}/token_index")
-    tok.unpersist()
-    info["rows"] = info["rows"] + n_new
+    info["rows"] += _append_rows(
+        tok, f"{base}/token_index", "cid" if routed else None
+    )
     save_meta(warehouse, name, meta)
     return meta
 
 
 def compact_token_index(
-    spark: SparkSession,
-    warehouse: str,
-    name: str,
+    spark: SparkSession, warehouse: str, name: str
 ) -> int:
-    """Rewrite the token-index layout to one file per partition — the
-    maintenance pass pairing with `append_to_token_index` (each append
-    adds a file — per touched cid directory on a routed index — and
-    after N appends a query batch reads N small files where one
-    row-group-pruned scan would do; `compact_ivf_index`'s ruling
-    applied to the engine's largest serving artifact). Row set and
-    serving results are unchanged — pinned by tests.
-
-    Writes to a sibling directory and swaps (crash mid-compact leaves
-    the live layout intact). Returns the file count before
-    compaction."""
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    info = meta.extra.get("token_index")
-    if not info:
-        raise ValueError(
-            f"index {name!r} has no token index — run build_token_index"
-        )
-    from leann_rs_spark.sources.warehouse import _recover_swap, _swap_in
-
-    tok_dir = f"{base}/token_index"
-    _recover_swap(tok_dir)  # heal a crash window from a previous compact
-    n_files = sum(
-        1
-        for root, _, files in os.walk(tok_dir)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    tmp = f"{base}/token_index__compacting"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)  # leftover from a crashed compact
-    df = spark.read.parquet(tok_dir)
+    """`_compact` the token index to one file per cid directory (routed)
+    or `_files_for(rows)` files: each `append_to_token_index` adds a
+    file (per touched cid directory), and after N appends a query batch
+    reads N small files. Returns the file count before compaction."""
+    base, _, info = _artifact(warehouse, name, "token", write=True)
+    path = f"{base}/token_index"
     if "centroids" in info:
-        df.repartition(int(info["n_centroids"]), "cid").write.partitionBy(
-            "cid"
-        ).parquet(tmp)
-    else:
-        # bounded file count, ~1M token rows (~100 MB at dims=32-64)
-        # per file: close to spark.sql.files.maxPartitionBytes, so the
-        # compacted scan still splits across executors. SCALE measured
-        # the over-compacted alternative: one ~300 MB file at the 10×
-        # fixture → 3 input splits → 40 s serving vs ~24 s fragmented.
-        n_out = max(1, -(-int(info["rows"]) // 1_000_000))
-        df.repartition(n_out).write.parquet(tmp)
-    _swap_in(tok_dir, tmp)
-    return n_files
+        return _compact(spark, path, int(info["n_centroids"]), "cid")
+    return _compact(spark, path, _files_for(info["rows"]))
 
 
 def load_token_index(
@@ -1569,13 +1543,7 @@ def load_token_index(
 ) -> tuple[DataFrame, dict]:
     """Read the persisted token index → ((id_col, token, vec) frame,
     its meta dict {dims, id_col, rows}). Raises if the index has none."""
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    info = meta.extra.get("token_index")
-    if not info:
-        raise ValueError(
-            f"index {name!r} has no token index — run build_token_index"
-        )
+    base, _, info = _artifact(warehouse, name, "token")
     return spark.read.parquet(f"{base}/token_index"), info
 
 
@@ -1622,20 +1590,13 @@ def build_minhash_index(
         shingle_k=shingle_k, num_hashes=num_hashes,
     )
     sigs.write.mode("overwrite").parquet(f"{base}/minhash_sigs")
-    try:
-        meta = load_meta(warehouse, name)
-    except FileNotFoundError:
-        meta = IndexMeta(backend="minhash", dimensions=num_hashes)
-    rows = spark.read.parquet(f"{base}/minhash_sigs").count()
-    meta.extra["minhash_index"] = {
+    info = {
         "shingle_k": shingle_k,
         "num_hashes": num_hashes,
         "bands": bands,
         "id_col": id_col,
-        "rows": rows,
     }
-    save_meta(warehouse, name, meta)
-    return meta
+    return _record_artifact(spark, warehouse, name, "minhash", info, num_hashes)
 
 
 def append_to_minhash_index(
@@ -1655,63 +1616,25 @@ def append_to_minhash_index(
     x_minhash_index_dedup gate proves it through serving)."""
     from leann_rs_spark.operators.dedup import _minhash_signatures_bulk
 
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    info = meta.extra.get("minhash_index")
-    if not info:
-        raise ValueError(
-            f"index {name!r} has no minhash index — run build_minhash_index"
-        )
+    base, meta, info = _artifact(warehouse, name, "minhash", write=True)
     sigs = _minhash_signatures_bulk(
         new_docs, id_col=info["id_col"], text_col=text_col,
         shingle_k=info["shingle_k"], num_hashes=info["num_hashes"],
-    ).persist()  # count + append sink both consume it
-    n_new = sigs.count()
-    sigs.write.mode("append").parquet(f"{base}/minhash_sigs")
-    sigs.unpersist()
-    info["rows"] = info["rows"] + n_new
+    )
+    info["rows"] += _append_rows(sigs, f"{base}/minhash_sigs")
     save_meta(warehouse, name, meta)
     return meta
 
 
 def compact_minhash_index(
-    spark: SparkSession,
-    warehouse: str,
-    name: str,
+    spark: SparkSession, warehouse: str, name: str
 ) -> int:
-    """Rewrite the signature-table layout to a bounded file count —
-    the maintenance pass pairing with `append_to_minhash_index`
-    (every ingest batch adds files; after N appends the banded join's
-    corpus scan opens N small files). Same crash-safe sibling-swap as
-    `compact_token_index`; ~1M sig rows per output file (a 16-hash
-    BIGINT sig row is ~150 B, so files land near
-    spark.sql.files.maxPartitionBytes and the compacted scan still
-    splits across executors — the over-compaction lesson). Row set
-    unchanged; returns the file count before compaction."""
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    info = meta.extra.get("minhash_index")
-    if not info:
-        raise ValueError(
-            f"index {name!r} has no minhash index — run build_minhash_index"
-        )
-    from leann_rs_spark.sources.warehouse import _recover_swap, _swap_in
-
-    sig_dir = f"{base}/minhash_sigs"
-    _recover_swap(sig_dir)
-    n_files = sum(
-        1
-        for _, _, files in os.walk(sig_dir)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    tmp = f"{base}/minhash_sigs__compacting"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-    n_out = max(1, -(-int(info["rows"]) // 1_000_000))
-    spark.read.parquet(sig_dir).repartition(n_out).write.parquet(tmp)
-    _swap_in(sig_dir, tmp)
-    return n_files
+    """`_compact` the signature table to `_files_for(rows)` files: every
+    `append_to_minhash_index` batch adds files, and after N appends the
+    banded join's corpus scan opens N small files. Returns the file
+    count before compaction."""
+    base, _, info = _artifact(warehouse, name, "minhash", write=True)
+    return _compact(spark, f"{base}/minhash_sigs", _files_for(info["rows"]))
 
 
 def load_minhash_index(
@@ -1721,11 +1644,5 @@ def load_minhash_index(
     meta dict {shingle_k, num_hashes, id_col, rows}). The frame is the
     `corpus_sigs` input of `minhash_near_dups_incremental` and the
     signature side of any banding config at n_hashes ≤ num_hashes."""
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    info = meta.extra.get("minhash_index")
-    if not info:
-        raise ValueError(
-            f"index {name!r} has no minhash index — run build_minhash_index"
-        )
+    base, _, info = _artifact(warehouse, name, "minhash")
     return spark.read.parquet(f"{base}/minhash_sigs"), info

@@ -400,6 +400,15 @@ def test_provider_built_index_lifecycle(spark, docs, warehouse):
         (r["doc_id"], r["text"], r["score"]) for r in want
     ]
 
+    # the IVF read path embeds queries with the hash embedder only: on a
+    # provider-built index it refuses rather than score a hash vector
+    # against provider vectors
+    catalog.build_ivf_index(
+        spark, warehouse, "providx", n_centroids=2, centroids="take"
+    )
+    with pytest.raises(ValueError, match=r"search_index\(query_provider="):
+        catalog.search_ivf_index(spark, warehouse, "providx", "data", k=3)
+
     # pruned provider index recomputes through the provider slot
     catalog.prune_index(warehouse, "providx")
     pruned = catalog.search_index(
@@ -932,3 +941,196 @@ def test_minhash_index_degenerate_inputs(spark, tmp_path):
         for r in load_minhash_index(spark, wh2, "s")[0].collect()
     )
     assert after == before
+
+
+# --- the shared artifact lifecycle: guard, writer heal, _compact -----------
+
+# artifact -> (its table, compact entry point, partition column or None)
+_ARTIFACTS = {
+    "ivf": ("ivf", catalog.compact_ivf_index, "cluster_id"),
+    "token_routed": ("token_index", catalog.compact_token_index, "cid"),
+    "token": ("token_index", catalog.compact_token_index, None),
+    "minhash": ("minhash_sigs", catalog.compact_minhash_index, None),
+}
+
+
+def _lifecycle_docs(spark, lo, hi):
+    return (
+        spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+        .filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+    )
+
+
+@pytest.fixture(scope="module")
+def pristine(spark, tmp_path_factory):
+    """One freshly built index per artifact (docs 0-9, no append yet);
+    each test copies the one it needs."""
+    wh = str(tmp_path_factory.mktemp("pristine"))
+    first = _lifecycle_docs(spark, 0, 10)
+    catalog.build_index(
+        spark, wh, "ivf", first, chunk_size=16, chunk_overlap=4, dims=32,
+        with_bm25=False,
+    )
+    catalog.build_ivf_index(
+        spark, wh, "ivf", n_centroids=2, centroids="take", pq_m=8, pq_k=4
+    )
+    catalog.build_token_index(spark, wh, "token_routed", first, dims=16,
+                              n_centroids=4)
+    catalog.build_token_index(spark, wh, "token", first, dims=16)
+    catalog.build_minhash_index(spark, wh, "minhash", first, num_hashes=8)
+    return wh
+
+
+def _copy_index(pristine, tmp_path, artifact):
+    import shutil
+
+    wh = str(tmp_path / "wh")
+    shutil.copytree(f"{pristine}/{artifact}", f"{wh}/{artifact}")
+    return wh
+
+
+def _append_batch(spark, wh, artifact, lo, hi):
+    batch = _lifecycle_docs(spark, lo, hi)
+    if artifact == "ivf":
+        catalog.append_to_index(spark, wh, artifact, batch)
+    elif artifact.startswith("token"):
+        catalog.append_to_token_index(spark, wh, artifact, batch)
+    else:
+        catalog.append_to_minhash_index(spark, wh, artifact, batch)
+
+
+def _rows(spark, path):
+    df = spark.read.parquet(path)
+    return sorted(repr(r) for r in df.select(sorted(df.columns)).collect())
+
+
+def _parquet_files(path):
+    import os
+
+    return sorted(
+        os.path.relpath(os.path.join(root, f), path)
+        for root, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+def _meta_rows(wh, artifact):
+    meta = catalog.load_meta(wh, artifact)
+    if artifact == "ivf":
+        return meta.passage_count
+    kind = "token" if artifact.startswith("token") else "minhash"
+    return meta.extra[f"{kind}_index"]["rows"]
+
+
+@pytest.mark.parametrize("crash", ["compacting_leftover", "lone_old"])
+@pytest.mark.parametrize("artifact", list(_ARTIFACTS))
+def test_compact_heals_and_keeps_rows_and_layout(
+    spark, pristine, tmp_path, artifact, crash
+):
+    """Every compaction runs through `_compact`: after an append has
+    fragmented the table, a crashed compaction's leftover
+    `<table>__compacting` is discarded, and a crashed swap's lone
+    `<table>__old` (no live table) is restored before compacting. The
+    row set is unchanged, the returned count is the pre-compaction file
+    count, and a partitioned table keeps its directories with one file
+    each (an unpartitioned one collapses to one file at this size)."""
+    import os
+
+    table, compact, part_col = _ARTIFACTS[artifact]
+    wh = _copy_index(pristine, tmp_path, artifact)
+    _append_batch(spark, wh, artifact, 10, 20)
+    live = f"{wh}/{artifact}/{table}"
+    rows, files = _rows(spark, live), _parquet_files(live)
+    dirs = sorted(d for d in os.listdir(live) if "=" in d)
+    if crash == "lone_old":
+        os.rename(live, live + "__old")
+    else:
+        os.makedirs(live + "__compacting/junk=1")
+        open(live + "__compacting/junk=1/part-0.parquet", "w").close()
+
+    assert compact(spark, wh, artifact) == len(files)
+
+    for leftover in ("__old", "__compacting"):
+        assert not os.path.exists(live + leftover)
+    assert _rows(spark, live) == rows
+    after = _parquet_files(live)
+    if part_col is None:
+        assert len(after) == 1 and "/" not in after[0]
+    else:
+        assert sorted(d for d in os.listdir(live) if "=" in d) == dirs
+        assert all(d.startswith(f"{part_col}=") for d in dirs)
+        assert len(after) == len(dirs)  # one file per directory
+
+
+@pytest.mark.parametrize("artifact", ["ivf", "token", "minhash"])
+def test_append_after_crashed_swap_keeps_the_artifact(
+    spark, pristine, tmp_path, artifact
+):
+    """A swap that crashed between its renames leaves only
+    `<table>__old`. An append is a writer: it must heal the table
+    before writing, or it starts a fresh table holding only its batch
+    (and the next heal would delete the corpus in `__old`)."""
+    import os
+
+    table = _ARTIFACTS[artifact][0]
+    wh = _copy_index(pristine, tmp_path, artifact)
+    live = f"{wh}/{artifact}/{table}"
+    old_rows = spark.read.parquet(live).count()
+    os.rename(live, live + "__old")
+
+    _append_batch(spark, wh, artifact, 10, 20)
+
+    batch = _meta_rows(wh, artifact) - _meta_rows(pristine, artifact)
+    assert batch > 0
+    assert old_rows == _meta_rows(pristine, artifact)
+    assert spark.read.parquet(live).count() == old_rows + batch
+    assert not os.path.exists(live + "__old")
+
+
+_NO_IVF = "index 'bare' has no IVF layout (backend=exact)"
+_NO_TOKEN = "index 'bare' has no token index — run build_token_index"
+_NO_MINHASH = "index 'bare' has no minhash index — run build_minhash_index"
+
+
+@pytest.mark.parametrize(
+    "call, message",
+    [
+        (lambda s, wh, d: catalog.ivf_drift_report(s, wh, "bare"), _NO_IVF),
+        (lambda s, wh, d: catalog.compact_ivf_index(s, wh, "bare"), _NO_IVF),
+        (lambda s, wh, d: catalog.refresh_ivf_index(s, wh, "bare"), _NO_IVF),
+        (lambda s, wh, d: catalog.search_ivf_index(s, wh, "bare", "q"),
+         _NO_IVF),
+        (lambda s, wh, d: catalog.append_to_token_index(s, wh, "bare", d),
+         _NO_TOKEN),
+        (lambda s, wh, d: catalog.compact_token_index(s, wh, "bare"),
+         _NO_TOKEN),
+        (lambda s, wh, d: catalog.load_token_index(s, wh, "bare"), _NO_TOKEN),
+        (lambda s, wh, d: catalog.append_to_minhash_index(s, wh, "bare", d),
+         _NO_MINHASH),
+        (lambda s, wh, d: catalog.compact_minhash_index(s, wh, "bare"),
+         _NO_MINHASH),
+        (lambda s, wh, d: catalog.load_minhash_index(s, wh, "bare"),
+         _NO_MINHASH),
+    ],
+    ids=[
+        "ivf_drift_report", "compact_ivf_index", "refresh_ivf_index",
+        "search_ivf_index", "append_to_token_index", "compact_token_index",
+        "load_token_index", "append_to_minhash_index",
+        "compact_minhash_index", "load_minhash_index",
+    ],
+)
+def test_artifact_entry_points_refuse_a_missing_artifact(
+    spark, tmp_path, call, message
+):
+    """Each entry point of an optional artifact refuses an index without
+    it, with the artifact's message, before touching any table."""
+    import os
+    import re
+
+    wh = str(tmp_path / "wh")
+    catalog.save_meta(wh, "bare", catalog.IndexMeta())
+    docs = spark.range(1).selectExpr("id AS doc_id", "'x y z' AS text")
+    with pytest.raises(ValueError, match=f"^{re.escape(message)}$"):
+        call(spark, wh, docs)
+    assert os.listdir(f"{wh}/bare") == ["meta.json"]

@@ -38,7 +38,8 @@ def build(base: str, out: str) -> None:
     # dims: unchanged
     for t in ("region", "nation"):
         copy(f"SELECT * FROM '{base}/{t}.parquet'", t)
-    # documents / embeddings / events: the scale_check build_10x shape
+    # documents / embeddings / events: the near-dup stress
+    # tools/scale_check.py times at 10×
     copy(
         f"""SELECT doc_id + 5000*k.x AS doc_id,
                    CASE WHEN k.x = 0 THEN text

@@ -1,10 +1,11 @@
 #!/usr/bin/env python3
 """Reproduce the SURVEY §10 10× scale validation.
 
-Builds a 10× corpus in a scratch dir by near-duplicating the sf0.1
-tables (each doc gains 9 planted near-dups via a ' v<k>' suffix — a
-dup-heavy-crawl stress; events shift ids and time), then times the
-operator families at 1× and 10× and prints one JSON line per run.
+Builds a 10× corpus in a scratch dir with tools/make_sf1.py's
+generator (each sf0.1 doc gains 9 planted near-dups via a ' v<k>'
+suffix — a dup-heavy-crawl stress; events shift ids and time), then
+times the operator families at 1× and 10× and prints one JSON line per
+run.
 
 Usage:
     python3 tools/scale_check.py [--base /root/testdata/sf0.1]
@@ -22,42 +23,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def build_10x(base: str, scratch: str) -> None:
-    import duckdb
-
-    os.makedirs(scratch, exist_ok=True)
-    con = duckdb.connect()
-    con.execute(f"""
-        COPY (
-          SELECT doc_id + 5000*k.x AS doc_id,
-                 CASE WHEN k.x = 0 THEN text
-                      ELSE text || ' v' || k.x::varchar END AS text,
-                 lang, source, n_chars
-          FROM '{base}/documents.parquet', unnest(generate_series(0,9)) k(x)
-        ) TO '{scratch}/documents.parquet' (FORMAT parquet)
-    """)
-    con.execute(f"""
-        COPY (
-          SELECT vec_id + 5000*k.x AS vec_id, embedding, label
-          FROM '{base}/embeddings.parquet', unnest(generate_series(0,9)) k(x)
-        ) TO '{scratch}/embeddings.parquet' (FORMAT parquet)
-    """)
-    con.execute(f"""
-        COPY (
-          SELECT event_id + 100000*k.x AS event_id,
-                 ts + (k.x * INTERVAL '7 days') AS ts,
-                 user_id + 10000*k.x AS user_id, event_type, value, props
-          FROM '{base}/events.parquet', unnest(generate_series(0,9)) k(x)
-        ) TO '{scratch}/events.parquet' (FORMAT parquet)
-    """)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--base", default="/root/testdata/sf0.1")
     ap.add_argument("--scratch", default="/tmp/leann-scale10")
     args = ap.parse_args()
-    build_10x(args.base, args.scratch)
+    from tools.make_sf1 import build
+
+    build(args.base, args.scratch)
 
     import __spark_entry__ as entry
     from leann_rs_spark.session import get_spark
