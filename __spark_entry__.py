@@ -131,7 +131,7 @@ from leann_rs_spark.operators.sampling import (
 from leann_rs_spark.operators.search import batch_search, exact_search
 from leann_rs_spark.sources.tables import read_events
 from leann_rs_spark.streaming.sessionize import duckdb_sessionize, sessionize_events
-from leann_rs_spark.utils import local_frame, with_dense_index
+from leann_rs_spark.utils import local_frame, materialize, with_dense_index
 
 SMOKE_SF = "/root/testdata/sf0.001"
 
@@ -298,23 +298,9 @@ def x_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    inter: list = []
-    curve = ivf_recall_curve(
-        assigned, cents, queries, k=_RECALL_K, nprobes=_RECALL_SWEEP,
-        intermediates=inter,
+    return ivf_recall_curve(
+        assigned, cents, queries, k=_RECALL_K, nprobes=_RECALL_SWEEP
     )
-    return _materialize_curve(spark, curve, inter)
-
-
-def _materialize_curve(spark: SparkSession, curve: DataFrame, inter: list) -> DataFrame:
-    """Collect a (sweep-sized, ≤ a few rows) curve and unpersist the
-    Q×N candidate frames behind it: the selfcheck/bench session runs
-    every gate in ONE Spark session, and leaving each sweep's persisted
-    candidates pinned shrinks the storage pool for later gates."""
-    rows = curve.collect()
-    for df in inter:
-        df.unpersist()
-    return local_frame(spark, rows, curve.schema)
 
 
 def x_ivf_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -334,7 +320,9 @@ def x_ivf_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ride ONE scored Q×N table and ONE exact ground truth
     (ann.ivf_recall_curves_multi) — the per-codebook loop would pay
     the dot products and the exact window twice."""
-    from leann_rs_spark.operators.ann import ivf_recall_curves_multi
+    from leann_rs_spark.operators.ann import (
+        ivf_drift_shares, ivf_recall_curves_multi,
+    )
 
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
     base = emb.select(
@@ -372,36 +360,19 @@ def x_ivf_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         fresh_c,
         extra_cols=["cluster_id__stale"],
     ).withColumnRenamed("cluster_id", "cluster_id__fresh")
-    inter: list = [corpus]
     curve = ivf_recall_curves_multi(
         assigned_multi,
         {"stale": stale_c, "fresh": fresh_c},
-        queries, k=_RECALL_K, nprobes=_RECALL_SWEEP, intermediates=inter,
+        queries, k=_RECALL_K, nprobes=_RECALL_SWEEP,
     )
     # drift report over the stale assignment: built era = even ids,
-    # appended era = odd ids — the catalog.ivf_drift_report formula
-    per = assigned_multi.withColumnRenamed(
-        "cluster_id__stale", "cluster_id"
-    ).groupBy("cluster_id").agg(
-        F.count(F.when(F.col("vec_id") % 2 == 0, 1)).alias("n_built"),
-        F.count(F.when(F.col("vec_id") % 2 == 1, 1)).alias("n_appended"),
-    )
-    tot = per.agg(
-        F.sum("n_built").alias("__tb"), F.sum("n_appended").alias("__ta")
-    )
-    drift_max = (
-        per.crossJoin(F.broadcast(tot))
-        .select(
-            F.when(
-                F.col("n_built") > 0,
-                (F.col("n_appended") / F.greatest("__ta", F.lit(1)))
-                / (F.col("n_built") / F.greatest("__tb", F.lit(1))),
-            ).alias("dr")
-        )
-        .agg((F.round(F.max("dr"), 6) + F.lit(0.0)).alias("drift_max_r"))
-    )
+    # appended era = odd ids (catalog.ivf_drift_report's helper)
+    drift_max = ivf_drift_shares(
+        assigned_multi.withColumnRenamed("cluster_id__stale", "cluster_id"),
+        F.col("vec_id") % 2 == 0,
+    ).agg((F.round(F.max("drift_ratio"), 6) + F.lit(0.0)).alias("drift_max_r"))
     out = curve.crossJoin(F.broadcast(drift_max)).orderBy("nprobe")
-    return _materialize_curve(spark, out, inter)
+    return materialize(out, [corpus])
 
 
 _PQ_M = 8
@@ -446,12 +417,9 @@ def x_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    inter: list = []
-    curve = pq_refine_recall_curve(
-        _fan(emb), cb, queries, k=_RECALL_K, refines=_PQ_REFINES,
-        intermediates=inter,
+    return pq_refine_recall_curve(
+        _fan(emb), cb, queries, k=_RECALL_K, refines=_PQ_REFINES
     )
-    return _materialize_curve(spark, curve, inter)
 
 
 _IVFPQ_REFINE = 3
@@ -640,7 +608,8 @@ def x_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from leann_rs_spark.operators.bpe import bpe_train
 
     merges = bpe_train(_fan(_docs(spark, sf_dir)), _BPE_MERGES)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, l, r, f) for i, (l, r, f) in enumerate(merges)],
         "step bigint, lsym string, rsym string, pair_freq bigint",
     ).orderBy("step")
@@ -770,7 +739,7 @@ def x_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_grams",
         (F.round("log_weight", 6) + F.lit(0.0)).alias("logw_r"),
     ).orderBy("doc_id")
-    return _materialize_curve(spark, out, inter)
+    return materialize(out, inter)
 
 
 def x_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1308,14 +1277,11 @@ def x_dedup_pr_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     by design, it is the measured WARNING row)."""
     from leann_rs_spark.operators.dedup import minhash_band_sweep
 
-    inter: list = []
-    out = minhash_band_sweep(
+    return minhash_band_sweep(
         _fan(_pr_corpus(spark, sf_dir, every=20)),
         _pr_truth(spark, sf_dir, every=20),
         configs=((16, 4), (16, 8), (32, 16), (32, 32)),
-        intermediates=inter,
     )
-    return _materialize_curve(spark, out, inter)
 
 
 def x_dup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3119,7 +3085,7 @@ def x_select_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         seldocs.withColumn("n_tokens", token_count("text")),
         "n_tokens", 512, "doc_id", n_shards=8, id_cols=["doc_id"],
     ).orderBy("doc_id")
-    return _materialize_curve(spark, packed, inter)
+    return materialize(packed, inter)
 
 
 _TOPNGRAM_N = 3
@@ -3692,8 +3658,8 @@ def x_li_probe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator turns to trade scan bytes for recall (the x_ivf_recall
     analog on the multi-vector rung). ONE rescore of the max-probe
     candidate set with each pair's best probe rank riding along;
-    sweep points are filters + one window over that frame (the
-    sweep-explode lesson), truth is one exact batch run."""
+    every sweep point ranks in one window over that frame (ann's sweep
+    core), truth is one exact batch run."""
     from leann_rs_spark.catalog import load_token_index
     from leann_rs_spark.operators.late_interaction import (
         li_probe_recall_curve,
@@ -3702,12 +3668,10 @@ def x_li_probe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok, info = load_token_index(
         spark, _fx_token_ivf_wh(spark, sf_dir), "tok"
     )
-    inter: list = []
-    curve = li_probe_recall_curve(
+    return li_probe_recall_curve(
         tok, info["centroids"], _LI_BATCH,
-        k=5, nprobes=_LI_PROBES, dims=info["dims"], intermediates=inter,
+        k=5, nprobes=_LI_PROBES, dims=info["dims"],
     )
-    return _materialize_curve(spark, curve, inter)
 
 
 def x_token_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3803,7 +3767,7 @@ def _tfidf_artifacts(spark: SparkSession, sf_dir: str):
         lambda: tfidf_corpus_stats(_fan(docs))[0], "leann-fx-tfidfdf-",
     )
     n_docs = _fx_value(("tfidf_nd", sf_dir), lambda: docs.count())
-    nd = spark.createDataFrame([(n_docs,)], "_n bigint")
+    nd = local_frame(spark, [(n_docs,)], "_n bigint")
     emb = _fx_frame(
         spark, ("tfidf_emb", sf_dir),
         lambda: tfidf_embed_documents(
@@ -3828,9 +3792,7 @@ def x_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from leann_rs_spark.operators.embedder import tfidf_embed_documents
 
     dfreq, nd, emb = _tfidf_artifacts(spark, sf_dir)
-    qdf = spark.createDataFrame(
-        [(0, _TFIDF_QUERY)], "doc_id bigint, text string"
-    )
+    qdf = local_frame(spark, [(0, _TFIDF_QUERY)], "doc_id bigint, text string")
     qv = tfidf_embed_documents(
         qdf, dims=_EMBED_DIMS, dfreq=dfreq, n_docs_df=nd
     ).select(F.col("embedding").alias("qv"))
@@ -3844,7 +3806,7 @@ def x_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_TFIDF_K)
         .select("doc_id", (F.round("score", 6) + F.lit(0.0)).alias("score_r"))
     )
-    return _materialize_curve(spark, out, [dfreq])
+    return materialize(out, [dfreq])
 
 
 def x_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3862,7 +3824,7 @@ def x_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.round("xent", 6) + F.lit(0.0)).alias("xent_r"),
     ).orderBy("doc_id")
     # release lm_score's internal bigram persist: selfcheck runs every
-    # gate in ONE session (the _materialize_curve lesson)
+    # gate in ONE session (the utils.materialize lesson)
     res = res.persist()
     res.count()
     for df in inter:

@@ -1061,32 +1061,12 @@ def ivf_drift_report(
     drift_ratio) — shares are of their own era's total; drift_ratio is
     NULL for clusters with no built mass (new-territory clusters, the
     strongest rebuild signal of all)."""
+    from leann_rs_spark.operators.ann import ivf_drift_shares
+
     base, meta, _ = _artifact(warehouse, name, "ivf")
     built = int(meta.extra.get("ivf_built_count", meta.passage_count))
     ivf = spark.read.parquet(f"{base}/ivf")
-    per = ivf.groupBy("cluster_id").agg(
-        F.count(F.when(F.col("idx") < built, 1)).alias("n_built"),
-        F.count(F.when(F.col("idx") >= built, 1)).alias("n_appended"),
-    )
-    tot = per.agg(
-        F.sum("n_built").alias("__tb"), F.sum("n_appended").alias("__ta")
-    )
-    built_share = F.col("n_built") / F.greatest("__tb", F.lit(1))
-    appended_share = F.col("n_appended") / F.greatest("__ta", F.lit(1))
-    return (
-        per.crossJoin(F.broadcast(tot))
-        .select(
-            "cluster_id",
-            "n_built",
-            "n_appended",
-            built_share.alias("built_share"),
-            appended_share.alias("appended_share"),
-            F.when(
-                F.col("n_built") > 0, appended_share / built_share
-            ).alias("drift_ratio"),
-        )
-        .orderBy("cluster_id")
-    )
+    return ivf_drift_shares(ivf, F.col("idx") < built).orderBy("cluster_id")
 
 
 def compact_ivf_index(

@@ -1015,6 +1015,12 @@ def cmd_tune(args) -> int:
 
     spark = _spark(args)
     meta = load_meta(args.warehouse, args.name)
+
+    def geometric(n: int) -> list[int]:
+        # 1, 2, 4, ... below C, then C: resolution across the whole
+        # operating range whatever the (auto-sized) codebook is
+        return [1 << i for i in range(n.bit_length()) if 1 << i < n] + [n]
+
     if getattr(args, "li_query", None):
         # late-interaction rung: probe-width recall/candidate curve of
         # the centroid-ROUTED token index (li_probe_recall_curve) —
@@ -1033,15 +1039,11 @@ def cmd_tune(args) -> int:
             )
             return 1
         n_cent = int(info["n_centroids"])
-        sweep, p = [], 1
-        while p < n_cent:
-            sweep.append(p)
-            p *= 2
-        sweep.append(n_cent)
         queries = list(enumerate(args.li_query))
         curve = li_probe_recall_curve(
             tok, info["centroids"], queries, k=args.top_k,
-            nprobes=sweep, dims=info["dims"], id_col=info["id_col"],
+            nprobes=geometric(n_cent), dims=info["dims"],
+            id_col=info["id_col"],
         ).collect()
         print(_json.dumps({
             "index": args.name,
@@ -1070,18 +1072,9 @@ def cmd_tune(args) -> int:
         .select(F.col("idx").alias("query_id"), F.col("embedding").alias("query_vec"))
     )
     n_cent = int(meta.extra.get("ivf_centroids", 16))
-    # geometric sweep 1,2,4,... up to C, C included: resolution across
-    # the whole operating range whatever the (auto-sized) codebook is
-    sweep, p = [], 1
-    while p < n_cent:
-        sweep.append(p)
-        p *= 2
-    sweep.append(n_cent)
-    cached: list = []
     curve = ivf_recall_curve(
         assigned.select("idx", "embedding", "cluster_id"), cents, queries,
-        k=args.top_k, nprobes=sweep, id_col="idx",
-        intermediates=cached,
+        k=args.top_k, nprobes=geometric(n_cent), id_col="idx",
     ).collect()
     report = {
         "index": args.name,
@@ -1091,8 +1084,6 @@ def cmd_tune(args) -> int:
         "queries": args.queries,
         "nprobe_recall": {str(r["nprobe"]): r["recall_r"] for r in curve},
     }
-    for df in cached:
-        df.unpersist()
     if "pq_m" in meta.extra:
         from leann_rs_spark.operators.pq import (
             codebook_from_rows,
@@ -1102,16 +1093,13 @@ def cmd_tune(args) -> int:
         cb = codebook_from_rows(
             spark.read.parquet(f"{base}/pq_codebook").collect()
         )
-        cached2: list = []
         pq_curve = pq_refine_recall_curve(
             emb, cb, queries, k=args.top_k, refines=[1, 2, 4, 8],
-            id_col="idx", intermediates=cached2,
+            id_col="idx",
         ).collect()
         report["pq_refine_recall"] = {
             str(r["refine"]): r["recall_r"] for r in pq_curve
         }
-        for df in cached2:
-            df.unpersist()
     print(_json.dumps(report, indent=2))
     return 0
 

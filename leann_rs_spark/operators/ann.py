@@ -34,7 +34,9 @@ centroid policy.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+import math
+
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from leann_rs_spark.functions.vector import (
     cosine, duckdb_cosine, duckdb_dot, dot, lit_vec, lit_vec_sql,
@@ -46,6 +48,7 @@ from leann_rs_spark.operators.dedup import (
 from leann_rs_spark.operators.search import (
     _duckdb_q, _duckdb_topk, _duckdb_topk_batch, exact_search, topk_batch,
 )
+from leann_rs_spark.utils import local_frame, materialize
 
 
 def take_centroids(
@@ -210,8 +213,6 @@ def kmeans_centroids(
     table. Unit-norm centroids make the dot ranking a cosine Voronoi
     over directions (spherical k-means), restoring balance.
     """
-    import math
-
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -219,15 +220,24 @@ def kmeans_centroids(
         array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
     )
     model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(feats)
+    return _centroid_frame(
+        vectors.sparkSession, enumerate(model.clusterCenters())
+    )
 
-    def norm(c) -> list[float]:
+
+def _centroid_frame(spark, rows) -> DataFrame:
+    """(centroid_id, raw vector) rows → a C-row (centroid_id,
+    centroid_vec) LocalTableScan frame, each vector spherically
+    normalized (1e-12 norm clamp)."""
+
+    def unit(c) -> list[float]:
         n = max(math.sqrt(sum(float(x) * float(x) for x in c)), 1e-12)
         return [float(x) / n for x in c]
 
-    spark = vectors.sparkSession
-    return spark.createDataFrame(
-        [(i, norm(c)) for i, c in enumerate(model.clusterCenters())],
-        schema="centroid_id bigint, centroid_vec array<double>",
+    return local_frame(
+        spark,
+        [(int(i), unit(c)) for i, c in rows],
+        "centroid_id bigint, centroid_vec array<double>",
     )
 
 
@@ -255,8 +265,6 @@ def lloyd_refine_centroids(
     Scale shape: iters × (assign pass + one (C·dims)-key aggregate);
     centroids stay a C-row DataFrame end to end — nothing corpus-sized
     ever reaches the driver."""
-    import math
-
     for _ in range(iters):
         assigned = ivf_assign(
             vectors.select(id_col, vec_col), centroids,
@@ -304,16 +312,9 @@ def lloyd_refine_centroids(
         # assign pass per round (the measured iterative-loop rule).
         # Spherical normalization (1e-12 clamp, kmeans_centroids
         # parity) happens here, once per round.
-        rows = merged.collect()
-        spark = vectors.sparkSession
-
-        def _n(c) -> list[float]:
-            n = max(math.sqrt(sum(float(x) * float(x) for x in c)), 1e-12)
-            return [float(x) / n for x in c]
-
-        centroids = spark.createDataFrame(
-            [(int(r["centroid_id"]), _n(r["centroid_vec"])) for r in rows],
-            schema="centroid_id bigint, centroid_vec array<double>",
+        centroids = _centroid_frame(
+            vectors.sparkSession,
+            [(r["centroid_id"], r["centroid_vec"]) for r in merged.collect()],
         )
     return centroids
 
@@ -1006,8 +1007,6 @@ def probe_ranks(
     broadcast(centroids), ranked per query by inner product with
     centroid_id ASC tie-break. → (query_id, query_vec, cluster_id,
     probe_rank). Callers filter probe_rank <= nprobe."""
-    from pyspark.sql import Window
-
     qv = F.col(query_vec_col)
     qc = queries.select(query_id_col, query_vec_col).crossJoin(
         F.broadcast(centroids)
@@ -1105,6 +1104,166 @@ def duckdb_ivf_search_batch(
     )
 
 
+def _round6(x: Column) -> Column:
+    """round(x·1e6)/1e6 + 0.0 — the cross-engine 6-dp recipe (a plain
+    round(x, 6) diverges between Spark and DuckDB at half boundaries)."""
+    return F.round(x * F.lit(1e6)) / F.lit(1e6) + F.lit(0.0)
+
+
+def _sweep_curve(
+    cands: dict[str, DataFrame],
+    truth: DataFrame,
+    n_truth: int,
+    k: int,
+    points: list[int],
+    point_col: str,
+    held: list[DataFrame],
+    id_col: str,
+    query_id_col: str = "query_id",
+    cost: DataFrame | None = None,
+) -> DataFrame:
+    """The one accuracy/cost sweep of the recall curves (IVF nprobe and
+    codebooks, PQ refine, late-interaction probe width): score the
+    candidates once, answer every sweep point's top-k from them.
+
+    `cands` maps each output column to (query_id, id, need, score) rows,
+    `need` the smallest point that covers the row. Each row explodes to
+    its covering points, ONE window over (source, point, query) ranks
+    them all (job count, not scoring, is what a per-point loop pays),
+    and the top-k rows semi-join the broadcast `truth` (query_id, id).
+    Recall = matches / `n_truth`, 6-dp; `cost` (query_id, id, need)
+    adds n_candidates, its rows covered per point. Every point keeps
+    its row. → the collected curve as a LocalTableScan frame (point
+    [, n_candidates], one recall column per source), `held` released."""
+    pts = F.array(*[F.lit(p) for p in points])
+
+    def covering() -> Column:
+        return F.explode(F.filter(pts, lambda p: p >= F.col("need"))).alias(
+            point_col
+        )
+
+    expl = None
+    for name, c in cands.items():
+        part = c.select(
+            F.lit(name).alias("__src"), query_id_col, id_col, "score",
+            covering(),
+        )
+        expl = part if expl is None else expl.unionByName(part)
+    w = Window.partitionBy("__src", point_col, query_id_col).orderBy(
+        F.col("score").desc(), F.col(id_col).asc()
+    )
+    counts = (
+        expl.withColumn("__rnk", F.row_number().over(w))
+        .filter(F.col("__rnk") <= k)
+        .join(F.broadcast(truth), [query_id_col, id_col], "left_semi")
+        .groupBy(point_col)
+        .agg(*[
+            F.count(F.when(F.col("__src") == name, 1)).alias(name)
+            for name in cands
+        ])
+    )
+    cols = list(cands)
+    if cost is not None:
+        cols.insert(0, "n_candidates")
+        counts = counts.unionByName(
+            cost.select(covering()).groupBy(point_col).agg(
+                F.count("*").alias("n_candidates")
+            ),
+            allowMissingColumns=True,
+        )
+    got = {p: dict.fromkeys(cols, 0) for p in points}
+    for r in counts.collect():
+        got[r[point_col]].update(
+            (c, v) for c, v in r.asDict().items() if v is not None
+        )
+    curve = local_frame(
+        truth.sparkSession,
+        [(p, *[got[p][c] for c in cols]) for p in sorted(points)],
+        ", ".join([f"{point_col} int"] + [f"`{c}` bigint" for c in cols]),
+    ).select(point_col, *[
+        _round6(F.col(c).cast("double") / F.lit(float(n_truth))).alias(c)
+        if c in cands else c
+        for c in cols
+    ])
+    return materialize(curve, held)
+
+
+def _duckdb_exact_truth(cand: str, k: int, id_col: str) -> str:
+    """`truth` CTE: the exact top-k (query_id, id) rows of a fully
+    scored candidate CTE."""
+    return f"""truth AS MATERIALIZED (
+            SELECT query_id, {id_col} FROM (
+                SELECT query_id, {id_col}, row_number() OVER (
+                    PARTITION BY query_id ORDER BY score DESC, {id_col} ASC
+                ) AS rnk FROM {cand}
+            ) WHERE rnk <= {k}
+        )"""
+
+
+def _duckdb_sweep(
+    ctes: list[str],
+    cands: dict[str, str],
+    truth: str,
+    k: int,
+    points: list[int],
+    point_col: str,
+    id_col: str,
+    cost: str | None = None,
+    extra: str | None = None,
+) -> str:
+    """Oracle twin of `_sweep_curve`, after the caller's `ctes`: `cands`
+    maps each output column to a (query_id, id, need, score) CTE,
+    `truth` names a (query_id, id) CTE, `cost` a (query_id, id, need)
+    CTE counted per covering point as n_candidates, and `extra` a
+    one-row CTE whose columns end every row. A point spine LEFT JOINs
+    the per-point counts."""
+    p = point_col
+    ranked = "\n            UNION ALL".join(
+        f"""
+            SELECT '{name}' AS src, s.{p}, c.query_id, c.{id_col},
+                   row_number() OVER (
+                       PARTITION BY s.{p}, c.query_id
+                       ORDER BY c.score DESC, c.{id_col} ASC
+                   ) AS rk
+            FROM sw_pts s JOIN {cte} c ON c.need <= s.{p}"""
+        for name, cte in cands.items()
+    )
+    hits = ", ".join(f"count(*) FILTER (r.src = '{n}') AS {n}" for n in cands)
+    ctes = ctes + [
+        f"sw_pts AS (SELECT unnest({list(points)}) AS {p})",
+        f"sw_ranked AS ({ranked}\n        )",
+        f"""sw_hits AS (
+            SELECT r.{p}, {hits} FROM sw_ranked r JOIN {truth} t
+              ON r.rk <= {k} AND t.query_id = r.query_id
+             AND t.{id_col} = r.{id_col}
+            GROUP BY r.{p}
+        )""",
+    ]
+    cols, rows = [f"s.{p}"], f"sw_pts s LEFT JOIN sw_hits h USING ({p})"
+    if cost is not None:
+        ctes.append(f"""sw_cost AS (
+            SELECT s.{p}, count(*) AS n
+            FROM sw_pts s JOIN {cost} c ON c.need <= s.{p} GROUP BY s.{p}
+        )""")
+        cols.append("coalesce(n.n, 0) AS n_candidates")
+        rows += f" LEFT JOIN sw_cost n USING ({p})"
+    cols += [
+        f"round(coalesce(h.{n}, 0)::double / (SELECT count(*) FROM {truth})"
+        f" * 1e6) / 1e6 + 0.0 AS {n}"
+        for n in cands
+    ]
+    if extra is not None:
+        cols.append("x.*")
+        rows += f" CROSS JOIN {extra} x"
+    sep = ",\n        "
+    return f"""
+        WITH {sep.join(ctes)}
+        SELECT {", ".join(cols)}
+        FROM {rows}
+        ORDER BY s.{p}
+    """
+
+
 def ivf_recall_curve(
     assigned: DataFrame,
     centroids: DataFrame,
@@ -1115,93 +1274,117 @@ def ivf_recall_curve(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    intermediates: list | None = None,
 ) -> DataFrame:
     """Recall@k of IVF probe-pruned search vs exact search, per nprobe —
     the accuracy/cost curve that picks the production nprobe (the
     reference's `complexity` knob plays the same role for its graph
-    indexes, src/index/searcher.rs:24-38).
-
-    One pass: every (query, vector) candidate is scored ONCE with its
-    cluster's per-query probe rank attached; each sweep point is then a
-    top-k window over the `probe_rank <= p` subset, and exact = the
-    unfiltered top-k (nprobe = C degrades to exact, so recall hits 1.0
-    at the sweep's tail — a built-in self-check). Micro-averaged:
-    recall = |ivf top-k ∩ exact top-k| / |exact top-k| over all
-    queries. The scored-candidates frame is persisted across the
-    sweep's consumers; `intermediates` (a caller-owned list) receives
-    the persisted frames so a long-lived driver sweeping many
-    configurations can unpersist them after materializing the curve.
+    indexes, src/index/searcher.rs:24-38). → (nprobe, recall_r), a
+    materialized curve: the one-codebook case of
+    `ivf_recall_curves_multi`. nprobe = C degrades to exact, so recall
+    hits 1.0 at the sweep's tail — a built-in self-check.
 
     Scale: this is a DIAGNOSTIC run on a query SAMPLE (Q rows) — the
     exact baseline is a Q×N scan by construction. Run it on a sampled
     query set against the production corpus, not per-query online.
     """
-    from pyspark.sql import Window
+    return ivf_recall_curves_multi(
+        assigned.withColumnRenamed("cluster_id", "cluster_id__"),
+        {"": centroids}, queries, k, nprobes, id_col, vec_col,
+        query_id_col, query_vec_col,
+    ).withColumnRenamed("recall__r", "recall_r")
 
+
+def ivf_recall_curves_multi(
+    assigned_multi: DataFrame,
+    codebooks: dict[str, DataFrame],
+    queries: DataFrame,
+    k: int = 10,
+    nprobes: list[int] | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+) -> DataFrame:
+    """Recall@k per nprobe for SEVERAL codebooks over ONE corpus — the
+    codebook-comparison diagnostic (stale-vs-rebuilt drift costing,
+    take-vs-kmeans policy choice). `assigned_multi` carries one
+    `cluster_id__<tag>` column per codebook (attach them all in one
+    assignment pass). → (nprobe, recall_<tag>_r ...), a materialized
+    curve, micro-averaged; nprobe = C closes every curve at 1.0.
+
+    The IVF score source of `_sweep_curve`: per codebook the Q×C probe
+    table (probe_ranks) broadcasts into a join on its cluster column,
+    attaching each (query, vector) pair's probe rank — its covering
+    nprobe; the first join also brings the query vector. Every pair is
+    scored ONCE into a persisted table whose exact top-k is the truth,
+    and all codebooks rank in the core's one window."""
     nprobes = nprobes or [1, 2, 4, 8, 16]
-    qv = F.col(query_vec_col)
-    probes = probe_ranks(queries, centroids, query_id_col, query_vec_col)
-    cand = assigned.join(F.broadcast(probes), "cluster_id").select(
+    scored = assigned_multi
+    for i, (tag, cents) in enumerate(codebooks.items()):
+        probes = probe_ranks(queries, cents, query_id_col, query_vec_col)
+        scored = scored.join(
+            F.broadcast(probes.select(
+                query_id_col,
+                *([] if i else [query_vec_col]),
+                F.col("cluster_id").alias(f"cluster_id__{tag}"),
+                F.col("probe_rank").alias(f"__need{i}"),
+            )),
+            [f"cluster_id__{tag}"] + ([query_id_col] if i else []),
+        )
+    scored = scored.select(
         query_id_col,
         id_col,
-        "probe_rank",
-        dot(F.col(vec_col), qv).alias("score"),
+        *[f"__need{i}" for i in range(len(codebooks))],
+        dot(F.col(vec_col), F.col(query_vec_col)).alias("score"),
     ).persist()
-    w_rank = Window.partitionBy(query_id_col).orderBy(
+    w = Window.partitionBy(query_id_col).orderBy(
         F.col("score").desc(), F.col(id_col).asc()
     )
-    exact = (
-        cand.withColumn("__rnk", F.row_number().over(w_rank))
+    truth = (
+        scored.withColumn("__rnk", F.row_number().over(w))
         .filter(F.col("__rnk") <= k)
         .select(query_id_col, id_col)
         .persist()
     )
-    n_exact = exact.count()  # materializes both persists
-    if intermediates is not None:
-        intermediates.extend([cand, exact])
-    # ONE window job for the whole sweep (the per-point loop paid a
-    # full window + semi-join + agg job per nprobe — job count, not
-    # scoring, dominated; same restructure as ivf_recall_curves_multi):
-    # each candidate explodes to the sweep points that include it
-    # (p >= probe_rank, |sweep| ≈ 5 bounds the blowup), the window
-    # partitions by (nprobe, query), the tiny exact set broadcasts.
-    expl = cand.select(
-        query_id_col,
-        id_col,
-        "score",
-        F.explode(
-            F.filter(
-                F.array(*[F.lit(p) for p in nprobes]),
-                lambda p: p >= F.col("probe_rank"),
-            )
-        ).alias("nprobe"),
+    n_truth = truth.count()  # materializes both persists
+    cands = {
+        f"recall_{tag}_r": scored.select(
+            query_id_col, id_col, F.col(f"__need{i}").alias("need"), "score"
+        )
+        for i, tag in enumerate(codebooks)
+    }
+    return _sweep_curve(
+        cands, truth, n_truth, k, nprobes, "nprobe", [scored, truth],
+        id_col, query_id_col,
     )
-    w_point = Window.partitionBy("nprobe", query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
+
+
+def ivf_drift_shares(assigned: DataFrame, built: Column) -> DataFrame:
+    """Per-cluster occupancy of an IVF assignment split into the rows
+    present when the codebook was derived (`built` true) and the rows
+    appended since: → (cluster_id, n_built, n_appended, built_share,
+    appended_share, drift_ratio). Shares are of their own era's total;
+    drift_ratio = appended_share / built_share, NULL for a cluster with
+    no built mass. One groupBy; C rows."""
+    per = assigned.groupBy("cluster_id").agg(
+        F.count(F.when(built, 1)).alias("n_built"),
+        F.count(F.when(~built, 1)).alias("n_appended"),
     )
-    hits = (
-        expl.withColumn("__rnk", F.row_number().over(w_point))
-        .filter(F.col("__rnk") <= k)
-        .join(F.broadcast(exact), [query_id_col, id_col], "left_semi")
-        .groupBy("nprobe")
-        .agg(F.count("*").alias("n"))
+    tot = per.agg(
+        F.sum("n_built").alias("__tb"), F.sum("n_appended").alias("__ta")
     )
-    spine = assigned.sparkSession.createDataFrame(
-        [(p,) for p in nprobes], "nprobe int"
+    built_share = F.col("n_built") / F.greatest("__tb", F.lit(1))
+    appended_share = F.col("n_appended") / F.greatest("__ta", F.lit(1))
+    return per.crossJoin(F.broadcast(tot)).select(
+        "cluster_id",
+        "n_built",
+        "n_appended",
+        built_share.alias("built_share"),
+        appended_share.alias("appended_share"),
+        F.when(
+            F.col("n_built") > 0, appended_share / built_share
+        ).alias("drift_ratio"),
     )
-    out = spine.join(hits, "nprobe", "left").select(
-        "nprobe",
-        (
-            F.round(
-                F.coalesce(F.col("n"), F.lit(0)).cast("double")
-                / F.lit(float(n_exact)),
-                6,
-            )
-            + F.lit(0.0)
-        ).alias("recall_r"),
-    )
-    return out.orderBy("nprobe")
 
 
 def duckdb_ivf_recall_curve(
@@ -1214,50 +1397,21 @@ def duckdb_ivf_recall_curve(
     vec_col: str = "embedding",
 ) -> str:
     """Oracle twin of `ivf_recall_curve` with the take_centroids policy
-    and queries = the `n_queries` smallest ids (the q2 conventions)."""
-    ctes = ",\n".join(
+    and queries = the `n_queries` smallest ids (the q2 conventions): the
+    probed candidates carry their probe rank as the covering nprobe
+    into `_duckdb_sweep`."""
+    cand = f"""cand AS MATERIALIZED (
+            SELECT q.query_id, r.{id_col}, p.probe_rank AS need,
+                   {duckdb_dot(f"r.{vec_col}", "q.qv")} AS score
+            FROM {table} r{_duckdb_ivf_probed("r", id_col, batch=True)}
+        )"""
+    return _duckdb_sweep(
         _duckdb_ivf_ctes(
             n_centroids, table, id_col, vec_col, n_queries=n_queries
         )
+        + [cand, _duckdb_exact_truth("cand", k, id_col)],
+        {"recall_r": "cand"}, "truth", k, nprobes, "nprobe", id_col,
     )
-    sweep = ", ".join(str(p) for p in nprobes)
-    return f"""
-        WITH {ctes},
-        cand AS (
-            SELECT q.query_id, r.{id_col}, p.probe_rank,
-                   {duckdb_dot(f"r.{vec_col}", "q.qv")} AS score
-            FROM {table} r{_duckdb_ivf_probed("r", id_col, batch=True)}
-        ),
-        exact AS (
-            SELECT query_id, {id_col} FROM (
-                SELECT query_id, {id_col}, row_number() OVER (
-                    PARTITION BY query_id ORDER BY score DESC, {id_col} ASC
-                ) AS rnk FROM cand
-            ) WHERE rnk <= {k}
-        ),
-        sweep AS (SELECT unnest([{sweep}]) AS nprobe),
-        topk AS (
-            SELECT nprobe, query_id, {id_col} FROM (
-                SELECT s.nprobe, c.query_id, c.{id_col},
-                       row_number() OVER (
-                           PARTITION BY s.nprobe, c.query_id
-                           ORDER BY c.score DESC, c.{id_col} ASC
-                       ) AS rnk
-                FROM sweep s JOIN cand c ON c.probe_rank <= s.nprobe
-            ) WHERE rnk <= {k}
-        ),
-        hits AS (
-            SELECT t.nprobe, count(*) AS n
-            FROM topk t JOIN exact e
-              ON t.query_id = e.query_id AND t.{id_col} = e.{id_col}
-            GROUP BY t.nprobe
-        )
-        SELECT s.nprobe,
-               round(coalesce(h.n, 0)::double
-                     / (SELECT count(*) FROM exact), 6) + 0.0 AS recall_r
-        FROM sweep s LEFT JOIN hits h USING (nprobe)
-        ORDER BY s.nprobe
-    """
 
 
 def duckdb_ivf_drift_recall(
@@ -1273,77 +1427,53 @@ def duckdb_ivf_drift_recall(
     interleaved with a negated copy (odd ids), STALE centroids = first
     C built-era (even) ids, FRESH = first C corpus ids, recall@k per
     nprobe under each codebook vs exact ground truth over the first
-    2·n_queries mixed queries, plus the drift report's max per-cluster
-    ratio over the stale assignment. Corpus and both candidate frames
-    are AS MATERIALIZED — each is consumed more than once and DuckDB
-    inlines CTEs (CLAUDE.md measured rule)."""
-
-    def pipeline(tag: str, cent: str) -> str:
-        d_aq = duckdb_dot(f"a.{vec_col}", "q.qv")
-        return f"""
-        a_{tag} AS MATERIALIZED (
-            {_duckdb_assign("corpus", cent, id_col, vec_col)}
-        ),
-        pr_{tag} AS ({_duckdb_probe_ranks(cent, batch=True)}),
-        cand_{tag} AS MATERIALIZED (
-            SELECT q.query_id, a.{id_col}, pr.probe_rank, {d_aq} AS score
-            FROM a_{tag} a
-            JOIN pr_{tag} pr ON a.cluster_id = pr.centroid_id
-            JOIN q ON q.query_id = pr.query_id
-        ),
-        exact_{tag} AS MATERIALIZED (
-            SELECT query_id, {id_col} FROM (
-                SELECT query_id, {id_col}, row_number() OVER (
-                    PARTITION BY query_id ORDER BY score DESC, {id_col} ASC
-                ) AS rnk FROM cand_{tag}
-            ) WHERE rnk <= {k}
-        ),
-        topk_{tag} AS (
-            SELECT nprobe, query_id, {id_col} FROM (
-                SELECT s.nprobe, c.query_id, c.{id_col},
-                       row_number() OVER (
-                           PARTITION BY s.nprobe, c.query_id
-                           ORDER BY c.score DESC, c.{id_col} ASC
-                       ) AS rnk
-                FROM sweep s JOIN cand_{tag} c ON c.probe_rank <= s.nprobe
-            ) WHERE rnk <= {k}
-        ),
-        recall_{tag} AS (
-            SELECT s.nprobe,
-                   round(coalesce(h.n, 0)::double
-                         / (SELECT count(*) FROM exact_{tag}), 6) + 0.0
-                       AS recall_{tag}_r
-            FROM sweep s LEFT JOIN (
-                SELECT t.nprobe, count(*) AS n
-                FROM topk_{tag} t JOIN exact_{tag} e
-                  ON t.query_id = e.query_id AND t.{id_col} = e.{id_col}
-                GROUP BY t.nprobe
-            ) h USING (nprobe)
-        )"""
-
-    sweep = ", ".join(str(p) for p in nprobes)
-    return f"""
-        WITH corpus AS MATERIALIZED (
+    2·n_queries mixed queries (`_duckdb_sweep`), plus the drift
+    report's max per-cluster ratio over the stale assignment. Corpus,
+    assignments and candidate frames are AS MATERIALIZED — each is
+    consumed more than once and DuckDB inlines CTEs (the measured
+    unrolled-oracle rule)."""
+    ctes = [
+        f"""corpus AS MATERIALIZED (
             SELECT {id_col} * 2 AS {id_col}, {vec_col} FROM {table}
             UNION ALL
             SELECT {id_col} * 2 + 1 AS {id_col},
                    list_transform({vec_col}, x -> -x) AS {vec_col}
             FROM {table}
-        ),
-        stale_cent AS (
+        )""",
+        f"""stale_cent AS (
             SELECT {id_col} AS centroid_id, {vec_col} AS centroid_vec
             FROM corpus
             WHERE {id_col} % 2 = 0 AND {id_col} < {2 * n_centroids}
-        ),
-        fresh_cent AS ({_duckdb_cent(n_centroids, "corpus", id_col, vec_col)}),
-        q AS (
+        )""",
+        f"fresh_cent AS ({_duckdb_cent(n_centroids, 'corpus', id_col, vec_col)})",
+        f"""q AS (
             SELECT {id_col} AS query_id, {vec_col} AS qv
             FROM corpus WHERE {id_col} < {2 * n_queries}
-        ),
-        sweep AS (SELECT unnest([{sweep}]) AS nprobe),
-        {pipeline("stale", "stale_cent")},
-        {pipeline("fresh", "fresh_cent")},
-        drift AS (
+        )""",
+    ]
+    for tag in ("stale", "fresh"):
+        ctes += [
+            f"""a_{tag} AS MATERIALIZED (
+            {_duckdb_assign("corpus", f"{tag}_cent", id_col, vec_col)}
+        )""",
+            f"pr_{tag} AS ({_duckdb_probe_ranks(f'{tag}_cent', batch=True)})",
+            f"""cand_{tag} AS MATERIALIZED (
+            SELECT q.query_id, a.{id_col}, pr.probe_rank AS need,
+                   {duckdb_dot(f"a.{vec_col}", "q.qv")} AS score
+            FROM a_{tag} a
+            JOIN pr_{tag} pr ON a.cluster_id = pr.centroid_id
+            JOIN q ON q.query_id = pr.query_id
+        )""",
+        ]
+    ctes += [
+        _duckdb_exact_truth("cand_stale", k, id_col),
+        f"""per AS MATERIALIZED (
+            SELECT cluster_id,
+                   count(*) FILTER ({id_col} % 2 = 0)::double AS n_built,
+                   count(*) FILTER ({id_col} % 2 = 1)::double AS n_appended
+            FROM a_stale GROUP BY cluster_id
+        )""",
+        """drift AS (
             SELECT round(max(
                        CASE WHEN n_built > 0 THEN
                            (n_appended / greatest(
@@ -1352,139 +1482,10 @@ def duckdb_ivf_drift_recall(
                                (SELECT sum(b.n_built) FROM per b), 1))
                        END), 6) + 0.0 AS drift_max_r
             FROM per
-        ),
-        per AS MATERIALIZED (
-            SELECT cluster_id,
-                   count(*) FILTER ({id_col} % 2 = 0)::double AS n_built,
-                   count(*) FILTER ({id_col} % 2 = 1)::double AS n_appended
-            FROM a_stale GROUP BY cluster_id
-        )
-        SELECT s.nprobe, rs.recall_stale_r, rf.recall_fresh_r, d.drift_max_r
-        FROM sweep s
-        JOIN recall_stale rs USING (nprobe)
-        JOIN recall_fresh rf USING (nprobe)
-        CROSS JOIN drift d
-        ORDER BY s.nprobe
-    """
-
-
-def ivf_recall_curves_multi(
-    assigned_multi: DataFrame,
-    codebooks: dict[str, DataFrame],
-    queries: DataFrame,
-    k: int = 10,
-    nprobes: list[int] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    intermediates: list | None = None,
-) -> DataFrame:
-    """Recall@k per nprobe for SEVERAL codebooks over ONE corpus — the
-    codebook-comparison diagnostic (stale-vs-rebuilt drift costing,
-    take-vs-kmeans policy choice). `assigned_multi` carries one
-    `cluster_id__<tag>` column per codebook (attach them all in one
-    assignment pass).
-
-    Physical shape (measured: the job-count, not the dot products, is
-    what the per-codebook ivf_recall_curve loop pays for — 14 window
-    jobs for 2 codebooks × 5 points): score every (query, vector) pair
-    ONCE into a persisted table; derive the exact ground truth ONCE
-    (Q·k rows — broadcastable); then ALL (codebook, nprobe, query)
-    top-k ranks come out of ONE window job — each candidate explodes
-    only to the sweep points that include it (probe_rank <= p), the
-    window partitions by (tag, nprobe, query), and the exact set
-    broadcast-semi-joins the survivors. |sweep| ≈ 5 bounds the blowup.
-
-    → (nprobe, recall_<tag>_r ...), micro-averaged like
-    ivf_recall_curve; nprobe = C still closes every curve at 1.0."""
-    from pyspark.sql import Window
-
-    nprobes = nprobes or [1, 2, 4, 8, 16]
-    tags = list(codebooks)
-    qv = F.col(query_vec_col)
-    scored = assigned_multi.join(
-        F.broadcast(queries), how="cross"
-    ).select(
-        query_id_col,
-        id_col,
-        *[f"cluster_id__{t}" for t in tags],
-        dot(F.col(vec_col), qv).alias("score"),
-    ).persist()
-    w_exact = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
+        )""",
+    ]
+    return _duckdb_sweep(
+        ctes,
+        {"recall_stale_r": "cand_stale", "recall_fresh_r": "cand_fresh"},
+        "truth", k, nprobes, "nprobe", id_col, extra="drift",
     )
-    exact = (
-        scored.withColumn("__rnk", F.row_number().over(w_exact))
-        .filter(F.col("__rnk") <= k)
-        .select(query_id_col, id_col)
-        .persist()
-    )
-    n_exact = exact.count()
-    if intermediates is not None:
-        intermediates.extend([scored, exact])
-    sweep_arr = F.array(*[F.lit(p) for p in nprobes])
-    per_tag = []
-    for tag in tags:
-        probes = probe_ranks(
-            queries, codebooks[tag], query_id_col, query_vec_col
-        ).select(query_id_col, "cluster_id", "probe_rank")
-        per_tag.append(
-            scored.join(
-                F.broadcast(probes),
-                (F.col(f"cluster_id__{tag}") == probes["cluster_id"])
-                & (scored[query_id_col] == probes[query_id_col]),
-            ).select(
-                F.lit(tag).alias("__tag"),
-                scored[query_id_col],
-                scored[id_col],
-                "probe_rank",
-                "score",
-            )
-        )
-    cand = per_tag[0]
-    for c in per_tag[1:]:
-        cand = cand.unionByName(c)
-    expl = cand.select(
-        "__tag",
-        query_id_col,
-        id_col,
-        "score",
-        F.explode(
-            F.filter(sweep_arr, lambda p: p >= F.col("probe_rank"))
-        ).alias("nprobe"),
-    )
-    w_point = Window.partitionBy("__tag", "nprobe", query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    hits = (
-        expl.withColumn("__rnk", F.row_number().over(w_point))
-        .filter(F.col("__rnk") <= k)
-        .join(F.broadcast(exact), [query_id_col, id_col], "left_semi")
-        .groupBy("__tag", "nprobe")
-        .agg(F.count("*").alias("n"))
-        .groupBy("nprobe")
-        .pivot("__tag", tags)
-        .agg(F.first("n"))
-    )
-    # explicit sweep spine: a point where EVERY codebook scores zero
-    # hits would otherwise drop out of the grouped frame entirely
-    spine = assigned_multi.sparkSession.createDataFrame(
-        [(p,) for p in nprobes], "nprobe int"
-    )
-    hits = spine.join(hits, "nprobe", "left")
-    out = hits.select(
-        "nprobe",
-        *[
-            (
-                F.round(
-                    F.coalesce(F.col(t), F.lit(0)).cast("double")
-                    / F.lit(float(n_exact)),
-                    6,
-                )
-                + F.lit(0.0)
-            ).alias(f"recall_{t}_r")
-            for t in tags
-        ],
-    )
-    return out.orderBy("nprobe")

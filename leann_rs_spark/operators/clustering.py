@@ -52,6 +52,7 @@ from leann_rs_spark.functions.vector import (
     lit_vec_sql,
 )
 from leann_rs_spark.operators.ann import IVF_INLINE_MAX_CENTROIDS
+from leann_rs_spark.utils import local_frame
 
 
 def _score_fn(metric: str):
@@ -410,8 +411,9 @@ def kcenter_sample(
         .head()
     )
     if first is None:
-        return vectors.sparkSession.createDataFrame(
-            [], f"rank int, {id_col} bigint, radius_r double"
+        return local_frame(
+            vectors.sparkSession, [],
+            f"rank int, {id_col} bigint, radius_r double",
         )
 
     def _lit_vec(v):
@@ -445,11 +447,11 @@ def kcenter_sample(
             "__v",
             F.least(F.col("__d"), _d2(F.col("__v"), picks[-1][1])).alias("__d"),
         ).localCheckpoint(eager=True)
-    spark = vectors.sparkSession
     # round through Spark's HALF_UP (== DuckDB round), not Python's
     # banker's round — the picked raw doubles are engine-identical,
     # the rounding must be too
-    return spark.createDataFrame(
+    return local_frame(
+        vectors.sparkSession,
         [(i + 1, p[0], abs(p[2])) for i, p in enumerate(picks)],
         f"rank int, {id_col} bigint, __raw double",
     ).select(

@@ -65,7 +65,7 @@ from leann_rs_spark.functions.text import (
     word_ngrams,
 )
 from leann_rs_spark.functions.vector import cosine, dot
-from leann_rs_spark.utils import local_frame
+from leann_rs_spark.utils import local_frame, materialize
 
 
 # ---------------------------------------------------------------------------
@@ -1429,10 +1429,9 @@ def minhash_band_sweep(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_k: int = 5,
-    intermediates: list | None = None,
 ) -> DataFrame:
     """→ (num_hashes, bands, n_candidates, tp, fp, fn, precision_r,
-    recall_r): the LSH BANDING operating curve against planted truth —
+    recall_r), a materialized curve: the LSH BANDING operating curve against planted truth —
     the knob x_dedup_pr's threshold sweep cannot move. Each (n, b)
     config's S-curve midpoint is (1/b)^(b/n); more bands of fewer rows
     catch lower-jaccard truth pairs at the cost of more candidates to
@@ -1445,13 +1444,14 @@ def minhash_band_sweep(
     16 entries of the 32-hash one. Per config the banding is a slice
     re-keying of that table (id-width rows only); all configs' banded
     rows union into ONE self-join keyed on (config, band, bucket).
-    `truth` is (id_a, id_b) with id_a < id_b."""
+    `truth` is (id_a, id_b) with id_a < id_b. Its pair precision/recall
+    metric is its own; like ann._sweep_curve it spines the configs on
+    the driver and ends in utils.materialize, which releases the
+    signature table."""
     max_h = max(h for h, _ in configs)
     sigs = _minhash_signatures_bulk(docs, id_col, text_col, shingle_k, max_h)
     sigs = sigs.persist()
     sigs.count()  # materialize before the concurrent self-join map stages
-    if intermediates is not None:
-        intermediates.append(sigs)
     banded_all = None
     for h, b in configs:
         bd = _band_sigs(sigs, id_col, b, _band_width(h, b)).select(
@@ -1466,38 +1466,33 @@ def minhash_band_sweep(
     pairs = _self_pairs(banded_all, keys, id_col).dropDuplicates(
         ["num_hashes", "bands", "id_a", "id_b"]
     )
-    n_truth = truth.agg(F.count("*").alias("n_truth"))
-    marked = pairs.join(
-        truth.withColumn("is_truth", F.lit(1)), ["id_a", "id_b"], "left"
-    )
-    grouped = marked.groupBy("num_hashes", "bands").agg(
-        F.count("*").alias("n_candidates"),
-        F.sum(F.coalesce("is_truth", F.lit(0))).alias("tp"),
-    )
-    # config SPINE left-join: a config with ZERO candidates still emits
-    # its row (n_candidates=0, metrics 0.0) — without it the groupBy
-    # drops the config while the oracle's ungrouped aggregate keeps it
-    spine = sigs.sparkSession.createDataFrame(
-        [(int(h), int(b)) for h, b in configs],
-        "num_hashes int, bands int",
-    )
-    agg = (
-        spine.join(grouped, ["num_hashes", "bands"], "left")
-        .crossJoin(F.broadcast(n_truth))
-        .select(
-            "num_hashes", "bands",
-            F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
-            F.coalesce("tp", F.lit(0)).alias("tp"),
-            "n_truth",
+    n_truth = truth.count()
+    got = {
+        (r["num_hashes"], r["bands"]): (r["n_candidates"], r["tp"])
+        for r in pairs.join(
+            truth.withColumn("is_truth", F.lit(1)), ["id_a", "id_b"], "left"
         )
-    )
-    return agg.select(
+        .groupBy("num_hashes", "bands")
+        .agg(
+            F.count("*").alias("n_candidates"),
+            F.sum(F.coalesce("is_truth", F.lit(0))).alias("tp"),
+        )
+        .collect()
+    }
+    # config spine: a config with ZERO candidates still emits its row
+    # (n_candidates=0, metrics 0.0), as the oracle's ungrouped aggregate
+    curve = local_frame(
+        sigs.sparkSession,
+        [(h, b, *got.get((h, b), (0, 0)), n_truth) for h, b in sorted(configs)],
+        "num_hashes int, bands int, n_candidates bigint, tp bigint,"
+        " n_truth bigint",
+    ).select(
         "num_hashes",
         "bands",
-        F.col("n_candidates").cast("long").alias("n_candidates"),
-        F.col("tp").cast("long").alias("tp"),
-        (F.col("n_candidates") - F.col("tp")).cast("long").alias("fp"),
-        (F.col("n_truth") - F.col("tp")).cast("long").alias("fn"),
+        "n_candidates",
+        "tp",
+        (F.col("n_candidates") - F.col("tp")).alias("fp"),
+        (F.col("n_truth") - F.col("tp")).alias("fn"),
         F.when(
             F.col("n_candidates") > 0,
             F.round(F.col("tp") / F.col("n_candidates") * 1e6) / 1e6
@@ -1507,7 +1502,8 @@ def minhash_band_sweep(
             F.col("n_truth") > 0,
             F.round(F.col("tp") / F.col("n_truth") * 1e6) / 1e6 + F.lit(0.0),
         ).otherwise(F.lit(0.0)).alias("recall_r"),
-    ).orderBy("num_hashes", "bands")
+    )
+    return materialize(curve, [sigs])
 
 
 def duckdb_minhash_band_sweep(

@@ -46,11 +46,13 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from leann_rs_spark.functions.text import duckdb_tokenize, tokenize
 from leann_rs_spark.functions.vector import dot, duckdb_dot
-from leann_rs_spark.operators.ann import ivf_assign
+from leann_rs_spark.operators.ann import (
+    _duckdb_sweep, _round6, _sweep_curve, ivf_assign,
+)
 from leann_rs_spark.operators.embedder import (
     DUCKDB_NORMALIZE,
     duckdb_raw_embedding,
@@ -121,11 +123,6 @@ def _vocab_vecs(tokens: DataFrame, dims: int, name: str) -> DataFrame:
     return tokens.select("token").distinct().select(
         "token", hash_embedding(F.col("token"), dims).alias(name)
     )
-
-
-def _round6(x):
-    """round(x·1e6)/1e6 + 0.0 — the cross-engine 6-dp recipe."""
-    return F.round(x * F.lit(1e6)) / F.lit(1e6) + F.lit(0.0)
 
 
 def late_interaction_topk(
@@ -739,49 +736,40 @@ def li_probe_recall_curve(
     nprobes: list[int] | None = None,
     dims: int = 64,
     id_col: str = "doc_id",
-    intermediates: list | None = None,
 ) -> DataFrame:
-    """→ (nprobe, n_candidates, recall_r): the knob-picking diagnostic
-    for centroid-routed late interaction — recall@k vs exact MaxSim,
-    and the candidate count it costs, per probe width. The
-    x_ivf_recall analog for the multi-vector rung.
+    """→ (nprobe, n_candidates, recall_r), a materialized curve: the
+    knob-picking diagnostic for centroid-routed late interaction —
+    recall@k vs exact MaxSim, and the candidate count it costs, per
+    probe width. The x_ivf_recall analog for the multi-vector rung.
 
-    ONE job per axis, never a per-sweep-point rerun: exact scores are
-    nprobe-INDEPENDENT, so candidates at max(nprobes) are rescored
-    ONCE with each pair's best probe rank riding along, then every
-    sweep point is a filter + one window over the same frame. Ground
-    truth is one exact batch run, and recall is matched / |truth|
-    (micro-averaged, as ann.ivf_recall_curve): an index with fewer
-    than k docs still reaches 1.0 at a covering probe.
-
-    `intermediates`: the three persisted frames (candidates, sweep,
-    exact truth) are appended so a long-lived session can unpersist
-    them after materializing the curve (the ivf_recall_curve ruling).
-    When it is None the curve is materialized INTERNALLY (collect of a
-    sweep-sized frame) and the persisted frames are unpersisted
-    before returning a local DataFrame — library callers must not
-    leak session-lifetime cache entries (ADVICE r7)."""
+    The late-interaction score source of ann._sweep_curve: exact
+    scores are nprobe-INDEPENDENT, so the candidates at max(nprobes)
+    are rescored ONCE with each pair's best probe rank as its covering
+    point, and every sweep point ranks in the core's one window.
+    Ground truth is one exact batch run, and recall is matched /
+    |truth| (micro-averaged, as ann.ivf_recall_curve): an index with
+    fewer than k docs still reaches 1.0 at a covering probe.
+    n_candidates counts the candidate pairs each probe width admits."""
     nprobes = sorted(nprobes or [1, 2, 4])
-    maxp = nprobes[-1]
     ranks = [
         r
         for r in probe_query_cid_ranks(queries, centroids, dims)
-        if r[2] <= maxp
+        if r[2] <= nprobes[-1]
     ]
     plain = token_index.select(id_col, "token", "vec")
     cand = (
         _probed_rows(token_index, ranks, "query_id int, cid int, min_rn int")
         .groupBy("query_id", id_col)
-        .agg(F.min("min_rn").alias("cand_rn"))
+        .agg(F.min("min_rn").alias("need"))
         .persist()
     )
-    # cand is a multi-consumer boundary (pairs input + rank join); its
-    # measured count drives the broadcast size-guard on BOTH candidate
-    # joins below — an unpruning codebook makes cand Q×corpus-sized.
-    # The exact truth shares no lineage with the candidate/sweep frames,
-    # so its materializing count runs on a background thread (guide
-    # §2.6 overlap): its jobs back-fill executors idled by the two
-    # persist barriers below (FIFO scheduling). Its row count is the
+    # cand is a multi-consumer boundary (pairs input, rank join, the
+    # candidate count); its measured count drives the broadcast
+    # size-guard on BOTH candidate joins below — an unpruning codebook
+    # makes cand Q×corpus-sized. The exact truth shares no lineage with
+    # the candidates, so its materializing count runs on a background
+    # thread (guide §2.6 overlap): its jobs back-fill executors idled
+    # by the candidate barrier (FIFO scheduling). Its row count is the
     # recall denominator.
     truth = (
         late_interaction_topk_batch(
@@ -793,54 +781,21 @@ def li_probe_recall_curve(
     with ThreadPoolExecutor(max_workers=1) as pool:
         truth_fut = pool.submit(truth.count)
         n_pairs = cand.count()
-        if intermediates is not None:
-            intermediates.append(cand)
-        scored = _exact_maxsim_scores(
-            plain, cand.select("query_id", id_col), queries, dims, id_col,
-            pair_rows=n_pairs,
-        )
-        cand_side = (
-            F.broadcast(cand) if n_pairs <= PAIR_BROADCAST_ROW_LIMIT else cand
-        )
-        sw = (
-            scored.join(cand_side, ["query_id", id_col])
-            .withColumn(
-                "nprobe", F.explode(F.array(*[F.lit(p) for p in nprobes]))
-            )
-            .filter(F.col("cand_rn") <= F.col("nprobe"))
-            .persist()
-        )
-        sw.count()  # consumed by the ranked top-k AND the candidate count
-        if intermediates is not None:
-            intermediates.extend([sw, truth])
         n_truth = truth_fut.result()
-    w = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.desc("score_r"), F.asc(id_col)
+    scored = _exact_maxsim_scores(
+        plain, cand.select("query_id", id_col), queries, dims, id_col,
+        pair_rows=n_pairs,
     )
-    matched = (
-        sw.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .join(F.broadcast(truth), ["query_id", id_col])
-        .groupBy("nprobe")
-        .agg(F.count("*").alias("matched"))
+    cand_side = (
+        F.broadcast(cand) if n_pairs <= PAIR_BROADCAST_ROW_LIMIT else cand
     )
-    ncand = sw.groupBy("nprobe").agg(F.count("*").alias("n_candidates"))
-    recall = _round6(
-        F.coalesce(F.col("matched"), F.lit(0)).cast("double")
-        / F.lit(float(n_truth))
+    rows = scored.join(cand_side, ["query_id", id_col]).select(
+        "query_id", id_col, "need", F.col("score_r").alias("score")
     )
-    curve = (
-        ncand.join(matched, "nprobe", "left")
-        .select("nprobe", "n_candidates", recall.alias("recall_r"))
-        .orderBy("nprobe")
+    return _sweep_curve(
+        {"recall_r": rows}, truth, n_truth, k, nprobes, "nprobe",
+        [cand, truth], id_col, cost=cand,
     )
-    if intermediates is None:
-        rows = curve.collect()
-        cand.unpersist()
-        sw.unpersist()
-        truth.unpersist()
-        return local_frame(token_index.sparkSession, rows, curve.schema)
-    return curve
 
 
 def duckdb_li_probe_recall_curve(
@@ -855,48 +810,31 @@ def duckdb_li_probe_recall_curve(
 ) -> str:
     """Oracle twin of `li_probe_recall_curve`: same lexicographic take
     centroids, per-(query, centroid) best rank, candidates at
-    max(nprobe) rescored once, sweep points as filters over ONE
-    scored frame, truth = the exact batch twin at k, recall =
-    matched / |truth|."""
+    max(nprobe) rescored once with their best rank as the covering
+    point, truth = the exact batch twin at k, into ann._duckdb_sweep
+    (n_candidates = the candidate pairs per point)."""
     nprobes = sorted(nprobes or [1, 2, 4])
     rows = _token_rows(queries)
     exact = _duckdb_maxsim(rows, duckdb_dot("vec", "qvec"), "j, qv", id_col)
     rescored = _duckdb_exact_maxsim(rows, "cand", id_col)
-    probe_vals = ", ".join(f"({p})" for p in nprobes)
-    ctes = (
+    return _duckdb_sweep(
         _duckdb_token_ctes(dims, table, id_col, text_col)
         + _duckdb_routing_ctes(c)
         + _duckdb_query_ctes(rows, dims)
         + _duckdb_probe_ctes(nprobes[-1], id_col)
         + [
-            f"""sw AS MATERIALIZED (
-            SELECT pr.np AS nprobe, s.query_id, s.{id_col}, s.score_r,
-                   row_number() OVER (
-                       PARTITION BY pr.np, s.query_id
-                       ORDER BY s.score_r DESC, s.{id_col} ASC
-                   ) AS rk
-            FROM ({rescored}) s
-            JOIN cand USING (query_id, {id_col})
-            JOIN (VALUES {probe_vals}) pr(np) ON cand.cand_rn <= pr.np
+            f"""scored AS (
+            SELECT s.query_id, s.{id_col}, cand.need, s.score_r AS score
+            FROM ({rescored}) s JOIN cand USING (query_id, {id_col})
         )""",
             f"""truth AS MATERIALIZED (
             SELECT query_id, {id_col}
             FROM ({_duckdb_li_rank(exact, k, id_col)})
         )""",
-        ]
+        ],
+        {"recall_r": "scored"}, "truth", k, nprobes, "nprobe", id_col,
+        cost="cand",
     )
-    # count(t.query_id) counts the top-k rows found in the truth
-    return f"""
-        WITH {", ".join(ctes)}
-        SELECT sw.nprobe, count(*) AS n_candidates,
-               round((CAST(count(t.query_id) AS DOUBLE)
-                      / (SELECT count(*) FROM truth)) * 1e6) / 1e6 + 0.0
-                   AS recall_r
-        FROM sw LEFT JOIN truth t
-          ON sw.rk <= {k} AND t.query_id = sw.query_id
-             AND t.{id_col} = sw.{id_col}
-        GROUP BY sw.nprobe ORDER BY sw.nprobe
-    """
 
 
 def duckdb_token_cid_balance(
@@ -1033,7 +971,7 @@ def _duckdb_routing_ctes(c: int) -> list[str]:
 
 def _duckdb_probe_ctes(maxp: int, id_col: str) -> list[str]:
     """proberank(query_id, cid, min_rn) — the twin of
-    `probe_query_cid_ranks` — and cand(query_id, id_col, cand_rn): the
+    `probe_query_cid_ranks` — and cand(query_id, id_col, need): the
     docs owning a token routed to a centroid probed at `maxp`, with
     the best probe rank that reaches them."""
     return [
@@ -1049,7 +987,7 @@ def _duckdb_probe_ctes(maxp: int, id_col: str) -> list[str]:
             ) GROUP BY query_id, cid
         )""",
         f"""cand AS MATERIALIZED (
-            SELECT p.query_id, j.{id_col}, min(p.min_rn) AS cand_rn
+            SELECT p.query_id, j.{id_col}, min(p.min_rn) AS need
             FROM j JOIN assign USING (token)
             JOIN proberank p ON p.cid = assign.cid AND p.min_rn <= {maxp}
             GROUP BY p.query_id, j.{id_col}

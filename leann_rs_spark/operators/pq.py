@@ -44,13 +44,14 @@ plain L2 per subspace, so no spherical correction is needed here).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from leann_rs_spark.functions.vector import (
     dot, duckdb_dot, lit_vec, lit_vec_sql,
 )
 from leann_rs_spark.operators.ann import (
-    _duckdb_ivf_ctes, _duckdb_ivf_probed, _ivf_probe_join, ivf_probe,
+    _duckdb_ivf_ctes, _duckdb_ivf_probed, _duckdb_sweep, _ivf_probe_join,
+    _sweep_curve, ivf_probe,
 )
 from leann_rs_spark.operators.search import (
     _duckdb_q, _duckdb_topk, _duckdb_topk_batch, topk, topk_batch,
@@ -455,7 +456,6 @@ def pq_refine_recall_curve(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    intermediates: list | None = None,
 ) -> DataFrame:
     """Recall@k of PQ-ADC + exact-refine vs exact search, per refine
     factor — the compression-accuracy curve that picks the production
@@ -463,15 +463,17 @@ def pq_refine_recall_curve(
     means: shortlist r·k by ADC, exact-rescore, take k. A refine that
     covers the whole corpus degrades to exact (recall 1.0), the same
     built-in self-check as the IVF sweep's nprobe=C point.
+    → (refine, recall_r), a materialized curve.
 
-    One pass: each (query, vector) pair is scored ONCE with both its
-    ADC score and its exact score (queries broadcast; the corpus is
-    never shuffled); each sweep point is then a pair of windows over
-    the persisted candidates. Diagnostic shape — run on a query SAMPLE
-    (the exact baseline is Q×N by construction).
+    The PQ score source of ann._sweep_curve: each (query, vector) pair
+    is scored ONCE with both its ADC and its exact score (queries
+    broadcast; the corpus is never shuffled) and ranked by each; truth
+    is the exact top-k, and a pair in the ADC top max(refines)·k
+    shortlist is covered from refine ⌈adc_rank / k⌉ on (r·k ≥ adc_rank
+    ⇔ r ≥ ⌈adc_rank / k⌉), ranked by its exact score. Diagnostic shape
+    — run on a query SAMPLE (the exact baseline is Q×N by
+    construction).
     """
-    from pyspark.sql import Window
-
     refines = refines or [1, 2, 4, 8]
     qv = F.col(query_vec_col)
     enc = vectors.select(
@@ -479,79 +481,41 @@ def pq_refine_recall_curve(
         vec_col,
         pq_encode_col(F.col(vec_col), codebook).alias("code"),
     )
-    cand = (
-        enc.crossJoin(
-            F.broadcast(queries.select(query_id_col, query_vec_col))
-        )
-        .select(
-            query_id_col,
-            id_col,
-            dot(qv, pq_reconstruct_col(F.col("code"), codebook)).alias("adc"),
-            dot(F.col(vec_col), qv).alias("exact"),
-        )
-        .persist()
+    cand = enc.crossJoin(
+        F.broadcast(queries.select(query_id_col, query_vec_col))
+    ).select(
+        query_id_col,
+        id_col,
+        dot(qv, pq_reconstruct_col(F.col("code"), codebook)).alias("adc"),
+        dot(F.col(vec_col), qv).alias("score"),
     )
     w_adc = Window.partitionBy(query_id_col).orderBy(
         F.col("adc").desc(), F.col(id_col).asc()
     )
     w_exact = Window.partitionBy(query_id_col).orderBy(
-        F.col("exact").desc(), F.col(id_col).asc()
+        F.col("score").desc(), F.col(id_col).asc()
     )
     ranked = cand.select(
         query_id_col,
         id_col,
-        "exact",
+        "score",
         F.row_number().over(w_adc).alias("adc_rank"),
         F.row_number().over(w_exact).alias("exact_rank"),
     ).persist()
     truth = ranked.filter(F.col("exact_rank") <= k).select(
         query_id_col, id_col
     ).persist()
-    n_truth = truth.count()  # materializes the persists
-    if intermediates is not None:
-        intermediates.extend([cand, ranked, truth])
-    # ONE window job for the whole sweep (the per-point loop paid a
-    # full re-rank window + semi-join + agg per refine point — job
-    # count dominated; same restructure as ann.ivf_recall_curve): a
-    # shortlisted row explodes to the refine points that cover it
-    # (r·k >= adc_rank, |sweep| ≈ 5 bounds the blowup), the exact
-    # re-rank window partitions by (refine, query), the tiny truth
-    # set broadcasts into the semi-join.
-    expl = ranked.filter(F.col("adc_rank") <= max(refines) * k).select(
+    n_truth = truth.count()  # materializes both persists
+    shortlist = ranked.filter(F.col("adc_rank") <= max(refines) * k).select(
         query_id_col,
         id_col,
-        "exact",
-        F.explode(
-            F.filter(
-                F.array(*[F.lit(r) for r in refines]),
-                lambda r: r * F.lit(k) >= F.col("adc_rank"),
-            )
-        ).alias("refine"),
+        F.expr(f"(adc_rank + {k - 1}) div {k}").alias("need"),
+        "score",
     )
-    w_point = Window.partitionBy("refine", query_id_col).orderBy(
-        F.col("exact").desc(), F.col(id_col).asc()
+    return _sweep_curve(
+        {"recall_r": shortlist}, truth, n_truth, k, refines, "refine",
+        [ranked, truth], id_col, query_id_col,
     )
-    hits = (
-        expl.withColumn("__rr", F.row_number().over(w_point))
-        .filter(F.col("__rr") <= k)
-        .join(F.broadcast(truth), [query_id_col, id_col], "left_semi")
-        .groupBy("refine")
-        .agg(F.count("*").alias("n"))
-    )
-    spine = vectors.sparkSession.createDataFrame(
-        [(r,) for r in refines], "refine int"
-    )
-    return spine.join(hits, "refine", "left").select(
-        "refine",
-        (
-            F.round(
-                F.coalesce(F.col("n"), F.lit(0)).cast("double")
-                / F.lit(float(n_truth)),
-                6,
-            )
-            + F.lit(0.0)
-        ).alias("recall_r"),
-    ).orderBy("refine")
 
 
 # ---------------------------------------------------------------------------
@@ -698,54 +662,39 @@ def duckdb_pq_refine_recall_curve(
     vec_col: str = "embedding",
 ) -> str:
     """Oracle twin of `pq_refine_recall_curve` (take policy, queries =
-    the `n_queries` smallest ids — the recall-gate conventions)."""
+    the `n_queries` smallest ids — the recall-gate conventions): the
+    ADC shortlist, covered from refine ⌈adc_rank / k⌉ on and ranked by
+    its exact score, into `_duckdb_sweep`."""
     d = dims // m
-    common = _duckdb_pq_common(m, n_codebook, d, table, id_col, vec_col)
     adc = duckdb_dot("q.qv", "r.rv")
     exact = duckdb_dot(f"e.{vec_col}", "q.qv")
-    sweep = ", ".join(str(r) for r in refines)
-    return f"""
-        WITH {common},
-        {_duckdb_q(table, id_col, vec_col, n_queries=n_queries)},
-        cand AS (
-            SELECT q.query_id, e.{id_col}, {adc} AS adc, {exact} AS exact
-            FROM {table} e
-            JOIN recon r ON r.{id_col} = e.{id_col}
-            CROSS JOIN q
-        ),
-        ranked AS (
-            SELECT query_id, {id_col}, exact,
+    return _duckdb_sweep(
+        [
+            _duckdb_pq_common(m, n_codebook, d, table, id_col, vec_col),
+            _duckdb_q(table, id_col, vec_col, n_queries=n_queries),
+            f"""ranked AS MATERIALIZED (
+            SELECT query_id, {id_col}, score,
                    row_number() OVER (
                        PARTITION BY query_id ORDER BY adc DESC, {id_col} ASC
                    ) AS adc_rank,
                    row_number() OVER (
-                       PARTITION BY query_id ORDER BY exact DESC, {id_col} ASC
+                       PARTITION BY query_id ORDER BY score DESC, {id_col} ASC
                    ) AS exact_rank
-            FROM cand
-        ),
-        truth AS (
+            FROM (
+                SELECT q.query_id, e.{id_col}, {adc} AS adc, {exact} AS score
+                FROM {table} e
+                JOIN recon r ON r.{id_col} = e.{id_col}
+                CROSS JOIN q
+            )
+        )""",
+            f"""truth AS (
             SELECT query_id, {id_col} FROM ranked WHERE exact_rank <= {k}
-        ),
-        sweep AS (SELECT unnest([{sweep}]) AS refine),
-        got AS (
-            SELECT refine, query_id, {id_col} FROM (
-                SELECT s.refine, rk.query_id, rk.{id_col},
-                       row_number() OVER (
-                           PARTITION BY s.refine, rk.query_id
-                           ORDER BY rk.exact DESC, rk.{id_col} ASC
-                       ) AS rr
-                FROM sweep s JOIN ranked rk ON rk.adc_rank <= s.refine * {k}
-            ) WHERE rr <= {k}
-        ),
-        hits AS (
-            SELECT g.refine, count(*) AS n
-            FROM got g JOIN truth t
-              ON g.query_id = t.query_id AND g.{id_col} = t.{id_col}
-            GROUP BY g.refine
-        )
-        SELECT s.refine,
-               round(coalesce(h.n, 0)::double
-                     / (SELECT count(*) FROM truth), 6) + 0.0 AS recall_r
-        FROM sweep s LEFT JOIN hits h USING (refine)
-        ORDER BY s.refine
-    """
+        )""",
+            f"""shortlist AS (
+            SELECT query_id, {id_col}, (adc_rank + {k - 1}) // {k} AS need,
+                   score
+            FROM ranked WHERE adc_rank <= {max(refines) * k}
+        )""",
+        ],
+        {"recall_r": "shortlist"}, "truth", k, refines, "refine", id_col,
+    )

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from leann_rs_spark.functions.text import tokenize
 from leann_rs_spark.functions.textstats import gopher_keep, lang_id, top_ngrams
+from leann_rs_spark.utils import local_frame
 
 _PCTS = (0.5, 0.9, 0.99)
 
@@ -122,14 +123,8 @@ def corpus_report(
             ]
     finally:
         base.unpersist()
-    # orderBy, NOT coalesce(1)+sortWithinPartitions: on a
-    # parallelize-backed local frame, coalesce(1) alone measured a
-    # constant ~4.8 s per action (single task re-evaluating every
-    # pickled parent partition through a fresh python worker) — half
-    # this report's wall time for a 22-row result; the global sort on
-    # the same frame is ~0.5 s and gives the same sorted output.
-    return spark.createDataFrame(
-        sorted(rows), "metric string, value double"
+    return local_frame(
+        spark, sorted(rows), "metric string, value double"
     ).orderBy("metric")
 
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from leann_rs_spark.functions.text import duckdb_hash64, hash64
+from leann_rs_spark.utils import local_frame
 
 # hash64 yields a uniform 60-bit value; bucket into 1e6 slots for
 # rate/weight resolution of 1e-6
@@ -525,9 +526,8 @@ def concat_chunk(
     for r in subs:
         bases.append((r["_shard"], acc))
         acc += r["_tot"]
-    spark = docs.sparkSession
-    base_df = spark.createDataFrame(
-        bases or [(0, 0)], "_shard bigint, _base bigint"
+    base_df = local_frame(
+        docs.sparkSession, bases or [(0, 0)], "_shard bigint, _base bigint"
     )
 
     w = (
@@ -869,8 +869,8 @@ def budget_select(
     for r in subs:
         bases.append((r["__shard"], acc))
         acc += r["__tot"]
-    base_df = docs.sparkSession.createDataFrame(
-        bases or [(0, 0)], "__shard bigint, __base bigint"
+    base_df = local_frame(
+        docs.sparkSession, bases or [(0, 0)], "__shard bigint, __base bigint"
     )
     w = (
         Window.partitionBy("__shard")

@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from leann_rs_spark.functions.vector import (
     cosine, dot, duckdb_cosine, duckdb_dot, lit_vec,
 )
+from leann_rs_spark.utils import local_frame
 
 
 def _score(metric: str, vec_col: Column, query_col: Column) -> Column:
@@ -417,8 +418,8 @@ def mmr_search(
             break
         sel.append((row[id_col], list(row[vec_col]), row["score"]))
     cand.unpersist()
-    spark = vectors.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        vectors.sparkSession,
         [(i + 1, s[0], float(s[2])) for i, s in enumerate(sel)],
         f"rank int, {id_col} bigint, rel double",
     )

@@ -72,6 +72,8 @@ def read_reference_passages(
     p = _ref_paths(index_dir)
     with open(p["ids"]) as f:
         ids = [s for s in (line.rstrip("\r\n") for line in f) if s]
+    # createDataFrame, not utils.local_frame: the map is corpus-sized,
+    # and a LocalRelation would carry every row inside the plan
     id_to_idx = spark.createDataFrame(
         [(i, pid) for i, pid in enumerate(ids)], "idx bigint, id string"
     )

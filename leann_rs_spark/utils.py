@@ -1,5 +1,7 @@
-"""Shared utilities: deterministic dense id assignment at scale, and
-driver-side rows as JVM-local frames (`local_frame`).
+"""Shared utilities: deterministic dense id assignment at scale,
+driver-side rows as JVM-local frames (`local_frame`), and the one
+collect-and-release step of the few-row diagnostic results
+(`materialize`).
 
 The reference threads a driver-side sequential u64 counter through its
 chunkers (/root/reference/src/cli/build.rs:286-298,
@@ -85,7 +87,7 @@ def with_dense_index(
     return parted.mapInPandas(assign, schema=out_schema)
 
 
-def local_frame(spark, rows: list, schema: T.StructType) -> DataFrame:
+def local_frame(spark, rows: list, schema: T.StructType | str) -> DataFrame:
     """Driver-side rows → a JVM LocalRelation frame (via Arrow/pandas).
     A plain createDataFrame(rows) is parallelize-backed ('Scan
     ExistingRDD'): every job and BroadcastExchange over it re-evaluates
@@ -95,7 +97,10 @@ def local_frame(spark, rows: list, schema: T.StructType) -> DataFrame:
     LocalTableScan (exact for doubles, incl. -0.0 and 5e-324, and for
     nested arrays). pyspark's Arrow path rejects an empty pandas frame
     and would fall back to parallelize, so an empty `rows` builds the
-    empty LocalRelation JVM-side instead."""
+    empty LocalRelation JVM-side instead. `schema` is a StructType or
+    its DDL string."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
     if not rows:
         jss = spark._jsparkSession
         return DataFrame(
@@ -108,3 +113,15 @@ def local_frame(spark, rows: list, schema: T.StructType) -> DataFrame:
         [tuple(r) for r in rows], columns=[f.name for f in schema.fields]
     )
     return spark.createDataFrame(pdf, schema)
+
+
+def materialize(df: DataFrame, held: list[DataFrame]) -> DataFrame:
+    """Collect a few-row result (a sweep curve, a report), unpersist the
+    frames it `held` cached, and return the rows as a `local_frame`.
+    A lazy result over persisted frames cannot release them itself, and
+    a session that runs many such diagnostics would keep every one of
+    them pinned in the storage pool."""
+    rows = df.collect()
+    for h in held:
+        h.unpersist()
+    return local_frame(df.sparkSession, rows, df.schema)

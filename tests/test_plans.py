@@ -398,15 +398,26 @@ def test_lm_score_plan_is_native_and_broadcasts_vocab(spark):
         assert py_node not in plan, py_node
 
 
-def test_ivf_recall_probe_table_broadcasts(spark):
+def test_ivf_recall_probe_table_broadcasts(spark, monkeypatch):
     """The recall sweep's candidate join must broadcast the Q×C probe
-    table — the corpus side is never shuffled."""
+    table — the corpus side is never shuffled. The curve comes back
+    materialized, so the plan is read from the candidate frames the
+    IVF source hands to the sweep core."""
+    from leann_rs_spark.operators import ann
     from leann_rs_spark.operators.ann import (
         ivf_assign,
         ivf_recall_curve,
         take_centroids,
     )
 
+    plans = []
+    core = ann._sweep_curve
+
+    def spy(cands, *args, **kwargs):
+        plans.extend(plan_of(c) for c in cands.values())
+        return core(cands, *args, **kwargs)
+
+    monkeypatch.setattr(ann, "_sweep_curve", spy)
     emb = _emb(spark)
     cents = take_centroids(emb, 16)
     assigned = ivf_assign(emb, cents)
@@ -415,8 +426,9 @@ def test_ivf_recall_probe_table_broadcasts(spark):
         F.col("embedding").alias("query_vec"),
     )
     df = ivf_recall_curve(assigned, cents, queries, k=5, nprobes=[1, 16])
-    plan = plan_of(df)
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+    assert plans
+    for plan in plans:
+        assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     # and the sweep self-checks: nprobe = C row must be exact
     rows = {r["nprobe"]: r["recall_r"] for r in df.collect()}
     assert rows[16] == 1.0
@@ -843,30 +855,24 @@ def test_warm_ivfpq_request_scans_no_codebook(spark, monkeypatch, serve_wh):
 
 # Gates whose sf0.001 plan still scans Python rows (tools/plan_audit.py
 # `python_scan`), each with where its rows come from. An entry must go
-# once its gate plans a LocalTableScan.
-PYTHON_SCAN_ALLOWED = {
-    "x_analyze_report": "report.corpus_report returns its ~20 collected "
-    "metric rows through spark.createDataFrame",
-    "x_bpe_merges": "the gate returns bpe_train's collected merge list "
-    "through spark.createDataFrame",
-    "x_budget_select": "sampling.budget_select joins its driver-side "
-    "per-shard base offsets (__shard, __base) as a createDataFrame frame",
-    "x_concat_chunk": "sampling.concat_chunk joins its driver-side "
-    "per-shard token offsets (_shard, _base) as a createDataFrame frame",
-    "x_curriculum_blocks": "ends in sampling.concat_chunk: the same "
-    "(_shard, _base) offsets frame",
-    "x_kcenter_sample": "clustering.kcenter_sample returns the picks of "
-    "its driver loop through spark.createDataFrame",
-    "x_mmr_rerank": "search.mmr_search returns the picks of its driver "
-    "loop through spark.createDataFrame",
-}
+# once its gate plans a LocalTableScan; none is left.
+PYTHON_SCAN_ALLOWED: dict[str, str] = {}
+# gates whose driver-side rows once planned a Python-row scan and now go
+# through utils.local_frame
+FORMER_PYTHON_SCANS = [
+    "x_analyze_report", "x_bpe_merges", "x_budget_select", "x_concat_chunk",
+    "x_curriculum_blocks", "x_kcenter_sample", "x_mmr_rerank",
+]
 
 
-@pytest.mark.parametrize("gate", ["r1_rag_batch", *PYTHON_SCAN_ALLOWED])
+@pytest.mark.parametrize(
+    "gate", ["r1_rag_batch", *FORMER_PYTHON_SCANS, *PYTHON_SCAN_ALLOWED]
+)
 def test_python_row_scans_only_in_allow_listed_gates(spark, gate):
-    """r1_rag_batch (the `ask` request's operator) builds its question
-    frame with utils.local_frame: no Python-row `Scan ExistingRDD`. The
-    allow-listed gates still scan one."""
+    """r1_rag_batch (the `ask` request's operator) and the gates that
+    return or join driver-side rows build those frames with
+    utils.local_frame: no Python-row `Scan ExistingRDD`. The
+    allow-listed gates, if any, still scan one."""
     import __spark_entry__ as entry
     from conftest import SF_SMOKE
     from tools.plan_audit import python_scans

@@ -97,17 +97,13 @@ def test_recall_curve_monotone_and_closes_at_one(emb, cb):
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    inter = []
     curve = pq_refine_recall_curve(
         emb, cb, queries, k=5, refines=[1, 4, (n // 5) + 1],
-        intermediates=inter,
     ).collect()
     rec = [r["recall_r"] for r in curve]
     assert rec == sorted(rec)
     assert rec[-1] == 1.0
     assert all(0.0 <= x <= 1.0 for x in rec)
-    for df in inter:
-        df.unpersist()
 
 
 def test_kmeans_subcodebooks_shape_and_search(emb):
