@@ -661,11 +661,7 @@ def x_curriculum_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         F.md5(F.array_join("tokens", " ")).alias("tokens_hash"),
     ).orderBy("block_id")
-    res = res.persist()
-    res.count()
-    for df in inter:
-        df.unpersist()
-    return res
+    return materialize(res, inter)
 
 
 _MMR_LAM = 0.7
@@ -2471,11 +2467,7 @@ def x_concat_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         F.md5(F.array_join("tokens", " ")).alias("tokens_hash"),
     ).orderBy("block_id")
-    res = res.persist()
-    res.count()
-    for df in inter:
-        df.unpersist()
-    return res
+    return materialize(res, inter)
 
 
 def x_ivfbq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3825,11 +3817,7 @@ def x_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
     # release lm_score's internal bigram persist: selfcheck runs every
     # gate in ONE session (the utils.materialize lesson)
-    res = res.persist()
-    res.count()
-    for df in inter:
-        df.unpersist()
-    return res
+    return materialize(res, inter)
 
 
 def x_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3843,11 +3831,7 @@ def x_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = lm_buckets(
         _fan(_docs(spark, sf_dir)), intermediates=inter
     ).orderBy("doc_id")
-    res = res.persist()
-    res.count()
-    for df in inter:
-        df.unpersist()
-    return res
+    return materialize(res, inter)
 
 
 _C4_LINE_W = 7

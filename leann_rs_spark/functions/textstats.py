@@ -368,11 +368,7 @@ def _doc_lines(text: Column) -> Column:
     )
 
 
-def dup_line_frac(text: Column | str) -> Column:
-    """Fraction of (trimmed, nonempty) lines that are repeats of an
-    earlier line: 1 - distinct/total. 0.0 for line-less docs."""
-    text = F.col(text) if isinstance(text, str) else text
-    lines = _doc_lines(text)
+def _dup_line_frac_of(lines: Column) -> Column:
     return F.when(
         F.size(lines) > 0,
         F.lit(1.0)
@@ -381,20 +377,9 @@ def dup_line_frac(text: Column | str) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def dup_line_char_frac(text: Column | str) -> Column:
-    """Fraction of line characters sitting in lines that occur more
-    than once. Sorted-neighbor test: in the sorted line array an
-    element is duplicated iff it equals its predecessor or successor
-    (element_at positions clamped — Spark's boolean operators do not
-    short-circuit, so out-of-range probes must stay in range even when
-    the guard is false).
-
-    The sorted line array is let-bound via the single-element-array
-    transform (the codebase's HOF idiom): referencing the split
-    expression directly inside the per-element lambda would re-split
-    the text once per line per probe (Catalyst does not CSE into HOF
-    lambdas; measured ~5× on the Gopher gate)."""
-    text = F.col(text) if isinstance(text, str) else text
+def _dup_line_char_frac_of(lines: Column) -> Column:
+    """`dup_line_char_frac` over a line array, which it sorts and
+    let-binds."""
 
     def body(lines: Column) -> Column:
         def dup_len(x, i):
@@ -417,7 +402,62 @@ def dup_line_char_frac(text: Column | str) -> Column:
             total > 0, dup_chars.cast("double") / total.cast("double")
         ).otherwise(F.lit(0.0))
 
-    return F.transform(F.array(F.array_sort(_doc_lines(text))), body)[0]
+    return F.transform(F.array(F.array_sort(lines)), body)[0]
+
+
+def _top_ngram_char_frac_of(toks: Column, text: Column, n: int) -> Column:
+    """`top_ngram_char_frac` over a let-bound whitespace-word array."""
+    ngrams = F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - n + 1),
+            lambda i: F.array_join(F.slice(toks, i, n), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    s = F.array_sort(ngrams)
+    init = F.struct(
+        F.lit("").alias("prev"),
+        F.lit(0).alias("run"),
+        F.struct(
+            F.lit(0).alias("cnt"), F.lit(0).alias("len"), F.lit("").alias("ng")
+        ).alias("best"),
+    )
+
+    def step(acc, x):
+        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
+        cand = F.struct(run.alias("cnt"), F.length(x).alias("len"), x.alias("ng"))
+        best = F.when(cand > acc["best"], cand).otherwise(acc["best"])
+        return F.struct(x.alias("prev"), run.alias("run"), best.alias("best"))
+
+    best = F.aggregate(s, init, step, lambda acc: acc["best"])
+    return (
+        (best["cnt"] * best["len"]).cast("double")
+        / F.greatest(F.length(text), F.lit(1)).cast("double")
+    )
+
+
+def dup_line_frac(text: Column | str) -> Column:
+    """Fraction of (trimmed, nonempty) lines that are repeats of an
+    earlier line: 1 - distinct/total. 0.0 for line-less docs."""
+    text = F.col(text) if isinstance(text, str) else text
+    return _dup_line_frac_of(_doc_lines(text))
+
+
+def dup_line_char_frac(text: Column | str) -> Column:
+    """Fraction of line characters sitting in lines that occur more
+    than once. Sorted-neighbor test: in the sorted line array an
+    element is duplicated iff it equals its predecessor or successor
+    (element_at positions clamped — Spark's boolean operators do not
+    short-circuit, so out-of-range probes must stay in range even when
+    the guard is false).
+
+    The sorted line array is let-bound via the single-element-array
+    transform (the codebase's HOF idiom): referencing the split
+    expression directly inside the per-element lambda would re-split
+    the text once per line per probe (Catalyst does not CSE into HOF
+    lambdas; measured ~5× on the Gopher gate)."""
+    text = F.col(text) if isinstance(text, str) else text
+    return _dup_line_char_frac_of(_doc_lines(text))
 
 
 def top_ngram_char_frac(text: Column | str, n: int) -> Column:
@@ -432,39 +472,10 @@ def top_ngram_char_frac(text: Column | str, n: int) -> Column:
     once per n-gram position — the documented HOF-CSE trap, measured
     ~5× on the Gopher gate."""
     text = F.col(text) if isinstance(text, str) else text
-
-    def body(toks: Column) -> Column:
-        ngrams = F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - n + 1),
-                lambda i: F.array_join(F.slice(toks, i, n), " "),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        s = F.array_sort(ngrams)
-        init = F.struct(
-            F.lit("").alias("prev"),
-            F.lit(0).alias("run"),
-            F.struct(
-                F.lit(0).alias("cnt"), F.lit(0).alias("len"), F.lit("").alias("ng")
-            ).alias("best"),
-        )
-
-        def step(acc, x):
-            run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
-            cand = F.struct(
-                run.alias("cnt"), F.length(x).alias("len"), x.alias("ng")
-            )
-            best = F.when(cand > acc["best"], cand).otherwise(acc["best"])
-            return F.struct(x.alias("prev"), run.alias("run"), best.alias("best"))
-
-        best = F.aggregate(s, init, step, lambda acc: acc["best"])
-        return (
-            (best["cnt"] * best["len"]).cast("double")
-            / F.greatest(F.length(text), F.lit(1)).cast("double")
-        )
-
-    return F.transform(F.array(_ws_words(text)), body)[0]
+    return F.transform(
+        F.array(_ws_words(text)),
+        lambda toks: _top_ngram_char_frac_of(toks, text, n),
+    )[0]
 
 
 def duckdb_dup_line_frac(text: str) -> str:
@@ -520,14 +531,9 @@ _GOPHER_REQUIRED_STOPWORDS = ["and", "be", "have", "of", "that", "the", "to", "w
 _BULLET_PREFIXES = ("•", "‣", "▪", "-", "*")
 
 
-def gopher_signals(text: Column | str) -> Column:
-    """STRUCT of the Gopher §A1.1 document signals (word counts over
-    whitespace words, line stats over trimmed nonempty lines):
-    word_count, mean_word_len, symbol_word_ratio (# and ellipses per
-    word), bullet_line_frac, ellipsis_line_frac, alpha_word_frac,
-    required_stopword_hits (distinct members of the 8-word set)."""
-    text = F.col(text) if isinstance(text, str) else text
-    words = _ws_words(text)
+def _gopher_signal_cols(text: Column, words: Column, lines: Column) -> dict:
+    """The §A1.1 signals of `gopher_signals`, by field name, over the
+    document's whitespace words and trimmed nonempty lines."""
     wc = F.size(words)
     wlen = F.aggregate(
         F.transform(words, lambda w: F.length(w)), F.lit(0), lambda a, x: a + x
@@ -535,7 +541,6 @@ def gopher_signals(text: Column | str) -> Column:
     symbols = F.regexp_count(text, F.lit("#")) + F.regexp_count(
         text, F.lit(r"\.\.\.|…")
     )
-    lines = _doc_lines(text)
     nlines = F.size(lines)
     bullet = F.size(
         F.filter(
@@ -560,15 +565,29 @@ def gopher_signals(text: Column | str) -> Column:
             ),
         )
     )
-    return F.struct(
-        wc.alias("word_count"),
-        _ratio(wlen, wc).alias("mean_word_len"),
-        _ratio(symbols, wc).alias("symbol_word_ratio"),
-        _ratio(bullet, nlines).alias("bullet_line_frac"),
-        _ratio(ellip, nlines).alias("ellipsis_line_frac"),
-        _ratio(alpha_words, wc).alias("alpha_word_frac"),
-        sw_hits.alias("required_stopword_hits"),
-    )
+    return {
+        "word_count": wc,
+        "mean_word_len": _ratio(wlen, wc),
+        "symbol_word_ratio": _ratio(symbols, wc),
+        "bullet_line_frac": _ratio(bullet, nlines),
+        "ellipsis_line_frac": _ratio(ellip, nlines),
+        "alpha_word_frac": _ratio(alpha_words, wc),
+        "required_stopword_hits": sw_hits,
+    }
+
+
+def gopher_signals(text: Column | str) -> Column:
+    """STRUCT of the Gopher §A1.1 document signals (word counts over
+    whitespace words, line stats over trimmed nonempty lines):
+    word_count, mean_word_len, symbol_word_ratio (# and ellipses per
+    word), bullet_line_frac, ellipsis_line_frac, alpha_word_frac,
+    required_stopword_hits (distinct members of the 8-word set).
+
+    A plain struct, not let-bound: a field read of a lambda-bound
+    struct would evaluate the whole lambda once per read."""
+    text = F.col(text) if isinstance(text, str) else text
+    cols = _gopher_signal_cols(text, _ws_words(text), _doc_lines(text))
+    return F.struct(*[c.alias(name) for name, c in cols.items()])
 
 
 def gopher_keep(
@@ -589,22 +608,40 @@ def gopher_keep(
     max_top4_char_frac: float = 0.16,
 ) -> Column:
     """Boolean keep/drop per the Gopher §A1.1 + repetition thresholds —
-    the whole gate is ONE projection, no shuffle at any corpus size."""
-    s = gopher_signals(text)
-    return (
-        s["word_count"].between(min_words, max_words)
-        & s["mean_word_len"].between(min_mean_word_len, max_mean_word_len)
-        & (s["symbol_word_ratio"] <= max_symbol_word_ratio)
-        & (s["bullet_line_frac"] <= max_bullet_line_frac)
-        & (s["ellipsis_line_frac"] <= max_ellipsis_line_frac)
-        & (s["alpha_word_frac"] >= min_alpha_word_frac)
-        & (s["required_stopword_hits"] >= min_stopword_hits)
-        & (dup_line_frac(text) <= max_dup_line_frac)
-        & (dup_line_char_frac(text) <= max_dup_line_char_frac)
-        & (top_ngram_char_frac(text, 2) <= max_top2_char_frac)
-        & (top_ngram_char_frac(text, 3) <= max_top3_char_frac)
-        & (top_ngram_char_frac(text, 4) <= max_top4_char_frac)
+    the whole gate is ONE projection, no shuffle at any corpus size.
+
+    The document is split into words and lines ONCE: the gate is one
+    let-bound transform over struct(words, lines, text), and every
+    signal reads the bound arrays. Composing the public signal
+    functions instead re-splits the text per signal (a 44k-character
+    expression with 151 splits), and every later operator on the gated
+    lineage re-analyzes it."""
+    text = F.col(text) if isinstance(text, str) else text
+    bound = F.struct(
+        _ws_words(text).alias("words"),
+        _doc_lines(text).alias("lines"),
+        text.alias("text"),
     )
+
+    def body(b: Column) -> Column:
+        words, lines, t = b["words"], b["lines"], b["text"]
+        s = _gopher_signal_cols(t, words, lines)
+        return (
+            s["word_count"].between(min_words, max_words)
+            & s["mean_word_len"].between(min_mean_word_len, max_mean_word_len)
+            & (s["symbol_word_ratio"] <= max_symbol_word_ratio)
+            & (s["bullet_line_frac"] <= max_bullet_line_frac)
+            & (s["ellipsis_line_frac"] <= max_ellipsis_line_frac)
+            & (s["alpha_word_frac"] >= min_alpha_word_frac)
+            & (s["required_stopword_hits"] >= min_stopword_hits)
+            & (_dup_line_frac_of(lines) <= max_dup_line_frac)
+            & (_dup_line_char_frac_of(lines) <= max_dup_line_char_frac)
+            & (_top_ngram_char_frac_of(words, t, 2) <= max_top2_char_frac)
+            & (_top_ngram_char_frac_of(words, t, 3) <= max_top3_char_frac)
+            & (_top_ngram_char_frac_of(words, t, 4) <= max_top4_char_frac)
+        )
+
+    return F.transform(F.array(bound), body)[0]
 
 
 def _duckdb_ws_words(text: str) -> str:

@@ -149,7 +149,12 @@ def expansion_terms(
     max_terms *new* terms — strictly more useful, same ranking."""
     from pyspark.sql import functions as F
 
+    # ONE string literal, split into an array that ConstantFolding turns
+    # into one array literal: `isin(blocked)` built ~190 literal Columns,
+    # one py4j round trip each. Query words hold no whitespace, so " "
+    # separates them; they stay in a literal, never in parsed SQL text.
     blocked = sorted(_STOPWORDS | _CODE_KEYWORDS | set(query.lower().split()))
+    blocked_arr = F.split(F.lit(" ".join(blocked)), " ")
     return (
         passages.select(
             F.explode(F.split(F.col(text_col), "[^0-9A-Za-z]")).alias("w")
@@ -158,7 +163,7 @@ def expansion_terms(
         .filter(
             (F.length("term") >= 4)
             & F.col("term").rlike("^[a-z]+$")
-            & ~F.col("term").isin(blocked)
+            & ~F.array_contains(blocked_arr, F.col("term"))
         )
         .groupBy("term")
         .agg(F.count("*").alias("cnt"))

@@ -116,8 +116,9 @@ def local_frame(spark, rows: list, schema: T.StructType | str) -> DataFrame:
 
 
 def materialize(df: DataFrame, held: list[DataFrame]) -> DataFrame:
-    """Collect a few-row result (a sweep curve, a report), unpersist the
-    frames it `held` cached, and return the rows as a `local_frame`.
+    """Collect a bounded result (a sweep curve, a report, a gate's
+    ordered output), unpersist the frames it `held` cached, and return
+    the rows as a `local_frame`.
     A lazy result over persisted frames cannot release them itself, and
     a session that runs many such diagnostics would keep every one of
     them pinned in the storage pool."""

@@ -866,6 +866,26 @@ FORMER_PYTHON_SCANS = [
 
 
 @pytest.mark.parametrize(
+    "gate",
+    ["x_curriculum_blocks", "x_concat_chunk", "x_lm_score", "x_ccnet_buckets"],
+)
+def test_gate_result_leaves_no_persisted_rdd(spark, gate):
+    """Gates that persist intermediates return their result through
+    utils.materialize: the call leaves the session's persisted RDDs as
+    it found them, and the result is a LocalTableScan, not one more
+    cached corpus-sized frame."""
+    import __spark_entry__ as entry
+    from conftest import SF_SMOKE
+
+    jsc = spark.sparkContext._jsc
+    held = set(jsc.getPersistentRDDs().keys())
+    df = entry.queries()[gate](spark, SF_SMOKE)
+    assert set(jsc.getPersistentRDDs().keys()) == held
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.lstrip().startswith("LocalTableScan"), plan
+
+
+@pytest.mark.parametrize(
     "gate", ["r1_rag_batch", *FORMER_PYTHON_SCANS, *PYTHON_SCAN_ALLOWED]
 )
 def test_python_row_scans_only_in_allow_listed_gates(spark, gate):

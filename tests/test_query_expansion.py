@@ -97,3 +97,34 @@ def test_distributed_mining_matches_local_port(spark):
     want_terms = extract_key_terms(combined, 5)
     assert [t for t, _ in got] == want_terms
     assert got[0] == ("design", 3)
+
+
+def test_mining_matches_twin_and_keeps_query_words_literal(spark):
+    """Query words are excluded through a literal, never parsed as SQL:
+    a quote or an SQL fragment in the query is just another word."""
+    import duckdb
+
+    from leann_rs_spark.operators.query_expansion import (
+        duckdb_expansion_terms,
+        expansion_terms,
+    )
+
+    texts = [
+        "distributed systems require careful partition design",
+        "partition skew breaks distributed aggregation design design",
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    got = [tuple(r) for r in expansion_terms(df, "partition skew", 5).collect()]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE p (text VARCHAR)")
+    con.executemany("INSERT INTO p VALUES (?)", [(t,) for t in texts])
+    want = con.sql(
+        duckdb_expansion_terms("SELECT text FROM p", "partition skew", 5)
+    ).fetchall()
+    con.close()
+    assert got == want
+    assert "partition" not in [t for t, _ in got]
+    plain = [tuple(r) for r in expansion_terms(df, "design", 5).collect()]
+    odd = expansion_terms(df, "design 'x') OR 1=1; --", 5).collect()
+    assert [tuple(r) for r in odd] == plain
+    assert "design" not in [t for t, _ in plain]

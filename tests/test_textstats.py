@@ -265,6 +265,106 @@ def test_gopher_filter_matches_duckdb(spark, duck):
     assert got == want
 
 
+def test_gopher_keep_splits_each_document_once(spark):
+    """The gate binds the document's words and lines once: its analyzed
+    plan holds one split for words and one for lines, however many
+    signals read them. (Named: an unnamed column's generated name
+    spells the whole expression out a second time.)"""
+    from leann_rs_spark.functions.textstats import gopher_keep
+
+    df = spark.createDataFrame([("a b",)], "text string")
+    gated = df.select(gopher_keep("text").alias("keep"))
+    analyzed = gated._jdf.queryExecution().analyzed()
+    assert analyzed.toString().count("split(") <= 2
+
+
+GOPHER_EDGE_ROWS = [
+    (0, ""),
+    (1, "   \t  "),
+    (2, "\n\n\n"),
+    (3, "same line here\n" * 6),
+    (4, "two words"),
+    (5, "word"),
+    (6, "• first point\n- second point...\n* third…\n‣ fourth\n"
+        "▪ fifth and the last of them"),
+    (7, "wait for it...\nand then…\nthe end"),
+    (8, "这是一个中文句子用于测试\n这是一个中文句子用于测试\n中文 文本 测试"),
+    (9, "🚀 launch 🚀 launch 🚀 the rocket with the crew 🎉…\n👩‍💻 code"),
+    (10, "# heading ### ...\n\n   trailing spaces   \n#"),
+    (11, "  a b a b a b a b  "),
+    (12, " ".join(
+        "the quick brown fox jumps over a lazy dog and all of that "
+        "should be counted together with some more plain prose words "
+        "so the document clears the fifty word minimum that gopher "
+        "requires for a document to have enough signal to judge its "
+        "quality properly in the published filtering rules".split())),
+]
+# loose thresholds, so some edge rows keep and every signal's cut is
+# exercised in both directions
+GOPHER_LOOSE = {
+    "min_words": 1, "min_mean_word_len": 1.0, "max_mean_word_len": 20.0,
+    "min_alpha_word_frac": 0.0, "min_stopword_hits": 0,
+    "max_dup_line_frac": 0.5, "max_dup_line_char_frac": 0.5,
+    "max_top2_char_frac": 0.5, "max_top3_char_frac": 0.5,
+    "max_top4_char_frac": 0.5,
+}
+
+
+def test_gopher_edge_rows_match_duckdb(spark):
+    """gopher_keep / gopher_signals (and the repetition signals) on
+    degenerate documents — empty, whitespace only, newlines only, one
+    repeated line, fewer words than the n-gram size, bullet and
+    ellipsis lines, CJK and emoji — equal their DuckDB twins exactly."""
+    from leann_rs_spark.functions.textstats import (
+        duckdb_dup_line_char_frac,
+        duckdb_dup_line_frac,
+        duckdb_gopher_keep,
+        duckdb_gopher_signals,
+        duckdb_top_ngram_char_frac,
+        dup_line_char_frac,
+        dup_line_frac,
+        gopher_keep,
+        gopher_signals,
+        top_ngram_char_frac,
+    )
+
+    names = list(duckdb_gopher_signals("text"))
+    df = spark.createDataFrame(GOPHER_EDGE_ROWS, "id long, text string")
+    s = gopher_signals("text")
+    got = [
+        tuple(r)
+        for r in df.select(
+            "id",
+            *[s[n] for n in names],
+            dup_line_frac("text"),
+            dup_line_char_frac("text"),
+            *[top_ngram_char_frac("text", n) for n in (2, 3, 4)],
+            gopher_keep("text"),
+            gopher_keep("text", **GOPHER_LOOSE),
+        ).orderBy("id").collect()
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO d VALUES (?, ?)", GOPHER_EDGE_ROWS)
+    ds = duckdb_gopher_signals("text")
+    want = con.sql(f"""
+        SELECT id, {", ".join(ds[n] for n in names)},
+               {duckdb_dup_line_frac('text')},
+               ({duckdb_dup_line_char_frac('text')}),
+               {", ".join(f"({duckdb_top_ngram_char_frac('text', n)})"
+                          for n in (2, 3, 4))},
+               {duckdb_gopher_keep('text')},
+               {duckdb_gopher_keep('text', **GOPHER_LOOSE)}
+        FROM d ORDER BY id
+    """).fetchall()
+    con.close()
+    assert got == want
+    keeps = {r[0]: (r[-2], r[-1]) for r in got}
+    assert keeps[12] == (True, True)
+    assert keeps[0] == (False, False)
+    assert any(k[1] for i, k in keeps.items() if i != 12)
+
+
 def test_lm_score_hand_computed(spark):
     """Bigram add-k cross-entropy on a corpus small enough to verify by
     hand; short/empty docs keep n_bigrams=0 and NULL xent."""

@@ -31,6 +31,11 @@ signals the round reviews look for:
   counted.
 - object_hash_agg: ObjectHashAggregate nodes (exact percentile,
   collect_list, …) — they disable whole-stage codegen for their stage.
+- analyzed_chars: length of the gate's ANALYZED plan string. Every
+  later operator on a lineage re-analyzes it (persist() does not cut
+  the analyzed plan), so an inflated expression — a Column copied
+  once per use, a re-split text — shows up here as a diff; `_summary`
+  lists the ten largest.
 
 Emits one JSON object {gate: {...}, _summary: {...}} on stdout.
 Usage: python3 tools/plan_audit.py [--sf /root/testdata/sf0.001]
@@ -58,8 +63,9 @@ def python_scans(formatted: str) -> int:
     )
 
 
-def audit_plan(plan: str, formatted: str) -> dict:
+def audit_plan(plan: str, formatted: str, analyzed: str) -> dict:
     return {
+        "analyzed_chars": len(analyzed),
         "python_batch": plan.count("BatchEvalPython"),
         "python_arrow": (
             plan.count("ArrowEvalPython")
@@ -103,13 +109,14 @@ def main() -> None:
         try:
             df = qs[name](spark, args.sf)
             qe = df._jdf.queryExecution()
+            analyzed = qe.analyzed().toString()
             plan = qe.executedPlan().toString()
             formatted = spark._jvm.PythonSQLUtils.explainString(qe, "formatted")
         except Exception as exc:  # fixture/environment failures recorded
             print(f"# {name}: ERROR {exc}", file=sys.stderr)
             out[name] = {"error": str(exc)[:200]}
             continue
-        out[name] = audit_plan(plan, formatted)
+        out[name] = audit_plan(plan, formatted, analyzed)
         print(f"# {name}: {out[name]}", file=sys.stderr)
     ok = [v for v in out.values() if "error" not in v]
     out["_summary"] = {
@@ -121,6 +128,13 @@ def main() -> None:
         "gates_with_python_scan": gates_with(out, "python_scan"),
         "gates_with_object_hash_agg": gates_with(out, "object_hash_agg"),
         "total_exchanges": sum(v.get("exchanges", 0) for v in ok),
+        "largest_analyzed_chars": dict(
+            sorted(
+                ((k, v["analyzed_chars"]) for k, v in out.items()
+                 if "analyzed_chars" in v),
+                key=lambda kv: (-kv[1], kv[0]),
+            )[:10]
+        ),
     }
     print(json.dumps(out))
     spark.stop()
