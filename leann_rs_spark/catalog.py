@@ -67,7 +67,7 @@ from leann_rs_spark.operators.filter_dsl import compile_spark, parse as parse_fi
 from leann_rs_spark.operators.hybrid import hybrid_rerank, use_hybrid
 from leann_rs_spark.operators.search import exact_search
 from leann_rs_spark.sources.warehouse import _recover_swap, _swap_in
-from leann_rs_spark.utils import local_frame, with_dense_index
+from leann_rs_spark.utils import local_frame, with_dense_index_counted
 
 META_VERSION = "1.0"  # mirrors IndexMeta.version (meta.rs:10-12)
 
@@ -138,15 +138,17 @@ def save_meta(warehouse: str, name: str, meta: IndexMeta) -> None:
 @dataclass
 class _IndexVersion:
     """Values derived once per index version: table schemas, the BM25
-    corpus stats (n_docs, Σ doc_len) and the PQ codebook. Values only —
-    never a DataFrame or a file listing: a compaction swaps files
-    without a meta save (the values stay valid, a listing would not),
-    so listings are taken per read."""
+    corpus stats (n_docs, Σ doc_len), the PQ codebook and the IVF
+    centroids (ids, float64 matrix). Values only — never a DataFrame or
+    a file listing: a compaction swaps files without a meta save (the
+    values stay valid, a listing would not), so listings are taken per
+    read."""
 
     stamp: tuple[int, int]  # meta.json (mtime_ns, size)
     schemas: dict[str, StructType] = field(default_factory=dict)
     bm25_stats: tuple[int, int] | None = None
     pq_codebook: list | None = None
+    centroids: tuple | None = None
 
 
 # index base path -> its current version; a new meta.json stamp (build,
@@ -224,19 +226,34 @@ def _pq_codebook(spark: SparkSession, base: str) -> list:
     return v.pq_codebook
 
 
-def _write_passages(chunks: DataFrame, path: str, mode: str, start: int) -> None:
+def _ivf_centroids(spark: SparkSession, base: str) -> tuple:
+    """The index's IVF centroids as `ann.centroid_arrays`, collected
+    once per index version: ranking them per request was one Spark job
+    per ivf / ivfpq request."""
+    from leann_rs_spark.operators.ann import centroid_arrays
+
+    v = _version(base)
+    if v.centroids is None:
+        v.centroids = centroid_arrays(_read(spark, base, "ivf_centroids"))
+    return v.centroids
+
+
+def _write_passages(chunks: DataFrame, path: str, mode: str, start: int) -> int:
     """Number the chunks densely from `start` in (doc_id, chunk_index)
-    order and write them; the dense-id persists are released once the
-    write has consumed them."""
+    order, write them and return how many there were (the dense-id
+    step's own counts, so no count job); the dense-id persists are
+    released once the write has consumed them."""
     held: list = []
     try:
-        with_dense_index(
+        passages, n = with_dense_index_counted(
             chunks, ["doc_id", "chunk_index"], "idx", start=start,
             intermediates=held,
-        ).write.mode(mode).parquet(path)
+        )
+        _write_table(passages, n, path, mode)
     finally:
         for df in held:
             df.unpersist()
+    return n
 
 
 def _embed_passages(
@@ -366,6 +383,17 @@ def _files_for(rows: int) -> int:
     return max(1, -(-int(rows) // 1_000_000))
 
 
+def _write_table(df: DataFrame, rows: int, path: str, mode: str) -> None:
+    """Write the `rows`-row unpartitioned table `df` as at most
+    `_files_for(rows)` files. Every file of a table is one more task in
+    each scan of it, and a search request scans passages, embeddings
+    and bm25_docstats: written as defaultParallelism files (4 files for
+    ~400 rows) they made every warm request schedule 4 tasks per scan.
+    `coalesce` adds no shuffle and never raises the file count; a table
+    under ~1M rows is then written by one task."""
+    df.coalesce(_files_for(rows)).write.mode(mode).parquet(path)
+
+
 def build_index(
     spark: SparkSession,
     warehouse: str,
@@ -417,23 +445,24 @@ def build_index(
     chunks = chunk_documents(
         docs, strategy=strategy, chunk_size=chunk_size, chunk_overlap=chunk_overlap
     )
-    _write_passages(chunks, f"{base}/passages", "overwrite", 0)
+    n = _write_passages(chunks, f"{base}/passages", "overwrite", 0)
 
     passages = spark.read.parquet(f"{base}/passages")
     if provider is not None:
         from leann_rs_spark.operators.embedder import probe_dimensions
 
         dims = probe_dimensions(provider)
-    _embed_passages(passages, dims, doc_prompt_template, provider).write.mode(
-        "overwrite"
-    ).parquet(f"{base}/embeddings")
+    _write_table(
+        _embed_passages(passages, dims, doc_prompt_template, provider),
+        n, f"{base}/embeddings", "overwrite",
+    )
 
     if with_bm25:
-        _write_bm25(passages, base, mode="overwrite")
+        _write_bm25(passages, base, "overwrite", n)
 
     meta = IndexMeta(
         dimensions=dims,
-        passage_count=passages.count(),
+        passage_count=n,
         chunk_size=chunk_size,
         chunk_overlap=chunk_overlap,
         doc_prompt_template=doc_prompt_template,
@@ -474,7 +503,12 @@ def py_term_bucket(term: str) -> int:
     return int(hashlib.md5(term.encode()).hexdigest()[:15], 16) % TERM_BUCKETS
 
 
-def _write_bm25(passages: DataFrame, base: str, mode: str) -> None:
+def _write_bm25(
+    passages: DataFrame, base: str, mode: str, rows: int | None = None
+) -> None:
+    """Write the BM25 postings (partitioned by term_bucket) and docstats
+    (one row per passage) of `passages` under `base`; given the passage
+    count `rows`, docstats is written as `_write_table` files."""
     # cache=False: each table is consumed exactly once by its write —
     # persisting here would only pin executor memory for no reuse
     postings, docstats, termstats = build_bm25_index(
@@ -491,7 +525,10 @@ def _write_bm25(passages: DataFrame, base: str, mode: str) -> None:
     bucketed.repartition(TERM_BUCKETS, "term_bucket").write.mode(
         mode
     ).partitionBy("term_bucket").parquet(f"{base}/bm25_postings")
-    docstats.write.mode(mode).parquet(f"{base}/bm25_docstats")
+    if rows is None:
+        docstats.write.mode(mode).parquet(f"{base}/bm25_docstats")
+    else:
+        _write_table(docstats, rows, f"{base}/bm25_docstats", mode)
     # termstats (df counts) are NOT incrementally mergeable by append —
     # always rebuilt from postings on read (vocabulary-sized aggregate).
 
@@ -563,7 +600,9 @@ def append_to_index(
         chunk_size=meta.chunk_size,
         chunk_overlap=meta.chunk_overlap,
     )
-    _write_passages(chunks, f"{base}/passages", "append", meta.passage_count)
+    added = _write_passages(
+        chunks, f"{base}/passages", "append", meta.passage_count
+    )
     # read back ONLY the appended rows (idx >= old passage_count — a
     # min/max row-group prune on the scan): the embed and BM25 stages
     # below would otherwise re-run the Python chunker + dense-id sort,
@@ -571,15 +610,17 @@ def append_to_index(
     passages = spark.read.parquet(f"{base}/passages").filter(
         F.col("idx") >= meta.passage_count
     )
-    added = passages.count()
 
     if not meta.is_pruned:
-        _embed_passages(
-            passages, meta.dimensions, meta.doc_prompt_template, provider
-        ).write.mode("append").parquet(f"{base}/embeddings")
+        _write_table(
+            _embed_passages(
+                passages, meta.dimensions, meta.doc_prompt_template, provider
+            ),
+            added, f"{base}/embeddings", "append",
+        )
 
     if meta.extra.get("bm25"):
-        _write_bm25(passages, base, mode="append")
+        _write_bm25(passages, base, "append", added)
 
     old_count = meta.passage_count
     # meta is saved LAST: until then readers see the old passage_count
@@ -967,11 +1008,14 @@ def build_ivf_index(
             cb = kmeans_subcodebooks(emb, m=pq_m, k=pq_k, seed=seed)
         else:
             cb = take_subcodebooks(emb, m=pq_m, k=pq_k, id_col="idx")
-        local_frame(
-            spark,
-            codebook_to_rows(cb),
-            StructType.fromDDL("m int, cid int, cv array<double>"),
-        ).write.mode("overwrite").parquet(f"{base}/pq_codebook")
+        cb_rows = codebook_to_rows(cb)
+        _write_table(
+            local_frame(
+                spark, cb_rows,
+                StructType.fromDDL("m int, cid int, cv array<double>"),
+            ),
+            len(cb_rows), f"{base}/pq_codebook", "overwrite",
+        )
         meta.extra["pq_m"] = pq_m
         meta.extra["pq_k"] = pq_k
     else:
@@ -1269,8 +1313,9 @@ def search_ivf_index(
     use_pq: bool = False,
     refine: int = 4,
 ) -> DataFrame:
-    """Probe-pruned search over the persisted IVF layout: rank centroids
-    for the query on the driver (n_centroids rows), then exact top-k
+    """Probe-pruned search over the persisted IVF layout: rank the
+    centroids held for the index version against the query on the
+    driver (`ann.probe_order`, no Spark job), then exact top-k
     over only the probed clusters' directories (the read lists nothing
     else — the seek a graph traversal would do). Returns (idx, score,
     doc_id, source, text) like search_index.
@@ -1280,7 +1325,7 @@ def search_ivf_index(
     — and, when refine > 0, exact-rescores only the top refine·k
     against the embeddings table. The 100 TB read path: scan bytes =
     (nprobe/C)·N·8 plus refine·k point reads."""
-    from leann_rs_spark.operators.ann import ivf_probe_ids
+    from leann_rs_spark.operators.ann import probe_order
 
     base, meta, _ = _artifact(warehouse, name, "ivf")
     if use_pq and "pq_m" not in meta.extra:
@@ -1292,7 +1337,7 @@ def search_ivf_index(
         meta, query, hint="search_ivf_index embeds queries with the hash "
         "embedder only; search it with search_index(query_provider=…)",
     )
-    probe = ivf_probe_ids(_read(spark, base, "ivf_centroids"), qv, nprobe)
+    probe = probe_order(*_ivf_centroids(spark, base), qv, nprobe)
     probed = _read(spark, base, "ivf", ("cluster_id", probe))
     if use_pq:
         from leann_rs_spark.operators.pq import pq_bits, pq_search, pq_unpack_col

@@ -36,10 +36,11 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from leann_rs_spark.functions.vector import (
-    cosine, duckdb_cosine, duckdb_dot, dot, lit_vec, lit_vec_sql,
+    cosine, duckdb_cosine, duckdb_dot, dot, lit_vec_sql,
 )
 from leann_rs_spark.operators.dedup import (
     _attach, _band_width, _banded_candidate_pairs, _cross_pairs,
@@ -319,23 +320,43 @@ def lloyd_refine_centroids(
     return centroids
 
 
+def centroid_arrays(centroids: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """A (centroid_id, centroid_vec) frame collected as (ids int64[C],
+    vectors float64[C, d]) — the driver-side form `probe_order` ranks."""
+    rows = centroids.select("centroid_id", "centroid_vec").collect()
+    ids = np.array([int(r[0]) for r in rows], dtype=np.int64)
+    if not rows:
+        return ids, np.zeros((0, 0))
+    return ids, np.array([r[1] for r in rows], dtype=np.float64)
+
+
+def probe_order(
+    ids: np.ndarray, vecs: np.ndarray, query_vector: list[float], nprobe: int
+) -> list[int]:
+    """The ids of the nprobe centroids nearest the query — the one probe
+    ranking every single-query IVF composition uses. Centroids rank by
+    inner product DESC, ties centroid_id ASC. The score accumulates
+    `acc + c[j]·q[j]` over the dimensions in index order from 0.0, the
+    fold `vector.dot` runs in Spark, so scores (and ranks) are
+    bit-identical to it; NaN ranks above every number, as Spark sorts
+    it."""
+    if nprobe <= 0 or len(ids) == 0:
+        return []
+    q = np.asarray(query_vector, dtype=np.float64)
+    acc = np.zeros(len(ids))
+    if len(q) == vecs.shape[1]:  # else every Spark score is NULL: id order
+        for j in range(len(q)):
+            acc = acc + vecs[:, j] * q[j]
+    order = np.lexsort((ids, -acc, ~np.isnan(acc)))
+    return [int(ids[i]) for i in order[:nprobe]]
+
+
 def ivf_probe_ids(
     centroids: DataFrame, query_vector: list[float], nprobe: int
 ) -> list[int]:
-    """The ids of the nprobe centroids nearest the query — the one probe
-    every IVF composition uses. Centroids rank by inner product, ties
-    centroid_id ASC; the C-row ranking is collected on the driver, so a
+    """`probe_order` over the collected C-row centroid frame, so a
     caller can read just the probed `cluster_id=` directories."""
-    probe_rows = (
-        centroids.select(
-            "centroid_id",
-            dot(F.col("centroid_vec"), lit_vec(query_vector)).alias("__qs"),
-        )
-        .orderBy(F.col("__qs").desc(), F.col("centroid_id").asc())
-        .limit(nprobe)
-        .collect()
-    )
-    return [r["centroid_id"] for r in probe_rows]
+    return probe_order(*centroid_arrays(centroids), query_vector, nprobe)
 
 
 def ivf_probe(

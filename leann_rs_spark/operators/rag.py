@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from leann_rs_spark.operators.embedder import hash_embedding
 from leann_rs_spark.operators.search import batch_search
+from leann_rs_spark.utils import local_frame
 
 # ask.rs:185-194 (verbatim template, {} slots for context / question)
 PROMPT_TEMPLATE = (
@@ -144,7 +145,19 @@ def rag_batch(
     mapInPandas generation stage — the R4 network slot
     (src/llm/mod.rs:32-63): each executor talks to the service
     directly, one call per question row.
+
+    `questions` is read once: its two columns are collected and rebuilt
+    as a `local_frame`, which both the query-vector broadcast and the
+    final left join then scan JVM-side. A `spark.createDataFrame`
+    frame scanned twice cost one Python task per partition per scan
+    (8 tasks per perfbench `ask` request). The batch search already
+    broadcasts the whole questions table, so it must fit on the driver
+    either way; a frame that is already local runs no job here.
     """
+    questions = questions.select(question_id_col, question_col)
+    questions = local_frame(
+        questions.sparkSession, questions.collect(), questions.schema
+    )
     qvecs = questions.select(
         question_id_col,
         question_col,

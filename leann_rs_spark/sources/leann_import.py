@@ -210,7 +210,7 @@ def import_reference_index(
     if with_bm25:
         from leann_rs_spark.catalog import _write_bm25
 
-        _write_bm25(passages, base, mode="overwrite")
+        _write_bm25(passages, base, "overwrite", n)
 
     opts = src.get("embedding_options") or {}
     if not opts.get("doc_prompt_template") and not opts.get(

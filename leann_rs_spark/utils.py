@@ -43,6 +43,23 @@ def with_dense_index(
     result is lazy, so they cannot be released here; a long-lived
     driver should unpersist them once the result is written, or every
     call pins two more cached RDDs."""
+    return with_dense_index_counted(
+        df, order_cols, idx_col, start, num_partitions, intermediates
+    )[0]
+
+
+def with_dense_index_counted(
+    df: DataFrame,
+    order_cols: list[str],
+    idx_col: str = "idx",
+    start: int = 0,
+    num_partitions: int | None = None,
+    intermediates: list | None = None,
+) -> tuple[DataFrame, int]:
+    """`with_dense_index` plus its row count, summed from the
+    per-partition counts the id assignment already collects — a caller
+    that needs the count (a write sizing its files, a meta row count)
+    runs no count job of its own."""
     np_ = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     # repartitionByRange runs a SAMPLING pass over the input to pick
     # range bounds, then the real pass — an expensive upstream (the
@@ -84,7 +101,7 @@ def with_dense_index(
             out[idx_col] = range(base, base + len(pdf))
             yield out
 
-    return parted.mapInPandas(assign, schema=out_schema)
+    return parted.mapInPandas(assign, schema=out_schema), acc - start
 
 
 def local_frame(spark, rows: list, schema: T.StructType | str) -> DataFrame:

@@ -561,3 +561,65 @@ def test_ivf_assign_validate_flags_duplicate_keys(spark):
             extra_cols=["token"], validate=True, inline_max=inline_max,
         )
         assert out.count() == 3
+
+
+def _probe_table():
+    """(vec_id, embedding) rows: ids < 6 are the take-policy centroids,
+    with a duplicate pair (1 and 4: tied scores) and a zero vector (5);
+    the rest are queries, 9 the zero query."""
+    import random
+
+    rnd = random.Random(7)
+    vec = lambda: [rnd.uniform(-1.0, 1.0) for _ in range(8)]  # noqa: E731
+    rows = [(i, vec()) for i in range(4)]
+    rows += [(4, list(rows[1][1])), (5, [0.0] * 8)]
+    rows += [(i, vec()) for i in range(6, 9)] + [(9, [0.0] * 8)]
+    return rows, 6
+
+
+def test_probe_order_matches_spark_dot_and_duckdb_twin(spark, duck):
+    """The driver-side probe ranks centroids exactly as Spark's `dot`
+    ordering (score DESC, centroid_id ASC) and as the DuckDB twins'
+    probes CTE, through ties, a zero query, nprobe > C and nprobe = 0."""
+    import pandas as pd
+
+    from leann_rs_spark.functions.vector import dot, lit_vec
+    from leann_rs_spark.operators.ann import (
+        _duckdb_ivf_ctes,
+        centroid_arrays,
+        ivf_probe_ids,
+        probe_order,
+    )
+    from leann_rs_spark.utils import local_frame
+
+    rows, c = _probe_table()
+    cents = local_frame(
+        spark, rows[:c], "centroid_id bigint, centroid_vec array<double>"
+    )
+    ids, vecs = centroid_arrays(cents)
+    duck.register(
+        "probe_emb",
+        pd.DataFrame({"vec_id": [r[0] for r in rows],
+                      "embedding": [r[1] for r in rows]}),
+    )
+    try:
+        for qid, qv in rows[c:]:
+            ctes = _duckdb_ivf_ctes(c, "probe_emb", query_vec_id=qid)
+            twin = [r[0] for r in duck.sql(
+                f"WITH {', '.join(ctes)} SELECT centroid_id FROM probes "
+                "ORDER BY probe_rank"
+            ).fetchall()]
+            for nprobe in (0, 1, 3, c, c + 4):
+                spark_ids = [r[0] for r in cents.select(
+                    "centroid_id",
+                    dot(F.col("centroid_vec"), lit_vec(qv)).alias("s"),
+                ).orderBy(F.col("s").desc(), F.col("centroid_id").asc())
+                    .limit(nprobe).collect()]
+                got = probe_order(ids, vecs, qv, nprobe)
+                assert got == spark_ids == twin[:nprobe], (qid, nprobe)
+                assert ivf_probe_ids(cents, qv, nprobe) == got
+    finally:
+        duck.unregister("probe_emb")
+    # ties rank by id and the zero query scores every centroid 0.0
+    assert probe_order(ids, vecs, rows[-1][1], c) == list(range(c))
+    assert probe_order(ids, vecs, [1.0] * 8, -1) == []

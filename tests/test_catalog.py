@@ -251,6 +251,26 @@ def test_ivf_search_prunes_partitions(spark, warehouse, ivf_built):
     assert m, plan
 
 
+def test_warm_ivf_search_reads_no_centroids(spark, warehouse, ivf_built):
+    """The centroids are held per index version: once a search has
+    ranked them, the next one runs no job over ivf_centroids (it gives
+    the same hits with the table moved away)."""
+    import os
+
+    def hits():
+        return catalog.search_ivf_index(
+            spark, warehouse, "ivfidx", "alpha beta gamma", k=5, nprobe=2
+        ).select("idx", "score").collect()
+
+    cold = hits()
+    path = f"{warehouse}/ivfidx/ivf_centroids"
+    os.rename(path, f"{path}__away")
+    try:
+        assert hits() == cold
+    finally:
+        os.rename(f"{path}__away", path)
+
+
 def test_append_rebuilds_ivf_layout(spark, docs, warehouse, ivf_built):
     more = (
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -1134,3 +1154,50 @@ def test_artifact_entry_points_refuse_a_missing_artifact(
     with pytest.raises(ValueError, match=f"^{re.escape(message)}$"):
         call(spark, wh, docs)
     assert os.listdir(f"{wh}/bare") == ["meta.json"]
+
+
+FLAT_TABLES = ("passages", "embeddings", "bm25_docstats")
+
+
+def test_small_tables_are_one_file_each(spark, docs, tmp_path):
+    """A small build writes each unpartitioned table (passages,
+    embeddings, bm25_docstats, pq_codebook) as one parquet file and a
+    small append adds one file per table; search results are those of
+    the same rows spread over four files per table."""
+    import shutil
+
+    wh = str(tmp_path)
+    catalog.build_index(
+        spark, wh, "small", docs.filter(F.col("doc_id") < 20),
+        chunk_size=16, chunk_overlap=4, dims=32,
+    )
+    for table in FLAT_TABLES:
+        assert len(_parquet_files(f"{wh}/small/{table}")) == 1, table
+    catalog.build_ivf_index(
+        spark, wh, "small", n_centroids=4, centroids="take", pq_m=4, pq_k=4
+    )
+    assert len(_parquet_files(f"{wh}/small/pq_codebook")) == 1
+    meta = catalog.append_to_index(
+        spark, wh, "small", docs.filter(F.col("doc_id") >= 20)
+    )
+    for table in FLAT_TABLES:
+        path = f"{wh}/small/{table}"
+        assert len(_parquet_files(path)) == 2, table
+        assert spark.read.parquet(path).count() == meta.passage_count
+
+    shutil.copytree(f"{wh}/small", f"{wh}/spread")
+    for table in FLAT_TABLES:
+        path = f"{wh}/spread/{table}"
+        spark.read.parquet(path).repartition(4).write.parquet(path + "__4")
+        shutil.rmtree(path)
+        shutil.move(path + "__4", path)
+        assert len(_parquet_files(path)) == 4, table
+
+    def search(name, **kw):
+        return catalog.search_index(
+            spark, wh, name, "alpha beta", k=5, **kw
+        ).collect()
+
+    for kw in ({"hybrid": False}, {"hybrid": True},
+               {"filter_str": "doc_id>=10"}):
+        assert search("small", **kw) == search("spread", **kw), kw

@@ -915,3 +915,23 @@ def test_python_row_scans_only_in_allow_listed_gates(spark, gate):
         assert python_scans(formatted) > 0, gate
     else:
         assert python_scans(formatted) == 0, formatted
+
+
+def test_plan_audit_counts_executed_plans_once(spark):
+    """tools/plan_audit reads a gate's executions from the SQL status
+    store and counts each final-plan node once: an aggregate sorted by
+    its count runs two shuffles, although its adaptive plan's formatted
+    explain lists the replaced initial plan's exchanges too."""
+    from tools.plan_audit import audit_executions, executed_plans
+
+    _, seen = executed_plans(spark, -1)
+    spark.range(100).groupBy((F.col("id") % 7).alias("g")).count().orderBy(
+        "count"
+    ).collect()
+    plans, last = executed_plans(spark, seen)
+    assert len(plans) == 1 and last > seen
+    assert "== Initial Plan ==" in plans[0]
+    out = audit_executions(plans, "")
+    assert out["executions"] == 1
+    assert out["exchanges"] == 2
+    assert out["object_hash_agg"] == 0 and out["take_ordered"] == 0
